@@ -271,3 +271,138 @@ def test_ch_query_runs_reference_strings_verbatim(api):
         "WHERE status IN ('pending', 'processing')"
     ).collect()
     assert r[0]["count"] == 3
+
+
+# -- appends without Spark jobs, and state-read errors --------------------------
+
+def test_append_starts_no_spark_job(api, spark):
+    """An append writes its parquet file with pyarrow: once each log's
+    version counter is seeded, inserts, updates and tombstones run no
+    Spark job."""
+    import time
+
+    sc = spark.sparkContext
+    api.insert_work_queue([{"id": 1, "start_height": 1, "end_height": 10}])
+    api.update_last_indexed_height("decoded_indexer", 10)
+    api.remove_failed_block(3)
+    try:
+        sc.setJobGroup("test-appends", "appends")
+        api.insert_work_queue([{"id": 2, "start_height": 11, "end_height": 20}])
+        api.update_last_indexed_height("decoded_indexer", 20)
+        api.remove_failed_block(4)
+        api.delete_work_queue_item(1)
+        # control: a read in its own group shows the probe sees jobs;
+        # the bus delivers in order, so the appends' jobs would be in
+        sc.setJobGroup("test-appends-control", "control")
+        assert api.work_queue().count() == 1
+        deadline = time.monotonic() + 30
+        while not sc.statusTracker().getJobIdsForGroup("test-appends-control"):
+            assert time.monotonic() < deadline, "control job never seen"
+            time.sleep(0.05)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("test-appends")) == []
+    assert api.get_last_indexed_height("decoded_indexer") == 20
+
+
+def test_leftover_temp_file_is_invisible(api, tmp_path, monkeypatch):
+    """A writer that dies between the write and the rename leaves only
+    its hidden temp file behind, which no reader opens: not the FINAL
+    views, not pg_query, not compact, not a count of data files."""
+    import os
+
+    import zigchain_indexer_clickhouse_spark.api as api_mod
+
+    api.insert_work_queue([{"id": i, "start_height": i, "end_height": i}
+                           for i in (1, 2, 3)])
+    api.update_work_queue_status(2, "processing")
+
+    def crash(src, dst):
+        raise OSError("writer died before the rename")
+
+    monkeypatch.setattr(api_mod.os, "replace", crash)
+    with pytest.raises(OSError):
+        api.update_work_queue_status(3, "processing")
+    monkeypatch.undo()
+
+    log = tmp_path / "work_queue"
+    (left,) = log.glob(".part-*.tmp")
+    # a crash mid-write leaves a partial file: truncate it to prove no
+    # reader opens it (a partial parquet file fails any read)
+    os.truncate(left, left.stat().st_size // 2)
+    assert len(list(log.glob("*.parquet"))) == 2
+
+    assert sorted((r["id"], r["status"]) for r in api.work_queue().collect()) \
+        == [(1, "pending"), (2, "processing"), (3, "pending")]
+    assert api.pg_query(
+        "SELECT COUNT(*) AS n FROM work_queue WHERE status = 'pending'"
+    ).collect()[0]["n"] == 2
+    api.compact("work_queue", _WORK_QUEUE_SCHEMA, ["id"])
+    assert sorted(r["id"] for r in api.work_queue().collect()) == [1, 2, 3]
+    assert not list(log.glob(".part-*.tmp"))  # gone with the old log
+
+
+def test_appended_instants_round_trip(api, monkeypatch):
+    """Callers pass naive local datetimes; an append stores the instant
+    they mean (UTC), whatever the process's time zone is, and a row
+    read back and re-appended keeps its created_at."""
+    import time
+
+    monkeypatch.setenv("TZ", "IST-5:30")  # UTC+05:30, no tzdata needed
+    time.tzset()
+    try:
+        api.update_last_indexed_height("orchestrator", 7)
+        age = api.test_connection()["state_age_s"]
+        assert age is not None and age < 5
+
+        api.insert_work_queue([{"id": 1, "start_height": 1, "end_height": 9}])
+        created = api.work_queue().collect()[0]["created_at"]
+        assert abs(created.timestamp() - time.time()) < 5
+        for status in ("processing", "failed", "pending", "processing",
+                       "completed"):
+            api.update_work_queue_status(1, status)
+        row = api.work_queue().collect()[0]
+        assert row["status"] == "completed" and row["created_at"] == created
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+
+def test_state_read_error_propagates(api, tmp_path, monkeypatch):
+    """Only a missing table directory reads as an empty table. Any other
+    read failure reaches the caller — and run_with_retry classifies it —
+    instead of becoming height 0, an empty view or a version counter
+    re-seeded at 1 whose appends would lose under FINAL."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    # missing directories: empty, height 0
+    assert api.work_queue().count() == 0
+    assert api.get_max_block_height() == 0
+    api.insert_work_queue([{"id": 1, "start_height": 1, "end_height": 10}])
+
+    def refused(self, *paths, **kw):
+        raise RuntimeError("java.net.ConnectException: Connection refused")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", refused)
+    for call in (api.work_queue,
+                 api.get_max_block_height,
+                 lambda: api.pg_query("SELECT COUNT(*) FROM blocks"),
+                 # a new process would seed its version counter here
+                 lambda: IndexerAPI(api.spark, str(tmp_path))
+                 .update_work_queue_status(1, "failed")):
+        with pytest.raises(RuntimeError, match="Connection refused"):
+            call()
+    sleeps: list[float] = []
+    with pytest.raises(RuntimeError, match="Connection refused"):
+        api.run_with_retry(api.get_max_block_height, sleeper=sleeps.append)
+    assert sleeps == [2.0, 4.0]  # retried as a connection error
+    monkeypatch.undo()
+    assert len(list((tmp_path / "work_queue").glob("*.parquet"))) == 1
+
+    # an unreadable table (a corrupt file where schema inference reads
+    # the footers) is an error too, not "no blocks yet"
+    (tmp_path / "blocks").mkdir()
+    (tmp_path / "blocks" / "part-0.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Exception):
+        api.get_max_block_height()
