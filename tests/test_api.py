@@ -6,7 +6,13 @@ from __future__ import annotations
 
 import pytest
 
-from zigchain_indexer_clickhouse_spark.api import _WORK_QUEUE_SCHEMA, IndexerAPI
+from zigchain_indexer_clickhouse_spark.api import IndexerAPI
+
+# the work_queue log's columns as Spark DDL: the schema argument callers
+# of compact(table, schema, key_cols) pass
+QUEUE_DDL = ("id long, start_height long, end_height long, status string, "
+             "error_message string, created_at timestamp, "
+             "updated_at timestamp, _version long, _deleted boolean")
 
 
 @pytest.fixture()
@@ -41,8 +47,7 @@ def test_work_queue_lifecycle(api):
     assert sorted(r["id"] for r in api.work_queue().collect()) == [2, 3]
 
     # raw log keeps full history (3 inserts + 2 updates + 1 delete)
-    log = api._read_log("work_queue", _WORK_QUEUE_SCHEMA)
-    assert log.count() == 6
+    assert api._log("work_queue").num_rows == 6
 
 
 def test_overlapping_ranges_probe(api):
@@ -103,11 +108,29 @@ def test_compact_preserves_final_state(api):
     before = sorted(
         (r["id"], r["status"]) for r in api.work_queue().collect()
     )
-    api.compact("work_queue", _WORK_QUEUE_SCHEMA, ["id"])
+    api.compact("work_queue", QUEUE_DDL, ["id"])
     after = sorted((r["id"], r["status"]) for r in api.work_queue().collect())
     assert before == after == [
         (1, "pending"), (2, "pending"), (3, "done"), (4, "pending")
     ]
+
+
+def test_compact_checks_optional_schema_and_key(api, tmp_path):
+    """compact(table) needs nothing else; a schema or key that is
+    passed must be the log's own, or the call raises before writing."""
+    api.insert_work_queue([{"id": 1, "start_height": 1, "end_height": 9}])
+    api.update_work_queue_status(1, "done")
+    files = sorted(p.name for p in (tmp_path / "work_queue").iterdir())
+    for bad in ((QUEUE_DDL.replace("status string", "status int"), ["id"]),
+                (QUEUE_DDL, ["start_height"])):
+        with pytest.raises(ValueError):
+            api.compact("work_queue", *bad)
+    assert sorted(p.name for p in (tmp_path / "work_queue").iterdir()) \
+        == files
+    api.compact("work_queue")
+    assert [(r["id"], r["status"]) for r in api.work_queue().collect()] \
+        == [(1, "done")]
+    assert len(list((tmp_path / "work_queue").glob("*.parquet"))) == 1
 
 
 def test_split_range_parity(api):
@@ -338,7 +361,7 @@ def test_leftover_temp_file_is_invisible(api, tmp_path, monkeypatch):
     assert api.pg_query(
         "SELECT COUNT(*) AS n FROM work_queue WHERE status = 'pending'"
     ).collect()[0]["n"] == 2
-    api.compact("work_queue", _WORK_QUEUE_SCHEMA, ["id"])
+    api.compact("work_queue")
     assert sorted(r["id"] for r in api.work_queue().collect()) == [1, 2, 3]
     assert not list(log.glob(".part-*.tmp"))  # gone with the old log
 
@@ -374,23 +397,31 @@ def test_state_read_error_propagates(api, tmp_path, monkeypatch):
     read failure reaches the caller — and run_with_retry classifies it —
     instead of becoming height 0, an empty view or a version counter
     re-seeded at 1 whose appends would lose under FINAL."""
+    import pyarrow.dataset as pads
     from pyspark.sql.readwriter import DataFrameReader
 
     # missing directories: empty, height 0
     assert api.work_queue().count() == 0
     assert api.get_max_block_height() == 0
     api.insert_work_queue([{"id": 1, "start_height": 1, "end_height": 10}])
+    api.insert("blocks", api.spark.range(1, 4).toDF("height"))
 
-    def refused(self, *paths, **kw):
+    def refused(*args, **kw):
         raise RuntimeError("java.net.ConnectException: Connection refused")
 
+    # the state logs are read with pyarrow, the data tables with Spark
+    monkeypatch.setattr(pads, "dataset", refused)
     monkeypatch.setattr(DataFrameReader, "parquet", refused)
     for call in (api.work_queue,
+                 lambda: api.count_work_queue("pending"),
                  api.get_max_block_height,
                  lambda: api.pg_query("SELECT COUNT(*) FROM blocks"),
-                 # a new process would seed its version counter here
+                 lambda: api.pg_query("SELECT COUNT(*) FROM work_queue"),
+                 lambda: api.update_work_queue_status(1, "failed"),
+                 # a new process seeds its version counter here
                  lambda: IndexerAPI(api.spark, str(tmp_path))
-                 .update_work_queue_status(1, "failed")):
+                 .insert_work_queue([{"id": 2, "start_height": 11,
+                                      "end_height": 20}])):
         with pytest.raises(RuntimeError, match="Connection refused"):
             call()
     sleeps: list[float] = []
@@ -402,7 +433,32 @@ def test_state_read_error_propagates(api, tmp_path, monkeypatch):
 
     # an unreadable table (a corrupt file where schema inference reads
     # the footers) is an error too, not "no blocks yet"
+    (tmp_path / "blocks" / "part-0.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Exception):
+        api.get_max_block_height()
+
+
+def test_absent_table_starts_no_spark_read(api, tmp_path, monkeypatch):
+    """On a fresh store a data table's absence is seen on the file
+    system, before Spark is asked (which would log a stack trace for
+    the missing path); a directory that exists still goes to Spark."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    calls = []
+    real = DataFrameReader.parquet
+
+    def spy(self, *paths, **kw):
+        calls.append(paths)
+        return real(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    assert api.get_max_block_height() == 0
+    assert api.pg_query("SELECT COUNT(*) AS n FROM transactions_raw") \
+        .collect()[0]["n"] == 0
+    assert calls == []
+
     (tmp_path / "blocks").mkdir()
     (tmp_path / "blocks" / "part-0.parquet").write_bytes(b"not parquet")
     with pytest.raises(Exception):
         api.get_max_block_height()
+    assert calls

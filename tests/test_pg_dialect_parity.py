@@ -18,6 +18,7 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
+from perfbench.workloads import MONITOR_SQL
 from zigchain_indexer_clickhouse_spark.api import IndexerAPI
 
 _REF = Path("/root/reference")
@@ -193,3 +194,112 @@ def test_stuck_and_stale_epoch_arithmetic(api):
         "WHERE status = 'pending' GROUP BY start_height, end_height "
         "HAVING COUNT(*) > 1 ) duplicates").collect()[0]
     assert dup["duplicate_ranges"] == 1
+
+
+# -- the monitor strings the repo holds, and the views pg_query registers ------
+
+def _group(rows, key, val):
+    """{key(r): (count, min val(r), max val(r))} over ``rows``."""
+    out: dict = {}
+    for r in rows:
+        c = out.setdefault(key(r), [0, val(r), val(r)])
+        c[0] += 1
+        c[1], c[2] = min(c[1], val(r)), max(c[2], val(r))
+    return out
+
+
+def _monitor_expect(api, name):
+    """The answer of MONITOR_SQL[name], computed in Python from the
+    engine's own views, as the rows pg_query should return."""
+    q = [r.asDict() for r in api.work_queue().collect()]
+    now = datetime.now()
+    if name == "status_counts":
+        g = _group(q, lambda r: r["status"], lambda r: r["start_height"])
+        ends = _group(q, lambda r: r["status"], lambda r: r["end_height"])
+        return [(s, g[s][0], g[s][1], ends[s][2]) for s in sorted(g)]
+    if name == "stuck":
+        stale = [(now - r["updated_at"]).total_seconds() / 60 for r in q
+                 if r["status"] == "processing"
+                 and r["updated_at"] < now - timedelta(minutes=30)]
+        return [(len(stale), min(stale, default=None),
+                 max(stale, default=None))]
+    if name == "duplicates":
+        g = _group([r for r in q if r["status"] == "pending"],
+                   lambda r: (r["start_height"], r["end_height"]),
+                   lambda r: 0)
+        return [(sum(1 for c in g.values() if c[0] > 1),)]
+    if name == "looping":
+        g = _group([r for r in q if r["created_at"] > now - timedelta(hours=1)],
+                   lambda r: (r["start_height"], r["end_height"]),
+                   lambda r: 0)
+        return sorted((s, e, c[0]) for (s, e), c in g.items() if c[0] > 2)
+    if name == "gaps":
+        have = {r["height"] for r in api._read("blocks").collect()}
+        return [(h,) for h in range(1, api.get_max_block_height() + 1)
+                if h not in have]
+    assert name == "failed_breakdown"
+    g = _group([r.asDict() for r in api.failed_blocks().collect()],
+               lambda r: ("failed" if r["attempts"] >= 5 else "pending",
+                          r["error_type"]),
+               lambda r: r["block_height"])
+    return [(*k, *g[k]) for k in sorted(g)]
+
+
+@pytest.mark.parametrize("name", sorted(MONITOR_SQL))
+def test_monitor_sql_equals_engine_views(api, name):
+    """Every monitor string the repo holds verbatim
+    (perfbench.workloads.MONITOR_SQL) runs through pg_query, and its
+    answer equals the one computed from the engine's views."""
+    params = [api.get_max_block_height()] if name == "gaps" else None
+    got = [tuple(r) for r in api.pg_query(MONITOR_SQL[name], params).collect()]
+    if name == "looping":
+        got = sorted(got)
+    assert got == _monitor_expect(api, name)
+
+
+def test_pg_query_sees_appends_between_calls(spark, tmp_path):
+    """Views are built per statement: an append between two pg_query
+    calls shows in the second."""
+    a = IndexerAPI(spark, str(tmp_path))
+    pending = "SELECT COUNT(*) AS n FROM work_queue WHERE status = 'pending'"
+    failed = "SELECT MAX(retry_count) AS n FROM failed_blocks"
+    a.insert_work_queue([{"id": 1, "start_height": 1, "end_height": 10}])
+    a.add_failed_block(5, "rpc", "boom")
+    assert a.pg_query(pending).collect()[0]["n"] == 1
+    assert a.pg_query(failed).collect()[0]["n"] == 1
+    a.insert_work_queue([{"id": 2, "start_height": 11, "end_height": 20}])
+    a.add_failed_block(5, "rpc", "boom again")
+    assert a.pg_query(pending).collect()[0]["n"] == 2
+    assert a.pg_query(failed).collect()[0]["n"] == 2
+    a.update_work_queue_status(1, "processing")
+    assert a.pg_query(pending).collect()[0]["n"] == 1
+
+
+def test_statement_reads_only_the_tables_it_names(spark, tmp_path,
+                                                  monkeypatch):
+    """A statement naming only work_queue reads no other log and not
+    blocks; one naming failed_blocks does not read blocks."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    a = IndexerAPI(spark, str(tmp_path))
+    a.insert_work_queue([{"id": 1, "start_height": 1, "end_height": 10}])
+    a.add_failed_block(5, "rpc", "boom")
+    a.update_last_indexed_height("orchestrator", 10)
+    a.insert("blocks", spark.range(1, 4).toDF("height"))
+
+    logs, parquet = [], []
+    real_log, real_parquet = a._log, DataFrameReader.parquet
+    monkeypatch.setattr(a, "_log", lambda t: logs.append(t) or real_log(t))
+    monkeypatch.setattr(
+        DataFrameReader, "parquet",
+        lambda self, *p, **kw: parquet.append(p) or real_parquet(self, *p, **kw))
+
+    assert a.pg_query("SELECT COUNT(*) AS n FROM work_queue") \
+        .collect()[0]["n"] == 1
+    assert (logs, parquet) == (["work_queue"], [])
+    assert a.pg_query("SELECT COUNT(*) AS n FROM failed_blocks") \
+        .collect()[0]["n"] == 1
+    assert (logs, parquet) == (["work_queue", "failed_blocks"], [])
+    assert a.pg_query("SELECT MAX(height) AS h FROM blocks") \
+        .collect()[0]["h"] == 3
+    assert logs == ["work_queue", "failed_blocks"] and len(parquet) == 1

@@ -16,41 +16,57 @@ the native design is an APPEND-ONLY versioned log per table:
 
 - every write (insert/update/delete) appends rows with a monotonically
   increasing ``_version`` and a ``_deleted`` tombstone flag;
-- every read applies FINAL: latest version per key wins
-  (``max_by``-style window), tombstones drop out.
+- every read applies FINAL: latest version per key wins, tombstones
+  drop out.
 
 That is exactly ReplacingMergeTree + CollapsingMergeTree semantics with
 the merge moved to read time (and compaction as an offline rewrite —
 ``compact()``), which is how log-structured tables (Iceberg/Delta/Hudi)
-do it on Spark. Point updates cost one tiny appended file, never a
-partition rewrite; the FINAL window shuffles only the key column.
+do it. Point updates cost one tiny appended file, never a partition
+rewrite.
 
-An append is written on the driver: its rows become one pyarrow table,
-written as one parquet file under a hidden name (``.part-…``, which
-Spark and pyarrow datasets skip) and moved into place with
-``os.replace``, so a reader sees the whole file or none of it. No Spark
-job runs: a one-row ``createDataFrame(...).write`` pays a Python-worker
-task and a write job (~0.9 s) for what ClickHouse does as a cheap
-single-row insert. Reads, FINAL, the version high-water mark and
-``compact()`` stay on Spark. Like the rest of the log, this assumes a
-single writer per ``base_path`` (one process owns the version counter
-and the compaction renames) on a POSIX filesystem.
+The three state logs (``work_queue``, ``failed_blocks``,
+``index_state``) are small by construction — O(queue ranges + failed
+blocks) rows — so they live on the driver, in Arrow:
+
+- an append turns its rows into one pyarrow table, written as one
+  parquet file under a hidden name (``.part-…``, which Spark and
+  pyarrow datasets skip) and moved into place with ``os.replace``, so
+  a reader sees the whole file or none of it;
+- FINAL (``_final_arrow``) reads the log with ``pyarrow.dataset``
+  against its ``_LOGS`` schema, sorts by key and ``_version``
+  descending and keeps the first row per key; every point read, the
+  version high-water mark and ``compact()`` use it, and no Spark job
+  runs. ClickHouse answers these reads in milliseconds; a Spark
+  job per read (~0.3 s) is what this avoids;
+- ``work_queue()``, ``failed_blocks()`` and ``index_state()`` hand that
+  FINAL to Spark with ``createDataFrame(arrow_table)``, so callers keep
+  the DataFrame API;
+- ``query`` / ``ch_query`` / ``pg_query`` register, per statement, only
+  the views the statement names, each built from one read of its log.
+
+The data tables (``blocks``, ``transactions_raw``, the decoded tables)
+stay on Spark. Like the rest of the log, this assumes a single writer
+per ``base_path`` (one process owns the version counter and the
+compaction renames) on a POSIX filesystem.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import time
 import uuid
 from datetime import datetime
 
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
-from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType, TimestampType
 
 _TS = pa.timestamp("us", tz="UTC")
@@ -64,29 +80,66 @@ def _log_schema(*fields: tuple[str, pa.DataType]) -> pa.Schema:
 
 
 # The one definition of each state log's columns (Arrow: what an append
-# writes) and FINAL key. The Spark schemas readers pass to
-# ``spark.read.schema`` are derived from it.
-_LOGS: dict[str, tuple[pa.Schema, list[str]]] = {
+# writes and what FINAL reads files against) and FINAL key.
+_LOGS: dict[str, tuple[pa.Schema, str]] = {
     "work_queue": (_log_schema(
         ("id", pa.int64()), ("start_height", pa.int64()),
         ("end_height", pa.int64()), ("status", pa.string()),
         ("error_message", pa.string()), ("created_at", _TS),
-        ("updated_at", _TS)), ["id"]),
+        ("updated_at", _TS)), "id"),
     "failed_blocks": (_log_schema(
         ("block_height", pa.int64()), ("error_type", pa.string()),
         ("error_message", pa.string()), ("worker_id", pa.string()),
-        ("attempts", pa.int32())), ["block_height"]),
+        ("attempts", pa.int32())), "block_height"),
     "index_state": (_log_schema(
         ("index_name", pa.string()), ("last_processed_height", pa.int64()),
-        ("updated_at", _TS)), ["index_name"]),
+        ("updated_at", _TS)), "index_name"),
 }
-_SPARK_SCHEMAS = {t: from_arrow_schema(s) for t, (s, _) in _LOGS.items()}
-_WORK_QUEUE_SCHEMA = _SPARK_SCHEMAS["work_queue"]
+
+# The raw data tables pg_query serves, with the schema of their
+# empty-with-schema view before anything is indexed.
+_RAW_TABLES = {
+    "blocks": "height long, created_at timestamp",
+    "transactions_raw": "tx_hash string, height long, created_at timestamp",
+}
+
+
+def _final(log: pa.Table, key: str) -> pa.Table:
+    """FINAL semantics over a raw log: latest ``_version`` per key,
+    tombstones removed, ``_version``/``_deleted`` dropped. Sorted by
+    key, then version descending, the first row of each key run wins."""
+    log = log.take(pc.sort_indices(
+        log, [(key, "ascending"), ("_version", "descending")]))
+    col = log[key].combine_chunks()
+    prev, cur = col[:-1], col[1:]
+    # a row repeats the key of the row above it (null keys form one
+    # run, as they form one group in SQL)
+    same = pc.coalesce(pc.equal(prev, cur),
+                       pc.and_(pc.is_null(prev), pc.is_null(cur)))
+    first = pa.concat_arrays(
+        [pa.array([True] * min(len(col), 1), pa.bool_()), pc.invert(same)])
+    keep = pc.and_(first, pc.invert(log["_deleted"].combine_chunks()))
+    return log.filter(keep).drop_columns(["_version", "_deleted"])
+
+
+def _monitor_failed_blocks(fb: pa.Table) -> pa.Table:
+    """The failed-block FINAL with the reference DDL's monitor-facing
+    columns added (init_clickhouse.js:95-111): ``height``,
+    ``retry_count``, ``max_retries`` (the DDL default, 5,
+    init_clickhouse.js:102) and ``status`` ('failed' once the retries
+    are spent, else 'pending')."""
+    spent = pc.fill_null(pc.greater_equal(fb["attempts"], 5), False)
+    return (fb.append_column("height", fb["block_height"])
+            .append_column("retry_count", fb["attempts"])
+            .append_column("max_retries",
+                           pa.array([5] * fb.num_rows, pa.int32()))
+            .append_column("status", pc.if_else(spent, "failed", "pending")))
+
 
 # createDataFrame's reading of a datetime as epoch microseconds: an
-# aware one is its instant, a naive one is local time (what the callers
-# pass, and what Spark's collect() hands back). Appends convert the same
-# way, so a row read back and re-appended keeps its instants.
+# aware one is its instant (what a row read back from the Arrow FINAL
+# carries, so a re-appended row keeps its instants), a naive one is
+# local time (what the callers pass).
 _EPOCH_US = TimestampType().toInternal
 
 # Auto-compact a table's append-only log once it accretes this many
@@ -121,36 +174,50 @@ class IndexerAPI:
     def _path(self, table: str) -> str:
         return f"{self.base}/{table}"
 
-    def _read(self, table: str, schema=None) -> DataFrame | None:
-        """The table's parquet files, or None when its directory does not
-        exist yet. Only a missing path counts as an empty table: any
-        other read error (I/O, permissions, a refused connection to the
-        store) propagates, where ``run_with_retry`` can classify it.
-        Taking a failed read for an absent table would re-seed the
-        version counter at 1 and let new appends lose under FINAL."""
-        reader = self.spark.read if schema is None else \
-            self.spark.read.schema(schema)
-        try:
-            return reader.parquet(self._path(table))
-        except AnalysisException as e:
-            if e.getCondition() != "PATH_NOT_FOUND":
-                raise
-            return None
+    def _read(self, table: str) -> DataFrame | None:
+        """A data table's parquet files, or None when its directory does
+        not exist yet — checked before Spark is asked, so an absent
+        table costs no Spark call (and no logged stack trace). A
+        directory that exists goes to Spark, so any read error (I/O,
+        permissions, a refused connection to the store, a corrupt file)
+        propagates, where ``run_with_retry`` can classify it."""
+        path = self._path(table)
+        return self.spark.read.parquet(path) if os.path.isdir(path) else None
 
-    def _empty(self, schema) -> DataFrame:
-        """An empty DataFrame of ``schema`` (DDL string or StructType),
-        built from an Arrow table: a Python-list DataFrame would run a
-        Python-worker task every time it is read."""
-        if isinstance(schema, str):
-            schema = StructType.fromDDL(schema)
-        return self.spark.createDataFrame(to_arrow_schema(schema).empty_table())
+    def _empty(self, ddl: str) -> DataFrame:
+        """An empty DataFrame of the DDL schema ``ddl``, built from an
+        Arrow table: a Python-list DataFrame would run a Python-worker
+        task every time it is read."""
+        return self.spark.createDataFrame(
+            to_arrow_schema(StructType.fromDDL(ddl)).empty_table())
 
-    def _read_log(self, table: str, schema) -> DataFrame:
-        """Raw versioned log (not written yet → empty)."""
-        log = self._read(table, schema)
-        return self._empty(schema) if log is None else log
+    def _log(self, table: str) -> pa.Table:
+        """A state log's raw rows, every version (not written yet →
+        empty). Read with ``pyarrow.dataset`` against the ``_LOGS``
+        schema, which also casts what older Spark compactions wrote
+        (INT96 timestamps, an int32 ``_version``); hidden temp files and
+        ``_SUCCESS`` markers are skipped. Only a missing directory is an
+        empty log: any other read error propagates, since taking it for
+        an absent table would re-seed the version counter at 1 and let
+        new appends lose under FINAL."""
+        schema = _LOGS[table][0]
+        path = self._path(table)
+        if not os.path.isdir(path):
+            return schema.empty_table()
+        return ds.dataset(path, schema=schema, format="parquet").to_table()
 
-    def _next_version(self, table: str, schema) -> int:
+    def _final_arrow(self, table: str) -> pa.Table:
+        """A state log's FINAL, on the driver: latest version per key,
+        tombstones dropped."""
+        return _final(self._log(table), _LOGS[table][1])
+
+    def _final_row(self, table: str, key) -> dict | None:
+        """The FINAL row of one key, or None."""
+        t = self._final_arrow(table)
+        rows = t.filter(pc.equal(t[_LOGS[table][1]], key)).to_pylist()
+        return rows[0] if rows else None
+
+    def _next_version(self, table: str) -> int:
         """Monotonic per-table version, seeded from max(_version) on
         disk — survives process restarts without resurrecting stale
         rows or tombstones (wall-clock seeding did not: a sub-ms write
@@ -158,28 +225,21 @@ class IndexerAPI:
         A multi-writer cluster deployment would use a commit-service
         sequence or transactional table format instead."""
         if table not in self._versions:
-            hw = (
-                self._read_log(table, schema)
-                .agg(F.max("_version"))
-                .collect()[0][0]
-            )
+            hw = pc.max(self._log(table)["_version"]).as_py()
             self._versions[table] = int(hw or 0)
         self._versions[table] += 1
         return self._versions[table]
 
     def _append(self, table: str, rows: list[dict]) -> None:
         """Append ``rows`` to a state log as one new version: a pyarrow
-        table in the log's schema, written on the driver as one parquet
-        file under a hidden temp name (Spark and pyarrow datasets skip
-        names starting with ``.``) and renamed into place with
-        ``os.replace``, so a reader sees the whole file or none of it.
-        No Spark job runs: a Spark write of one row costs a
+        table in the log's schema, written as one parquet file (see
+        ``_write``). No Spark job runs: a Spark write of one row costs a
         Python-worker task and a write job, ~0.9 s against ~2 ms.
         Datetimes are stored as UTC instants, read the way
         ``createDataFrame`` reads them. Assumes one writer per
         ``base_path``, as the version counter and ``compact`` do."""
-        schema, keys = _LOGS[table]
-        v = self._next_version(table, _SPARK_SCHEMAS[table])
+        schema = _LOGS[table][0]
+        v = self._next_version(table)
         full = [{**r, "_version": v, "_deleted": r.get("_deleted", False)}
                 for r in rows]
         cols = {}
@@ -187,38 +247,37 @@ class IndexerAPI:
             vals = [r.get(f.name) for r in full]
             cols[f.name] = ([_EPOCH_US(x) for x in vals]
                             if pa.types.is_timestamp(f.type) else vals)
-        d = self._path(table)
-        os.makedirs(d, exist_ok=True)
-        name = f"part-{uuid.uuid4().hex}.parquet"
-        tmp = os.path.join(d, f".{name}.tmp")
-        pq.write_table(pa.Table.from_pydict(cols, schema=schema), tmp)
-        os.replace(tmp, os.path.join(d, name))
+        self._write(self._path(table), pa.Table.from_pydict(cols, schema=schema))
         n = self._appends_since_compact.get(table, 0) + 1
         if n >= AUTO_COMPACT_EVERY:
-            self.compact(table, _SPARK_SCHEMAS[table], keys)
+            self.compact(table)
         else:
             self._appends_since_compact[table] = n
 
-    def _log_final(self, table: str) -> DataFrame:
-        """A state log's FINAL view."""
-        return self._final(self._read_log(table, _SPARK_SCHEMAS[table]),
-                           _LOGS[table][1])
-
     @staticmethod
-    def _final(log: DataFrame, key_cols: list[str]) -> DataFrame:
-        """FINAL semantics: latest version per key, tombstones removed.
-        One shuffle on the key — the same cost ClickHouse pays in its
-        background merge, paid lazily here."""
-        w = Window.partitionBy(*key_cols).orderBy(F.col("_version").desc())
-        return (
-            log.withColumn("_rn", F.row_number().over(w))
-            .filter((F.col("_rn") == 1) & (~F.col("_deleted")))
-            .drop("_rn", "_version", "_deleted")
-        )
+    def _write(d: str, t: pa.Table) -> None:
+        """Write ``t`` into directory ``d`` as one parquet file under a
+        hidden temp name (Spark and pyarrow datasets skip names starting
+        with ``.``), renamed into place with ``os.replace`` so a reader
+        sees the whole file or none of it."""
+        os.makedirs(d, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(d, f".{name}.tmp")
+        pq.write_table(t, tmp)
+        os.replace(tmp, os.path.join(d, name))
 
-    def compact(self, table: str, schema: str, key_cols: list[str]) -> None:
+    def _log_view(self, table: str) -> DataFrame:
+        """A state log's FINAL as a DataFrame, from the Arrow FINAL."""
+        return self.spark.createDataFrame(self._final_arrow(table))
+
+    def compact(self, table: str, schema=None, key_cols=None) -> None:
         """Offline compaction: rewrite the log as its FINAL state (the
-        explicit analog of ClickHouse's background merge / OPTIMIZE).
+        explicit analog of ClickHouse's background merge / OPTIMIZE),
+        written with pyarrow as one file at one new version.
+
+        ``schema`` (DDL string or StructType) and ``key_cols`` are
+        optional, since ``_LOGS`` knows both; when given they must match
+        it, or a ValueError is raised.
 
         The swap is rename-based: the compacted copy is fully written to
         a side directory first, then swapped in with two directory
@@ -226,13 +285,27 @@ class IndexerAPI:
         renames leaves the old log intact at ``<table>__old`` —
         recoverable, never a window where the data exists nowhere (the
         previous overwrite-in-place had one)."""
-        final = self._final(self._read_log(table, schema), key_cols)
+        log_schema, key = _LOGS[table]
+        if schema is not None:
+            if isinstance(schema, str):
+                schema = StructType.fromDDL(schema)
+            if not to_arrow_schema(schema).equals(log_schema):
+                raise ValueError(
+                    f"compact({table!r}): schema {schema.simpleString()} "
+                    f"is not the log's {log_schema}")
+        if key_cols is not None and list(key_cols) != [key]:
+            raise ValueError(
+                f"compact({table!r}): key {list(key_cols)} is not [{key!r}]")
+        final = self._final_arrow(table)
+        v = self._next_version(table)
+        final = final.append_column(
+            "_version", pa.array([v] * final.num_rows, pa.int64())
+        ).append_column(
+            "_deleted", pa.array([False] * final.num_rows, pa.bool_()))
         path = self._path(table)
         tmp, old = path + "__compact", path + "__old"
-        final_with_meta = final.withColumn(
-            "_version", F.lit(self._next_version(table, schema))
-        ).withColumn("_deleted", F.lit(False))
-        final_with_meta.coalesce(1).write.mode("overwrite").parquet(tmp)
+        shutil.rmtree(tmp, ignore_errors=True)
+        self._write(tmp, final)
         shutil.rmtree(old, ignore_errors=True)
         if os.path.exists(path):
             os.rename(path, old)
@@ -243,7 +316,7 @@ class IndexerAPI:
     # -- work_queue (clickhouse_queries.js:153-231) -------------------------
     def work_queue(self) -> DataFrame:
         """work_queue FINAL — the view every queue query runs against."""
-        return self._log_final("work_queue")
+        return self._log_view("work_queue")
 
     def insert_work_queue(self, items: list[dict]) -> None:
         """insertWorkQueue (clickhouse_queries.js:199-214): enqueue
@@ -268,9 +341,8 @@ class IndexerAPI:
     def count_work_queue(self, status: str) -> int:
         """countWorkQueue (clickhouse_queries.js:153-158):
         `SELECT count() FROM work_queue FINAL WHERE status = ?`."""
-        return (
-            self.work_queue().filter(F.col("status") == status).count()
-        )
+        t = self._final_arrow("work_queue")
+        return t.filter(pc.equal(t["status"], status)).num_rows
 
     def get_pending_work(self, limit: int = 1) -> DataFrame:
         """getPendingWork (clickhouse_queries.js:163-168): first N
@@ -288,10 +360,9 @@ class IndexerAPI:
         """updateWorkQueueStatus (clickhouse_queries.js:173-185): the
         reference issues `ALTER TABLE ... UPDATE`; here it is a
         versioned re-append of the row — O(1) write, merged at read."""
-        cur = self.work_queue().filter(F.col("id") == id).collect()
-        if not cur:
+        r = self._final_row("work_queue", id)
+        if r is None:
             raise KeyError(f"work_queue id {id} not found")
-        r = cur[0].asDict()
         r.update(
             status=status,
             error_message=error_message,
@@ -325,7 +396,7 @@ class IndexerAPI:
 
     # -- failed_blocks (clickhouse_queries.js:234-258, worker.js:335-374) ---
     def failed_blocks(self) -> DataFrame:
-        return self._log_final("failed_blocks")
+        return self._log_view("failed_blocks")
 
     def add_failed_block(
         self,
@@ -336,10 +407,8 @@ class IndexerAPI:
     ) -> None:
         """addFailedBlock (clickhouse_queries.js:234-252): upsert with
         attempts+1 — read current attempts, append the bumped row."""
-        cur = self.failed_blocks().filter(
-            F.col("block_height") == height
-        ).collect()
-        attempts = (cur[0]["attempts"] if cur else 0) + 1
+        cur = self._final_row("failed_blocks", height)
+        attempts = (cur["attempts"] if cur else 0) + 1
         self._append(
             "failed_blocks",
             [{
@@ -374,18 +443,13 @@ class IndexerAPI:
 
     # -- index_state (clickhouse_queries.js:115-139) ------------------------
     def index_state(self) -> DataFrame:
-        return self._log_final("index_state")
+        return self._log_view("index_state")
 
     def get_last_indexed_height(self, index_name: str = "decoded_indexer") -> int:
         """getLastIndexedHeight (clickhouse_queries.js:115-125): latest
         row by updated_at for the index — argmax, 0 when absent."""
-        row = (
-            self.index_state()
-            .filter(F.col("index_name") == index_name)
-            .select("last_processed_height")
-            .collect()
-        )
-        return int(row[0][0]) if row else 0
+        row = self._final_row("index_state", index_name)
+        return int(row["last_processed_height"]) if row else 0
 
     def update_last_indexed_height(self, index_name: str, height: int) -> None:
         """updateLastIndexedHeight (clickhouse_queries.js:130-139)."""
@@ -416,11 +480,44 @@ class IndexerAPI:
         """query (clickhouse_queries.js:8-72): ad-hoc SQL over the FINAL
         views — registers work_queue / failed_blocks / index_state and
         delegates to Spark SQL (Catalyst replaces the hand-rolled
-        DELETE/UPDATE → ALTER rewriting: those are API methods here)."""
-        self.work_queue().createOrReplaceTempView("work_queue")
-        self.failed_blocks().createOrReplaceTempView("failed_blocks")
-        self.index_state().createOrReplaceTempView("index_state")
+        DELETE/UPDATE → ALTER rewriting: those are API methods here).
+        Only the views the statement names are registered."""
+        self._register_views(sql)
         return self.spark.sql(sql)
+
+    def _register_views(self, sql: str, monitor: bool = False) -> None:
+        """Register, as temp views, the tables ``sql`` names — matched
+        as whole words, case-insensitively, so ``failed_blocks`` does
+        not name ``blocks`` — each from one read of its table. A table
+        the statement does not name is not read. The state logs are
+        their FINAL views. ``monitor`` (``pg_query``) adds the raw data
+        tables and the ``information_schema_tables`` catalog view, and
+        serves ``failed_blocks`` as its monitor-compat projection."""
+        names = [*_LOGS, *_RAW_TABLES, "information_schema_tables"] \
+            if monitor else list(_LOGS)
+        for name in names:
+            if not re.search(rf"\b{name}\b", sql, re.IGNORECASE):
+                continue
+            if name in _LOGS:
+                t = self._final_arrow(name)
+                if monitor and name == "failed_blocks":
+                    t = _monitor_failed_blocks(t)
+                df = self.spark.createDataFrame(t)
+            elif name in _RAW_TABLES:
+                df = self._read(name)
+                if df is None:
+                    df = self._empty(_RAW_TABLES[name])
+            else:
+                # built from Arrow like _empty: a Python-list DataFrame
+                # runs a Python-worker task on every read of the view
+                present = [t for t in self._PG_EXPECTED_TABLES
+                           if os.path.isdir(self._path(t))]
+                df = self.spark.createDataFrame(pa.table({
+                    "table_name": pa.array(present, pa.string()),
+                    "table_schema": pa.array(["public"] * len(present),
+                                             pa.string()),
+                }))
+            df.createOrReplaceTempView(name)
 
     # -- orchestrator helpers (src/core/orchestrator.js) --------------------
     @staticmethod
@@ -691,47 +788,19 @@ class IndexerAPI:
         tooling, mirroring ``targetDB.query(sql, params)``
         (scripts/monitor_indexer.js:24, scripts/test_connection.js:22).
 
-        Registers the monitor's full table surface first: the merged
-        queue/state views, raw ``blocks`` / ``transactions_raw``
-        (empty-with-schema before anything is indexed — the scripts'
-        own "indexer may not have started yet" branch), a
-        monitor-compat ``failed_blocks`` projection carrying the
-        reference DDL's column names (init_clickhouse.js:95-111:
+        Registers the tables the statement names from the monitor's
+        table surface: the merged queue/state views, raw ``blocks`` /
+        ``transactions_raw`` (empty-with-schema before anything is
+        indexed — the scripts' own "indexer may not have started yet"
+        branch), a monitor-compat ``failed_blocks`` projection carrying
+        the reference DDL's column names (init_clickhouse.js:95-111:
         ``height``/``retry_count``/``max_retries``/``status`` on top
         of the engine's narrower log schema), and the
         ``information_schema_tables`` view behind test_connection.js's
         structure probe."""
-        self.work_queue().createOrReplaceTempView("work_queue")
-        self.index_state().createOrReplaceTempView("index_state")
-        # monitor-compat projection over the engine's failed-block log:
-        # the DDL's max_retries default is 5 (init_clickhouse.js:102)
-        fb = self.failed_blocks()
-        fb.withColumn("height", F.col("block_height")) \
-            .withColumn("retry_count", F.col("attempts")) \
-            .withColumn("max_retries", F.lit(5)) \
-            .withColumn(
-                "status",
-                F.when(F.col("attempts") >= 5, F.lit("failed"))
-                .otherwise(F.lit("pending"))) \
-            .createOrReplaceTempView("failed_blocks")
-        raw = {
-            "blocks": "height long, created_at timestamp",
-            "transactions_raw":
-                "tx_hash string, height long, created_at timestamp",
-        }
-        for t, schema in raw.items():
-            df = self._read(t)
-            (self._empty(schema) if df is None else df) \
-                .createOrReplaceTempView(t)
-        # built from Arrow like _empty: a Python-list DataFrame runs a
-        # Python-worker task on every read of the view
-        present = [t for t in self._PG_EXPECTED_TABLES
-                   if os.path.isdir(self._path(t))]
-        self.spark.createDataFrame(pa.table({
-            "table_name": pa.array(present, pa.string()),
-            "table_schema": pa.array(["public"] * len(present), pa.string()),
-        })).createOrReplaceTempView("information_schema_tables")
-        return self.spark.sql(self.pg_sql(sql, params))
+        sql = self.pg_sql(sql, params)
+        self._register_views(sql, monitor=True)
+        return self.spark.sql(sql)
 
     # -- client-level resilience (src/database/db.js) -----------------------
     # per-class linear backoff seconds (db.js:48-55: connection errors
@@ -797,14 +866,10 @@ class IndexerAPI:
             "last_processed_height": None,
             "state_age_s": None,
         }
-        state = (
-            self.index_state()
-            .filter(F.col("index_name") == index_name)
-            .collect()
-        )
+        state = self._final_row("index_state", index_name)
         if state:
-            out["last_processed_height"] = state[0]["last_processed_height"]
-            updated = state[0]["updated_at"]
+            out["last_processed_height"] = state["last_processed_height"]
+            updated = state["updated_at"]
             if updated is not None:
                 out["state_age_s"] = max(
                     0.0, round(time.time() - updated.timestamp(), 3)
