@@ -15,11 +15,11 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def pytest_configure(config):
     config.addinivalue_line(
         "markers",
-        "slowbattery: deep conformance battery (positional/Janino, golden "
-        "wire vectors, pairwise decode-path equivalence, full-registry "
-        "plan sweeps). Skipped by default so the suite fits a CI/driver "
-        "window (~13 min); set SPARK_GRAFT_FULL_TESTS=1 to run everything "
-        "(~45 min). The skipped tests' SUBJECTS stay covered on the "
+        "slowbattery: deep conformance battery (pairwise decode-path "
+        "equivalence, full-registry plan sweeps). Skipped by default so "
+        "the default suite stays short (about 9 min on 4 vCPU); set "
+        "SPARK_GRAFT_FULL_TESTS=1 to run everything. The skipped tests' "
+        "SUBJECTS stay covered on the "
         "default path by the per-operator oracle gate "
         "(test_registry_oracle), the native-kernel equivalence tests and "
         "the targeted plan-shape assertions.",
@@ -40,12 +40,12 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    # 12g heap for the session-scoped suite JVM: ~880 tests share it,
-    # and the accumulated analyzed plans + the 67-type positional
-    # dispatch's generated code OOM'd the old (effectively 8g) heap
-    # late in the battery — a task-level java.lang.OutOfMemoryError
-    # that killed the JVM and cascaded ConnectionRefused through every
-    # later test (r12). Overridable via the same env the engine uses.
+    # 12g heap for the session-scoped suite JVM: ~850 tests share it,
+    # and the analyzed plans and persisted stages they accumulate
+    # OOM'd the old (effectively 8g) heap late in the battery — a
+    # task-level java.lang.OutOfMemoryError that killed the JVM and
+    # cascaded ConnectionRefused through every later test. Overridable
+    # via the same env the engine uses.
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "12g")
     s = get_spark("tests", master="local[4]")
     yield s

@@ -68,3 +68,29 @@ def test_zorder_buckets_are_tight_in_both_dimensions(spark, sf_dir):
     for r in rows:
         assert r["max_ub"] - r["min_ub"] < 2048, r
         assert r["max_tb"] - r["min_tb"] < 2048, r
+
+
+def test_oracles_and_load_start_no_thread(spark, sf_dir, tmp_path,
+                                          monkeypatch):
+    """Listing the oracles and loading a table start no thread: no
+    background decode warm-up runs behind the caller's back."""
+    import os
+    import shutil
+    import threading
+
+    from zigchain_indexer_clickhouse_spark.catalog import load
+    from zigchain_indexer_clickhouse_spark.plans import registry
+
+    started = []
+    real_start = threading.Thread.start
+
+    def spy(self):
+        started.append(self.name)
+        return real_start(self)
+
+    monkeypatch.setattr(threading.Thread, "start", spy)
+    # a fresh sf_dir: nothing keyed on it can have run before
+    shutil.copy(os.path.join(sf_dir, "region.parquet"), tmp_path)
+    registry.oracles()
+    load(spark, str(tmp_path), "region")
+    assert started == []

@@ -81,38 +81,28 @@ def test_blob_decode_at_rest_proves_both_prunings(spark, sf_dir):
 
 
 @pytest.mark.slowbattery
-def test_registry_at_rest_proves_both_prunings(spark, sf_dir):
+def test_registry_at_rest_proves_both_prunings(spark, sf_dir, monkeypatch):
     """#23c: the full-registry at-rest decode reaches storage with the
     same two prunings as #23b — PartitionFilters resolve the whole
     height predicate, ReadSchema is the blob column alone — under the
-    default (native-kernel) shape AND under the r10 hybrid, whose
-    pruned scan lives inside the memoized positional-decode stage."""
-    df = _QUERIES["registry_decode_at_rest"](spark, sf_dir)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    scan = next(l for l in plan.splitlines() if "FileScan parquet" in l)
-    assert "PartitionFilters: [isnotnull(height_bucket" in scan
-    assert "DataFilters: []" in scan
-    assert "ReadSchema: struct<blob_hex:string>" in scan
+    default (native-kernel) shape AND under the Python-walker shape a
+    host without a C toolchain runs."""
+    from zigchain_indexer_clickhouse_spark.functions import native_registry
 
-    import os
-    os.environ["SPARK_GRAFT_REGISTRY_DECODE"] = "hybrid"
-    try:
-        _QUERIES["registry_decode_at_rest"](spark, sf_dir).collect()
-    finally:
-        del os.environ["SPARK_GRAFT_REGISTRY_DECODE"]
-    from zigchain_indexer_clickhouse_spark.operators.dedup import (
-        _STAGE_CACHE,
-    )
-    key = (spark.sparkContext.applicationId, sf_dir,
-           "registry_at_rest_hybrid")
-    stage_plan = (_STAGE_CACHE[key]._jdf.queryExecution()
-                  .executedPlan().toString())
-    scan2 = next(l for l in stage_plan.splitlines()
-                 if "FileScan parquet" in l)
-    assert "PartitionFilters: [isnotnull(height_bucket" in scan2
-    assert "DataFilters: []" in scan2
-    assert "ReadSchema: struct<blob_hex:string>" in scan2
+    def scan_line() -> str:
+        df = _QUERIES["registry_decode_at_rest"](spark, sf_dir)
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return next(l for l in plan.splitlines() if "FileScan parquet" in l)
+
+    for python_only in (False, True):
+        if python_only:
+            monkeypatch.setattr(native_registry, "native_available",
+                                lambda: False)
+        scan = scan_line()
+        assert "PartitionFilters: [isnotnull(height_bucket" in scan
+        assert "DataFilters: []" in scan
+        assert "ReadSchema: struct<blob_hex:string>" in scan
 
 
 def test_range_split_matches_reference_formula(spark, sf_dir):

@@ -536,176 +536,56 @@ def test_decoders_fail_closed_on_truncated_frames(spark):
     assert ok.s.amount == "123456" and ok.e.sender == "zig1s"
 
 
-def test_msg_transfer_roundtrip_and_fail_closed(spark):
-    """MsgTransfer (#187 round-6 widening): the registry's first
-    embedded-message-in-the-middle scan plus a trailing scalar varint.
-    Round-trip must be exact for 1- and 2-byte timeout varints, and any
-    truncation or a timeout beyond the 2-byte range must fail the whole
-    struct closed to NULL."""
-    from zigchain_indexer_clickhouse_spark.functions.protobuf import (
-        encode_msg_transfer,
-        msg_transfer_fields,
-    )
-
-    df = spark.createDataFrame(
-        [(1, 5), (2, 127), (3, 128), (4, 16383)], "id long, tts long"
-    ).select(
-        "id", "tts",
-        encode_msg_transfer(
-            F.lit("transfer"),
-            F.concat(F.lit("channel-"), F.col("id").cast("string")),
-            F.lit("uzig"),
-            (F.col("id") * 1000).cast("string"),
-            F.concat(F.lit("zig1u"), F.col("id").cast("string")),
-            F.concat(F.lit("cosmos1r"), F.col("id").cast("string")),
-            F.col("tts"),
-        ).alias("blob"),
-    )
-    rows = df.select(
-        "id", "tts", msg_transfer_fields(F.col("blob")).alias("d")
-    ).collect()
-    for r in rows:
-        assert r["d"] is not None, r["id"]
-        assert r["d"]["source_port"] == "transfer"
-        assert r["d"]["source_channel"] == f"channel-{r['id']}"
-        assert r["d"]["denom"] == "uzig"
-        assert r["d"]["amount"] == str(r["id"] * 1000)
-        assert r["d"]["sender"] == f"zig1u{r['id']}"
-        assert r["d"]["receiver"] == f"cosmos1r{r['id']}"
-        assert r["d"]["timeout_timestamp"] == r["tts"]
-    # truncation anywhere fails closed
-    bad = df.select(
-        msg_transfer_fields(
-            F.expr("substring(blob, 1, length(blob) - 1)")
-        ).alias("d")
-    ).collect()
-    assert all(r["d"] is None for r in bad)
-
-
-def test_msg_undelegate_shares_delegate_wire_shape(spark):
-    """MsgUndelegate decodes with the (string, string, Coin) scan —
-    byte-identical wire form to MsgDelegate; only the typeUrl (and the
-    semantic direction) differs, mirroring cosmjs's shared generated
-    decoders."""
-    from zigchain_indexer_clickhouse_spark.functions.protobuf import (
-        encode_msg_delegate,
-        encode_msg_undelegate,
-        msg_undelegate_fields,
-    )
-
-    row = spark.range(1).select(
-        encode_msg_undelegate(
-            F.lit("zig1d"), F.lit("zigvaloper3"), F.lit("uzig"), F.lit("42")
-        ).alias("u"),
-        encode_msg_delegate(
-            F.lit("zig1d"), F.lit("zigvaloper3"), F.lit("uzig"), F.lit("42")
-        ).alias("d"),
-    ).select(
-        msg_undelegate_fields(F.col("u")).alias("uf"),
-        (F.col("u") == F.col("d")).alias("same_bytes"),
-    ).collect()[0]
-    assert row["same_bytes"]
-    assert row["uf"]["delegator_address"] == "zig1d"
-    assert row["uf"]["validator_address"] == "zigvaloper3"
-    assert row["uf"]["amount"] == "42"
-
-
 def test_msg_withdraw_reward_roundtrip_and_fail_closed(spark):
-    """MsgWithdrawDelegatorReward: the coin-less two-string body
-    round-trips; truncation, a trailing extra field, and a send-shaped
-    body all fail closed to NULL."""
+    """MsgWithdrawDelegatorReward: the encoder's coin-less two-string
+    body walks back to its fields with the Python walker, a truncated
+    body fails the walk closed, and the Any-wrapped body decodes 'ok'
+    in the registry dispatch."""
     from zigchain_indexer_clickhouse_spark.functions.protobuf import (
-        encode_msg_send,
+        encode_any_msg,
         encode_msg_withdraw_reward,
-        msg_withdraw_reward_fields,
+    )
+    from zigchain_indexer_clickhouse_spark.functions.protobuf_py import (
+        registry_decode_py,
+        walk,
+    )
+    from zigchain_indexer_clickhouse_spark.sources.tx_decode import (
+        _REGISTRY_URL_KEYS,
     )
 
-    good = spark.range(1).select(
-        msg_withdraw_reward_fields(
-            encode_msg_withdraw_reward(F.lit("zig1w"), F.lit("zigvaloper7"))
-        ).alias("f")
-    ).collect()[0]["f"]
-    assert good["delegator_address"] == "zig1w"
-    assert good["validator_address"] == "zigvaloper7"
-
-    blob = bytes([0x0A, 2]) + b"ab" + bytes([0x12, 3]) + b"val"
-    bad = [
-        bytearray(blob[:-1]),            # truncated mid-validator
-        bytearray(blob + b"\x1a\x01x"),  # trailing third field
-    ]
-    rows = spark.createDataFrame(
-        [(r,) for r in bad], "blob binary"
-    ).select(msg_withdraw_reward_fields(F.col("blob")).alias("f")).collect()
-    assert all(r["f"] is None for r in rows)
-    # a send body (which HAS a third field) is not a valid withdraw
-    send = spark.range(1).select(
-        msg_withdraw_reward_fields(
-            encode_msg_send(F.lit("a"), F.lit("b"), F.lit("uzig"), F.lit("1"))
-        ).alias("f")
-    ).collect()[0]["f"]
-    assert send is None
+    url = _REGISTRY_URL_KEYS["withdraw"]
+    body = encode_msg_withdraw_reward(F.lit("zig1w"), F.lit("zigvaloper7"))
+    row = spark.range(1).select(
+        body.alias("b"), encode_any_msg(F.lit(url), body).alias("a"),
+    ).collect()[0]
+    ok, ld, vi = walk(bytes(row["b"]), 8)
+    assert ok and vi == {}
+    assert ld == {1: [b"zig1w"], 2: [b"zigvaloper7"]}
+    assert walk(bytes(row["b"])[:-1], 8)[0] is False  # truncated
+    assert registry_decode_py(bytes(row["a"]), dict(_REGISTRY_URL_KEYS)) \
+        == (url, "ok", 0, 0, 0, 0)
 
 
 @pytest.mark.slowbattery
 def test_msg_redelegate_roundtrip_and_fail_closed(spark):
-    """MsgBeginRedelegate: the four-field (3 strings + Coin at 0x22)
-    body round-trips; a delegate body (coin at 0x1A) fails closed."""
+    """MsgBeginRedelegate: the encoder's four-field body (3 strings +
+    Coin at field 4) walks back to its fields and coin, and a
+    truncated body fails the walk closed."""
     from zigchain_indexer_clickhouse_spark.functions.protobuf import (
-        encode_msg_delegate,
         encode_msg_redelegate,
-        msg_redelegate_fields,
     )
+    from zigchain_indexer_clickhouse_spark.functions.protobuf_py import walk
 
-    good = spark.range(1).select(
-        msg_redelegate_fields(
-            encode_msg_redelegate(
-                F.lit("zig1r"), F.lit("zigvaloper1"), F.lit("zigvaloper2"),
-                F.lit("uzig"), F.lit("777"),
-            )
-        ).alias("f")
-    ).collect()[0]["f"]
-    assert good["delegator_address"] == "zig1r"
-    assert good["validator_src_address"] == "zigvaloper1"
-    assert good["validator_dst_address"] == "zigvaloper2"
-    assert good["denom"] == "uzig"
-    assert good["amount"] == "777"
-
-    cross = spark.range(1).select(
-        msg_redelegate_fields(
-            encode_msg_delegate(
-                F.lit("zig1r"), F.lit("zigvaloper1"), F.lit("uzig"),
-                F.lit("777"),
-            )
-        ).alias("f")
-    ).collect()[0]["f"]
-    assert cross is None
-
-
-def test_msg_deposit_roundtrip_and_fail_closed(spark):
-    """MsgDeposit: the varint + string + Coin body round-trips
-    (including a 2-byte-varint proposal id); a vote body (option
-    instead of coin) fails closed."""
-    from zigchain_indexer_clickhouse_spark.functions.protobuf import (
-        encode_msg_deposit,
-        encode_msg_vote,
-        msg_deposit_fields,
-    )
-
-    good = spark.range(1).select(
-        msg_deposit_fields(
-            encode_msg_deposit(
-                F.lit(9999), F.lit("zig1dep"), F.lit("uzig"), F.lit("123")
-            )
-        ).alias("f")
-    ).collect()[0]["f"]
-    assert good["proposal_id"] == 9999
-    assert good["depositor"] == "zig1dep"
-    assert good["denom"] == "uzig"
-    assert good["amount"] == "123"
-
-    cross = spark.range(1).select(
-        msg_deposit_fields(
-            encode_msg_vote(F.lit(7), F.lit("zig1dep"), F.lit(1))
-        ).alias("f")
-    ).collect()[0]["f"]
-    assert cross is None
+    blob = bytes(spark.range(1).select(
+        encode_msg_redelegate(
+            F.lit("zig1r"), F.lit("zigvaloper1"), F.lit("zigvaloper2"),
+            F.lit("uzig"), F.lit("777"),
+        ).alias("b")
+    ).collect()[0]["b"])
+    ok, ld, _ = walk(blob, 8)
+    assert ok
+    assert (ld[1], ld[2], ld[3]) == (
+        [b"zig1r"], [b"zigvaloper1"], [b"zigvaloper2"])
+    c_ok, c_ld, _ = walk(ld[4][0], 2)
+    assert c_ok and c_ld == {1: [b"uzig"], 2: [b"777"]}
+    assert walk(blob[:-1], 8)[0] is False

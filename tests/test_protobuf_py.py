@@ -1,12 +1,12 @@
-"""The Arrow-batched Python walker (functions/protobuf_py.py) against
-the expression walker — two independent implementations of the same
-wire semantics, cross-checked three ways:
+"""The Arrow-batched Python walker (functions/protobuf_py.py), the
+registry decode's executable spec, cross-checked three ways:
 
-1. a hypothesis property drives BOTH walkers over random (often
+1. a hypothesis property drives it and the expression walker
+   (functions/protobuf.py proto_scan_hex) over random (often
    malformed) wire bytes and asserts identical (ok, ld, vi);
-2. the full registry grid (every kind of the 56-slot synthesis) must
-   decode to IDENTICAL rows via the expression path and the pandas
-   path;
+2. the full registry grid (every kind of the 72-slot synthesis) must
+   decode to IDENTICAL rows via the two DataFrame surfaces, the
+   Python walker's mapInPandas and the C kernel's mapInArrow;
 3. a GOLDEN VECTOR: a realistic cosmjs-shaped tx hand-encoded by an
    INDEPENDENT pure-Python protobuf writer inside this test (not the
    engine's encoder), with multi-coin amounts, 10^18-scale values and
@@ -117,8 +117,8 @@ def test_huge_declared_length_fails_closed_both_walkers(spark):
 def test_coin_amt_noncanonical_parity():
     """Amount strings int(str) would accept but the canonical-digit
     gate must reject — plus int64 overflow — all None (ADVICE r9 low);
-    the expression-path parity is covered by the registry grid test
-    and the malformed-amount Spark test below."""
+    the C-kernel parity is covered by the registry grid test and the
+    malformed-amount Spark test below."""
     from zigchain_indexer_clickhouse_spark.functions.protobuf_py import (
         _coin_amt,
     )
@@ -136,13 +136,20 @@ def test_coin_amt_noncanonical_parity():
     assert _coin_amt(coin(b"-9223372036854775808")) == -(1 << 63)
 
 
-def test_coin_amt_noncanonical_parity_expression(spark):
-    """The SAME malformed amounts through the expression path: the
-    try_cast + rlike gate must NULL them (never CAST_INVALID_INPUT
-    under ANSI), byte-identical with the Python verdicts above."""
-    from zigchain_indexer_clickhouse_spark.sources.tx_decode import (
-        registry_decoded_struct,
+def test_coin_amt_noncanonical_parity_native(spark):
+    """The SAME malformed amounts through the C kernel's DataFrame
+    surface: each must land in the unknown bucket with amt 0 — never
+    throw, never misparse to a number — byte-identical with the Python
+    verdicts above."""
+    from zigchain_indexer_clickhouse_spark.functions.native_registry import (
+        native_available,
     )
+    from zigchain_indexer_clickhouse_spark.sources.tx_decode import (
+        registry_decoded_df_native,
+    )
+
+    if not native_available():
+        pytest.skip("no C toolchain in this environment")
 
     def send_any(amount: bytes) -> bytes:
         coin = _enc_msg(_enc_field(1, 2, b"uzig"),
@@ -157,60 +164,49 @@ def test_coin_amt_noncanonical_parity_expression(spark):
     amounts = [b"42", b"1_0", b"+5", b" 5", b"", b"9223372036854775808",
                b"9223372036854775807"]
     df = spark.createDataFrame(
-        [(i, send_any(a).hex().upper()) for i, a in enumerate(amounts)],
-        "i int, blob_hex string",
-    )
-    rows = (df.select("i", registry_decoded_struct(F.col("blob_hex"))
-                      .alias("d"))
-            .select("i", "d.status", "d.amt").collect())
-    got = {r["i"]: (r["status"], r["amt"]) for r in rows}
-    # the struct contract coalesces amt to 0 and keys failure on
-    # status — a malformed amount must land in the unknown bucket,
-    # never throw, never misparse to a number
+        [(send_any(a).hex().upper(),) for a in amounts], "blob_hex string",
+    ).coalesce(1)
+    got = [(r["status"], r["amt"])
+           for r in registry_decoded_df_native(df).collect()]
     bad = ("Unknown message type", 0)
-    expected = {0: ("ok", 42), 1: bad, 2: bad, 3: bad, 4: bad, 5: bad,
-                6: ("ok", (1 << 63) - 1)}
+    expected = [("ok", 42), bad, bad, bad, bad, bad, ("ok", (1 << 63) - 1)]
     assert got == expected
 
     # and the Python path agrees on every one
-    for i, a in enumerate(amounts):
+    for a, exp in zip(amounts, expected):
         py = registry_decode_py(send_any(a), _urls())
-        assert (py[1], py[2]) == expected[i], (a, py)
+        assert (py[1], py[2]) == exp, (a, py)
 
 
 # --- 2. full-grid equality of the two registry decode paths ----------------
 
-def test_registry_pandas_path_equals_expression_path(spark):
+def test_registry_python_path_equals_native_path(spark):
     from zigchain_indexer_clickhouse_spark.catalog import load
+    from zigchain_indexer_clickhouse_spark.functions.native_registry import (
+        native_available,
+    )
     from zigchain_indexer_clickhouse_spark.sources.tx_decode import (
+        _REGISTRY_MOD,
         _registry_blob_hex,
-        registry_decoded_struct,
-        registry_decoded_struct_py,
+        registry_decoded_df_native,
+        registry_decoded_df_py,
     )
 
+    if not native_available():
+        pytest.skip("no C toolchain in this environment")
     blobs = (
         load(spark, SF, "events")
-        .limit(400)  # 7 full passes over the 56-kind grid
+        .limit(400)  # 5 full passes over the 72-kind grid
         .select(F.col("event_id"), _registry_blob_hex().alias("blob_hex"))
         .persist()
     )
     blobs.count()
-    cols = ["event_id", "d.type_url", "d.status", "d.amt", "d.pid",
-            "d.yes", "d.timeout"]
-    expr = (blobs.select("event_id",
-                         registry_decoded_struct(F.col("blob_hex"))
-                         .alias("d"))
-            .select(*cols).collect())
-    pand = (blobs.select("event_id",
-                         registry_decoded_struct_py(F.col("blob_hex"))
-                         .alias("d"))
-            .select(*cols).collect())
-    assert sorted(map(tuple, expr)) == sorted(map(tuple, pand))
-    from zigchain_indexer_clickhouse_spark.sources.tx_decode import (
-        _REGISTRY_MOD,
-    )
-    kinds = {r["event_id"] % _REGISTRY_MOD for r in expr}
-    assert kinds == set(range(_REGISTRY_MOD))  # every arm exercised
+    # both maps keep the cached frame's row order: compare row by row
+    native = registry_decoded_df_native(blobs).collect()
+    py = registry_decoded_df_py(blobs.select("blob_hex")).collect()
+    assert list(map(tuple, native)) == list(map(tuple, py))
+    ids = [r["event_id"] for r in blobs.collect()]
+    assert {i % _REGISTRY_MOD for i in ids} == set(range(_REGISTRY_MOD))
     blobs.unpersist()
 
 
@@ -269,18 +265,21 @@ def test_golden_vector_python_decoder():
     assert (pid, yes, timeout) == (0, 0, 0)
 
 
-def test_golden_vector_expression_decoder(spark):
+def _decode_hex_df(df):
+    """Registry-decode a one-column ``blob_hex`` frame through the C
+    kernel when it compiled, else the Python walker's DataFrame
+    surface."""
     from zigchain_indexer_clickhouse_spark.sources.tx_decode import (
-        registry_decoded_struct,
+        registry_decoded_df,
     )
 
-    row = (
-        spark.range(1)
-        .select(registry_decoded_struct(
-            F.lit(_golden_send_any().hex().upper())).alias("d"))
-        .select("d.*")
-        .collect()[0]
-    )
+    return registry_decoded_df(df).collect()
+
+
+def test_golden_vector_dataframe_decoder(spark):
+    df = spark.createDataFrame([(_golden_send_any().hex().upper(),)],
+                               "blob_hex string")
+    row = _decode_hex_df(df)[0]
     assert row["type_url"] == "/cosmos.bank.v1beta1.MsgSend"
     assert row["status"] == "ok"
     assert row["amt"] == 2500000000000000000 + 1250000
@@ -295,9 +294,6 @@ def test_golden_vector_txraw_end_to_end(spark):
     from zigchain_indexer_clickhouse_spark.functions.protobuf import (
         tx_body_messages,
         tx_raw_body,
-    )
-    from zigchain_indexer_clickhouse_spark.sources.tx_decode import (
-        registry_decoded_struct,
     )
 
     delegate_body = _enc_msg(
@@ -319,14 +315,13 @@ def test_golden_vector_txraw_end_to_end(spark):
         _enc_field(2, 2, b"\x0a\x02\x08\x01"),      # auth_info stub
         _enc_field(3, 2, bytes(range(64))),          # a 64-byte signature
     )
-    rows = (
+    msgs = (
         spark.createDataFrame([(bytearray(tx_raw),)], "raw binary")
         .select(F.explode(tx_body_messages(tx_raw_body(F.col("raw"))))
                 .alias("msg"))
-        .select(registry_decoded_struct(F.hex(F.col("msg"))).alias("d"))
-        .select("d.*")
-        .collect()
+        .select(F.hex(F.col("msg")).alias("blob_hex"))
     )
+    rows = _decode_hex_df(msgs)
     got = {r["type_url"]: r for r in rows}
     assert set(got) == {"/cosmos.bank.v1beta1.MsgSend",
                         "/cosmos.staking.v1beta1.MsgDelegate"}

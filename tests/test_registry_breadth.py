@@ -1,61 +1,18 @@
-"""MsgDelegate + MsgVote decode breadth (functions/protobuf.py) and the
-widened 4-type registry dispatch (sources/tx_decode.py
-msg_registry_decode) — the reference registers ALL defaultRegistryTypes
-(src/utils/decoder.js:9); each type here shrinks the unknown-type
-fallback envelope to decoded fields."""
+"""MsgVote encoding (functions/protobuf.py) and the 67-type registry
+dispatch (sources/tx_decode.py msg_registry_decode) — the reference
+registers ALL defaultRegistryTypes (src/utils/decoder.js:9); each type
+here shrinks the unknown-type fallback envelope to decoded fields."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from zigchain_indexer_clickhouse_spark.functions.protobuf import (
-    encode_msg_delegate,
     encode_msg_vote,
-    msg_delegate_fields,
-    msg_send_fields,
-    msg_vote_fields,
 )
+from zigchain_indexer_clickhouse_spark.functions.protobuf_py import walk
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_msg_delegate_roundtrip_hand_encoded_wire(spark):
-    """Decode a MsgDelegate body from HAND-built wire bytes (raw
-    tag/length arithmetic, independent of the Spark encoder), and check
-    the Spark encoder reproduces the bytes exactly."""
-    delegator, validator, denom, amount = (
-        "zig1delegator7", "zigvaloper42", "uzig", "123450"
-    )
-    coin = (
-        bytes([0x0A, len(denom)]) + denom.encode()
-        + bytes([0x12, len(amount)]) + amount.encode()
-    )
-    wire = (
-        bytes([0x0A, len(delegator)]) + delegator.encode()
-        + bytes([0x12, len(validator)]) + validator.encode()
-        + bytes([0x1A, len(coin)]) + coin
-    )
-    df = spark.createDataFrame(
-        [(delegator, validator, denom, amount)],
-        "d string, v string, dn string, a string",
-    )
-    enc = df.select(
-        encode_msg_delegate(
-            F.col("d"), F.col("v"), F.col("dn"), F.col("a")
-        ).alias("b")
-    ).collect()[0]["b"]
-    assert bytes(enc) == wire
-    got = (
-        spark.createDataFrame([(bytearray(wire),)], "blob binary")
-        .select(msg_delegate_fields(F.col("blob")).alias("m"))
-        .collect()[0]["m"]
-    )
-    assert got.asDict() == {
-        "delegator_address": delegator,
-        "validator_address": validator,
-        "denom": denom,
-        "amount": amount,
-    }
 
 
 def test_msg_vote_roundtrip_including_two_byte_varint_pid(spark):
@@ -80,48 +37,10 @@ def test_msg_vote_roundtrip_including_two_byte_varint_pid(spark):
             encode_msg_vote(F.col("p"), F.col("v"), F.col("o")).alias("b")
         ).collect()[0]["b"]
         assert bytes(enc) == wire, (pid, voter, option)
-        got = (
-            spark.createDataFrame([(bytearray(wire),)], "blob binary")
-            .select(msg_vote_fields(F.col("blob")).alias("m"))
-            .collect()[0]["m"]
-        )
-        assert got.asDict() == {
-            "proposal_id": pid, "voter": voter, "option": option
-        }
-
-
-def test_vote_and_delegate_fail_closed_not_shifted(spark):
-    """A MsgVote blob fed to the delegate scanner (and vice versa), a
-    truncated vote, and trailing garbage all decode NULL — the
-    unknown-type fallback, never a shifted misread."""
-    voter = "zig1v7"
-    vote = (
-        bytes([0x08, 0x07])
-        + bytes([0x12, len(voter)]) + voter.encode()
-        + bytes([0x18, 0x02])
-    )
-    rows = [
-        bytearray(vote[:-1]),          # truncated mid-option
-        bytearray(vote + b"\x20\x01"),  # trailing unknown field
-        bytearray(b"\x0a\x02ab"),       # delegate-shaped prefix only
-    ]
-    df = spark.createDataFrame([(r,) for r in rows], "blob binary")
-    out = df.select(
-        msg_vote_fields(F.col("blob")).alias("v"),
-        msg_delegate_fields(F.col("blob")).alias("d"),
-    ).collect()
-    assert all(r["v"] is None and r["d"] is None for r in out)
-    # and the valid vote blob is NOT a valid delegate/send body
-    ok = (
-        spark.createDataFrame([(bytearray(vote),)], "blob binary")
-        .select(
-            msg_vote_fields(F.col("blob")).alias("v"),
-            msg_delegate_fields(F.col("blob")).alias("d"),
-            msg_send_fields(F.col("blob")).alias("s"),
-        )
-        .collect()[0]
-    )
-    assert ok["v"] is not None and ok["d"] is None and ok["s"] is None
+        ok, ld, vi = walk(wire, 8)
+        assert ok
+        assert ld == {2: [voter.encode()]}
+        assert vi == {1: pid, 3: option}
 
 
 def test_registry_decode_populations_and_outcome_dispatch(spark):

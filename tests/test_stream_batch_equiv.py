@@ -286,28 +286,21 @@ def test_stream_registry_decode_matches_batch_twin(spark, sf_dir):
 
 
 @pytest.mark.slowbattery
-def test_stream_registry_decode_native_equals_python_shape(spark, sf_dir):
-    """#47b's r11 default is the native C kernel riding mapInArrow
-    inside the micro-batch plan; forcing the Arrow-Python walker must
-    produce the identical complete-mode rollup (the kernel's
-    flagged-row fallback contract, live)."""
-    import os
-
-    from zigchain_indexer_clickhouse_spark.functions.native_registry import (
-        native_available,
-    )
+def test_stream_registry_decode_native_equals_python_shape(
+        spark, sf_dir, monkeypatch):
+    """#47b's default is the native C kernel riding mapInArrow inside
+    the micro-batch plan; the Python walker a host without a C
+    toolchain runs must produce the identical complete-mode rollup
+    (the kernel's flagged-row fallback contract, live)."""
+    from zigchain_indexer_clickhouse_spark.functions import native_registry
     from zigchain_indexer_clickhouse_spark.plans import registry
 
-    if not native_available():
-        import pytest
+    if not native_registry.native_available():
         pytest.skip("no C toolchain in this environment")
     qs = registry.queries()
     native = sorted(tuple(r) for r in
                     qs["stream_registry_decode"](spark, sf_dir).collect())
-    os.environ["SPARK_GRAFT_REGISTRY_DECODE"] = "python"
-    try:
-        py = sorted(tuple(r) for r in
-                    qs["stream_registry_decode"](spark, sf_dir).collect())
-    finally:
-        del os.environ["SPARK_GRAFT_REGISTRY_DECODE"]
+    monkeypatch.setattr(native_registry, "native_available", lambda: False)
+    py = sorted(tuple(r) for r in
+                qs["stream_registry_decode"](spark, sf_dir).collect())
     assert native == py and len(native) == 68

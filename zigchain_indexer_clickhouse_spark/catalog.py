@@ -10,8 +10,6 @@ predicate pushdown, column pruning, and partition pruning for free.
 
 from __future__ import annotations
 
-import sys
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -94,20 +92,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set(tz_conf, "UTC")
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    # Gate-path warm hook: load() is the one (spark, sf_dir) chokepoint
-    # every operator passes, so the battery's FIRST row kicks off the
-    # background positional-chain parse for the hybrid decode row that
-    # runs minutes later (tx_decode._warm_hybrid_chain_async — inert
-    # unless the oracle battery's memo warm is active, so the bench and
-    # plain library callers never spawn a thread here). sys.modules
-    # guard: never IMPORT the decode module from the catalog — only
-    # poke it if an operator already did.
-    td = sys.modules.get("zigchain_indexer_clickhouse_spark.sources.tx_decode")
-    if td is not None:
-        try:
-            td._warm_hybrid_chain_async(spark, sf_dir)
-        except Exception:
-            pass
     cache = getattr(spark, _CACHE_ATTR, None)
     if cache is None:
         cache = {}
@@ -199,7 +183,7 @@ def verify_catalog(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     for t in TABLES:
         try:
             cols = tuple(load(spark, sf_dir, t).columns)
-        except Exception:
+        except Exception:  # noqa: BLE001 — any unreadable table is reported
             report[t] = "missing"
             continue
         expected = EXPECTED_COLUMNS[t]

@@ -18,7 +18,7 @@ toolchain, the kernel is a line-for-line port of
 bit-identically (wasm JSON amounts, int64-overflow coin sums, bad
 hex) come back flagged and are re-decoded by the Python walker, so
 row-level semantics are EXACTLY the walker's on every input
-(property-tested alongside the positional dispatch).
+(property-tested in tests/test_native_registry.py).
 
 At 100 TB the shape is unchanged from the Python path — a stateless
 narrow map over the scan — but the per-row cost drops from ~27 µs to
@@ -26,14 +26,14 @@ narrow map over the scan — but the per-row cost drops from ~27 µs to
 core-hours.  On a real cluster the .so ships like any other artifact
 (--archives); here executors share the driver's filesystem and the
 compile is cached by source hash.  When no C toolchain is available
-the callers fall back to the Python walker (import-try gate, per the
-environment brief).
+the callers fall back to the Python walker and a warning is logged.
 """
 
 from __future__ import annotations
 
 import ctypes
 import hashlib
+import logging
 import os
 import subprocess
 import tempfile
@@ -78,6 +78,7 @@ NATIVE_KEYS = (
 
 _LIB = None
 _LIB_TRIED = False
+_log = logging.getLogger(__name__)
 
 
 def _cache_dir() -> str:
@@ -119,11 +120,12 @@ def _safe_to_load(path: str) -> bool:
 
 def _load() -> ctypes.CDLL | None:
     """Compile (once, cached by source hash under a user-private dir)
-    and load the kernel; None when no toolchain is available."""
+    and load the kernel; None when no toolchain is available.  That
+    moves every decode to the Python walker, about 100× slower, so it
+    logs one warning with the error; any other error propagates."""
     global _LIB, _LIB_TRIED
     if _LIB_TRIED:
         return _LIB
-    _LIB_TRIED = True
     try:
         src = open(_SRC, "rb").read()
         tag = hashlib.md5(src).hexdigest()[:12]
@@ -156,8 +158,11 @@ def _load() -> ctypes.CDLL | None:
         lib = ctypes.CDLL(so)
         lib.registry_decode_batch.restype = None
         _LIB = lib
-    except Exception:
+    except (OSError, subprocess.CalledProcessError) as err:
+        _log.warning("native registry kernel unavailable, decoding with "
+                     "the Python walker: %s", err)
         _LIB = None
+    _LIB_TRIED = True
     return _LIB
 
 
@@ -391,13 +396,3 @@ def make_native_arrow_fn(urls: dict):
 
     return _fn
 
-
-def make_native_map_fn(urls: dict):
-    """mapInPandas twin (hex input) — kept for the batch shapes that
-    already carry hex columns and for tests."""
-
-    def _fn(batches):
-        for pdf in batches:
-            yield decode_batch(pdf["blob_hex"], urls)
-
-    return _fn

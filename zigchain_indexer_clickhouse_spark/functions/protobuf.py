@@ -314,10 +314,6 @@ def tx_body_messages(body: Column, max_msgs: int = 16) -> Column:
 _MSG_SEND_STRUCT = (
     "struct<from_address:string,to_address:string,denom:string,amount:string>"
 )
-_MSG_DELEGATE_STRUCT = (
-    "struct<delegator_address:string,validator_address:string,"
-    "denom:string,amount:string>"
-)
 
 
 def msg_send_fields(blob: Column) -> Column:
@@ -339,30 +335,6 @@ def msg_send_fields(blob: Column) -> Column:
     The Any-level walkers (any_type_url / any_value) DO handle 2-byte
     varints — the Any value is the one length that routinely exceeds
     127 bytes."""
-    return _addr_pair_coin_fields(
-        blob, "from_address", "to_address", _MSG_SEND_STRUCT
-    )
-
-
-def msg_delegate_fields(blob: Column) -> Column:
-    """Decode a ``cosmos.staking.v1beta1.MsgDelegate`` body into
-    struct(delegator_address, validator_address, denom, amount). The
-    wire layout is field-for-field identical to MsgSend (field 1
-    delegator string, field 2 validator string, field 3 a single Coin),
-    so the same sequential scan applies with only the struct names
-    changed — exactly how the reference's registry shares generated
-    decode paths across same-shaped staking/bank messages
-    (src/utils/decoder.js:9 defaultRegistryTypes covers both)."""
-    return _addr_pair_coin_fields(
-        blob, "delegator_address", "validator_address", _MSG_DELEGATE_STRUCT
-    )
-
-
-def _addr_pair_coin_fields(blob: Column, f1: str, f2: str,
-                           struct_type: str) -> Column:
-    """The shared (string, string, Coin) body scan behind
-    msg_send_fields / msg_delegate_fields — see msg_send_fields for the
-    1-byte-varint fast-path rationale."""
     h = F.hex(blob)
     ok1 = F.substring(h, 1, 2) == "0A"
     l1 = _byte_at(h, 3)
@@ -383,8 +355,8 @@ def _addr_pair_coin_fields(blob: Column, f1: str, f2: str,
     la = _byte_at(coin, pc + 2)
     amount = F.decode(F.unhex(F.substr(coin, pc + 4, la * 2)), "UTF-8")
     st = F.struct(
-        frm.alias(f1),
-        to.alias(f2),
+        frm.alias("from_address"),
+        to.alias("to_address"),
         denom.alias("denom"),
         amount.alias("amount"),
     )
@@ -398,18 +370,8 @@ def _addr_pair_coin_fields(blob: Column, f1: str, f2: str,
         pc + 4 + la * 2 - 1 == F.length(coin)
     )
     return F.when(ok1 & ok2 & ok3 & okc1 & okc2 & short & exact, st).otherwise(
-        F.lit(None).cast(struct_type)
+        F.lit(None).cast(_MSG_SEND_STRUCT)
     )
-
-
-def encode_msg_delegate(delegator: Column, validator: Column,
-                        denom: Column, amount: Column) -> Column:
-    """Wire bytes of ``cosmos.staking.v1beta1.MsgDelegate`` — same
-    (string, string, Coin) layout as MsgSend with staking semantics."""
-    return encode_msg_send(delegator, validator, denom, amount)
-
-
-_MSG_VOTE_STRUCT = "struct<proposal_id:bigint,voter:string,option:int>"
 
 
 def encode_msg_vote(proposal_id: Column, voter: Column,
@@ -426,42 +388,6 @@ def encode_msg_vote(proposal_id: Column, voter: Column,
         _ld_field("12", F.hex(voter.cast("binary")), F.octet_length(voter)),
         F.lit("18"), _varint_hex(option),
     ))
-
-
-def msg_vote_fields(blob: Column) -> Column:
-    """Decode a ``MsgVote`` body into struct(proposal_id, voter,
-    option) — the registry's first SCALAR-VARINT field decode (the
-    string/Coin scans above only ever read varints as lengths).
-    proposal_id accepts 1- or 2-byte varints (ids < 16384); option is
-    a 1-byte enum. Any continuation bit beyond those ranges, a
-    misplaced tag, or trailing bytes after the option fail the whole
-    struct to NULL — the unknown-type fallback, never a shifted
-    misread."""
-    h = F.hex(blob)
-    ok1 = F.substring(h, 1, 2) == "08"
-    b0 = _byte_at(h, 3)
-    b1 = _byte_at(h, 5)
-    one = b0 < 128
-    pid = F.when(one, b0).otherwise((b0 - 128) + b1 * 128).cast("bigint")
-    p2 = F.when(one, F.lit(5)).otherwise(F.lit(7))
-    ok2 = F.substr(h, p2, F.lit(2)) == "12"
-    l2 = _byte_at(h, p2 + 2)
-    voter = F.decode(F.unhex(F.substr(h, p2 + 4, l2 * 2)), "UTF-8")
-    p3 = p2 + 4 + l2 * 2
-    ok3 = F.substr(h, p3, F.lit(2)) == "18"
-    o0 = _byte_at(h, p3 + 2)
-    st = F.struct(
-        pid.alias("proposal_id"),
-        voter.alias("voter"),
-        o0.cast("int").alias("option"),
-    )
-    short = (one | (b1 < 128)) & (l2 < 128) & (o0 < 128)
-    # option (1-byte varint) is the last field: the scan must land
-    # exactly on the body's end
-    exact = p3 + 3 == F.length(h)
-    return F.when(ok1 & ok2 & ok3 & short & exact, st).otherwise(
-        F.lit(None).cast(_MSG_VOTE_STRUCT)
-    )
 
 
 _MSG_EXECUTE_STRUCT = (
@@ -518,131 +444,6 @@ def msg_execute_fields(blob: Column) -> Column:
     )
 
 
-_MSG_TRANSFER_STRUCT = (
-    "struct<source_port:string,source_channel:string,denom:string,"
-    "amount:string,sender:string,receiver:string,timeout_timestamp:bigint>"
-)
-
-
-def encode_msg_transfer(port: Column, channel: Column, denom: Column,
-                        amount: Column, sender: Column, receiver: Column,
-                        timeout_ts: Column) -> Column:
-    """Wire bytes of ``ibc.applications.transfer.v1.MsgTransfer`` (the
-    IBC fungible-token transfer the reference's defaultRegistryTypes
-    registry covers via @cosmjs/stargate, decoder.js:9): field 1
-    source_port (string), field 2 source_channel (string), field 3
-    token (Coin message), field 4 sender (string), field 5 receiver
-    (string), field 7 timeout_timestamp (uint64 varint, tag 0x38).
-    timeout_height (field 6, optional message) is omitted — optional
-    proto3 message fields simply don't appear on the wire, which is
-    exactly the skip case the decoder must survive."""
-    coin_hex = F.concat(
-        _ld_field("0A", F.hex(denom.cast("binary")), F.octet_length(denom)),
-        _ld_field("12", F.hex(amount.cast("binary")), F.octet_length(amount)),
-    )
-    return F.unhex(F.concat(
-        _ld_field("0A", F.hex(port.cast("binary")), F.octet_length(port)),
-        _ld_field("12", F.hex(channel.cast("binary")), F.octet_length(channel)),
-        _ld_field("1A", coin_hex, (F.length(coin_hex) / 2).cast("int")),
-        _ld_field("22", F.hex(sender.cast("binary")), F.octet_length(sender)),
-        _ld_field("2A", F.hex(receiver.cast("binary")),
-                  F.octet_length(receiver)),
-        F.lit("38"), _varint_hex(timeout_ts),
-    ))
-
-
-def msg_transfer_fields(blob: Column) -> Column:
-    """Decode a ``MsgTransfer`` body into struct(source_port,
-    source_channel, denom, amount, sender, receiver,
-    timeout_timestamp). Two scan patterns appear here for the first
-    time in the registry: an embedded MESSAGE IN THE MIDDLE of the body
-    (every earlier shape put its Coin last) so the scan must resume
-    AFTER a nested message using its declared length, and a TRAILING
-    SCALAR VARINT (timeout_timestamp, 1- or 2-byte like every varint in
-    this module). The same fail-closed contract as the other scanners:
-    any misplaced tag, continuation bit past the supported range, or a
-    body not ending exactly at the timeout varint returns NULL — the
-    reference's unknown-type fallback, never a shifted misread."""
-    h = F.hex(blob)
-    ok1 = F.substring(h, 1, 2) == "0A"
-    l1 = _byte_at(h, 3)
-    port = F.decode(F.unhex(F.substr(h, F.lit(5), l1 * 2)), "UTF-8")
-    p2 = l1 * 2 + 5
-    ok2 = F.substr(h, p2, F.lit(2)) == "12"
-    l2 = _byte_at(h, p2 + 2)
-    chan = F.decode(F.unhex(F.substr(h, p2 + 4, l2 * 2)), "UTF-8")
-    p3 = p2 + 4 + l2 * 2
-    ok3 = F.substr(h, p3, F.lit(2)) == "1A"
-    l3 = _byte_at(h, p3 + 2)
-    coin = F.substr(h, p3 + 4, l3 * 2)
-    okc1 = F.substring(coin, 1, 2) == "0A"
-    ld = _byte_at(coin, 3)
-    denom = F.decode(F.unhex(F.substr(coin, F.lit(5), ld * 2)), "UTF-8")
-    pc = ld * 2 + 5
-    okc2 = F.substr(coin, pc, F.lit(2)) == "12"
-    la = _byte_at(coin, pc + 2)
-    amount = F.decode(F.unhex(F.substr(coin, pc + 4, la * 2)), "UTF-8")
-    # resume the outer scan after the nested Coin
-    p4 = p3 + 4 + l3 * 2
-    ok4 = F.substr(h, p4, F.lit(2)) == "22"
-    l4 = _byte_at(h, p4 + 2)
-    sender = F.decode(F.unhex(F.substr(h, p4 + 4, l4 * 2)), "UTF-8")
-    p5 = p4 + 4 + l4 * 2
-    ok5 = F.substr(h, p5, F.lit(2)) == "2A"
-    l5 = _byte_at(h, p5 + 2)
-    receiver = F.decode(F.unhex(F.substr(h, p5 + 4, l5 * 2)), "UTF-8")
-    p7 = p5 + 4 + l5 * 2
-    ok7 = F.substr(h, p7, F.lit(2)) == "38"
-    b0 = _byte_at(h, p7 + 2)
-    b1 = _byte_at(h, p7 + 4)
-    one = b0 < 128
-    tts = F.when(one, b0).otherwise((b0 - 128) + b1 * 128).cast("bigint")
-    st = F.struct(
-        port.alias("source_port"),
-        chan.alias("source_channel"),
-        denom.alias("denom"),
-        amount.alias("amount"),
-        sender.alias("sender"),
-        receiver.alias("receiver"),
-        tts.alias("timeout_timestamp"),
-    )
-    short = (
-        (l1 < 128) & (l2 < 128) & (l3 < 128) & (l4 < 128) & (l5 < 128)
-        & (ld < 128) & (la < 128) & (one | (b1 < 128))
-    )
-    # the timeout varint is the last field: the scan must land exactly
-    # on the body's end; the coin's amount must end the coin likewise
-    exact = (
-        F.when(one, p7 + 3).otherwise(p7 + 5) == F.length(h)
-    ) & (pc + 4 + la * 2 - 1 == F.length(coin))
-    return F.when(
-        ok1 & ok2 & ok3 & okc1 & okc2 & ok4 & ok5 & ok7 & short & exact, st
-    ).otherwise(F.lit(None).cast(_MSG_TRANSFER_STRUCT))
-
-
-def encode_msg_undelegate(delegator: Column, validator: Column,
-                          denom: Column, amount: Column) -> Column:
-    """Wire bytes of ``cosmos.staking.v1beta1.MsgUndelegate`` — wire
-    layout identical to MsgDelegate/MsgSend (string, string, Coin); the
-    registry distinguishes the two staking directions purely by
-    typeUrl, exactly as cosmjs does (decoder.js:9)."""
-    return encode_msg_send(delegator, validator, denom, amount)
-
-
-def msg_undelegate_fields(blob: Column) -> Column:
-    """Decode a ``MsgUndelegate`` body — shares the
-    (string, string, Coin) scan with MsgDelegate; dispatch on typeUrl
-    upstream decides which staking direction the fields mean."""
-    return _addr_pair_coin_fields(
-        blob, "delegator_address", "validator_address", _MSG_DELEGATE_STRUCT
-    )
-
-
-_MSG_WITHDRAW_STRUCT = (
-    "struct<delegator_address:string,validator_address:string>"
-)
-
-
 def encode_msg_withdraw_reward(delegator: Column, validator: Column) -> Column:
     """Wire bytes of
     ``cosmos.distribution.v1beta1.MsgWithdrawDelegatorReward``: the
@@ -655,35 +456,6 @@ def encode_msg_withdraw_reward(delegator: Column, validator: Column) -> Column:
         _ld_field("12", F.hex(validator.cast("binary")),
                   F.octet_length(validator)),
     ))
-
-
-def msg_withdraw_reward_fields(blob: Column) -> Column:
-    """Decode a ``MsgWithdrawDelegatorReward`` body into
-    struct(delegator_address, validator_address) — the two-string scan
-    (same 1-byte-varint fast path and fail-closed discipline as
-    msg_send_fields; the exact-end check makes a trailing third field
-    NULL the struct rather than pass unnoticed)."""
-    h = F.hex(blob)
-    ok1 = F.substring(h, 1, 2) == "0A"
-    l1 = _byte_at(h, 3)
-    dele = F.decode(F.unhex(F.substr(h, F.lit(5), l1 * 2)), "UTF-8")
-    p2 = l1 * 2 + 5
-    ok2 = F.substr(h, p2, F.lit(2)) == "12"
-    l2 = _byte_at(h, p2 + 2)
-    val = F.decode(F.unhex(F.substr(h, p2 + 4, l2 * 2)), "UTF-8")
-    short = (l1 < 128) & (l2 < 128)
-    exact = p2 + 4 + l2 * 2 - 1 == F.length(h)
-    st = F.struct(dele.alias("delegator_address"),
-                  val.alias("validator_address"))
-    return F.when(ok1 & ok2 & short & exact, st).otherwise(
-        F.lit(None).cast(_MSG_WITHDRAW_STRUCT)
-    )
-
-
-_MSG_REDELEGATE_STRUCT = (
-    "struct<delegator_address:string,validator_src_address:string,"
-    "validator_dst_address:string,denom:string,amount:string>"
-)
 
 
 def encode_msg_redelegate(delegator: Column, src: Column, dst: Column,
@@ -705,60 +477,16 @@ def encode_msg_redelegate(delegator: Column, src: Column, dst: Column,
     ))
 
 
-def msg_redelegate_fields(blob: Column) -> Column:
-    """Decode a ``MsgBeginRedelegate`` body into struct(delegator,
-    validator_src, validator_dst, denom, amount) — the three-string +
-    Coin scan (tag 0x22 for the coin, vs MsgSend's 0x1A; same
-    fail-closed length discipline)."""
-    h = F.hex(blob)
-    ok1 = F.substring(h, 1, 2) == "0A"
-    l1 = _byte_at(h, 3)
-    dele = F.decode(F.unhex(F.substr(h, F.lit(5), l1 * 2)), "UTF-8")
-    p2 = l1 * 2 + 5
-    ok2 = F.substr(h, p2, F.lit(2)) == "12"
-    l2 = _byte_at(h, p2 + 2)
-    src = F.decode(F.unhex(F.substr(h, p2 + 4, l2 * 2)), "UTF-8")
-    p3 = p2 + 4 + l2 * 2
-    ok3 = F.substr(h, p3, F.lit(2)) == "1A"
-    l3 = _byte_at(h, p3 + 2)
-    dst = F.decode(F.unhex(F.substr(h, p3 + 4, l3 * 2)), "UTF-8")
-    p4 = p3 + 4 + l3 * 2
-    ok4 = F.substr(h, p4, F.lit(2)) == "22"
-    l4 = _byte_at(h, p4 + 2)
-    coin = F.substr(h, p4 + 4, l4 * 2)
-    okc1 = F.substring(coin, 1, 2) == "0A"
-    ld = _byte_at(coin, 3)
-    denom = F.decode(F.unhex(F.substr(coin, F.lit(5), ld * 2)), "UTF-8")
-    pc = ld * 2 + 5
-    okc2 = F.substr(coin, pc, F.lit(2)) == "12"
-    la = _byte_at(coin, pc + 2)
-    amount = F.decode(F.unhex(F.substr(coin, pc + 4, la * 2)), "UTF-8")
-    short = (l1 < 128) & (l2 < 128) & (l3 < 128) & (l4 < 128) \
-        & (ld < 128) & (la < 128)
-    exact = (p4 + 4 + l4 * 2 - 1 == F.length(h)) & (
-        pc + 4 + la * 2 - 1 == F.length(coin)
-    )
-    st = F.struct(
-        dele.alias("delegator_address"),
-        src.alias("validator_src_address"),
-        dst.alias("validator_dst_address"),
-        denom.alias("denom"),
-        amount.alias("amount"),
-    )
-    return F.when(
-        ok1 & ok2 & ok3 & ok4 & okc1 & okc2 & short & exact, st
-    ).otherwise(F.lit(None).cast(_MSG_REDELEGATE_STRUCT))
-
-
 # --------------------------------------------------------------------------
 # Generic wire walker + generic encoder — the constant-size registry path
 # --------------------------------------------------------------------------
 #
-# The per-type positional scanners above (msg_send_fields & co.) compose
-# field POSITIONS as expression trees: every later field's offset embeds
-# every earlier field's length subtree, so tree size grows ~2^fields and
-# a 10-type union costs minutes of Catalyst analysis + Janino compile
-# per invocation while touching almost no rows (round-6 profile:
+# The per-type positional scanners above (msg_send_fields,
+# msg_execute_fields) compose field POSITIONS as expression trees: every
+# later field's offset embeds every earlier field's length subtree, so
+# tree size grows ~2^fields and a 10-type union costs minutes of
+# Catalyst analysis + Janino compile per invocation while touching
+# almost no rows (round-6 profile:
 # ~55 s analysis + ~100 s compile for 10k rows at sf0.01). The walker
 # below is the other point in the design space — the tx_body_messages
 # pattern generalized: ONE constant-size fold expression walks every
@@ -818,15 +546,9 @@ def ld1(ld_map: Column, fno) -> Column:
     """First payload of field ``fno`` in a scan's ``ld`` map — the
     accessor for SINGULAR message/string fields (standard encoders
     emit them once; on a malformed repeat the first occurrence is as
-    good an anchor as any and shape checks still see the real arity
-    via :func:`ld_all`). NULL-safe: missing field → NULL."""
+    good an anchor as any; ``ld_map[fno]`` keeps every occurrence).
+    NULL-safe: missing field → NULL."""
     return F.element_at(ld_map[fno], 1)
-
-
-def ld_all(ld_map: Column, fno) -> Column:
-    """Every payload of (possibly repeated) field ``fno``, wire order;
-    NULL when the field is absent."""
-    return ld_map[fno]
 
 
 def _proto_scan_hex_bound(h: Column, max_fields: int) -> Column:
@@ -1017,11 +739,6 @@ def _proto_scan_hex_bound(h: Column, max_fields: int) -> Column:
     )
 
 
-def proto_scan(blob: Column, max_fields: int = 8) -> Column:
-    """``proto_scan_hex`` over raw binary."""
-    return proto_scan_hex(F.hex(blob), max_fields)
-
-
 def pf_str(fno: int, s: Column) -> Column:
     """Encoder part: length-delimited UTF-8 string field."""
     return pf_ld(fno, F.hex(s.cast("binary")))
@@ -1083,73 +800,3 @@ def proto_encode_hex(*parts: Column) -> Column:
         ),
     )
 
-
-def proto_encode(*parts: Column) -> Column:
-    """``proto_encode_hex`` → raw binary."""
-    return F.unhex(proto_encode_hex(*parts))
-
-
-_MSG_DEPOSIT_STRUCT = (
-    "struct<proposal_id:bigint,depositor:string,denom:string,amount:string>"
-)
-
-
-def encode_msg_deposit(proposal_id: Column, depositor: Column,
-                       denom: Column, amount: Column) -> Column:
-    """Wire bytes of ``cosmos.gov.v1beta1.MsgDeposit``: field 1
-    proposal_id (uint64 varint, 0x08), field 2 depositor (string,
-    0x12), field 3 amount (Coin, 0x1A) — the registry's first
-    varint + string + embedded-message body shape."""
-    coin_hex = F.concat(
-        _ld_field("0A", F.hex(denom.cast("binary")), F.octet_length(denom)),
-        _ld_field("12", F.hex(amount.cast("binary")), F.octet_length(amount)),
-    )
-    return F.unhex(F.concat(
-        F.lit("08"), _varint_hex(proposal_id),
-        _ld_field("12", F.hex(depositor.cast("binary")),
-                  F.octet_length(depositor)),
-        _ld_field("1A", coin_hex, (F.length(coin_hex) / 2).cast("int")),
-    ))
-
-
-def msg_deposit_fields(blob: Column) -> Column:
-    """Decode a ``MsgDeposit`` body into struct(proposal_id,
-    depositor, denom, amount): the MsgVote varint scan followed by the
-    string + Coin walk (proposal_id accepts 1- or 2-byte varints; the
-    coin and amount lengths must land exactly on their containers'
-    ends — the usual fail-closed discipline)."""
-    h = F.hex(blob)
-    ok1 = F.substring(h, 1, 2) == "08"
-    b0 = _byte_at(h, 3)
-    b1 = _byte_at(h, 5)
-    one = b0 < 128
-    pid = F.when(one, b0).otherwise((b0 - 128) + b1 * 128).cast("bigint")
-    p2 = F.when(one, F.lit(5)).otherwise(F.lit(7))
-    ok2 = F.substr(h, p2, F.lit(2)) == "12"
-    l2 = _byte_at(h, p2 + 2)
-    depo = F.decode(F.unhex(F.substr(h, p2 + 4, l2 * 2)), "UTF-8")
-    p3 = p2 + 4 + l2 * 2
-    ok3 = F.substr(h, p3, F.lit(2)) == "1A"
-    l3 = _byte_at(h, p3 + 2)
-    coin = F.substr(h, p3 + 4, l3 * 2)
-    okc1 = F.substring(coin, 1, 2) == "0A"
-    ld = _byte_at(coin, 3)
-    denom = F.decode(F.unhex(F.substr(coin, F.lit(5), ld * 2)), "UTF-8")
-    pc = ld * 2 + 5
-    okc2 = F.substr(coin, pc, F.lit(2)) == "12"
-    la = _byte_at(coin, pc + 2)
-    amount = F.decode(F.unhex(F.substr(coin, pc + 4, la * 2)), "UTF-8")
-    st = F.struct(
-        pid.alias("proposal_id"),
-        depo.alias("depositor"),
-        denom.alias("denom"),
-        amount.alias("amount"),
-    )
-    short = (one | (b1 < 128)) & (l2 < 128) & (l3 < 128) \
-        & (ld < 128) & (la < 128)
-    exact = (p3 + 4 + l3 * 2 - 1 == F.length(h)) & (
-        pc + 4 + la * 2 - 1 == F.length(coin)
-    )
-    return F.when(
-        ok1 & ok2 & ok3 & okc1 & okc2 & short & exact, st
-    ).otherwise(F.lit(None).cast(_MSG_DEPOSIT_STRUCT))

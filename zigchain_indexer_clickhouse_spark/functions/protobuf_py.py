@@ -1,5 +1,7 @@
-"""Arrow-batched Python twin of the expression-land protobuf walker —
-the VOLUME path for the registry decode's full-scan execution shapes.
+"""Arrow-batched Python protobuf walker and registry dispatch — the
+executable specification of the registry decode, which the C kernel
+(functions/native_walk.c) ports line for line, and its fallback where
+no C toolchain exists.
 
 The generic walker (functions/protobuf.py proto_scan_hex) is a
 higher-order-function fold: constant plan size at any registry breadth,
@@ -10,16 +12,17 @@ and the WRONG one for a full-chain at-rest scan (10¹¹ messages ≈ 10⁵
 core-hours interpreted — VERDICT r8 "What's wrong" #2). This module is
 the other point in the design space the brief names explicitly: when
 built-in operators genuinely can't express the semantics efficiently,
-drop to an Arrow-batched Pandas UDF — a tight Python byte-walk at ~1-2
-µs/row, vectorized transfer, zero JVM codegen.
+drop to an Arrow-batched Python map (mapInPandas) — a tight Python
+byte-walk at ~1-2 µs/row, vectorized transfer, zero JVM codegen.
 
-Semantics are the EXPRESSION walker's, bit for bit — same fail-closed
-rules (single-byte tags, wire types 0/1/2/5, 1-9 byte varints, exact
-cursor landing, max_fields budgets), same repeated-field arrays, same
-proto3 last-wins scalars, same registry dispatch table — and the
-equality is enforced two ways: a hypothesis property drives both
-walkers over random wire bytes (tests/test_protobuf_py.py), and the
-registry operators run BOTH paths against the same DuckDB oracle.
+The walker's semantics are the expression walker's, bit for bit —
+same fail-closed rules (single-byte tags, wire types 0/1/2/5, 1-9 byte
+varints, exact cursor landing, max_fields budgets), same
+repeated-field arrays, same proto3 last-wins scalars — enforced by a
+hypothesis property that drives both walkers over random wire bytes
+(tests/test_protobuf_py.py); the C kernel is held to this module by
+the property tests of tests/test_native_registry.py, and the registry
+operators run against the same DuckDB oracle.
 
 Reference anchor: src/utils/decoder.js:12-29 — cosmjs decodeTxRaw +
 registry.decode with the unknown-type fallback at decoder.js:20-24.
@@ -106,7 +109,7 @@ def walk(data: bytes, max_fields: int = 8):
     return pos == n, ld, vi
 
 
-# --- registry dispatch (the Python mirror of _registry_decoded_cols) ------
+# --- registry dispatch ------------------------------------------------------
 
 _AMT_RE = re.compile(r"-?[0-9]+")
 
@@ -116,9 +119,7 @@ def _coin_amt(payload: bytes):
 
     The parse is gated on canonical digits (bare ``int(str)`` accepts
     underscores, '+', and surrounding whitespace) and on the int64
-    range, mirroring the expression twin's ``rlike('^-?[0-9]+$')`` +
-    ``try_cast('long')`` exactly — both paths NULL out every
-    non-canonical or overflowing amount identically."""
+    range: every non-canonical or overflowing amount is NULL."""
     ok, ld, _vi = walk(payload, 2)
     if not ok or 2 not in ld:
         return None
@@ -146,15 +147,14 @@ def _coin_amt_sum(payloads):
 
 
 def registry_decode_py(blob: bytes, urls: dict) -> tuple:
-    """Decode one Any-wrapped registry message — the Python mirror of
-    sources/tx_decode.py registry_decoded_struct: same (type_url,
-    status, amt, pid, yes, timeout) tuple, same outcome keying.
-    ``urls`` carries the type-url constants (passed in to keep this
-    module import-light on executors)."""
-    # mirror of the expression path: the Any unwrap consumes whatever
-    # fields the scan CAPTURED (the walker's fail-closed struct keeps
-    # the partial maps; registry_decoded_struct never gates on the
-    # outer ok — a missing field 2 simply makes the body scan fail)
+    """Decode one Any-wrapped registry message into the (type_url,
+    status, amt, pid, yes, timeout) tuple; ``status`` keys on the
+    decode outcome.  ``urls`` carries the type-url constants (passed in
+    to keep this module import-light on executors)."""
+    # the Any unwrap consumes whatever fields the scan CAPTURED (the
+    # walker's fail-closed result keeps the partial maps, and the
+    # dispatch never gates on the outer ok — a missing field 2 simply
+    # makes the body scan fail)
     _ok_any, a_ld, _ = walk(blob, 2)
     url_b = a_ld.get(1, [None])[0]
     body = a_ld.get(2, [None])[0]
@@ -190,7 +190,7 @@ def registry_decode_py(blob: bytes, urls: dict) -> tuple:
         try:
             amt_s = json.loads(l1(3).decode())["transfer"]["amount"]
             amt = int(amt_s)
-        except Exception:
+        except Exception:  # noqa: BLE001 — bad JSON amount fails closed
             amt = None
     elif u == U["authz_exec"]:
         a2_ok, a2_ld, _ = walk(l1(2) or b"\xff", 2)

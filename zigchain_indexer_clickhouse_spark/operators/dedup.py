@@ -173,7 +173,7 @@ def _shared_stage(key_tag: str, spark: SparkSession, sf_dir: str, build) -> Data
     for k in [k for k in _STAGE_CACHE if k[0] != key[0] or k[1] != sf_dir]:
         try:
             _STAGE_CACHE.pop(k).unpersist()
-        except Exception:  # dead SparkContext — nothing to release
+        except Exception:  # noqa: BLE001 — dead SparkContext, nothing to free
             _STAGE_CACHE.pop(k, None)
     df = build().persist()
     _STAGE_CACHE[key] = df

@@ -218,25 +218,4 @@ def queries() -> dict[str, QueryFn]:
 
 def oracles() -> dict[str, str]:
     _ensure_loaded()
-    _warm_decode_memos()
     return {n: _ORACLES[n] for n in _priority_order(_ORACLES)}
-
-
-def _warm_decode_memos() -> None:
-    """Kick off the decode family's background expression-memo build
-    (sources/tx_decode.warm_expression_memos_async) on the GATE path:
-    a caller asking for oracles is about to run the oracle battery,
-    whose decode rows each need ~30-50 s of deterministic py4j tree
-    construction — started here, the builds overlap the battery's
-    early non-decode rows instead of serializing in front of the first
-    decode row (guide §2.6). Deliberately NOT hooked into queries():
-    the bench's headline set has no decode operator, and a background
-    construction thread must never contend with a timed run."""
-    try:
-        from zigchain_indexer_clickhouse_spark.sources.tx_decode import (
-            warm_expression_memos_async,
-        )
-        warm_expression_memos_async()
-    except Exception:
-        # best-effort: the sync path builds on first use regardless
-        pass

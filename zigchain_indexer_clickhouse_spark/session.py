@@ -23,13 +23,12 @@ def get_spark(app_name: str = "zigchain-indexer-spark", master: str | None = Non
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
         SparkSession.builder.appName(app_name)
-        # Catalyst's ANTLR parser retains a STATIC prediction cache that
-        # grows ~450 MB the first time the positional registry dispatch
-        # is parsed (measured, PLANS.md r10); the JVM default 1g heap
-        # leaves no headroom for the walker stages after that. Only
-        # effective when this builder creates the JVM — a foreign
-        # session keeps its own heap and the registry ops degrade
-        # gracefully (tx_decode._hybrid_profile).
+        # The gate runs every operator in one JVM, and the persisted
+        # shared stages plus their analyzed plans (the 67-branch
+        # registry synthesis tree among them) accumulate on the driver
+        # heap over the run; the JVM default 1g leaves no headroom for
+        # that. Only effective when this builder creates the JVM — a
+        # foreign session keeps its own heap.
         # SPARK_GRAFT_DRIVER_MEM wins over the legacy SPARK_DRIVER_MEMORY
         # name; one config site (a duplicate 8g config below used to
         # silently override this one — last-wins).

@@ -52,10 +52,7 @@ from zigchain_indexer_clickhouse_spark.functions.protobuf import (
     tx_body_messages,
     tx_raw_body,
 )
-from zigchain_indexer_clickhouse_spark.operators.dedup import (
-    _STAGE_CACHE,
-    _shared_stage,
-)
+from zigchain_indexer_clickhouse_spark.operators.dedup import _shared_stage
 from zigchain_indexer_clickhouse_spark.plans.registry import register
 
 _MSG_SEND_URL = "/cosmos.bank.v1beta1.MsgSend"
@@ -484,9 +481,9 @@ _PKT_TOUT_BASE = 1_600_000_000_000_000_000
 _TOUT_PRIME = 1_000_003
 
 # Per-kind oracle expressions over (event_id, user_id, value) — the
-# single source of truth the CASE arms are generated from. The Spark
-# dispatch in _registry_decoded_fields recovers the same quantities from
-# the WIRE BYTES, so each arm is an independent recomputation.
+# single source of truth the CASE arms are generated from. The registry
+# decode recovers the same quantities from the WIRE BYTES, so each arm
+# is an independent recomputation.
 _FA = "CAST(floor(value * 100) AS BIGINT)"
 _T = "event_id % 10000"
 _KIND_AMT = {
@@ -575,97 +572,18 @@ _REGISTRY_ORACLE_SQL = f"""
 # even sees it. The tree is deterministic (unresolved F.col refs, no
 # free state) and a Column is an immutable JVM expression handle that
 # any select() in the same JVM may reference, across sessions of one
-# process — so build it once. Six call sites (batch full + bounded
-# conformance, stream ×3, at-rest) collapse to one construction per
-# gate process. Analysis of the resulting plan is separate and still
-# per-DataFrame (the _shared_stage memos bound that for batch shapes).
+# process — so build it once, on first use. The three call sites
+# (batch, stream, at-rest) share one construction per process.
+# Analysis of the resulting plan is separate and still per-DataFrame
+# (the _shared_stage memos bound that for batch shapes).
 _BLOB_HEX_MEMO: Column | None = None
-
-# One lock per memoized tree: the r13 background warm (see
-# warm_expression_memos_async) builds the trees concurrently with the
-# gate's early queries, and a decode operator arriving mid-build must
-# BLOCK on the in-progress construction rather than duplicate 30-50 s
-# of py4j round trips.
-_BLOB_HEX_LOCK = threading.Lock()
-_DECODED_FIELDS_LOCK = threading.Lock()
-_DECODED_STRUCT_LOCK = threading.Lock()
 
 
 def _registry_blob_hex() -> Column:
     global _BLOB_HEX_MEMO
     if _BLOB_HEX_MEMO is None:
-        with _BLOB_HEX_LOCK:
-            if _BLOB_HEX_MEMO is None:
-                _BLOB_HEX_MEMO = _build_registry_blob_hex()
+        _BLOB_HEX_MEMO = _build_registry_blob_hex()
     return _BLOB_HEX_MEMO
-
-
-_WARM_STARTED = False
-
-# Armed the moment the GATE PATH is entered (registry.oracles() /
-# __spark_entry__.oracle_sql()), even when no SparkContext exists yet
-# — a driver that lists the oracles BEFORE building its session must
-# still get the warms once its first operator runs. _WARM_STARTED
-# stays context-dependent (the memo threads need a live gateway);
-# catalog.load()'s hook retries warm_expression_memos_async under
-# this flag, so the memo wave starts at the first load() in that
-# ordering instead of never.
-_GATE_PATH = False
-
-
-def warm_expression_memos_async() -> None:
-    """Start daemon threads that pre-build the deterministic registry
-    expression memos (_BLOB_HEX_MEMO and the walker dispatch trees)
-    CONCURRENTLY with whatever the caller does next, and arm the
-    gate-path flag that lets catalog.load() kick off the
-    positional-chain parser warm (_warm_hybrid_chain_async).
-
-    The builds are pure driver-side py4j construction — ~50 s for the
-    synthesis tree and ~20-30 s for each dispatch tree, almost all of
-    it socket round-trip wait (guide §2.6: overlap independent work;
-    the GIL is released during each py4j call). A correctness-gate run
-    spends its first minutes on non-decode operators, so by the time a
-    decode operator needs a tree the memo is warm — the same work, off
-    the critical path. Idempotent; no-op without an active
-    SparkContext (the sync path then builds on first use as before).
-    Threads only write the module memos; every getter is lock-guarded,
-    so a concurrent sync caller blocks on the in-progress build
-    instead of duplicating it.
-    """
-    global _GATE_PATH, _WARM_STARTED
-    _GATE_PATH = True
-    if _WARM_STARTED:
-        return
-    from pyspark import SparkContext
-
-    if SparkContext._active_spark_context is None:
-        return
-    _WARM_STARTED = True
-
-    def _safe(fn):
-        def run():
-            try:
-                fn()
-            except Exception:
-                # leave the memo unset — the first real caller rebuilds
-                # synchronously and surfaces any real error itself
-                pass
-        return run
-
-    builds = [_registry_blob_hex, _registry_decoded_fields_cols]
-    # the one-tree struct decode is only consumed under the walker
-    # execution shape (stream/batch walker modes) — skip its ~20 s of
-    # construction unless that mode is selected
-    if os.environ.get("SPARK_GRAFT_REGISTRY_DECODE") == "walker":
-        builds.append(registry_decoded_struct_blobcol)
-    # NB: the positional-chain parser warm (the fourth decode memo,
-    # _warm_hybrid_chain_async) cannot start here — it needs
-    # (spark, sf_dir), which only an operator invocation reveals; it
-    # is triggered from catalog.load() at the battery's first row,
-    # gated on the _GATE_PATH flag this function sets
-    for build in builds:
-        threading.Thread(target=_safe(build), daemon=True,
-                         name=f"zic-warm-{build.__name__}").start()
 
 
 def _build_registry_blob_hex() -> Column:
@@ -1176,530 +1094,6 @@ def _build_registry_blob_hex() -> Column:
     return F.element_at(F.transform(F.array(shared1), with_shared1), 1)
 
 
-def _registry_decoded_fields(u: Column, s: Column) -> Column:
-    """struct(shape_ok, needs_amt, amt, pid, yes, timeout) for the
-    registry dispatch over a recovered (type_url, field-map scan)
-    pair — the single source of truth for the registry semantics,
-    shared by the batch walker operator (#187b) and the one-tree
-    streaming/at-rest form (registry_decoded_struct). Callers must
-    BIND the returned struct once (a select alias or a one-element
-    ``transform``) and read its fields from the bound column.
-
-    The scan's ``ld`` is field_no → array<payload> (repeated fields
-    keep every occurrence): singular fields read the first element
-    via ``ld1``; genuinely repeated ones (multi-coin amounts,
-    MsgMultiSend outputs, the repeated-Any message lists) fold over
-    the whole array.
-
-    Every nested scan is LAMBDA-BOUND exactly once, in two layers
-    (scans of the body's own fields, then scans reading a layer-1
-    payload), before the dispatch consumes them: the r10 form
-    re-built each nested fold at every reference, and the r11 breadth
-    widening (36 → 52 types) pushed that duplication past a 4 GiB
-    driver on the one-tree path. Identical scans are SHARED across
-    types: the ld[2] scan serves the authz/update-client/evidence
-    Anys and MsgMultiSend.outputs[0]; the ld[3] scan serves the authz
-    Grant wrapper, the feegrant allowance Any, the WeightedVoteOption
-    and the group decision-policy Any; the ld[1] scan serves the
-    validator Description, the proposal content Any and
-    MsgExecLegacyContent's content; the ld[4] scan serves the vesting
-    Period, the Ack Height, the group policy Any and the group
-    messages[0] Any."""
-    ld, vi = s["ld"], s["vi"]
-
-    def l1(k: int) -> Column:
-        return ld1(ld, k)   # first payload — singular-field accessor
-
-    def _has_ld(*ks):
-        c = F.lit(True)
-        for k in ks:
-            c = c & F.map_contains_key(ld, F.lit(k))
-        return c
-
-    def _has_vi(*ks):
-        c = F.lit(True)
-        for k in ks:
-            c = c & F.map_contains_key(vi, F.lit(k))
-        return c
-
-    def _coin_amt(coin_hex):
-        cs = proto_scan_hex(coin_hex, 2)
-        amt_str = F.decode(F.unhex(ld1(cs["ld"], 2)), "UTF-8")
-        # Canonical-digits gate + try_cast, NOT a bare cast: under the
-        # session's ANSI default a malformed amount payload would throw
-        # CAST_INVALID_INPUT and kill the query, while the Python twin
-        # (functions/protobuf_py.py _coin_amt) soft-fails to None — the
-        # two "bit-identical" registry paths would diverge. The regex
-        # also rejects what a looser parse would accept (whitespace,
-        # '+', '_' separators), and try_cast NULLs out > int64 values;
-        # the Python twin applies the identical rule.
-        return F.when(
-            cs["ok"] & F.map_contains_key(cs["ld"], F.lit(2))
-            & amt_str.rlike("^-?[0-9]+$"),
-            amt_str.try_cast("long"),
-        )
-
-    def _coin_amt_sum(coins):
-        """Sum of amounts over a REPEATED Coin field (array of wire
-        payloads) — any unparseable element poisons the sum to NULL,
-        which the outcome check turns into the unknown bucket."""
-        return F.aggregate(
-            coins, F.lit(0).cast("bigint"), lambda a, c: a + _coin_amt(c)
-        )
-
-
-    # ---- layer 1: scans of the body's own field payloads ------------
-    lvl1 = F.struct(
-        proto_scan_hex(l1(1), 2).alias("s1"),
-        proto_scan_hex(l1(1), 8).alias("pkt"),
-        proto_scan_hex(l1(2), 2).alias("s2"),
-        proto_scan_hex(l1(2), 4).alias("s2w"),
-        proto_scan_hex(l1(3), 2).alias("s3"),
-        proto_scan_hex(l1(3), 4).alias("s3w"),
-        proto_scan_hex(l1(4), 2).alias("s4"),
-        proto_scan_hex(l1(6), 2).alias("s6"),
-    )
-
-    def _with1(n1):
-        # ---- layer 2: scans that read a layer-1 scan's payload ------
-        lvl2 = F.struct(
-            proto_scan_hex(ld1(n1["s2"]["ld"], 2), 4).alias("inner"),
-            proto_scan_hex(ld1(n1["s3"]["ld"], 2), 2).alias("basic"),
-            proto_scan_hex(ld1(n1["s3"]["ld"], 1), 2).alias("ga"),
-        )
-
-        def _with2(n2):
-            any2 = n1["s2"]      # authz/update-client/evidence Any
-            outp = n1["s2"]      # MsgMultiSend.outputs[0]
-            mem = n1["s2w"]      # group MemberRequest (field 2)
-            any3 = n1["s3"]      # feegrant allowance / group policy Any
-            g = n1["s3"]         # authz Grant wrapper / proof Height
-            wopt = n1["s3"]      # WeightedVoteOption
-            mem3 = n1["s3w"]     # group member_updates[0] (field 3)
-            d1 = n1["s1"]        # validator Description
-            prop = n1["s1"]      # proposal / legacy-content Any
-            pkt = n1["pkt"]      # IBC Packet
-            per = n1["s4"]       # vesting Period / group policy Any
-            h4 = n1["s4"]        # Ack Height / group messages[0] Any
-            a6 = n1["s6"]        # group decision_policy Any (field 6)
-            inner = n2["inner"]
-            basic = n2["basic"]
-            ga = n2["ga"]
-
-            amt = (
-                F.when(u.isin(_MSG_SEND_URL, _MSG_DELEGATE_URL, _MSG_UNDELEGATE_URL,
-                              _MSG_TRANSFER_URL, _MSG_DEPOSIT_URL, _MSG_VESTING_URL,
-                              _MSG_PERM_LOCKED_URL, _MSG_GOV_V1_DEPOSIT_URL),
-                       _coin_amt_sum(ld[3]))
-                .when(u == _MSG_REDELEGATE_URL, _coin_amt(l1(4)))
-                .when(u == _MSG_CREATE_VAL_URL, _coin_amt(l1(7)))
-                .when(u == _MSG_EXEC_URL,
-                      F.get_json_object(F.decode(F.unhex(l1(3)), "UTF-8"),
-                                        "$.transfer.amount").cast("long"))
-                .when(u == _MSG_AUTHZ_EXEC_URL,
-                      F.when(any2["ok"] & inner["ok"]
-                             & (F.decode(F.unhex(ld1(any2["ld"], 1)), "UTF-8")
-                                == _MSG_SEND_URL),
-                             _coin_amt_sum(inner["ld"][3])))
-                .when(u == _MSG_GRANT_ALLOW_URL,
-                      F.when(any3["ok"] & basic["ok"]
-                             & (F.decode(F.unhex(ld1(any3["ld"], 1)), "UTF-8")
-                                == _BASIC_ALLOWANCE_URL),
-                             _coin_amt_sum(basic["ld"][1])))
-                .when(u.isin(_MSG_CANCEL_UNBOND_URL, _MSG_FUND_POOL_URL),
-                      _coin_amt(F.when(u == _MSG_FUND_POOL_URL, l1(1))
-                                .otherwise(l1(3))))
-                .when(u == _MSG_MULTISEND_URL,
-                      # sum over EVERY output's (possibly multi-coin) amount;
-                      # each output payload is lambda-bound before its own scan
-                      F.aggregate(
-                          ld[2], F.lit(0).cast("bigint"),
-                          lambda a, o: a + F.element_at(
-                              F.transform(
-                                  F.array(proto_scan_hex(o, 4)),
-                                  lambda os: F.when(os["ok"],
-                                                    _coin_amt_sum(os["ld"][2])),
-                              ), 1),
-                      ))
-                .when(u == _MSG_SUBMIT_PROPOSAL_URL, _coin_amt_sum(ld[2]))
-                .when(u == _MSG_PERIODIC_VEST_URL,
-                      F.when(per["ok"], _coin_amt_sum(per["ld"][2])))
-                .when(u == _MSG_INSTANTIATE_URL, _coin_amt_sum(ld[6]))
-                .when(u == _MSG_GOV_V1_SUBMIT_URL,
-                      # repeated-Any messages: unwrap each, sum the coins of
-                      # every embedded MsgSend, plus the initial_deposit coins
-                      F.aggregate(
-                          ld[1], F.lit(0).cast("bigint"),
-                          lambda a, m: a + F.element_at(
-                              F.transform(
-                                  F.array(proto_scan_hex(m, 2)),
-                                  lambda ms: F.when(
-                                      ms["ok"]
-                                      & (F.decode(F.unhex(ld1(ms["ld"], 1)),
-                                                  "UTF-8") == _MSG_SEND_URL),
-                                      F.element_at(
-                                          F.transform(
-                                              F.array(proto_scan_hex(
-                                                  ld1(ms["ld"], 2), 8)),
-                                              lambda bs: F.when(
-                                                  bs["ok"],
-                                                  _coin_amt_sum(bs["ld"][3])),
-                                          ), 1)),
-                              ), 1),
-                      ) + _coin_amt_sum(ld[2]))
-                .when(u == _MSG_SUBMIT_EVIDENCE_URL,
-                      # Equivocation.power varint inside the evidence Any
-                      F.when(any2["ok"] & inner["ok"]
-                             & (F.decode(F.unhex(ld1(any2["ld"], 1)), "UTF-8")
-                                == _EQUIVOCATION_URL),
-                             inner["vi"][3]))
-                .when(u == _MSG_GROUP_SUBMIT_URL,
-                      # repeated-Any messages (field 4): sum the embedded
-                      # MsgSends' coins — the gov v1 submit shape, no deposit
-                      F.aggregate(
-                          ld[4], F.lit(0).cast("bigint"),
-                          lambda a, m: a + F.element_at(
-                              F.transform(
-                                  F.array(proto_scan_hex(m, 2)),
-                                  lambda ms: F.when(
-                                      ms["ok"]
-                                      & (F.decode(F.unhex(ld1(ms["ld"], 1)),
-                                                  "UTF-8") == _MSG_SEND_URL),
-                                      F.element_at(
-                                          F.transform(
-                                              F.array(proto_scan_hex(
-                                                  ld1(ms["ld"], 2), 8)),
-                                              lambda bs: F.when(
-                                                  bs["ok"],
-                                                  _coin_amt_sum(bs["ld"][3])),
-                                          ), 1)),
-                              ), 1),
-                      ))
-            )
-            pid = (F.when(
-                u.isin(_MSG_VOTE_URL, _MSG_DEPOSIT_URL, _MSG_VOTE_WEIGHTED_URL,
-                       _MSG_GOV_V1_VOTE_URL, _MSG_GOV_V1_DEPOSIT_URL,
-                       _MSG_GROUP_WITHDRAW_URL, _MSG_GROUP_VOTE_URL,
-                       _MSG_GROUP_EXEC_URL, _MSG_GOV_V1_VOTE_WEIGHTED_URL),
-                vi[1])
-                .when(u.isin(_MSG_GROUP_UPD_MEMBERS_URL, _MSG_GROUP_UPD_ADMIN_URL,
-                             _MSG_GROUP_UPD_METADATA_URL,
-                             _MSG_GROUP_CREATE_POLICY_URL, _MSG_GROUP_LEAVE_URL),
-                      vi[2]))
-            yes = (F.when(u.isin(_MSG_VOTE_URL, _MSG_GOV_V1_VOTE_URL,
-                                 _MSG_GROUP_VOTE_URL),
-                          (vi[3] == 1).cast("long"))
-                   .when(u.isin(_MSG_VOTE_WEIGHTED_URL,
-                                _MSG_GOV_V1_VOTE_WEIGHTED_URL),
-                         F.when(wopt["ok"],
-                                (wopt["vi"][1] == 1).cast("long")))
-                   .when(u == _MSG_GROUP_CREATE_WITH_POLICY_URL,
-                         (vi[5] == 1).cast("long"))
-                   # channel open init/try: Channel.state enum (the
-                   # nested Channel rides at field 2 / field 3)
-                   .when(u == _MSG_CHAN_OPEN_INIT_URL,
-                         F.when(mem["ok"],
-                                (mem["vi"][1] == 1).cast("long")))
-                   .when(u == _MSG_CHAN_OPEN_TRY_URL,
-                         F.when(mem3["ok"],
-                                (mem3["vi"][1] == 1).cast("long"))))
-            timeout = (F.when(u == _MSG_TRANSFER_URL, vi[7])
-                       .when(u == _MSG_VESTING_URL, vi[4])
-                       .when(u == _MSG_CANCEL_UNBOND_URL, vi[4])
-                       .when(u.isin(_MSG_RECV_PACKET_URL, _MSG_ACK_URL,
-                                    _MSG_TIMEOUT_URL),
-                             F.when(pkt["ok"], pkt["vi"][8]))
-                       .when(u == _MSG_PERIODIC_VEST_URL, vi[3])
-                       .when(u == _MSG_SUBMIT_EVIDENCE_URL,
-                             # Equivocation.height varint
-                             F.when(any2["ok"] & inner["ok"]
-                                    & (F.decode(F.unhex(ld1(any2["ld"], 1)),
-                                                "UTF-8") == _EQUIVOCATION_URL),
-                                    inner["vi"][1]))
-                       # r12 IBC handshakes: delay_period varints,
-                       # proof-Height revision_height, and the packet
-                       # timeout inside MsgTimeoutOnClose
-                       .when(u == _MSG_CONN_OPEN_INIT_URL, vi[4])
-                       .when(u == _MSG_CONN_OPEN_TRY_URL, vi[5])
-                       .when(u == _MSG_CONN_OPEN_CONFIRM_URL,
-                             F.when(g["ok"], g["vi"][2]))
-                       .when(u.isin(_MSG_CHAN_OPEN_TRY_URL,
-                                    _MSG_CHAN_OPEN_ACK_URL),
-                             F.when(a6["ok"], a6["vi"][2]))
-                       .when(u.isin(_MSG_CHAN_OPEN_CONFIRM_URL,
-                                    _MSG_CHAN_CLOSE_CONFIRM_URL),
-                             F.when(h4["ok"], h4["vi"][2]))
-                       .when(u == _MSG_TIMEOUT_ON_CLOSE_URL,
-                             F.when(pkt["ok"], pkt["vi"][8])))
-
-            shape_ok = (
-                F.when(u.isin(_MSG_SEND_URL, _MSG_DELEGATE_URL,
-                              _MSG_UNDELEGATE_URL, _MSG_EXEC_URL,
-                              _MSG_CHAN_CLOSE_INIT_URL),
-                       _has_ld(1, 2, 3))
-                .when(u == _MSG_VOTE_URL, _has_vi(1, 3) & _has_ld(2))
-                .when(u == _MSG_TRANSFER_URL, _has_ld(1, 2, 3, 4, 5) & _has_vi(7))
-                .when(u.isin(_MSG_WITHDRAW_URL, _MSG_SETWITHDRAW_URL,
-                             _MSG_REVOKE_ALLOW_URL),
-                      _has_ld(1, 2))
-                .when(u == _MSG_REDELEGATE_URL, _has_ld(1, 2, 3, 4))
-                .when(u == _MSG_DEPOSIT_URL, _has_vi(1) & _has_ld(2, 3))
-                .when(u == _MSG_GRANT_URL,
-                      _has_ld(1, 2, 3) & g["ok"] & ga["ok"]
-                      & (F.decode(F.unhex(ld1(ga["ld"], 1)), "UTF-8")
-                         == _STAKE_AUTH_URL))
-                .when(u.isin(_MSG_AUTHZ_EXEC_URL, _MSG_GRANT_ALLOW_URL),
-                      _has_ld(1, 2))
-                .when(u == _MSG_REVOKE_URL, _has_ld(1, 2, 3))
-                .when(u == _MSG_UNJAIL_URL, _has_ld(1))
-                .when(u == _MSG_CREATE_VAL_URL,
-                      _has_ld(1, 3, 4, 5, 7) & d1["ok"]
-                      & F.map_contains_key(d1["ld"], F.lit(1)))
-                .when(u == _MSG_EDIT_VAL_URL,
-                      _has_ld(1, 2, 3, 4) & d1["ok"]
-                      & F.map_contains_key(d1["ld"], F.lit(1)))
-                .when(u == _MSG_VESTING_URL, _has_ld(1, 2, 3) & _has_vi(4))
-                .when(u == _MSG_MULTISEND_URL,
-                      _has_ld(1, 2) & outp["ok"]
-                      & F.map_contains_key(outp["ld"], F.lit(1)))
-                .when(u == _MSG_CANCEL_UNBOND_URL,
-                      _has_ld(1, 2, 3) & _has_vi(4))
-                .when(u == _MSG_FUND_POOL_URL, _has_ld(1, 2))
-                .when(u == _MSG_WITHDRAW_COMM_URL, _has_ld(1))
-                .when(u == _MSG_VOTE_WEIGHTED_URL,
-                      _has_vi(1) & _has_ld(2, 3) & wopt["ok"]
-                      & F.map_contains_key(wopt["ld"], F.lit(2)))
-                .when(u == _MSG_SUBMIT_PROPOSAL_URL,
-                      _has_ld(1, 2, 3) & prop["ok"]
-                      & (F.decode(F.unhex(ld1(prop["ld"], 1)), "UTF-8")
-                         == _TEXT_PROPOSAL_URL))
-                .when(u == _MSG_UPDATE_CLIENT_URL,
-                      _has_ld(1, 2) & any2["ok"]
-                      & (F.decode(F.unhex(ld1(any2["ld"], 1)), "UTF-8")
-                         == _TM_HEADER_URL))
-                .when(u == _MSG_RECV_PACKET_URL,
-                      _has_ld(1, 2, 3, 4) & pkt["ok"] & g["ok"]
-                      & F.map_contains_key(pkt["vi"], F.lit(8)))
-                .when(u == _MSG_PERM_LOCKED_URL, _has_ld(1, 2, 3))
-                .when(u == _MSG_PERIODIC_VEST_URL,
-                      _has_ld(1, 2, 4) & _has_vi(3) & per["ok"])
-                .when(u == _MSG_INSTANTIATE_URL,
-                      _has_ld(1, 2, 4, 5, 6) & _has_vi(3))
-                .when(u == _MSG_VERIFY_INVARIANT_URL, _has_ld(1, 2, 3))
-                .when(u == _MSG_GOV_V1_VOTE_URL, _has_vi(1, 3) & _has_ld(2, 4))
-                .when(u == _MSG_GOV_V1_DEPOSIT_URL, _has_vi(1) & _has_ld(2, 3))
-                .when(u == _MSG_GOV_V1_SUBMIT_URL, _has_ld(1, 2, 3))
-                .when(u == _MSG_ACK_URL,
-                      _has_ld(1, 2, 3, 4, 5) & pkt["ok"] & h4["ok"]
-                      & F.map_contains_key(pkt["vi"], F.lit(8)))
-                .when(u == _MSG_TIMEOUT_URL,
-                      _has_ld(1, 2, 3, 5) & _has_vi(4) & pkt["ok"] & g["ok"]
-                      & F.map_contains_key(pkt["vi"], F.lit(8)))
-                .when(u == _MSG_SUBMIT_EVIDENCE_URL,
-                      _has_ld(1, 2) & any2["ok"] & inner["ok"]
-                      & (F.decode(F.unhex(ld1(any2["ld"], 1)), "UTF-8")
-                         == _EQUIVOCATION_URL)
-                      & F.map_contains_key(inner["vi"], F.lit(1))
-                      & F.map_contains_key(inner["vi"], F.lit(3)))
-                .when(u == _MSG_EXEC_LEGACY_URL,
-                      _has_ld(1, 2) & prop["ok"]
-                      & (F.decode(F.unhex(ld1(prop["ld"], 1)), "UTF-8")
-                         == _TEXT_PROPOSAL_URL))
-                .when(u == _MSG_GROUP_CREATE_URL,
-                      _has_ld(1, 2, 3) & mem["ok"]
-                      & F.map_contains_key(mem["ld"], F.lit(1))
-                      & F.map_contains_key(mem["ld"], F.lit(2)))
-                .when(u == _MSG_GROUP_UPD_MEMBERS_URL,
-                      _has_ld(1, 3) & _has_vi(2) & mem3["ok"]
-                      & F.map_contains_key(mem3["ld"], F.lit(1)))
-                .when(u.isin(_MSG_GROUP_UPD_ADMIN_URL,
-                             _MSG_GROUP_UPD_METADATA_URL),
-                      _has_ld(1, 3) & _has_vi(2))
-                .when(u == _MSG_GROUP_CREATE_POLICY_URL,
-                      _has_ld(1, 3, 4) & _has_vi(2) & h4["ok"]
-                      & (F.decode(F.unhex(ld1(h4["ld"], 1)), "UTF-8")
-                         == _THRESHOLD_POLICY_URL))
-                .when(u == _MSG_GROUP_CREATE_WITH_POLICY_URL,
-                      _has_ld(1, 2, 3, 4, 6) & _has_vi(5) & mem["ok"]
-                      & F.map_contains_key(mem["ld"], F.lit(1))
-                      & a6["ok"]
-                      & (F.decode(F.unhex(ld1(a6["ld"], 1)), "UTF-8")
-                         == _THRESHOLD_POLICY_URL))
-                .when(u.isin(_MSG_GROUP_POLICY_ADMIN_URL,
-                             _MSG_GROUP_POLICY_METADATA_URL),
-                      _has_ld(1, 2, 3))
-                .when(u == _MSG_GROUP_POLICY_DECISION_URL,
-                      _has_ld(1, 2, 3) & any3["ok"]
-                      & (F.decode(F.unhex(ld1(any3["ld"], 1)), "UTF-8")
-                         == _THRESHOLD_POLICY_URL))
-                .when(u == _MSG_GROUP_SUBMIT_URL,
-                      _has_ld(1, 2, 3, 4) & _has_vi(5))
-                .when(u.isin(_MSG_GROUP_WITHDRAW_URL, _MSG_GROUP_EXEC_URL),
-                      _has_vi(1) & _has_ld(2))
-                .when(u == _MSG_GROUP_VOTE_URL,
-                      _has_vi(1, 3, 5) & _has_ld(2, 4))
-                .when(u == _MSG_GROUP_LEAVE_URL, _has_ld(1) & _has_vi(2))
-                # ---- r12: gov v1 vote-weighted + IBC handshakes ----
-                .when(u == _MSG_GOV_V1_VOTE_WEIGHTED_URL,
-                      _has_vi(1) & _has_ld(2, 3, 4) & wopt["ok"]
-                      & F.map_contains_key(wopt["ld"], F.lit(2)))
-                .when(u == _MSG_CREATE_CLIENT_URL,
-                      _has_ld(1, 2, 3) & d1["ok"] & any2["ok"]
-                      & (F.decode(F.unhex(ld1(d1["ld"], 1)), "UTF-8")
-                         == _TM_CLIENT_STATE_URL)
-                      & (F.decode(F.unhex(ld1(any2["ld"], 1)), "UTF-8")
-                         == _TM_CONSENSUS_STATE_URL))
-                .when(u == _MSG_UPGRADE_CLIENT_URL,
-                      _has_ld(1, 2, 3, 4, 5, 6) & any2["ok"] & any3["ok"]
-                      & (F.decode(F.unhex(ld1(any2["ld"], 1)), "UTF-8")
-                         == _TM_CLIENT_STATE_URL)
-                      & (F.decode(F.unhex(ld1(any3["ld"], 1)), "UTF-8")
-                         == _TM_CONSENSUS_STATE_URL))
-                .when(u == _MSG_SUBMIT_MISBEHAVIOUR_URL,
-                      _has_ld(1, 2, 3) & any2["ok"]
-                      & (F.decode(F.unhex(ld1(any2["ld"], 1)), "UTF-8")
-                         == _TM_MISBEHAVIOUR_URL))
-                .when(u == _MSG_CONN_OPEN_INIT_URL,
-                      # counterparty (2 strings) scans clean at field 2
-                      _has_ld(1, 2, 3, 5) & _has_vi(4) & any2["ok"]
-                      & F.map_contains_key(any2["ld"], F.lit(1)))
-                .when(u == _MSG_CONN_OPEN_TRY_URL,
-                      # client_state Any at 3, counterparty at 4
-                      _has_ld(1, 3, 4, 7, 8, 12) & _has_vi(5)
-                      & any3["ok"] & per["ok"]
-                      & (F.decode(F.unhex(ld1(any3["ld"], 1)), "UTF-8")
-                         == _TM_CLIENT_STATE_URL))
-                .when(u == _MSG_CONN_OPEN_ACK_URL,
-                      _has_ld(1, 2, 3, 4, 5, 6, 10) & h4["ok"]
-                      & (F.decode(F.unhex(ld1(h4["ld"], 1)), "UTF-8")
-                         == _TM_CLIENT_STATE_URL))
-                .when(u == _MSG_CONN_OPEN_CONFIRM_URL,
-                      _has_ld(1, 2, 3, 4) & g["ok"]
-                      & F.map_contains_key(g["vi"], F.lit(2)))
-                .when(u == _MSG_CHAN_OPEN_INIT_URL,
-                      _has_ld(1, 2, 3) & mem["ok"]
-                      & F.map_contains_key(mem["vi"], F.lit(1)))
-                .when(u == _MSG_CHAN_OPEN_TRY_URL,
-                      _has_ld(1, 3, 4, 5, 6, 7) & mem3["ok"]
-                      & F.map_contains_key(mem3["vi"], F.lit(1))
-                      & a6["ok"]
-                      & F.map_contains_key(a6["vi"], F.lit(2)))
-                .when(u == _MSG_CHAN_OPEN_ACK_URL,
-                      _has_ld(1, 2, 3, 4, 5, 6, 7) & a6["ok"]
-                      & F.map_contains_key(a6["vi"], F.lit(2)))
-                .when(u.isin(_MSG_CHAN_OPEN_CONFIRM_URL,
-                             _MSG_CHAN_CLOSE_CONFIRM_URL),
-                      _has_ld(1, 2, 3, 4, 5) & h4["ok"]
-                      & F.map_contains_key(h4["vi"], F.lit(2)))
-                .when(u == _MSG_TIMEOUT_ON_CLOSE_URL,
-                      _has_ld(1, 2, 3, 4, 6) & _has_vi(5)
-                      & pkt["ok"] & h4["ok"]
-                      & F.map_contains_key(pkt["vi"], F.lit(8)))
-                .otherwise(F.lit(False))
-            )
-            needs_amt = u.isin(
-                _MSG_SEND_URL, _MSG_EXEC_URL, _MSG_DELEGATE_URL, _MSG_TRANSFER_URL,
-                _MSG_UNDELEGATE_URL, _MSG_REDELEGATE_URL, _MSG_DEPOSIT_URL,
-                _MSG_AUTHZ_EXEC_URL, _MSG_GRANT_ALLOW_URL, _MSG_CREATE_VAL_URL,
-                _MSG_VESTING_URL, _MSG_MULTISEND_URL, _MSG_CANCEL_UNBOND_URL,
-                _MSG_FUND_POOL_URL, _MSG_SUBMIT_PROPOSAL_URL,
-                _MSG_PERM_LOCKED_URL, _MSG_PERIODIC_VEST_URL,
-                _MSG_INSTANTIATE_URL, _MSG_GOV_V1_DEPOSIT_URL,
-                _MSG_GOV_V1_SUBMIT_URL, _MSG_SUBMIT_EVIDENCE_URL,
-                _MSG_GROUP_SUBMIT_URL,
-            )
-            return F.struct(
-                (s["ok"] & shape_ok).alias("shape_ok"),
-                needs_amt.alias("needs_amt"),
-                amt.alias("amt"),
-                pid.alias("pid"),
-                yes.alias("yes"),
-                timeout.alias("timeout"),
-            )
-
-        return F.element_at(F.transform(F.array(lvl2), _with2), 1)
-
-    return F.element_at(F.transform(F.array(lvl1), _with1), 1)
-
-
-# Memoized instances of the two deterministic walker-dispatch trees
-# (same r12 rationale as _BLOB_HEX_MEMO: building each costs tens of
-# seconds of sequential py4j round trips, per call, before analysis).
-_DECODED_FIELDS_COLS_MEMO: Column | None = None
-_DECODED_STRUCT_BLOBCOL_MEMO: Column | None = None
-
-
-def _registry_decoded_fields_cols() -> Column:
-    """``_registry_decoded_fields(col(type_url), col(scan))``, built
-    once per process — the walker operator's dispatch tree over its
-    persisted field-map stage."""
-    global _DECODED_FIELDS_COLS_MEMO
-    if _DECODED_FIELDS_COLS_MEMO is None:
-        with _DECODED_FIELDS_LOCK:
-            if _DECODED_FIELDS_COLS_MEMO is None:
-                _DECODED_FIELDS_COLS_MEMO = _registry_decoded_fields(
-                    F.col("type_url"), F.col("scan"))
-    return _DECODED_FIELDS_COLS_MEMO
-
-
-def registry_decoded_struct_blobcol() -> Column:
-    """``registry_decoded_struct(col(blob_hex))``, built once per
-    process — the one-tree walker decode every full-row walker shape
-    applies over a projected ``blob_hex`` column."""
-    global _DECODED_STRUCT_BLOBCOL_MEMO
-    if _DECODED_STRUCT_BLOBCOL_MEMO is None:
-        with _DECODED_STRUCT_LOCK:
-            if _DECODED_STRUCT_BLOBCOL_MEMO is None:
-                _DECODED_STRUCT_BLOBCOL_MEMO = registry_decoded_struct(
-                    F.col("blob_hex"))
-    return _DECODED_STRUCT_BLOBCOL_MEMO
-
-
-def registry_decoded_struct(blob_hex: Column) -> Column:
-    """Per-row registry decode of an Any-wrapped wire blob (hex) as ONE
-    bound expression tree — for execution shapes with no persist
-    barriers (streaming, at-rest range reads): each walker fold's
-    output is LAMBDA-BOUND (a one-element ``transform``) before the
-    next fold or the dispatch consumes it, so blob scan → Any scan →
-    field-map scan each evaluate exactly once per row and the 67-type
-    dispatch reads them as map lookups. Returns struct(type_url,
-    status, amt, pid, yes, timeout) with the same outcome keying as
-    the staged batch operator (#187)."""
-    z = F.lit(0).cast("long")
-
-    def with_scan(u, s):
-        # bind the dispatch struct ONCE before the outcome keying
-        # reads four of its fields — an unbound reference would copy
-        # the whole two-layer scan tree per field
-        def _out(d):
-            decode_ok = (d["shape_ok"]
-                         & (~d["needs_amt"] | d["amt"].isNotNull()))
-            return F.struct(
-                u.alias("type_url"),
-                F.when(decode_ok, F.lit("ok"))
-                .otherwise(F.lit("Unknown message type")).alias("status"),
-                F.coalesce(d["amt"], z).alias("amt"),
-                F.coalesce(d["pid"], z).alias("pid"),
-                F.coalesce(d["yes"], z).alias("yes"),
-                F.coalesce(d["timeout"], z).alias("timeout"),
-            )
-
-        return F.element_at(
-            F.transform(F.array(_registry_decoded_fields(u, s)), _out), 1)
-
-    def with_any(a):
-        u = F.decode(F.unhex(ld1(a["ld"], 1)), "UTF-8")
-        return F.element_at(
-            F.transform(F.array(proto_scan_hex(ld1(a["ld"], 2), 8)),
-                        lambda s: with_scan(u, s)),
-            1,
-        )
-
-    return F.element_at(
-        F.transform(F.array(proto_scan_hex(blob_hex, 2)), with_any), 1
-    )
-
-
 # keyword → type-url table handed to the Python mirror decoder
 # (functions/protobuf_py.py registry_decode_py) so the two dispatch
 # tables share one set of constants
@@ -1775,73 +1169,30 @@ _REGISTRY_STRUCT_TYPE = ("type_url string, status string, amt bigint, "
                          "pid bigint, yes bigint, timeout bigint")
 
 
-def registry_decoded_struct_py(blob_hex: Column) -> Column:
-    """Arrow-batched Python twin of :func:`registry_decoded_struct` —
-    the VOLUME execution shape for full scans (at rest, streaming).
-    The expression walker's higher-order folds are CodegenFallback
-    (~tens of µs/row interpreted, and the stream's one-tree plan drove
-    the r9 driver OOM); this path walks the same bytes in a tight
-    Python loop at ~1-2 µs/row over Arrow batches. Same decode
-    semantics by construction AND by test: the registry operators'
-    oracle hashes both paths, and tests/test_protobuf_py.py asserts
-    row-identical output across every kind plus walker agreement on
-    random wire bytes."""
-    from zigchain_indexer_clickhouse_spark.functions.registry_udf import (
-        make_registry_udf,
-    )
-
-    return make_registry_udf(dict(_REGISTRY_URL_KEYS),
-                             _REGISTRY_STRUCT_TYPE)(blob_hex)
-
-
 def registry_decoded_df_py(df: DataFrame) -> DataFrame:
-    """DataFrame-level volume decode: ``df`` carries a ``blob_hex``
-    column; returns the decoded (type_url, status, amt, pid, yes,
-    timeout) rows via ``mapInPandas`` — the execution shape for
-    STREAMING plans, where the scalar-UDF expression form failed
-    micro-batch extraction over the full synthesis tree (see
-    registry_udf.make_registry_map_fn)."""
-    from zigchain_indexer_clickhouse_spark.functions.registry_udf import (
-        make_registry_map_fn,
+    """The Python-walker decode: ``df`` carries a ``blob_hex`` column;
+    returns the decoded (type_url, status, amt, pid, yes, timeout) rows
+    via ``mapInPandas``, one ``protobuf_py.registry_decode_py`` call per
+    message.  A plan node rather than a scalar UDF: the streaming
+    micro-batch planner failed to extract a scalar-UDF expression whose
+    input was the full synthesis tree (INTERNAL_ERROR "Cannot evaluate
+    expression"), and mapInPandas has no extraction step to fail."""
+    import pandas as pd
+
+    from zigchain_indexer_clickhouse_spark.functions.protobuf_py import (
+        registry_decode_py,
     )
 
-    return df.mapInPandas(make_registry_map_fn(dict(_REGISTRY_URL_KEYS)),
-                          schema=_REGISTRY_STRUCT_TYPE)
+    urls = dict(_REGISTRY_URL_KEYS)
+    cols = ["type_url", "status", "amt", "pid", "yes", "timeout"]
 
+    def _fn(batches):
+        for pdf in batches:
+            rows = [registry_decode_py(bytes.fromhex(h), urls)
+                    for h in pdf["blob_hex"]]
+            yield pd.DataFrame(rows, columns=cols)
 
-def registry_decoded_struct_for(blob_hex: Column) -> Column:
-    """The registry decode under the execution shape chosen by
-    ``SPARK_GRAFT_REGISTRY_DECODE``: ``python`` (default — the
-    Arrow-batched volume path) or ``walker`` (the pure expression
-    path; plan-size-constant but interpreted per row).  The hybrid
-    positional path is not an expression — it is a DataFrame
-    transform (:func:`registry_decoded_df_hybrid`), because it binds
-    intermediate parse state as columns across projections."""
-    mode = os.environ.get("SPARK_GRAFT_REGISTRY_DECODE", "python")
-    if mode == "walker":
-        # the one call site passes the unbound col("blob_hex") — take
-        # the memoized tree ONLY for that exact object shape: comparing
-        # str() forms would also match a dataframe-bound df["blob_hex"]
-        # (identical string form, different resolution under self-joins
-        # — ADVICE r12), so require an unbound plain reference
-        if _is_unbound_blobcol(blob_hex):
-            return registry_decoded_struct_blobcol()
-        return registry_decoded_struct(blob_hex)
-    return registry_decoded_struct_py(blob_hex)
-
-
-def _is_unbound_blobcol(c: Column) -> bool:
-    """True iff ``c`` is a plain UNBOUND ``col("blob_hex")`` reference —
-    a py4j UnresolvedAttribute, not a dataframe-resolved column (whose
-    str() form is identical but whose resolution semantics are not)."""
-    try:
-        # Spark 4: the JVM Column wraps a ColumnNode reachable via
-        # node(); an unbound reference is internal.UnresolvedAttribute
-        cls = c._jc.node().getClass().getSimpleName()
-        return (cls == "UnresolvedAttribute"
-                and str(c) == str(F.col("blob_hex")))
-    except Exception:
-        return False
+    return df.mapInPandas(_fn, schema=_REGISTRY_STRUCT_TYPE)
 
 
 def registry_decoded_df_native(df: DataFrame) -> DataFrame:
@@ -1851,11 +1202,10 @@ def registry_decoded_df_native(df: DataFrame) -> DataFrame:
     column zero-copy from the Arrow string buffers at ~0.2 µs/row;
     wasm-JSON, int64-overflow and bad-hex rows come back flagged and
     re-decode through the Python walker, so row semantics are the
-    walker's on every input).  Same mapInPandas plan shape as the
-    Python path — a stateless narrow map over the scan, the execution
-    shape that survives 100 TB — only the per-batch inner loop
-    changed.  Callers must check
-    :func:`native_registry.native_available` first."""
+    walker's on every input).  Same plan shape as the Python path — a
+    stateless narrow map over the scan, the execution shape that
+    survives 100 TB — only the per-batch inner loop changed.  Callers
+    must check :func:`native_registry.native_available` first."""
     from zigchain_indexer_clickhouse_spark.functions.native_registry \
         import make_native_arrow_fn
 
@@ -1876,208 +1226,21 @@ def registry_decoded_df_native(df: DataFrame) -> DataFrame:
                     schema=_REGISTRY_STRUCT_TYPE)
 
 
-def _registry_decode_mode(default: str) -> str:
-    """Resolve the decode execution shape: the env override wins;
-    otherwise ``default``, degraded to the Arrow-Python path when the
-    native kernel has no toolchain to compile with."""
-    mode = os.environ.get("SPARK_GRAFT_REGISTRY_DECODE", default)
-    if mode == "native":
-        from zigchain_indexer_clickhouse_spark.functions.native_registry \
-            import native_available
-        if not native_available():
-            return "python"
-    return mode
+def registry_decoded_df(df: DataFrame) -> DataFrame:
+    """The registry decode of ``df``'s ``blob_hex`` column: the C
+    kernel (:func:`registry_decoded_df_native`) when a C toolchain
+    compiled it, the Python walker (:func:`registry_decoded_df_py`)
+    otherwise.  Both return the same rows on every input."""
+    from zigchain_indexer_clickhouse_spark.functions import native_registry
 
-
-def _can_retain_conformance_stages(spark: SparkSession) -> bool:
-    """True when the driver heap affords keeping the conformance ops'
-    persisted stages and analyzed plans alive ACROSS invocations
-    (≥4 GiB — the same bound as _hybrid_profile's full tier). The r10
-    eager-release discipline exists to protect a vanilla 1 GiB gate
-    session from ~10² MB of retained plans+cache; in a ≥4 GiB session
-    that protection costs a full re-parse/re-analyze/re-execute per
-    invocation (measured r13: 121 s per hybrid call, 50 s per walker
-    call at sf0.01) for zero benefit. Retain where affordable, release
-    where not."""
-    gib = int(spark._jvm.java.lang.Runtime.getRuntime().maxMemory()) / 1024**3
-    return gib >= 4.0
-
-
-def _hybrid_profile(spark: SparkSession) -> str:
-    """How much positional dispatch the driver heap can afford:
-    ``full`` (≥4 GiB), ``head`` (≥2.5 GiB: slot-free arms only), or
-    ``python`` (degrade — the ANTLR static-cache cost of parsing the
-    chain would starve a vanilla session; see
-    registry_decoded_df_hybrid)."""
-    gib = int(spark._jvm.java.lang.Runtime.getRuntime().maxMemory())         / 1024**3
-    if gib >= 4.0:
-        return "full"
-    if gib >= 2.5:
-        return "head"
-    return "python"
-
-
-# Memoized ANALYZED positional chains, keyed (applicationId, sf_dir,
-# tag, head_only) — the VERDICT r12 #3 "analyzed-plan memo keyed
-# (session, shape)". A chain DataFrame is an immutable analyzed-plan
-# handle (like the Column memos above, it caches METADATA, never
-# rows); re-parsing + re-analyzing the ~0.9 MB dispatch SQL costs
-# 26.8-54.6 s per call even on a warm parser cache
-# (tools/pos_parse_probe.py), and the plan is fully determined by the
-# key. Entries for a dead app / different sf_dir are swept on the way
-# in, _shared_stage-style. Same static-input assumption as the
-# catalog load memo: the embedded scan snapshots the parquet file
-# listing at analysis time.
-_POS_CHAIN_MEMO: dict[tuple, DataFrame] = {}
-_POS_CHAIN_LOCK = threading.Lock()
-
-
-def _positional_chain(spark: SparkSession, sf_dir: str, tag: str,
-                      head_only: bool, build) -> DataFrame:
-    """The analyzed positional-dispatch chain over ``build()``,
-    memoized. The lock makes a caller arriving mid-build (the
-    background warm vs. the gate's hybrid row) BLOCK on the
-    in-progress parse instead of duplicating ~30-60 s of it."""
-    from zigchain_indexer_clickhouse_spark.functions.registry_positional \
-        import add_positional_decode
-
-    key = (spark.sparkContext.applicationId, sf_dir, tag, head_only)
-    df = _POS_CHAIN_MEMO.get(key)
-    if df is not None:
-        return df
-    with _POS_CHAIN_LOCK:
-        df = _POS_CHAIN_MEMO.get(key)
-        if df is None:
-            for k in [k for k in _POS_CHAIN_MEMO
-                      if k[0] != key[0] or k[1] != sf_dir]:
-                _POS_CHAIN_MEMO.pop(k, None)
-            df = add_positional_decode(
-                build(), "blob_hex", dict(_REGISTRY_URL_KEYS),
-                carry=["blob_hex"], head_only=head_only)
-            _POS_CHAIN_MEMO[key] = df
-    return df
-
-
-_CHAIN_WARM_KEYS: set[tuple] = set()
-
-
-def _warm_hybrid_chain_async(spark: SparkSession, sf_dir: str) -> None:
-    """Second-stage warm: once any operator reveals (spark, sf_dir) —
-    which ``warm_expression_memos_async`` never sees — build the REAL
-    analyzed conformance chain into _POS_CHAIN_MEMO in a daemon
-    thread, so the hybrid gate row finds it ready instead of paying
-    the 135.6 s cold (26.8-54.6 s warm-cache) parse+analyze in the
-    foreground (tools/pos_parse_probe.py; most of the cold cost is
-    the JVM's one-time static ANTLR prediction-cache build). Called
-    from catalog.load(), i.e. from the FIRST gate row; fires only on
-    the gate path (_GATE_PATH — the bench never warms), only on
-    the full profile, and once per (session, sf_dir). The deposited
-    plan is built over the same unpersisted conf-blobs plan the
-    persisted stage wraps, so the hybrid's results are identical
-    either way (persist never alters a logical plan)."""
-    if not _GATE_PATH:
-        return
-    # python-only fast path: load() calls this per table load, and the
-    # real guards below each cost a py4j round trip
-    fast_key = (id(spark), sf_dir)
-    if fast_key in _CHAIN_WARM_KEYS:
-        return
-    _CHAIN_WARM_KEYS.add(fast_key)
-    # a gate that listed the oracles before building its session never
-    # got the expression-memo wave — start it now (idempotent; the
-    # caller holds a live session, so the context check passes)
-    warm_expression_memos_async()
-    if _hybrid_profile(spark) != "full":
-        return
-    key = (spark.sparkContext.applicationId, sf_dir, "registry20_hybrid",
-           False)
-    if key in _POS_CHAIN_MEMO:
-        return
-
-    def _run():
-        try:
-            _positional_chain(
-                spark, sf_dir, "registry20_hybrid", head_only=False,
-                build=lambda: _conf_blobs_plan(spark, sf_dir))
-        except Exception:
-            # best-effort: the hybrid row parses synchronously as before
-            pass
-
-    threading.Thread(target=_run, daemon=True,
-                     name="zic-warm-hybrid-chain").start()
-
-
-def registry_decoded_df_hybrid(spark: SparkSession, sf_dir: str,
-                               tag: str, build) -> DataFrame:
-    """The round-10 VOLUME path (VERDICT r9 item #1): claim-gated
-    positional scanners decode canonical cosmjs bytes entirely
-    JVM-side (functions/registry_positional.py — ~0.5 µs/row of
-    codegen'd byte slicing on BinaryType), and the rows the claims
-    refuse — non-canonical lengths, over-budget varints, repeat
-    counts beyond the caps, truncations — fall to the Arrow-batched
-    Python walker, so row-level semantics are the walker's on every
-    input (property-tested, tests/test_registry_positional.py).
-
-    ``build`` produces the (blob_hex) frame; the decoded columns are
-    memoized per (app, sf_dir, tag) like every shared stage.  The
-    positional projections are materialized under
-    ``spark.sql.codegen.wholeStage=false`` (restored after): their
-    per-arm expressions compile into clean per-operator
-    UnsafeProjections — SPARK-22543 splits CaseWhen branches into
-    methods there — while whole-stage fusion cannot split methods
-    that consume operator-local variables and blows Janino's 64 KB
-    method limit (measured, PLANS.md r10 row).  At 100 TB the same
-    trade holds per executor: the decode is a stateless narrow map
-    over the scan, and the one-time plan/codegen cost amortizes over
-    the full chain."""
-    from zigchain_indexer_clickhouse_spark.functions.registry_positional \
-        import add_positional_decode
-
-    profile = _hybrid_profile(spark)
-    if profile == "python":
-        # a ~1 GiB driver cannot afford the positional chain AT ALL:
-        # parsing it grows Catalyst's STATIC ANTLR prediction cache by
-        # ~450 MB for the life of the JVM (measured — repeat builds
-        # stay flat, so it is a one-time cache, but in a vanilla gate
-        # session that one-time cost starves every later operator).
-        # Decode through the walker instead: identical rows, and the
-        # positional path stays gated by every ≥4 GiB session (the
-        # repo's own harnesses set spark.driver.memory).
-        return registry_decoded_df_py(build())
-
-    def _decorated() -> DataFrame:
-        # build() runs even when the chain memo hits: it registers the
-        # shared blobs stage (under this codegen-off window, as
-        # always), so the chain's persist-planning substitutes the
-        # stage's InMemoryRelation — one synthesis execution shared
-        # with the walker — instead of re-deriving the synthesis
-        # inline while a later consumer materializes the stage again.
-        # The memoized chain was analyzed over the same plan the stage
-        # wraps, so the substitution matches on canonical equality.
-        base = build()
-        return _positional_chain(spark, sf_dir, tag,
-                                 head_only=(profile == "head"),
-                                 build=lambda: base)
-
-    old_ws = spark.conf.get("spark.sql.codegen.wholeStage", "true")
-    # the conf must wrap persist() too: InMemoryRelation captures its
-    # physical plan when the cache entry is REGISTERED, not when the
-    # first action materializes it
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try:
-        dd = _shared_stage(tag, spark, sf_dir, _decorated)
-        dd.count()  # materialize the persisted stage under the conf
-    finally:
-        spark.conf.set("spark.sql.codegen.wholeStage", old_ws)
-    claimed = dd.filter(F.col("__rp_d").isNotNull()).select("__rp_d.*")
-    tail = registry_decoded_df_py(
-        dd.filter(F.col("__rp_d").isNull()).select("blob_hex"))
-    return claimed.unionByName(tail)
+    if native_registry.native_available():
+        return registry_decoded_df_native(df)
+    return registry_decoded_df_py(df)
 
 
 def _registry_agg(decoded: DataFrame) -> DataFrame:
     """The five registry proof-aggregates shared by every decode
-    shape (batch / walker / hybrid / at-rest): counts, Coin totals,
+    shape (batch / stream / at-rest): counts, Coin totals,
     proposal ids, yes votes, and the prime-reduced timeout sum (raw
     timeouts reach 1.6e18, so each value is reduced mod a prime to
     keep the int64 sum scale-stable while staying sensitive to
@@ -2093,12 +1256,11 @@ def _registry_agg(decoded: DataFrame) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# 187. msg_registry_decode — 67-type registry decode (Arrow volume path
-#      by default; walker and hybrid variants oracle-gated separately)
+# 187. msg_registry_decode — 67-type registry decode
 # --------------------------------------------------------------------------
 def _registry_blobs_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The one persisted (blob_hex) synthesis frame all batch registry
-    shapes share."""
+    """The persisted (blob_hex) synthesis frame of the batch registry
+    decode."""
 
     def _build() -> DataFrame:
         e = load(spark, sf_dir, "events")
@@ -2107,249 +1269,38 @@ def _registry_blobs_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _shared_stage("registry20_blobs", spark, sf_dir, _build)
 
 
-# The CONFORMANCE variants (#187a positional hybrid, #187b expression
-# walker) gate dispatch correctness, not volume — the volume claims
-# belong to the native default (#187) and the at-rest path (#23c).
-# Bounding their rows to a fixed event window keeps every kind × 100
-# parameter variants in play while making their gate cost
-# SCALE-INDEPENDENT (VERDICT r10 item 8: the trio cost ~45 s of every
-# sf0.01 gate; the hybrid alone cost 332 s at sf1.0 unbounded).
-_CONF_EVENT_BOUND = 7200  # 100 full passes of the 72-kind grid
-_REGISTRY_ORACLE_SQL_CONF = _REGISTRY_ORACLE_SQL.replace(
-    "FROM events)",
-    f"FROM events WHERE event_id < {_CONF_EVENT_BOUND})",
-)
-
-
-def _conf_blobs_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The bounded (blob_hex) synthesis PLAN — shared verbatim by the
-    persisted conformance stage below and the hybrid chain warm
-    (_warm_hybrid_chain_async), so the two can never drift."""
-    e = load(spark, sf_dir, "events").filter(
-        F.col("event_id") < _CONF_EVENT_BOUND)
-    return e.select(_registry_blob_hex().alias("blob_hex"))
-
-
-def _registry_blobs_conf_stage(spark: SparkSession, sf_dir: str
-                               ) -> DataFrame:
-    """The bounded synthesis frame the two conformance variants share."""
-    return _shared_stage("registry20_blobs_conf", spark, sf_dir,
-                         lambda: _conf_blobs_plan(spark, sf_dir))
-
-
 @register(
     "msg_registry_decode",
     oracle=_REGISTRY_ORACLE_SQL,
 )
 def msg_registry_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The user-facing batch registry decode — VOLUME path by default
-    (VERDICT r9 "What's wrong" #1: the batch op should not be the
-    54×-slower conformance harness).  Default execution shape is the
-    NATIVE Arrow-batch kernel (functions/native_walk.c, ~0.2 µs/row;
-    degraded automatically to the Arrow-batched Python walker when no
-    C toolchain exists).  ``SPARK_GRAFT_REGISTRY_DECODE`` selects
-    python / walker / hybrid explicitly; the expression walker, the
-    positional hybrid and the Python path each stay oracle-gated
-    every round via their own operators (``msg_registry_decode_walker``,
-    ``msg_registry_decode_hybrid``, ``stream_registry_decode``).
-    Semantics and the five-aggregate proof block are identical across
-    all four shapes — see msg_registry_decode_walker for the full
-    registry inventory and the reference anchors."""
-    mode = _registry_decode_mode("native")
-    if mode == "walker":
-        # full-row walker under the env override: the registered
-        # walker CONFORMANCE op is intentionally bounded to the
-        # _CONF_EVENT_BOUND window, but #187's own semantics must stay
-        # full-table whatever the execution shape — use the one-tree
-        # expression form (the same shape the at-rest/stream walker
-        # modes run)
-        decoded = _registry_blobs_stage(spark, sf_dir).select(
-            registry_decoded_struct_blobcol().alias("d")
-        ).select("d.*")
-        return _registry_agg(decoded)
-    if mode == "hybrid":
-        decoded = registry_decoded_df_hybrid(
-            spark, sf_dir, "registry20_hybrid_full",
-            lambda: _registry_blobs_stage(spark, sf_dir))
-        return _registry_agg(decoded)
-    blobs = _registry_blobs_stage(spark, sf_dir)
-    if mode == "native":
-        decoded = _shared_stage(
-            "registry20_native_decoded", spark, sf_dir,
-            lambda: registry_decoded_df_native(blobs))
-    else:
-        # mapInPandas, not the scalar UDF: if a cache sweep invalidates
-        # the blobs stage after this plan is analyzed, execution falls
-        # back to the raw synthesis tree, and the micro-batch planner
-        # cannot EXTRACT a scalar-UDF expression whose input is that
-        # 40-branch tree (the registry_udf.make_registry_map_fn lesson,
-        # now applied to the batch shape too)
-        decoded = _shared_stage(
-            "registry20_arrow_decoded", spark, sf_dir,
-            lambda: registry_decoded_df_py(blobs))
-    return _registry_agg(decoded)
-
-
-@register(
-    "msg_registry_decode_hybrid",
-    oracle=_REGISTRY_ORACLE_SQL_CONF,
-)
-def msg_registry_decode_hybrid(spark: SparkSession, sf_dir: str
-                               ) -> DataFrame:
-    """The claim-gated positional JVM dispatch on the batch shape —
-    oracle-gates functions/registry_positional.py against the same
-    registry oracle the walker and Arrow shapes answer.  Canonical
-    rows decode in whole-codegen byte-slice expressions; claim
-    refusals fall to the Python walker tail (zero rows on canonical
-    data, property-tested on adversarial bytes).
-
-    The ≤38-row aggregate is materialized EAGERLY and the positional
-    stage released before returning: the analyzed chain plus its
-    cached relation hold ~10² MB of driver heap, and this
-    conformance-harness op must not carry that for the rest of a
-    vanilla 1 GiB gate session (the r10 driver-style smoke OOM'd on
-    exactly that accumulation)."""
-    decoded = registry_decoded_df_hybrid(
-        spark, sf_dir, "registry20_hybrid",
-        lambda: _registry_blobs_conf_stage(spark, sf_dir))
-    out = _registry_agg(decoded)
-    rows = out.collect()
-    # release the positional stage only where the heap demands it
-    # (1 GiB vanilla gate); a ≥4 GiB session keeps it so a repeat
-    # invocation reuses the parsed/analyzed/cached chain instead of
-    # paying ~121 s of re-parse+re-compile (r13)
-    if not _can_retain_conformance_stages(spark):
-        for k in list(_STAGE_CACHE):
-            if k[2] == "registry20_hybrid":
-                try:
-                    _STAGE_CACHE.pop(k).unpersist(True)
-                except Exception:
-                    _STAGE_CACHE.pop(k, None)
-    return spark.createDataFrame(rows, out.schema)
-
-
-@register(
-    "msg_registry_decode_walker",
-    oracle=_REGISTRY_ORACLE_SQL_CONF,
-)
-def msg_registry_decode_walker(spark: SparkSession, sf_dir: str
-                               ) -> DataFrame:
-    """The registry dispatch at cosmjs ``defaultRegistryTypes`` breadth
-    (#151 grown 2 → 4 → 6 → 8 → 10 → 19 → 25 → THIRTY-ONE decoded
-    types): bank MsgSend + MsgMultiSend (repeated Input/Output
-    wrappers); wasm MsgExecuteContract + MsgInstantiateContract; the
-    six staking bodies (Delegate / Undelegate / BeginRedelegate /
-    CreateValidator / EditValidator / CancelUnbondingDelegation); gov
-    MsgVote + MsgDeposit + MsgVoteWeighted (nested WeightedVoteOption)
-    + MsgSubmitProposal (content Any → TextProposal); IBC MsgTransfer
-    + MsgUpdateClient (header Any) + MsgRecvPacket (a 7-field nested
-    Packet with the trailing timeout varint, plus a Height pair);
-    distribution MsgWithdrawDelegatorReward + MsgSetWithdrawAddress +
-    MsgFundCommunityPool + MsgWithdrawValidatorCommission; authz
-    MsgGrant / MsgExec / MsgRevoke; feegrant MsgGrantAllowance /
-    MsgRevokeAllowance; slashing MsgUnjail; crisis MsgVerifyInvariant;
-    vesting MsgCreateVestingAccount + MsgCreatePermanentLockedAccount
-    + MsgCreatePeriodicVestingAccount (nested Period coin) — plus the
-    unregistered-type fallback. The
-    reference registers all defaultRegistryTypes (src/utils/decoder.js:9)
-    and falls back to ``{error: 'Unknown message type', raw}`` on a
-    miss (decoder.js:20-24).
-
-    Unlike the per-type positional scanners of #151 (whose expression
-    trees grow ~2^fields and whose 10-way union cost minutes of
-    Catalyst analysis + Janino compile PER INVOCATION — the round-6
-    profile), this operator runs entirely on the generic walker pair
-    (functions/protobuf.py proto_encode_hex / proto_scan_hex): ONE
-    constant-size fold synthesizes each wire body, one unwraps the
-    Any, one walks every top-level field into (field_no → payload)
-    maps, and the 67-type dispatch is plain map lookups keyed by
-    typeUrl. Plan size is independent of registry breadth — each r8
-    widening batch (19 → 25 → 31) added only CASE branches and zero
-    compile units — which is the property that actually survives
-    cosmjs' ~50-type registry.
+    """The batch registry decode at cosmjs ``defaultRegistryTypes``
+    breadth (the 67 types of ``_REGISTRY_URLS`` plus the
+    unregistered-type fallback): the reference registers all
+    defaultRegistryTypes (src/utils/decoder.js:9) and falls back to
+    ``{error: 'Unknown message type', raw}`` on a miss
+    (decoder.js:20-24).  Decodes through the NATIVE Arrow-batch kernel
+    (functions/native_walk.c, ~0.2 µs/row), or the Arrow-batched
+    Python walker when no C toolchain exists (:func:`registry_decoded_df`).
 
     Dispatch keys on the DECODE OUTCOME: ``status`` is 'ok' only when
-    the walker lands exactly on the end of the body AND the per-type
-    shape holds (required fields present, nested Any/Coin/Description
-    scans clean, amount recovered where the type carries one), so a
-    shifted offset anywhere flips rows into a registered-URL
-    'Unknown message type' group the oracle does not have. The
-    aggregates prove real fields come back: total_amt sums Coin
-    amounts from eight embedded-Coin paths (incl. TWO-deep Any
-    unwraps for authz MsgExec's inner MsgSend and feegrant's
-    BasicAllowance, and MsgCreateValidator's field-7 self-delegation),
-    plus the JSON amount inside the wasm call; sum_pid the varint
-    proposal ids (vote + deposit); n_yes the decoded VOTE_OPTION_YES
-    enums; sum_timeout the IBC timeout + vesting end_time varints.
+    the walk lands exactly on the end of the body AND the per-type
+    shape holds, so a shifted offset anywhere flips rows into a
+    registered-URL 'Unknown message type' group the oracle does not
+    have.  The aggregates prove real fields come back: Coin amounts
+    (through two-deep Any unwraps and repeated coins), the wasm JSON
+    amount, varint proposal ids, VOTE_OPTION_YES enums, and the IBC
+    timeout / vesting time varints."""
+    from zigchain_indexer_clickhouse_spark.functions import native_registry
 
-    Scale shape: three narrow persisted stages (blob → Any scan →
-    field maps) so each interpreted fold evaluates ONCE per row —
-    binding a fold's output to a cached column before the next fold
-    consumes it, because CollapseProject would otherwise multiply the
-    upstream fold into every per-step reference of the downstream one.
-    Zero Python row UDFs, zero joins; one map-side-combinable
-    (type_url, status) aggregate whose output is ≤ 20 rows."""
-
-    def _any() -> DataFrame:
-        # conformance bound: dispatch coverage, scale-independent cost
-        blobs = _registry_blobs_conf_stage(spark, sf_dir)
-        return blobs.select(
-            proto_scan_hex(F.col("blob_hex"), 2).alias("a"))
-
-    def _walk() -> DataFrame:
-        anyd = _shared_stage("registry20_any", spark, sf_dir, _any)
-        a = F.col("a")
-        return anyd.select(
-            F.decode(F.unhex(ld1(a["ld"], 1)), "UTF-8").alias("type_url"),
-            proto_scan_hex(ld1(a["ld"], 2), 8).alias("scan"),
-        )
-
-    def _decode() -> DataFrame:
-        walked = _shared_stage("registry20_walk", spark, sf_dir, _walk)
-        # layered selects: the whole dispatch struct (the two-layer
-        # bound scan tree) appears ONCE in the first projection; the
-        # outcome keying consumes it as plain field references in the
-        # second, so the analyzer never sees the tree duplicated into
-        # the status branch
-        fields = walked.select(
-            F.col("type_url"),
-            _registry_decoded_fields_cols().alias("d"),
-        )
-        z = F.lit(0).cast("long")
-        d = F.col("d")
-        decode_ok = (d["shape_ok"]
-                     & (~d["needs_amt"] | d["amt"].isNotNull()))
-        return fields.select(
-            "type_url",
-            F.when(decode_ok, F.lit("ok"))
-            .otherwise(F.lit("Unknown message type")).alias("status"),
-            F.coalesce(d["amt"], z).alias("amt"),
-            F.coalesce(d["pid"], z).alias("pid"),
-            F.coalesce(d["yes"], z).alias("yes"),
-            F.coalesce(d["timeout"], z).alias("timeout"),
-        )
-
-    out = _shared_stage("registry20_decoded", spark, sf_dir, _decode)
-    agg = _registry_agg(out)
-    # Eager-materialize and RELEASE (same discipline as the hybrid op,
-    # and for the same reason): the walker's interpreted fold trees
-    # serialize into ~24 MB task binaries and its three private stages
-    # pin analyzed plans — a conformance-harness op must not carry
-    # that through the rest of a vanilla 1 GiB gate session.
-    rows = agg.collect()
-    # same conditional-release policy as the hybrid op: the eager
-    # release protects a 1 GiB session; in a ≥4 GiB session it costs
-    # ~50 s of re-plan+re-execute per repeat invocation (r13)
-    if not _can_retain_conformance_stages(spark):
-        for k in list(_STAGE_CACHE):
-            if k[2] in ("registry20_any", "registry20_walk",
-                        "registry20_decoded"):
-                try:
-                    _STAGE_CACHE.pop(k).unpersist(True)
-                except Exception:
-                    _STAGE_CACHE.pop(k, None)
-    return spark.createDataFrame(rows, agg.schema)
-
+    blobs = _registry_blobs_stage(spark, sf_dir)
+    # one stage per decode path, so a session that sees both (a test
+    # forcing the Python walker) never reads the other path's rows
+    tag = ("registry20_native_decoded" if native_registry.native_available()
+           else "registry20_arrow_decoded")
+    decoded = _shared_stage(tag, spark, sf_dir,
+                            lambda: registry_decoded_df(blobs))
+    return _registry_agg(decoded)
 
 
 # --------------------------------------------------------------------------
@@ -2530,7 +1481,7 @@ def contract_call_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 _AT_REST_BUCKET = 100  # heights per partition (reference: intDiv 100k)
 
-_AT_REST_WRITE_LOCK = __import__("threading").Lock()
+_AT_REST_WRITE_LOCK = threading.Lock()
 
 
 def _write_once_at_rest(df: DataFrame, path: str) -> None:
@@ -2700,14 +1651,11 @@ def registry_decode_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Any blobs beside decoy columns, reads back buckets [2,5) with
     ``PartitionFilters`` resolving the whole predicate and
     ``ReadSchema`` pruned to the blob column, then decodes via the
-    r10 NATIVE Arrow-batch kernel by default (functions/native_walk.c
-    at ~0.2 µs/row — the full-chain volume shape;
-    SPARK_GRAFT_REGISTRY_DECODE selects the hybrid positional /
-    Arrow-Python / expression-walker shapes, and the kernel degrades
-    to the Python walker when no C toolchain exists)
-    and aggregates the same five proofs as #187. The oracle
-    is the batch registry oracle restricted to the same height range,
-    so pruning AND all 36 decode paths are hash-checked together.
+    NATIVE Arrow-batch kernel (functions/native_walk.c at ~0.2 µs/row
+    — the full-chain volume shape; the Python walker when no C
+    toolchain exists) and aggregates the same five proofs as #187. The
+    oracle is the batch registry oracle restricted to the same height
+    range, so pruning AND every decode path are hash-checked together.
 
     Scale shape: scan bytes ∝ asked-for height range × one column;
     decode is a stateless Arrow-batched projection (the full-chain
@@ -2736,13 +1684,4 @@ def registry_decode_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("height_bucket") >= lo) & (F.col("height_bucket") < hi))
         .select("blob_hex")
     )
-    mode = _registry_decode_mode("native")
-    if mode == "native":
-        decoded = registry_decoded_df_native(back)
-    elif mode == "hybrid":
-        decoded = registry_decoded_df_hybrid(
-            spark, sf_dir, "registry_at_rest_hybrid", lambda: back)
-    else:
-        d = registry_decoded_struct_for(F.col("blob_hex"))
-        decoded = back.select(d.alias("d")).select("d.*")
-    return _registry_agg(decoded)
+    return _registry_agg(registry_decoded_df(back))

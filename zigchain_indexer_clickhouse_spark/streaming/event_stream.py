@@ -1029,13 +1029,13 @@ def _registry_stream_oracle() -> str:
     oracle=_registry_stream_oracle(),
 )
 def stream_registry_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of #187: the full 36-type cosmjs registry decode
+    """Streaming twin of #187: the full 67-type cosmjs registry decode
     running LIVE over the event stream — the reference decodes every
     message as blocks arrive (src/utils/decoder.js:12 inside the
     worker loop), not in nightly rescans, so the registry dispatch
-    must work as a per-row streaming expression. Each micro-batch
-    synthesizes the wire blob, unwraps the Any, walks the field maps,
-    and dispatches — all stateless per-row column work — then a
+    must work per row inside the stream. Each micro-batch
+    synthesizes the wire blob and decodes it (unwrap the Any, walk the
+    field maps, dispatch) — all stateless per-row work — then a
     complete-mode aggregate maintains the (type_url, status) rollup
     with the same five proofs as the batch twin (Coin amounts through
     two-deep Any unwraps, varint proposal ids, vote enums, timeout
@@ -1047,56 +1047,18 @@ def stream_registry_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle, registered under this name too, and equivalence with the
     batch twin is test-asserted."""
     from zigchain_indexer_clickhouse_spark.sources.tx_decode import (
-        _TOUT_PRIME,
-        _registry_decode_mode,
+        _registry_agg,
         _registry_blob_hex,
-        registry_decoded_df_native,
-        registry_decoded_df_py,
+        registry_decoded_df,
     )
 
     s = _read_event_stream(spark, sf_dir)
-    mode = _registry_decode_mode("native")
-    if mode == "walker":
-        # project blob_hex first, then apply the memoized one-tree
-        # decode over the bound column — same composed semantics, but
-        # both trees come from the module memos instead of a fresh
-        # py4j construction per invocation (r12)
-        from zigchain_indexer_clickhouse_spark.sources.tx_decode import (
-            registry_decoded_struct_blobcol,
-        )
-
-        decoded = (
-            s.select(_registry_blob_hex().alias("blob_hex"))
-            .select(registry_decoded_struct_blobcol().alias("d"))
-            .select("d.type_url", "d.status", "d.amt", "d.pid", "d.yes",
-                    "d.timeout")
-        )
-    elif mode == "native":
-        # r11 (VERDICT r10 item 3): the C kernel rides the stream too —
-        # mapInArrow is a stateless narrow map, legal in a streaming
-        # plan, so the ~0.2 µs/row batch volume path and the live path
-        # are the same code; degraded automatically to the Arrow-Python
-        # walker when no toolchain can compile the kernel
-        decoded = registry_decoded_df_native(
-            s.select(_registry_blob_hex().alias("blob_hex")))
-    else:
-        # mapInPandas, not a scalar-UDF expression: the micro-batch
-        # planner failed to extract the UDF over the full synthesis
-        # tree (registry_udf.make_registry_map_fn has the postmortem)
-        decoded = registry_decoded_df_py(
-            s.select(_registry_blob_hex().alias("blob_hex")))
-    out = (
-        decoded
-        .groupBy("type_url", "status")
-        .agg(
-            F.count("*").alias("n_msgs"),
-            F.sum("amt").alias("total_amt"),
-            F.sum("pid").alias("sum_pid"),
-            F.sum("yes").alias("n_yes"),
-            F.sum(F.pmod(F.col("timeout"), F.lit(_TOUT_PRIME)))
-            .alias("sum_timeout"),
-        )
-    )
+    # the C kernel rides mapInArrow inside the micro-batch plan (a
+    # stateless narrow map, legal in a streaming plan), so the batch
+    # volume path and the live path are the same code; the Python
+    # walker's mapInPandas takes its place without a C toolchain
+    decoded = registry_decoded_df(
+        s.select(_registry_blob_hex().alias("blob_hex")))
     return _run_append_to_memory(
-        out, "stream_registry_decode", mode="complete"
+        _registry_agg(decoded), "stream_registry_decode", mode="complete"
     )
