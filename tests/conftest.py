@@ -12,32 +12,6 @@ from zigchain_indexer_clickhouse_spark.session import get_spark
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
-def pytest_configure(config):
-    config.addinivalue_line(
-        "markers",
-        "slowbattery: deep conformance battery (pairwise decode-path "
-        "equivalence, full-registry plan sweeps). Skipped by default so "
-        "the default suite stays short (about 9 min on 4 vCPU); set "
-        "SPARK_GRAFT_FULL_TESTS=1 to run everything. The skipped tests' "
-        "SUBJECTS stay covered on the "
-        "default path by the per-operator oracle gate "
-        "(test_registry_oracle), the native-kernel equivalence tests and "
-        "the targeted plan-shape assertions.",
-    )
-
-
-def pytest_collection_modifyitems(config, items):
-    if os.environ.get("SPARK_GRAFT_FULL_TESTS"):
-        return
-    skip = pytest.mark.skip(
-        reason="slowbattery: set SPARK_GRAFT_FULL_TESTS=1 for the full "
-        "~45 min conformance battery"
-    )
-    for item in items:
-        if "slowbattery" in item.keywords:
-            item.add_marker(skip)
-
-
 @pytest.fixture(scope="session")
 def spark():
     # 12g heap for the session-scoped suite JVM: ~850 tests share it,

@@ -24,13 +24,6 @@ from zigchain_indexer_clickhouse_spark.operators.similarity import (
     knn_graph_core,
 )
 
-import pytest
-
-# kNN-graph structure/recall properties — deep-conformance
-# tier, skipped on the default (driver-window) path;
-# SPARK_GRAFT_FULL_TESTS=1 runs it.
-pytestmark = pytest.mark.slowbattery
-
 TWIN_OFFSET = 100000
 TWIN_RECALL_BAR = 0.8
 

@@ -80,7 +80,6 @@ def test_blob_decode_at_rest_proves_both_prunings(spark, sf_dir):
     assert "ReadSchema: struct<blob_hex:string>" in scan
 
 
-@pytest.mark.slowbattery
 def test_registry_at_rest_proves_both_prunings(spark, sf_dir, monkeypatch):
     """#23c: the full-registry at-rest decode reaches storage with the
     same two prunings as #23b — PartitionFilters resolve the whole
@@ -287,7 +286,6 @@ _BNLJ_ALLOWED = {
 }
 
 
-@pytest.mark.slowbattery
 def test_global_plan_hygiene(spark, sf_dir):
     """Sweep EVERY registered batch query: no CartesianProduct, no
     row-at-a-time Python (BatchEvalPython), and BroadcastNestedLoopJoin

@@ -188,7 +188,6 @@ def test_msg_send_oversize_field_decodes_null_not_shifted(spark):
     )
 
 
-@pytest.mark.slowbattery
 def test_msg_send_roundtrip_property(spark):
     """Property: for ANY printable-ASCII fields under the documented
     128-byte bound, Spark-encoded wire bytes match the independent
@@ -282,7 +281,6 @@ def test_encode_any_multibyte_and_long_urls(spark):
 # ---------------------------------------------------------------------------
 # TxRaw envelope (round 5): encode_tx_raw / tx_raw_body / tx_body_messages
 # ---------------------------------------------------------------------------
-@pytest.mark.slowbattery
 def test_tx_raw_roundtrip_multi_message(spark):
     """Full envelope round-trip on REAL wire bytes: N Any messages →
     TxRaw (with a trailing auth_info field the decoder must skip) →
@@ -315,7 +313,6 @@ def test_tx_raw_roundtrip_multi_message(spark):
         assert r["decoded"] == r["urls"]
 
 
-@pytest.mark.slowbattery
 def test_tx_raw_body_two_byte_varint(spark):
     """A body > 127 bytes forces the 2-byte varint path at the TxRaw
     level — the case the 1-byte fast path would mis-slice."""
@@ -409,7 +406,6 @@ def test_msg_execute_roundtrip_and_unknown_fallback(spark):
     assert r["raw"] == "opaque-payload"
 
 
-@pytest.mark.slowbattery
 def test_tx_raw_roundtrip_property(spark):
     """Property: for ANY deterministic corpus of message lists (0-6
     messages, urls 1-160 bytes so both varint paths fire at Any AND
@@ -566,7 +562,6 @@ def test_msg_withdraw_reward_roundtrip_and_fail_closed(spark):
         == (url, "ok", 0, 0, 0, 0)
 
 
-@pytest.mark.slowbattery
 def test_msg_redelegate_roundtrip_and_fail_closed(spark):
     """MsgBeginRedelegate: the encoder's four-field body (3 strings +
     Coin at field 4) walks back to its fields and coin, and a

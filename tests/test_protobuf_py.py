@@ -30,12 +30,6 @@ from zigchain_indexer_clickhouse_spark.functions.protobuf_py import (
     walk,
 )
 
-
-# pairwise Python-walker vs expression-walker equivalence — deep-conformance
-# tier, skipped on the default (driver-window) path;
-# SPARK_GRAFT_FULL_TESTS=1 runs it.
-pytestmark = pytest.mark.slowbattery
-
 SF = "/root/testdata/sf0.001"
 
 

@@ -1,10 +1,12 @@
 """The state logs' driver-side FINAL (``IndexerAPI._final_arrow``):
-appends, tombstones and compactions against a dict model, logs left
-behind by the earlier Spark compaction, and the cost at 100k rows.
+appends, tombstones, compactions and compactions cut short at every
+file operation against a dict model, readers during a compaction, logs
+left behind by the earlier Spark compaction, and the cost at 100k rows.
 Every path here is pyarrow only; no Spark session is started."""
 
 from __future__ import annotations
 
+import os
 import tempfile
 import time
 from datetime import datetime, timezone
@@ -13,7 +15,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 import zigchain_indexer_clickhouse_spark.api as api_mod
@@ -29,17 +31,53 @@ _OPS = st.lists(st.one_of(
     st.tuples(st.just("unfail"), _IDS),
     st.tuples(st.just("compact")),
     st.tuples(st.just("restart")),
+    st.tuples(st.just("crash"), st.sampled_from(sorted(_LOGS)),
+              st.integers(0, 6)),
 ), max_size=25)
 
+# Each round tombstones a key whose live row sits in an earlier file,
+# then cuts a compaction of each log short after its new file and one
+# removal. A compaction that dropped every tombstone would resurrect the
+# key whenever the tombstone's file is the one removed (1 in 2 or 3
+# per log).
+_TOMBSTONE_OVER_OLDER_FILE = [
+    step for i in range(8) for step in (
+        ("insert", i % 6), ("delete", i % 6), ("fail", i % 6),
+        ("unfail", i % 6), ("crash", "work_queue", 2),
+        ("crash", "failed_blocks", 2), ("compact",))]
+# Live rows, a compaction cut short after two file operations, then
+# more appends and compactions after the restart.
+_CRASH_WITH_LIVE_ROWS = [*[("insert", i) for i in range(1, 6)],
+                         ("crash", "work_queue", 2), ("insert", 0),
+                         ("compact",)]
 
-@settings(max_examples=25, deadline=None)
+
+def _crash_after(mp: pytest.MonkeyPatch, k: int) -> None:
+    """Let ``k`` file operations (``os.replace``, ``os.rename``,
+    ``os.remove``) through, then make each one raise, as a process that
+    dies there would leave the directory."""
+    left = [k]
+    for name in ("replace", "rename", "remove"):
+        def op(*a, real=getattr(os, name), **kw):
+            if left[0] == 0:
+                raise OSError("crashed")
+            left[0] -= 1
+            return real(*a, **kw)
+        mp.setattr(os, name, op)
+
+
+@settings(max_examples=50, deadline=None)
 @given(_OPS)
+@example(_TOMBSTONE_OVER_OLDER_FILE)
+@example(_CRASH_WITH_LIVE_ROWS)
 def test_arrow_final_matches_dict_model(ops):
     """After every step, the FINAL of work_queue and failed_blocks is
     the model's state: a re-insert or update replaces the row, a
     tombstone removes it, a failed-block add bumps attempts, and
-    compaction (explicit, or every 4th append), a process restart and
-    a missing key change nothing."""
+    compaction (explicit, or once a log holds 4 files), a process
+    restart, a compaction cut short at any file operation followed by a
+    restart, and a missing key change nothing. A compaction that runs
+    to the end leaves one data file and no temp file."""
     with tempfile.TemporaryDirectory() as d, pytest.MonkeyPatch.context() as mp:
         mp.setattr(api_mod, "AUTO_COMPACT_EVERY", 4)
         api = IndexerAPI(None, d)
@@ -71,6 +109,17 @@ def test_arrow_final_matches_dict_model(ops):
             elif op == "compact":
                 for table in _LOGS:
                     api.compact(table)
+                    (left,) = os.listdir(os.path.join(d, table))
+                    assert left.endswith(".parquet")
+            elif op == "crash":
+                table, k = args
+                with pytest.MonkeyPatch.context() as crash:
+                    _crash_after(crash, k)
+                    try:
+                        api.compact(table)
+                    except OSError:
+                        pass
+                api = IndexerAPI(None, d)
             else:
                 api = IndexerAPI(None, d)
             got = {r["id"]: (r["start_height"], r["status"])
@@ -80,6 +129,63 @@ def test_arrow_final_matches_dict_model(ops):
                     api._final_arrow("failed_blocks").to_pylist()} == failed
             assert api.count_work_queue("pending") == sum(
                 1 for _, s in queue.values() if s == "pending")
+
+
+def test_reader_sees_full_final_through_a_compaction(tmp_path, monkeypatch):
+    """A second instance that reads FINAL before and after every file
+    operation of a compaction (the new file's rename into place, each
+    removal) always sees the whole state, including keys tombstoned
+    over a live row in an earlier file."""
+    d = str(tmp_path)
+    writer = IndexerAPI(None, d)
+    for i in range(6):
+        writer.insert_work_queue(
+            [{"id": i, "start_height": 10 * i, "end_height": 10 * i + 9}])
+        writer.add_failed_block(i, "rpc", "timeout")
+    writer.update_work_queue_status(1, "completed")
+    writer.delete_work_queue_item(2)
+    writer.remove_failed_block(3)
+    writer.add_failed_block(4, "rpc", "timeout")
+    writer.update_last_indexed_height("decoded_indexer", 59)
+    reader = IndexerAPI(None, d)
+    want = {t: reader._final_arrow(t).to_pylist() for t in _LOGS}
+    assert {r["id"] for r in want["work_queue"]} == {0, 1, 3, 4, 5}
+
+    seen = []
+
+    def check():
+        for table, rows in want.items():
+            assert reader._final_arrow(table).to_pylist() == rows, table
+        seen.append(1)
+
+    for name in ("replace", "rename", "remove"):
+        def op(*a, real=getattr(os, name), **kw):
+            check()
+            real(*a, **kw)
+            check()
+        monkeypatch.setattr(os, name, op)
+    for table in _LOGS:
+        writer.compact(table)
+    monkeypatch.undo()
+    # the new file's rename and 8 removals on work_queue, 1 + 8 on
+    # failed_blocks, 1 + 1 on index_state, each checked before and after
+    assert len(seen) == 2 * 20
+    assert all(len(os.listdir(tmp_path / t)) == 1 for t in _LOGS)
+    assert {t: reader._final_arrow(t).to_pylist() for t in _LOGS} == want
+
+
+def test_auto_compaction_counts_files_across_instances(tmp_path,
+                                                       monkeypatch):
+    """Auto-compaction counts the log's files, not one instance's
+    appends: 40 short-lived instances that each append once leave the
+    log below ``AUTO_COMPACT_EVERY`` files, with the last append's
+    state."""
+    monkeypatch.setattr(api_mod, "AUTO_COMPACT_EVERY", 4)
+    for h in range(1, 41):
+        IndexerAPI(None, str(tmp_path)).update_last_indexed_height(
+            "decoded_indexer", h)
+    assert len(list((tmp_path / "index_state").glob("*.parquet"))) < 4
+    assert IndexerAPI(None, str(tmp_path)).get_last_indexed_height() == 40
 
 
 def test_spark_written_log_reads_the_same(tmp_path, monkeypatch):

@@ -263,7 +263,6 @@ def test_stream_uniq_up_to_matches_batch_twin(spark, sf_dir):
     assert _rows(got) == _rows(want) and got.count() > 0
 
 
-@pytest.mark.slowbattery
 def test_stream_registry_decode_matches_batch_twin(spark, sf_dir):
     """The live 36-type registry rollup equals the batch operator's —
     same synthesis, same dispatch (shared helpers), different
@@ -285,7 +284,6 @@ def test_stream_registry_decode_matches_batch_twin(spark, sf_dir):
     assert stream == batch and len(batch) == 68
 
 
-@pytest.mark.slowbattery
 def test_stream_registry_decode_native_equals_python_shape(
         spark, sf_dir, monkeypatch):
     """#47b's default is the native C kernel riding mapInArrow inside

@@ -20,7 +20,7 @@ the native design is an APPEND-ONLY versioned log per table:
   drop out.
 
 That is exactly ReplacingMergeTree + CollapsingMergeTree semantics with
-the merge moved to read time (and compaction as an offline rewrite —
+the merge moved to read time (and compaction as an in-place rewrite —
 ``compact()``), which is how log-structured tables (Iceberg/Delta/Hudi)
 do it. Point updates cost one tiny appended file, never a partition
 rewrite.
@@ -35,10 +35,10 @@ blocks) rows — so they live on the driver, in Arrow:
   a reader sees the whole file or none of it;
 - FINAL (``_final_arrow``) reads the log with ``pyarrow.dataset``
   against its ``_LOGS`` schema, sorts by key and ``_version``
-  descending and keeps the first row per key; every point read, the
-  version high-water mark and ``compact()`` use it, and no Spark job
-  runs. ClickHouse answers these reads in milliseconds; a Spark
-  job per read (~0.3 s) is what this avoids;
+  descending and keeps the first row per key (``_latest``, which
+  ``compact()`` shares); every point read and the version high-water
+  mark use it, and no Spark job runs. ClickHouse answers these reads
+  in milliseconds; a Spark job per read (~0.3 s) is what this avoids;
 - ``work_queue()``, ``failed_blocks()`` and ``index_state()`` hand that
   FINAL to Spark with ``createDataFrame(arrow_table)``, so callers keep
   the DataFrame API;
@@ -46,16 +46,15 @@ blocks) rows — so they live on the driver, in Arrow:
   the views the statement names, each built from one read of its log.
 
 The data tables (``blocks``, ``transactions_raw``, the decoded tables)
-stay on Spark. Like the rest of the log, this assumes a single writer
-per ``base_path`` (one process owns the version counter and the
-compaction renames) on a POSIX filesystem.
+stay on Spark. The version counter assumes a single writer per
+``base_path`` (one process issues the versions) on a POSIX filesystem.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import re
-import shutil
 import time
 import uuid
 from datetime import datetime
@@ -104,10 +103,11 @@ _RAW_TABLES = {
 }
 
 
-def _final(log: pa.Table, key: str) -> pa.Table:
-    """FINAL semantics over a raw log: latest ``_version`` per key,
-    tombstones removed, ``_version``/``_deleted`` dropped. Sorted by
-    key, then version descending, the first row of each key run wins."""
+def _latest(log: pa.Table, key: str) -> tuple[pa.Table, pa.Array]:
+    """Each key's latest row of a raw log, ``_version`` and ``_deleted``
+    kept, and for each whether ``log`` also holds an older row of its
+    key. Sorted by key, then version descending, the first row of each
+    key run wins. FINAL and ``compact`` share this one sort."""
     log = log.take(pc.sort_indices(
         log, [(key, "ascending"), ("_version", "descending")]))
     col = log[key].combine_chunks()
@@ -116,10 +116,10 @@ def _final(log: pa.Table, key: str) -> pa.Table:
     # run, as they form one group in SQL)
     same = pc.coalesce(pc.equal(prev, cur),
                        pc.and_(pc.is_null(prev), pc.is_null(cur)))
-    first = pa.concat_arrays(
-        [pa.array([True] * min(len(col), 1), pa.bool_()), pc.invert(same)])
-    keep = pc.and_(first, pc.invert(log["_deleted"].combine_chunks()))
-    return log.filter(keep).drop_columns(["_version", "_deleted"])
+    edge = pa.array([True] * min(len(col), 1), pa.bool_())
+    first = pa.concat_arrays([edge, pc.invert(same)])
+    older = pa.concat_arrays([same, pc.invert(edge)])
+    return log.filter(first), older.filter(first)
 
 
 def _monitor_failed_blocks(fb: pa.Table) -> pa.Table:
@@ -142,8 +142,8 @@ def _monitor_failed_blocks(fb: pa.Table) -> pa.Table:
 # local time (what the callers pass).
 _EPOCH_US = TimestampType().toInternal
 
-# Auto-compact a table's append-only log once it accretes this many
-# appended files since the last compaction. Keeps hot tables
+# Auto-compact a table's append-only log once its directory holds this
+# many parquet files, whichever instance wrote them. Keeps hot tables
 # (index_state updates every block in the reference) at a bounded file
 # count instead of one tiny parquet file per update forever.
 AUTO_COMPACT_EVERY = 64
@@ -165,10 +165,8 @@ class IndexerAPI:
         self.spark = spark
         self.base = base_path.rstrip("/")
         # per-table version counters, lazily seeded from the on-disk
-        # high-water mark (max existing _version), and per-table append
-        # counts since the last compaction
+        # high-water mark (max existing _version)
         self._versions: dict[str, int] = {}
-        self._appends_since_compact: dict[str, int] = {}
 
     # -- storage primitives -------------------------------------------------
     def _path(self, table: str) -> str:
@@ -191,25 +189,33 @@ class IndexerAPI:
         return self.spark.createDataFrame(
             to_arrow_schema(StructType.fromDDL(ddl)).empty_table())
 
-    def _log(self, table: str) -> pa.Table:
-        """A state log's raw rows, every version (not written yet →
-        empty). Read with ``pyarrow.dataset`` against the ``_LOGS``
-        schema, which also casts what older Spark compactions wrote
-        (INT96 timestamps, an int32 ``_version``); hidden temp files and
-        ``_SUCCESS`` markers are skipped. Only a missing directory is an
-        empty log: any other read error propagates, since taking it for
-        an absent table would re-seed the version counter at 1 and let
-        new appends lose under FINAL."""
+    def _listing(self, table: str) -> tuple[pa.Table, list[str]]:
+        """A state log's raw rows, every version, and the files they
+        were read from (not written yet → empty, no files). Read with
+        ``pyarrow.dataset`` against the ``_LOGS`` schema, which also
+        casts what older Spark compactions wrote (INT96 timestamps, an
+        int32 ``_version``); hidden temp files and ``_SUCCESS`` markers
+        are skipped. Only a missing directory is an empty log: any other
+        read error propagates, since taking it for an absent table would
+        re-seed the version counter at 1 and let new appends lose under
+        FINAL."""
         schema = _LOGS[table][0]
         path = self._path(table)
         if not os.path.isdir(path):
-            return schema.empty_table()
-        return ds.dataset(path, schema=schema, format="parquet").to_table()
+            return schema.empty_table(), []
+        dataset = ds.dataset(path, schema=schema, format="parquet")
+        return dataset.to_table(), dataset.files
+
+    def _log(self, table: str) -> pa.Table:
+        """A state log's raw rows, every version."""
+        return self._listing(table)[0]
 
     def _final_arrow(self, table: str) -> pa.Table:
         """A state log's FINAL, on the driver: latest version per key,
-        tombstones dropped."""
-        return _final(self._log(table), _LOGS[table][1])
+        tombstones and ``_version``/``_deleted`` dropped."""
+        latest, _ = _latest(self._log(table), _LOGS[table][1])
+        return latest.filter(pc.invert(latest["_deleted"])).drop_columns(
+            ["_version", "_deleted"])
 
     def _final_row(self, table: str, key) -> dict | None:
         """The FINAL row of one key, or None."""
@@ -236,8 +242,8 @@ class IndexerAPI:
         ``_write``). No Spark job runs: a Spark write of one row costs a
         Python-worker task and a write job, ~0.9 s against ~2 ms.
         Datetimes are stored as UTC instants, read the way
-        ``createDataFrame`` reads them. Assumes one writer per
-        ``base_path``, as the version counter and ``compact`` do."""
+        ``createDataFrame`` reads them. Once the log holds
+        ``AUTO_COMPACT_EVERY`` parquet files, it is compacted."""
         schema = _LOGS[table][0]
         v = self._next_version(table)
         full = [{**r, "_version": v, "_deleted": r.get("_deleted", False)}
@@ -247,12 +253,11 @@ class IndexerAPI:
             vals = [r.get(f.name) for r in full]
             cols[f.name] = ([_EPOCH_US(x) for x in vals]
                             if pa.types.is_timestamp(f.type) else vals)
-        self._write(self._path(table), pa.Table.from_pydict(cols, schema=schema))
-        n = self._appends_since_compact.get(table, 0) + 1
-        if n >= AUTO_COMPACT_EVERY:
+        path = self._path(table)
+        self._write(path, pa.Table.from_pydict(cols, schema=schema))
+        if len(glob.glob(os.path.join(path, "*.parquet"))) \
+                >= AUTO_COMPACT_EVERY:
             self.compact(table)
-        else:
-            self._appends_since_compact[table] = n
 
     @staticmethod
     def _write(d: str, t: pa.Table) -> None:
@@ -271,20 +276,22 @@ class IndexerAPI:
         return self.spark.createDataFrame(self._final_arrow(table))
 
     def compact(self, table: str, schema=None, key_cols=None) -> None:
-        """Offline compaction: rewrite the log as its FINAL state (the
-        explicit analog of ClickHouse's background merge / OPTIMIZE),
-        written with pyarrow as one file at one new version.
+        """Compact a log in place, the explicit analog of ClickHouse's
+        background merge / OPTIMIZE, with no version of its own: list
+        and read the log once; write one new file (``_write``) holding
+        each key's latest row with its own ``_version``, a tombstone
+        only while an older row of its key was read; then remove exactly
+        the files read, and any hidden temp file a crashed write left.
+
+        The new file holds every key's highest-version row, so the FINAL
+        of it plus any subset of the files read is the FINAL of the
+        files read: every reader and every crash point sees the same
+        state, and the directory never disappears. No append runs
+        meanwhile (one writer).
 
         ``schema`` (DDL string or StructType) and ``key_cols`` are
         optional, since ``_LOGS`` knows both; when given they must match
-        it, or a ValueError is raised.
-
-        The swap is rename-based: the compacted copy is fully written to
-        a side directory first, then swapped in with two directory
-        renames (atomic per-op on a POSIX fs). A crash between the
-        renames leaves the old log intact at ``<table>__old`` —
-        recoverable, never a window where the data exists nowhere (the
-        previous overwrite-in-place had one)."""
+        it, or a ValueError is raised."""
         log_schema, key = _LOGS[table]
         if schema is not None:
             if isinstance(schema, str):
@@ -296,22 +303,13 @@ class IndexerAPI:
         if key_cols is not None and list(key_cols) != [key]:
             raise ValueError(
                 f"compact({table!r}): key {list(key_cols)} is not [{key!r}]")
-        final = self._final_arrow(table)
-        v = self._next_version(table)
-        final = final.append_column(
-            "_version", pa.array([v] * final.num_rows, pa.int64())
-        ).append_column(
-            "_deleted", pa.array([False] * final.num_rows, pa.bool_()))
+        log, files = self._listing(table)
+        latest, older = _latest(log, key)
         path = self._path(table)
-        tmp, old = path + "__compact", path + "__old"
-        shutil.rmtree(tmp, ignore_errors=True)
-        self._write(tmp, final)
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.exists(path):
-            os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old, ignore_errors=True)
-        self._appends_since_compact[table] = 0
+        self._write(path, latest.filter(
+            pc.or_(pc.invert(latest["_deleted"]), older)))
+        for f in files + glob.glob(os.path.join(path, ".part-*.tmp")):
+            os.remove(f)
 
     # -- work_queue (clickhouse_queries.js:153-231) -------------------------
     def work_queue(self) -> DataFrame:

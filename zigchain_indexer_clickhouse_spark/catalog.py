@@ -140,16 +140,6 @@ def _read_ltz(spark: SparkSession, path: str) -> DataFrame:
         spark.conf.set(conf, prev)
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for spark.sql() use."""
-    for t in TABLES:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 # Canonical column sets per table — the catalog's expectation, checked
 # by verify_catalog (the init_clickhouse.js:465-495 verifyTables analog).
 EXPECTED_COLUMNS: dict[str, tuple[str, ...]] = {
