@@ -4,6 +4,7 @@ parquet with FINAL-at-read semantics."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 
 from zigchain_indexer_clickhouse_spark.api import IndexerAPI
@@ -442,7 +443,9 @@ def test_state_read_error_propagates(api, tmp_path, monkeypatch):
 def test_absent_table_starts_no_spark_read(api, tmp_path, monkeypatch):
     """On a fresh store a data table's absence is seen on the file
     system, before Spark is asked (which would log a stack trace for
-    the missing path); a directory that exists still goes to Spark."""
+    the missing path); a directory that exists still goes to Spark from
+    pg_query, and a corrupt file there fails the footer read of
+    get_max_block_height."""
     from pyspark.sql.readwriter import DataFrameReader
 
     calls = []
@@ -462,4 +465,79 @@ def test_absent_table_starts_no_spark_read(api, tmp_path, monkeypatch):
     (tmp_path / "blocks" / "part-0.parquet").write_bytes(b"not parquet")
     with pytest.raises(Exception):
         api.get_max_block_height()
+    assert calls == []
+    with pytest.raises(Exception):
+        api.pg_query("SELECT COUNT(*) FROM blocks").collect()
     assert calls
+
+
+# -- get_max_block_height from the parquet footers ----------------------------
+
+def _blocks_file(path, heights, **kw):
+    """One ``blocks`` parquet file: a column ahead of ``height``, so the
+    footer's height column is not the first, and the given heights."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    h = pa.array(heights, pa.int64())
+    pq.write_table(pa.table({"hash": pa.array([f"h{i}" for i in range(len(h))]),
+                             "height": h}), path, **kw)
+
+
+_BLOCK_FILES = {
+    # 1000 shuffled heights in 10 row groups, the top one in neither the
+    # first nor the last group
+    "row_groups": lambda d: _blocks_file(
+        d / "part-0.parquet", np.random.default_rng(0).permutation(1000) + 1,
+        row_group_size=100),
+    "no_statistics": lambda d: _blocks_file(
+        d / "part-1.parquet", [5, 4321, 17], write_statistics=False),
+    "all_null": lambda d: _blocks_file(d / "part-2.parquet", [None] * 3),
+    "empty": lambda d: _blocks_file(d / "part-3.parquet", []),
+}
+
+
+@pytest.mark.parametrize("layout", [*_BLOCK_FILES, "all"])
+def test_max_block_height_equals_spark_max(api, tmp_path, layout):
+    """The footer max equals Spark's max(height) over the same files
+    (0 when Spark's is NULL): row-group statistics, a file written
+    without statistics and an all-null file (both read), an empty
+    file, and all four in one table."""
+    from pyspark.sql import functions as F
+
+    d = tmp_path / "blocks"
+    d.mkdir()
+    for name, write in _BLOCK_FILES.items():
+        if layout in (name, "all"):
+            write(d)
+    spark_max = api.spark.read.parquet(str(d)).agg(F.max("height")) \
+        .collect()[0][0]
+    assert api.get_max_block_height() == (spark_max or 0)
+
+
+def test_max_block_height_starts_no_spark_job(api, spark, tmp_path):
+    """The footer max runs on the driver: no Spark job."""
+    sc = spark.sparkContext
+    api.insert("blocks", spark.range(1, 1001).toDF("height"))
+    try:
+        sc.setJobGroup("test-max-height", "max height")
+        assert api.get_max_block_height() == 1000
+        # control: a read in its own group shows the probe sees jobs
+        sc.setJobGroup("test-max-height-control", "control")
+        assert api._read("blocks").count() == 1000
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("test-max-height-control"))
+    assert list(sc.statusTracker().getJobIdsForGroup("test-max-height")) == []
+
+
+def test_max_block_height_corrupt_file_raises(api, tmp_path):
+    """A corrupt file among good ones is an error, not a smaller max."""
+    d = tmp_path / "blocks"
+    d.mkdir()
+    _blocks_file(d / "part-0.parquet", [1, 2, 3])
+    (d / "part-1.parquet").write_bytes(b"PAR1 not parquet PAR1")
+    with pytest.raises(Exception):
+        api.get_max_block_height()

@@ -12,6 +12,7 @@ views computed directly.
 from __future__ import annotations
 
 import re
+import uuid
 from datetime import datetime, timedelta
 from pathlib import Path
 
@@ -255,6 +256,28 @@ def test_monitor_sql_equals_engine_views(api, name):
     if name == "looping":
         got = sorted(got)
     assert got == _monitor_expect(api, name)
+
+
+@pytest.mark.parametrize("name", ["status_counts", "stuck", "duplicates",
+                                  "looping", "failed_breakdown"])
+def test_monitor_aggregate_runs_one_job(api, name):
+    """The state-log views are single-partition: each of the monitor's
+    aggregates over them runs as one Spark job, and GROUP BY, HAVING
+    and ORDER BY plan with no Exchange."""
+    sc = api.spark.sparkContext
+    group = f"one-job-{uuid.uuid4().hex}"
+    try:
+        sc.setJobGroup(group, group)
+        df = api.pg_query(MONITOR_SQL[name])
+        df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert len(list(sc.statusTracker().getJobIdsForGroup(group))) == 1, plan
+    if name in ("status_counts", "duplicates", "failed_breakdown"):
+        assert "Exchange" not in plan, plan
 
 
 def test_pg_query_sees_appends_between_calls(spark, tmp_path):

@@ -188,12 +188,51 @@ def test_auto_compaction_counts_files_across_instances(tmp_path,
     assert IndexerAPI(None, str(tmp_path)).get_last_indexed_height() == 40
 
 
+def test_read_lists_again_after_a_compaction_removes_a_listed_file(
+        tmp_path, monkeypatch):
+    """A compaction by another instance that removes the files a reader
+    has just listed, before the reader opens them, does not fail the
+    read: the reader lists again and its FINAL is the model's."""
+    d = str(tmp_path)
+    writer = IndexerAPI(None, d)
+    queue: dict[int, str] = {}
+    for i in range(4):
+        writer.insert_work_queue(
+            [{"id": i, "start_height": 10 * i, "end_height": 10 * i + 9}])
+        queue[i] = "pending"
+    writer.update_work_queue_status(1, "completed")
+    queue[1] = "completed"
+    writer.delete_work_queue_item(2)
+    del queue[2]
+
+    real, listings = api_mod.ds.dataset, []
+
+    def racing(*a, **kw):
+        dataset = real(*a, **kw)
+        listings.append(dataset.files)
+        if len(listings) == 1:
+            IndexerAPI(None, d).compact("work_queue")
+        return dataset
+
+    monkeypatch.setattr(api_mod.ds, "dataset", racing)
+    got = {r["id"]: r["status"]
+           for r in IndexerAPI(None, d)._final_arrow("work_queue").to_pylist()}
+    monkeypatch.undo()
+    assert got == queue
+    # the reader's first listing (6 files) was gone when it read; the
+    # compaction's own listing, then the reader's second, which holds
+    # only the compacted file
+    assert [len(f) for f in listings] == [6, 6, 1]
+    assert not any(os.path.exists(f) for f in listings[0])
+
+
 def test_spark_written_log_reads_the_same(tmp_path, monkeypatch):
     """A log compacted by the earlier Spark writer — INT96 timestamps,
     an int32 ``_version`` (``F.lit`` of a small int), ``_SUCCESS`` and
     ``.crc`` side files — reads with the same rows and instants, in a
     non-UTC process time zone; new versions land above its high-water
-    mark and a compaction rewrites it in the log's own types."""
+    mark and a compaction rewrites it in the log's own types, leaving
+    the one new file and no side file."""
     monkeypatch.setenv("TZ", "IST-5:30")  # UTC+05:30, no tzdata needed
     time.tzset()
     try:
@@ -237,8 +276,10 @@ def test_spark_written_log_reads_the_same(tmp_path, monkeypatch):
         rows = api._final_arrow("work_queue").to_pylist()
         assert [(r["id"], r["status"], r["created_at"]) for r in rows] == \
             [(1, "done", created), (2, "processing", created)]
-        (left,) = d.glob("*.parquet")
-        assert pq.read_schema(left).field("_version").type == pa.int64()
+        # the Spark writer's side files go with the file they describe
+        (left,) = os.listdir(d)
+        assert left.endswith(".parquet")
+        assert pq.read_schema(d / left).field("_version").type == pa.int64()
     finally:
         monkeypatch.undo()
         time.tzset()

@@ -43,11 +43,18 @@ blocks) rows — so they live on the driver, in Arrow:
   FINAL to Spark with ``createDataFrame(arrow_table)``, so callers keep
   the DataFrame API;
 - ``query`` / ``ch_query`` / ``pg_query`` register, per statement, only
-  the views the statement names, each built from one read of its log.
+  the views the statement names, each built from one read of its log
+  and coalesced to one partition: GROUP BY, ORDER BY and global
+  aggregates over it plan with no Exchange, so each of the monitor's
+  aggregates runs as one single-task Spark job. The DataFrame methods
+  (``work_queue()`` and the calls built on it) keep the plain local
+  relation, whose filters Catalyst folds without running a job.
 
 The data tables (``blocks``, ``transactions_raw``, the decoded tables)
-stay on Spark. The version counter assumes a single writer per
-``base_path`` (one process issues the versions) on a POSIX filesystem.
+stay on Spark, except that ``get_max_block_height`` reads the ``height``
+max from the parquet footers of ``blocks``, with no Spark job. The
+version counter assumes a single writer per ``base_path`` (one process
+issues the versions) on a POSIX filesystem.
 """
 
 from __future__ import annotations
@@ -198,13 +205,22 @@ class IndexerAPI:
         are skipped. Only a missing directory is an empty log: any other
         read error propagates, since taking it for an absent table would
         re-seed the version counter at 1 and let new appends lose under
-        FINAL."""
+        FINAL. A listed file that is gone by the time it is read was
+        removed by a compaction, whose new file holds its rows: the log
+        is listed and read again, and only a file missing from two
+        equal listings is an error."""
         schema = _LOGS[table][0]
         path = self._path(table)
-        if not os.path.isdir(path):
-            return schema.empty_table(), []
-        dataset = ds.dataset(path, schema=schema, format="parquet")
-        return dataset.to_table(), dataset.files
+        files = None
+        while os.path.isdir(path):
+            dataset = ds.dataset(path, schema=schema, format="parquet")
+            try:
+                return dataset.to_table(), dataset.files
+            except FileNotFoundError:
+                if dataset.files == files:
+                    raise
+                files = dataset.files
+        return schema.empty_table(), []
 
     def _log(self, table: str) -> pa.Table:
         """A state log's raw rows, every version."""
@@ -272,7 +288,10 @@ class IndexerAPI:
         os.replace(tmp, os.path.join(d, name))
 
     def _log_view(self, table: str) -> DataFrame:
-        """A state log's FINAL as a DataFrame, from the Arrow FINAL."""
+        """A state log's FINAL as a DataFrame, from the Arrow FINAL. Not
+        coalesced like the SQL views: a filter over this local relation
+        folds into it and runs no job, where one partition would cost a
+        job."""
         return self.spark.createDataFrame(self._final_arrow(table))
 
     def compact(self, table: str, schema=None, key_cols=None) -> None:
@@ -281,7 +300,9 @@ class IndexerAPI:
         and read the log once; write one new file (``_write``) holding
         each key's latest row with its own ``_version``, a tombstone
         only while an older row of its key was read; then remove exactly
-        the files read, and any hidden temp file a crashed write left.
+        the files read and any hidden temp file a crashed write left,
+        then the side files a Spark writer leaves (``_SUCCESS`` and each
+        ``.<name>.crc`` whose file is gone).
 
         The new file holds every key's highest-version row, so the FINAL
         of it plus any subset of the files read is the FINAL of the
@@ -310,6 +331,15 @@ class IndexerAPI:
             pc.or_(pc.invert(latest["_deleted"]), older)))
         for f in files + glob.glob(os.path.join(path, ".part-*.tmp")):
             os.remove(f)
+        # what a Spark writer leaves beside its files: the _SUCCESS
+        # marker, then each .<name>.crc checksum whose file is gone
+        success = os.path.join(path, "_SUCCESS")
+        if os.path.exists(success):
+            os.remove(success)
+        for crc in glob.glob(os.path.join(path, ".*.crc")):
+            if not os.path.exists(
+                    os.path.join(path, os.path.basename(crc)[1:-4])):
+                os.remove(crc)
 
     # -- work_queue (clickhouse_queries.js:153-231) -------------------------
     def work_queue(self) -> DataFrame:
@@ -467,12 +497,30 @@ class IndexerAPI:
         df.write.mode("append").parquet(self._path(table))
 
     def get_max_block_height(self) -> int:
-        """getMaxBlockHeight (clickhouse_queries.js:142-148)."""
-        blocks = self._read("blocks")
-        if blocks is None:
+        """getMaxBlockHeight (clickhouse_queries.js:142-148), from the
+        parquet footers of ``blocks``: the largest ``height`` max
+        statistic of any row group, exact for an integer column. A row
+        group whose footer has no min/max for ``height`` (written
+        without statistics, or all null) is read instead. No Spark job
+        runs. An absent table is height 0; any other error, a corrupt
+        footer included, propagates."""
+        path = self._path("blocks")
+        if not os.path.isdir(path):
             return 0
-        row = blocks.agg(F.max("height")).collect()[0][0]
-        return int(row) if row is not None else 0
+        tops = []
+        for frag in ds.dataset(path, format="parquet").get_fragments():
+            md = frag.metadata
+            cols = [md.schema.column(j).path for j in range(md.num_columns)]
+            if "height" not in cols:
+                continue
+            j = cols.index("height")
+            for i in range(md.num_row_groups):
+                st = md.row_group(i).column(j).statistics
+                tops.append(st.max if st is not None and st.has_min_max
+                            else pc.max(frag.subset(row_group_ids=[i])
+                                        .to_table(columns=["height"])
+                                        ["height"]).as_py())
+        return max((t for t in tops if t is not None), default=0)
 
     def query(self, sql: str) -> DataFrame:
         """query (clickhouse_queries.js:8-72): ad-hoc SQL over the FINAL
@@ -490,31 +538,37 @@ class IndexerAPI:
         the statement does not name is not read. The state logs are
         their FINAL views. ``monitor`` (``pg_query``) adds the raw data
         tables and the ``information_schema_tables`` catalog view, and
-        serves ``failed_blocks`` as its monitor-compat projection."""
+        serves ``failed_blocks`` as its monitor-compat projection. A
+        view built on the driver from Arrow (a log's FINAL, the catalog
+        view) is coalesced to one partition."""
         names = [*_LOGS, *_RAW_TABLES, "information_schema_tables"] \
             if monitor else list(_LOGS)
         for name in names:
             if not re.search(rf"\b{name}\b", sql, re.IGNORECASE):
                 continue
-            if name in _LOGS:
-                t = self._final_arrow(name)
-                if monitor and name == "failed_blocks":
-                    t = _monitor_failed_blocks(t)
-                df = self.spark.createDataFrame(t)
-            elif name in _RAW_TABLES:
+            if name in _RAW_TABLES:
                 df = self._read(name)
                 if df is None:
                     df = self._empty(_RAW_TABLES[name])
             else:
-                # built from Arrow like _empty: a Python-list DataFrame
-                # runs a Python-worker task on every read of the view
-                present = [t for t in self._PG_EXPECTED_TABLES
-                           if os.path.isdir(self._path(t))]
-                df = self.spark.createDataFrame(pa.table({
-                    "table_name": pa.array(present, pa.string()),
-                    "table_schema": pa.array(["public"] * len(present),
-                                             pa.string()),
-                }))
+                if name in _LOGS:
+                    t = self._final_arrow(name)
+                    if monitor and name == "failed_blocks":
+                        t = _monitor_failed_blocks(t)
+                else:
+                    # built from Arrow like _empty: a Python-list DataFrame
+                    # runs a Python-worker task on every read of the view
+                    present = [t for t in self._PG_EXPECTED_TABLES
+                               if os.path.isdir(self._path(t))]
+                    t = pa.table({
+                        "table_name": pa.array(present, pa.string()),
+                        "table_schema": pa.array(["public"] * len(present),
+                                                 pa.string()),
+                    })
+                # one partition: GROUP BY, ORDER BY and global aggregates
+                # over it plan with no Exchange, so a query runs as one
+                # single-task job instead of 2-4
+                df = self.spark.createDataFrame(t).coalesce(1)
             df.createOrReplaceTempView(name)
 
     # -- orchestrator helpers (src/core/orchestrator.js) --------------------
