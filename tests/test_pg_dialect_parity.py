@@ -326,3 +326,27 @@ def test_statement_reads_only_the_tables_it_names(spark, tmp_path,
     assert a.pg_query("SELECT MAX(height) AS h FROM blocks") \
         .collect()[0]["h"] == 3
     assert logs == ["work_queue", "failed_blocks"] and len(parquet) == 1
+
+
+# -- generate_series(a, b) with b < a yields no rows, as in PostgreSQL -------
+
+def test_gap_probe_on_empty_store_finds_no_gaps(spark, tmp_path):
+    """A fresh store's max height is 0; the gap probe bound with it
+    must report nothing missing, not heights 0 and 1."""
+    a = IndexerAPI(spark, str(tmp_path))
+    assert a.get_max_block_height() == 0
+    assert a.pg_query(MONITOR_SQL["gaps"], [0]).collect() == []
+
+
+def test_select_list_series_is_empty_when_bound_below_start(api):
+    assert api.pg_query("SELECT generate_series(1, $1) AS x", [0]) \
+        .collect() == []
+    assert [r["x"] for r in api.pg_query(
+        "SELECT generate_series(1, $1) AS x", [3]).collect()] == [1, 2, 3]
+
+
+def test_from_clause_series_is_empty_when_bound_below_start(api):
+    assert api.ch_query("SELECT h FROM generate_series(1, 0) g(h)") \
+        .collect() == []
+    assert [r["h"] for r in api.ch_query(
+        "SELECT h FROM generate_series(2, 4) g(h)").collect()] == [2, 3, 4]

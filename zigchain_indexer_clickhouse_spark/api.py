@@ -609,8 +609,9 @@ class IndexerAPI:
           ``toDate(x)`` → ``CAST(x AS DATE)``
         - ``expr::Int64/UInt64/bigint/int`` postfix casts (CH supports
           the PG-style ``::`` cast too) → ``CAST(expr AS BIGINT)``
-        - ``generate_series(a, b)`` → ``explode(sequence(a, b))`` (the
-          monitor's gap probe)
+        - ``generate_series(a, b)`` → ``explode(IF(b >= a,
+          sequence(a, b), NULL))`` (the monitor's gap probe; no rows
+          when b < a, as in PostgreSQL)
         - ``EXTRACT(EPOCH FROM (a - b))`` → unix_timestamp difference
           (the monitor's stuck/stale age arithmetic)
         - ``countIf(cond)`` → ``count_if(cond)``
@@ -645,65 +646,69 @@ class IndexerAPI:
         literal actually present in the reference tree and runs it
         through this shim, so dialect drift in a future reference
         version fails a test instead of a user."""
-        import re as _re
-
-        out = _re.sub(r"\bFINAL\b", "", sql)
+        out = re.sub(r"\bFINAL\b", "", sql)
         # generate_series before the ::cast rewrite so its args are
-        # still parenthesis-free when this pattern sees them
-        out = _re.sub(
-            r"\bgenerate_series\(([^()]+)\)",
-            r"explode(sequence(\1))", out,
-        )
-        out = _re.sub(
+        # still parenthesis-free when this pattern sees them. sequence
+        # counts DOWN when b < a; PostgreSQL yields no rows there, and
+        # explode of a NULL array yields none either
+        def _series(m):
+            args = [a.strip() for a in m.group(1).split(",")]
+            seq = f"sequence({', '.join(args)})"
+            if len(args) == 2:
+                seq = f"IF(({args[1]}) >= ({args[0]}), {seq}, NULL)"
+            return f"explode({seq})"
+
+        out = re.sub(r"\bgenerate_series\(([^()]+)\)", _series, out)
+        out = re.sub(
             r"(\w+\(\*\)|\$?\w+)::(?:Int|UInt)?(?:int|bigint|8|16|32|64)\b",
-            r"CAST(\1 AS BIGINT)", out, flags=_re.IGNORECASE,
+            r"CAST(\1 AS BIGINT)", out, flags=re.IGNORECASE,
         )
-        out = _re.sub(
+        out = re.sub(
             r"EXTRACT\(\s*EPOCH\s+FROM\s+\(\s*(NOW\(\)|\w+)\s*-\s*(NOW\(\)|\w+)\s*\)\s*\)",
             r"(unix_timestamp(\1) - unix_timestamp(\2))",
-            out, flags=_re.IGNORECASE,
+            out, flags=re.IGNORECASE,
         )
-        out = _re.sub(r"\bcountIf\(", "count_if(", out)
-        out = _re.sub(r"\bcount\(\s*\)", "count(*)", out,
-                      flags=_re.IGNORECASE)
+        out = re.sub(r"\bcountIf\(", "count_if(", out)
+        out = re.sub(r"\bcount\(\s*\)", "count(*)", out,
+                     flags=re.IGNORECASE)
         # rewrite the TYPE token rather than the whole CAST(...) — the
         # cast operand may itself contain parens (a scalar subquery,
         # orchestrator.js's last_idx resolution)
-        out = _re.sub(
+        out = re.sub(
             r"\bAS\s+(?:U?Int)(?:8|16|32|64)\b",
-            "AS BIGINT", out, flags=_re.IGNORECASE,
+            "AS BIGINT", out, flags=re.IGNORECASE,
         )
-        out = _re.sub(r"\bto(?:UInt|Int)(?:8|16|32|64)\(([^()]+)\)",
-                      r"CAST(\1 AS BIGINT)", out)
-        out = _re.sub(r"\bNOW\(\)", "current_timestamp()", out,
-                      flags=_re.IGNORECASE)
-        out = _re.sub(r"\bintDiv\(([^(),]+),\s*([^()]+)\)",
-                      r"(\1 div \2)", out)
-        out = _re.sub(r"\bargMax\(([^(),]+),\s*([^()]+)\)",
-                      r"max_by(\1, \2)", out)
-        out = _re.sub(r"\bargMin\(([^(),]+),\s*([^()]+)\)",
-                      r"min_by(\1, \2)", out)
-        out = _re.sub(r"\buniqExact\(([^()]+)\)",
-                      r"count(DISTINCT \1)", out)
-        out = _re.sub(r"\buniq\(([^()]+)\)",
-                      r"approx_count_distinct(\1)", out)
-        out = _re.sub(r"\btoStartOfDay\(([^()]+)\)",
-                      r"date_trunc('DAY', \1)", out)
+        out = re.sub(r"\bto(?:UInt|Int)(?:8|16|32|64)\(([^()]+)\)",
+                     r"CAST(\1 AS BIGINT)", out)
+        out = re.sub(r"\bNOW\(\)", "current_timestamp()", out,
+                     flags=re.IGNORECASE)
+        out = re.sub(r"\bintDiv\(([^(),]+),\s*([^()]+)\)",
+                     r"(\1 div \2)", out)
+        out = re.sub(r"\bargMax\(([^(),]+),\s*([^()]+)\)",
+                     r"max_by(\1, \2)", out)
+        out = re.sub(r"\bargMin\(([^(),]+),\s*([^()]+)\)",
+                     r"min_by(\1, \2)", out)
+        out = re.sub(r"\buniqExact\(([^()]+)\)",
+                     r"count(DISTINCT \1)", out)
+        out = re.sub(r"\buniq\(([^()]+)\)",
+                     r"approx_count_distinct(\1)", out)
+        out = re.sub(r"\btoStartOfDay\(([^()]+)\)",
+                     r"date_trunc('DAY', \1)", out)
         # toStartOfWeek defaults to mode 0 = SUNDAY-start weeks in
         # ClickHouse, while Spark's date_trunc('WEEK', x) is Monday-
         # start — shift by a day on both sides so the bucket boundary
         # lands on Sunday (and the result is a DATE, as in CH).
-        out = _re.sub(
+        out = re.sub(
             r"\btoStartOfWeek\(([^()]+)\)",
             r"date_sub(date_trunc('WEEK', date_add(\1, 1)), 1)",
             out,
         )
-        out = _re.sub(
+        out = re.sub(
             r"\btoStartOf(Minute|Hour|Month)\(([^()]+)\)",
             lambda m: f"date_trunc('{m.group(1).upper()}', {m.group(2)})",
             out,
         )
-        out = _re.sub(r"\btoDate\(([^()]+)\)", r"CAST(\1 AS DATE)", out)
+        out = re.sub(r"\btoDate\(([^()]+)\)", r"CAST(\1 AS DATE)", out)
         # GROUP BY modifiers: WITH TOTALS is the one Spark lacks as a
         # postfix — the equivalent is the explicit grouping-sets pair
         # (all keys, grand total); WITH ROLLUP / WITH CUBE parse as-is.
@@ -711,10 +716,10 @@ class IndexerAPI:
         # BY inside the captured key list, so the rewrite anchors on
         # the LAST GROUP BY before WITH TOTALS and a subquery's own
         # grouping can never be folded into the grouping-sets keys
-        out = _re.sub(
+        out = re.sub(
             r"GROUP\s+BY\s+((?:(?!GROUP\s+BY).)*?)\s+WITH\s+TOTALS",
             r"GROUP BY GROUPING SETS ((\1), ())",
-            out, flags=_re.IGNORECASE | _re.S,
+            out, flags=re.IGNORECASE | re.S,
         )
         # -Map combinators over Map(String, Int64) columns: merge the
         # group's maps per key. map_zip_with unions key sets; the
@@ -726,21 +731,21 @@ class IndexerAPI:
             "cast(map() as map<string,bigint>), "
             "(acc, x) -> map_zip_with(acc, x, (k, a, b) -> {merge}))"
         )
-        out = _re.sub(
+        out = re.sub(
             r"\bsumMap\(" + _arg + r"\)",
             lambda m: _fold.format(
                 m=m.group(1), merge="coalesce(a, 0L) + coalesce(b, 0L)"
             ),
             out,
         )
-        out = _re.sub(
+        out = re.sub(
             r"\bminMap\(" + _arg + r"\)",
             lambda m: _fold.format(
                 m=m.group(1), merge="least(coalesce(a, b), coalesce(b, a))"
             ),
             out,
         )
-        out = _re.sub(
+        out = re.sub(
             r"\bmaxMap\(" + _arg + r"\)",
             lambda m: _fold.format(
                 m=m.group(1), merge="greatest(coalesce(a, b), coalesce(b, a))"
@@ -756,21 +761,21 @@ class IndexerAPI:
         # TOTALS caveat above, that empty-set corner is documented as
         # a dialect difference rather than faked with a sentinel that
         # would corrupt real aggregates).
-        out = _re.sub(
+        out = re.sub(
             r"\bsumIf\(" + _arg + r",\s*" + _arg + r"\)",
             r"coalesce(sum(IF(\2, \1, NULL)), 0)", out,
         )
-        out = _re.sub(
+        out = re.sub(
             r"\b(avg|min|max)If\(" + _arg + r",\s*" + _arg + r"\)",
             r"\1(IF(\3, \2, NULL))", out,
         )
         # parameterized aggregates: quantileExact BEFORE quantile (the
         # latter's pattern is a prefix of the former's)
-        out = _re.sub(
+        out = re.sub(
             r"\bquantileExact\(([^()]+)\)\(([^()]+)\)",
             r"percentile(\2, \1)", out,
         )
-        out = _re.sub(
+        out = re.sub(
             r"\bquantile\(([^()]+)\)\(([^()]+)\)",
             r"percentile_approx(\2, \1)", out,
         )
@@ -826,12 +831,10 @@ class IndexerAPI:
         the ``information_schema.tables`` catalog probe (served by the
         view :meth:`pg_query` registers). ``INTERVAL 'n unit'``
         literals and scalar subqueries parse natively in Spark."""
-        import re as _re
-
         out = cls.pg_bind(sql, params)
-        out = _re.sub(r"\binformation_schema\.tables\b",
-                      "information_schema_tables", out,
-                      flags=_re.IGNORECASE)
+        out = re.sub(r"\binformation_schema\.tables\b",
+                     "information_schema_tables", out,
+                     flags=re.IGNORECASE)
         return cls.ch_sql(out)
 
     def pg_query(self, sql: str, params=None) -> DataFrame:

@@ -422,7 +422,8 @@ def height_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference partitions every table `PARTITION BY
     intDiv(height,100000)` (models.js:118) / 50k-block PG partitions
     (partition.js:3). Spark analog: height-bucket stats; physical writes
-    use repartitionByRange on this key."""
+    of this key go through
+    ``sources.partitioned_write.write_height_buckets``."""
     e = load(spark, sf_dir, "events")
     return e.groupBy(F.floor(F.col("event_id") / 100).cast("long").alias("partition_id")).agg(
         F.count("*").alias("n_rows"),

@@ -3,8 +3,17 @@
 The reference partitions storage by height range — ClickHouse
 ``PARTITION BY intDiv(height, 100000)`` (models.js:118) and 50k-block
 PostgreSQL range partitions (partition.js:3). Spark-native equivalent:
-``repartitionByRange`` on the bucket + ``partitionBy`` parquet layout,
-giving partition-pruned reads on the height predicate.
+``partitionBy("height_bucket")`` parquet layout, giving partition-pruned
+reads on the height predicate. :func:`write_height_buckets` is the one
+place that writes it; every height-bucketed table goes through it.
+
+The shuffle before the write is a HASH ``repartition`` on the bucket,
+not ``repartitionByRange``: range partitioning first runs a
+RangePartitioner sampling job, and that job re-executes the whole lazy
+upstream (for a backfill tick: every RPC fetch and JSON parse) a second
+time. Hash partitioning puts every row of a bucket in one task just the
+same, and ``partitionBy`` splits files by bucket value, so the layout is
+unchanged: one parquet file per ``height_bucket=`` directory.
 
 ``partitioned_write_readback`` writes the events table into that
 layout and reads it back through a height-range filter, so the oracle
@@ -27,19 +36,29 @@ from zigchain_indexer_clickhouse_spark.sources.scratch import scratch_dir
 BUCKET_SIZE = 100  # heights per partition (reference uses 100k at chain scale)
 
 
-def write_height_partitioned(df: DataFrame, path: str, height_col: str = "event_id") -> None:
-    """Write with the reference's physical layout: range-partitioned by
-    height bucket. repartitionByRange lines file boundaries up with
-    partition values (no small-files explosion), partitionBy makes the
-    bucket a directory key Catalyst can prune on."""
-    bucketed = df.withColumn(
-        "height_bucket", F.floor(F.col(height_col) / BUCKET_SIZE).cast("long")
-    )
+def write_height_buckets(df: DataFrame, path: str) -> None:
+    """Overwrite ``path`` with ``df`` (which already carries a
+    ``height_bucket`` column) in the height-bucket layout: one
+    ``height_bucket=`` directory per bucket value, one file in each,
+    with ``df``'s plan run once (a hash shuffle; see the module
+    docstring for why not a range one)."""
     (
-        bucketed.repartitionByRange("height_bucket")
+        df.repartition("height_bucket")
         .write.mode("overwrite")
         .partitionBy("height_bucket")
         .parquet(path)
+    )
+
+
+def write_height_partitioned(df: DataFrame, path: str, height_col: str = "event_id") -> None:
+    """Write with the reference's physical layout: ``height_bucket`` =
+    ``floor(height_col / BUCKET_SIZE)``, a directory key Catalyst can
+    prune on, written by :func:`write_height_buckets`."""
+    write_height_buckets(
+        df.withColumn(
+            "height_bucket", F.floor(F.col(height_col) / BUCKET_SIZE).cast("long")
+        ),
+        path,
     )
 
 

@@ -54,6 +54,9 @@ from zigchain_indexer_clickhouse_spark.functions.protobuf import (
 )
 from zigchain_indexer_clickhouse_spark.operators.dedup import _shared_stage
 from zigchain_indexer_clickhouse_spark.plans.registry import register
+from zigchain_indexer_clickhouse_spark.sources.partitioned_write import (
+    write_height_buckets,
+)
 
 _MSG_SEND_URL = "/cosmos.bank.v1beta1.MsgSend"
 _MSG_EXEC_URL = "/cosmwasm.wasm.v1.MsgExecuteContract"
@@ -1507,12 +1510,7 @@ def _write_once_at_rest(df: DataFrame, path: str) -> None:
     if os.path.isfile(os.path.join(path, "_SUCCESS")):
         return
     tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-    (
-        df.repartitionByRange("height_bucket")
-        .write.mode("overwrite")
-        .partitionBy("height_bucket")
-        .parquet(tmp)
-    )
+    write_height_buckets(df, tmp)
     with _AT_REST_WRITE_LOCK:
         if os.path.isfile(os.path.join(path, "_SUCCESS")):
             shutil.rmtree(tmp, ignore_errors=True)  # a racer committed

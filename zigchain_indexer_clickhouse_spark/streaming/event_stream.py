@@ -505,6 +505,9 @@ def stream_block_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the check."""
     import shutil
 
+    from zigchain_indexer_clickhouse_spark.sources.partitioned_write import (
+        write_height_buckets,
+    )
     from zigchain_indexer_clickhouse_spark.sources.rpc_json import (
         build_block_documents,
         parse_block_results,
@@ -534,10 +537,8 @@ def stream_block_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("tx_event_attrs", flat),
         ):
             # batchId-scoped overwrite = idempotent under retry
-            df.repartitionByRange("height_bucket").write.mode(
-                "overwrite"
-            ).partitionBy("height_bucket").parquet(
-                os.path.join(base, name, f"batch_id={batch_id}")
+            write_height_buckets(
+                df, os.path.join(base, name, f"batch_id={batch_id}")
             )
         flat.unpersist()
 
