@@ -4,9 +4,11 @@ ONE JSON line:
   {"metric": "...", "value": total_sec, "unit": "sec",
    "queries": {name: sec, ...}, "sf": ...}
 
-Each query is fully materialized (count + a cheap collect of the
-aggregate output) so the timing covers scan → shuffle → result, not
-just plan construction.
+Each query is timed as the builder call plus ``df.count()`` on its
+result, best of 2. A count lets Catalyst prune the plan down to what the
+row count needs (for q1_pricing_summary, a key scan without the
+aggregates), so it can time less than the query declares; timing a
+``noop``-sink write of every column instead is ROADMAP Open item 1.
 """
 
 from __future__ import annotations

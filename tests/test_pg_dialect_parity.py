@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import re
 import uuid
-from datetime import datetime, timedelta
+from datetime import date, datetime, timedelta, timezone
 from pathlib import Path
 
 import pytest
@@ -280,6 +280,30 @@ def test_monitor_aggregate_runs_one_job(api, name):
         assert "Exchange" not in plan, plan
 
 
+def test_gap_probe_runs_one_merge_job(api):
+    """The gap probe is one single-task sort-merge join of the one-slice
+    series against the single-partition blocks view: it runs as one
+    Spark job, with no broadcast of the heights and no Exchange, and its
+    rows come out ascending without a sort."""
+    sc = api.spark.sparkContext
+    # pg_query's read of blocks infers the parquet schema with a job of
+    # its own; the group counts the statement's execution
+    df = api.pg_query(MONITOR_SQL["gaps"], [api.get_max_block_height()])
+    group = f"gap-probe-{uuid.uuid4().hex}"
+    try:
+        sc.setJobGroup(group, group)
+        got = [r["missing_height"] for r in df.collect()]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert len(list(sc.statusTracker().getJobIdsForGroup(group))) == 1, plan
+    assert "SortMergeJoin" in plan and "Exchange" not in plan, plan
+    assert got == sorted(got)
+    assert [(h,) for h in got] == _monitor_expect(api, "gaps") != []
+
+
 def test_pg_query_sees_appends_between_calls(spark, tmp_path):
     """Views are built per statement: an append between two pg_query
     calls shows in the second."""
@@ -350,3 +374,69 @@ def test_from_clause_series_is_empty_when_bound_below_start(api):
         .collect() == []
     assert [r["h"] for r in api.ch_query(
         "SELECT h FROM generate_series(2, 4) g(h)").collect()] == [2, 3, 4]
+
+
+# -- the FROM-less literal series is a one-slice range -------------------------
+
+@pytest.mark.parametrize("a,b", [
+    (5, 4), (3, 3), (1, 5), (-2, 1), (3_000_000_000, 3_000_000_002)])
+def test_literal_series_is_one_sorted_range_partition(api, a, b):
+    """``SELECT generate_series(a, b) AS x`` with literal bounds becomes
+    a one-slice ``range``: the PostgreSQL rows (none when b < a, bounds
+    past 2^31 and negative starts included), in order, in one partition,
+    with no folded literal array."""
+    sql = f"SELECT generate_series({a}, {b}) AS x"
+    assert "explode" not in IndexerAPI.pg_sql(sql)
+    df = api.pg_query(sql)
+    assert [r["x"] for r in df.collect()] == list(range(a, b + 1))
+    # an empty range has no slice at all
+    assert df.rdd.getNumPartitions() == (1 if b >= a else 0)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Generate" not in plan and "Exchange" not in plan, plan
+
+
+@pytest.mark.parametrize("sql,rows", [
+    # the FROM-clause form
+    ("SELECT h AS x FROM generate_series(2, 4) g(h)", [2, 3, 4]),
+    # a bound that is an expression, and one that is a scalar subquery
+    # (the seeded blocks top out at 11)
+    ("SELECT generate_series(1, 2 + 1) AS x", [1, 2, 3]),
+    ("SELECT generate_series(9, (SELECT height FROM blocks "
+     "ORDER BY height DESC LIMIT 1)) AS x", [9, 10, 11]),
+    # non-integer bounds
+    ("SELECT generate_series(DATE '2026-01-01', DATE '2026-01-03') AS x",
+     [date(2026, 1, 1), date(2026, 1, 2), date(2026, 1, 3)]),
+    ("SELECT generate_series(DATE '2026-01-02', DATE '2026-01-01') AS x",
+     []),
+])
+def test_other_series_shapes_still_explode(api, sql, rows):
+    """Every series that is not a FROM-less pair of integer literals
+    keeps the ``explode(IF(b >= a, sequence(a, b), NULL))`` form."""
+    assert "explode(IF(" in IndexerAPI.pg_sql(sql)
+    assert [r["x"] for r in api.pg_query(sql).collect()] == rows
+
+
+# -- a bound datetime keeps its instant -----------------------------------------
+
+def test_bound_datetime_matches_stored_instant(spark, tmp_path, monkeypatch):
+    """A datetime bound with pg_bind keeps its microseconds, and an aware
+    one its offset: both find the µs-precision ``updated_at`` an append
+    stored, whatever the process's time zone is."""
+    import time
+
+    monkeypatch.setenv("TZ", "IST-5:30")  # UTC+05:30, no tzdata needed
+    time.tzset()
+    try:
+        a = IndexerAPI(spark, str(tmp_path))
+        a.update_last_indexed_height("orchestrator", 7)
+        stored = a._final_row("index_state", "orchestrator")["updated_at"]
+        local = stored.astimezone()
+        assert local.utcoffset() == timedelta(hours=5, minutes=30)
+        naive_utc = stored.astimezone(timezone.utc).replace(tzinfo=None)
+        sql = "SELECT COUNT(*) AS n FROM index_state WHERE updated_at = $1"
+        for v in (stored, local, naive_utc):
+            assert a.pg_query(sql, [v]).collect()[0]["n"] == 1, \
+                IndexerAPI.pg_bind(sql, [v])
+    finally:
+        monkeypatch.undo()
+        time.tzset()

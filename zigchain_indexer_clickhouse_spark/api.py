@@ -52,9 +52,17 @@ blocks) rows — so they live on the driver, in Arrow:
 
 The data tables (``blocks``, ``transactions_raw``, the decoded tables)
 stay on Spark, except that ``get_max_block_height`` reads the ``height``
-max from the parquet footers of ``blocks``, with no Spark job. The
-version counter assumes a single writer per ``base_path`` (one process
-issues the versions) on a POSIX filesystem.
+max from the parquet footers of ``blocks``, with no Spark job.
+``pg_query`` serves the raw data tables as views of one partition with
+a ``merge`` join hint. The monitor's gap probe, a left join of a
+one-slice ``range`` series against ``blocks`` that keeps the unmatched
+heights, then runs as one single-task sort-merge join with no Exchange,
+and its ORDER BY needs no sort. Without the hint Spark broadcasts every
+``blocks`` height on each call: a driver-side hash relation that grows
+with the chain (~50 MB per call at 1M heights) and stays on the heap
+until the context cleaner drops it. The version counter assumes a
+single writer per ``base_path`` (one process issues the versions) on a
+POSIX filesystem.
 """
 
 from __future__ import annotations
@@ -540,7 +548,12 @@ class IndexerAPI:
         tables and the ``information_schema_tables`` catalog view, and
         serves ``failed_blocks`` as its monitor-compat projection. A
         view built on the driver from Arrow (a log's FINAL, the catalog
-        view) is coalesced to one partition."""
+        view) is coalesced to one partition. So is a raw data-table view
+        (``blocks``, ``transactions_raw``, read or empty), which also
+        carries a ``merge`` join hint: joined to the one-slice series
+        ``ch_sql`` makes of the gap probe's ``generate_series``, both
+        sides are SinglePartition, so the join is a sort-merge join
+        with no Exchange and no per-call broadcast of every height."""
         names = [*_LOGS, *_RAW_TABLES, "information_schema_tables"] \
             if monitor else list(_LOGS)
         for name in names:
@@ -550,6 +563,11 @@ class IndexerAPI:
                 df = self._read(name)
                 if df is None:
                     df = self._empty(_RAW_TABLES[name])
+                # one merge-hinted partition: the gap probe's anti-join
+                # against the one-slice series then plans as one
+                # sort-merge join with no Exchange, where Spark would
+                # otherwise broadcast every height on each call
+                df = df.coalesce(1).hint("merge")
             else:
                 if name in _LOGS:
                     t = self._final_arrow(name)
@@ -609,9 +627,15 @@ class IndexerAPI:
           ``toDate(x)`` → ``CAST(x AS DATE)``
         - ``expr::Int64/UInt64/bigint/int`` postfix casts (CH supports
           the PG-style ``::`` cast too) → ``CAST(expr AS BIGINT)``
-        - ``generate_series(a, b)`` → ``explode(IF(b >= a,
-          sequence(a, b), NULL))`` (the monitor's gap probe; no rows
-          when b < a, as in PostgreSQL)
+        - ``SELECT generate_series(a, b) AS x`` with integer literal
+          bounds and no FROM (followed by ``)`` or the end of the
+          statement: the monitor's gap probe CTE) → ``SELECT id AS x
+          FROM range(a, b + 1, 1, 1)``, one sorted partition that the
+          probe's anti-join merges against with no Exchange
+        - any other ``generate_series(a, b)`` (the ``FROM
+          generate_series(a, b) g(h)`` form, expression, subquery or
+          non-integer bounds) → ``explode(IF(b >= a, sequence(a, b),
+          NULL))``; both give no rows when b < a, as in PostgreSQL
         - ``EXTRACT(EPOCH FROM (a - b))`` → unix_timestamp difference
           (the monitor's stuck/stale age arithmetic)
         - ``countIf(cond)`` → ``count_if(cond)``
@@ -647,18 +671,34 @@ class IndexerAPI:
         through this shim, so dialect drift in a future reference
         version fails a test instead of a user."""
         out = re.sub(r"\bFINAL\b", "", sql)
-        # generate_series before the ::cast rewrite so its args are
-        # still parenthesis-free when this pattern sees them. sequence
+        # a FROM-less select of one literal series (the gap probe's
+        # CTE) is a one-slice range: sorted and SinglePartition, so a
+        # merge join against a single-partition view needs no Exchange
+        # and the ORDER BY above it no Sort; range(a, b + 1) is empty
+        # when b < a
+        out = re.sub(
+            r"\bSELECT\s+generate_series\(\s*(-?\d+)\s*,\s*(-?\d+)\s*\)"
+            r"\s+AS\s+(\w+)(?=\s*(?:\)|;?\s*$))",
+            lambda m: f"SELECT id AS {m.group(3)} FROM range("
+                      f"{m.group(1)}, {int(m.group(2)) + 1}, 1, 1)",
+            out, flags=re.IGNORECASE)
+        # every other generate_series (the FROM-clause form, bounds
+        # that are expressions or scalar subqueries, non-integer
+        # bounds), before the ::cast rewrite nests its args' parens
+        # deeper than the one level this pattern reads. sequence
         # counts DOWN when b < a; PostgreSQL yields no rows there, and
         # explode of a NULL array yields none either
         def _series(m):
-            args = [a.strip() for a in m.group(1).split(",")]
+            # split at the commas outside the nested parens
+            args = [a.strip() for a in re.split(r",(?![^()]*\))",
+                                                m.group(1))]
             seq = f"sequence({', '.join(args)})"
             if len(args) == 2:
                 seq = f"IF(({args[1]}) >= ({args[0]}), {seq}, NULL)"
             return f"explode({seq})"
 
-        out = re.sub(r"\bgenerate_series\(([^()]+)\)", _series, out)
+        out = re.sub(r"\bgenerate_series\(((?:[^()]|\([^()]*\))*)\)",
+                     _series, out)
         out = re.sub(
             r"(\w+\(\*\)|\$?\w+)::(?:Int|UInt)?(?:int|bigint|8|16|32|64)\b",
             r"CAST(\1 AS BIGINT)", out, flags=re.IGNORECASE,
@@ -800,7 +840,10 @@ class IndexerAPI:
         """node-pg positional binding: replace ``$1..$N`` with SQL
         literals the way the monitor's ``targetDB.query(sql, [..])``
         call sites do (scripts/monitor_indexer.js:104 binds the gap
-        probe's ``Math.min(maxHeight, 10000)``)."""
+        probe's ``Math.min(maxHeight, 10000)``). A datetime keeps its
+        microseconds; an aware one binds as its instant, its UTC offset
+        in the literal, and a naive one is read in the session time
+        zone, as Spark reads any offset-free timestamp literal."""
         if not params:
             return sql
         out = sql
@@ -813,7 +856,7 @@ class IndexerAPI:
             elif isinstance(v, (int, float)):
                 lit = repr(v)
             elif isinstance(v, datetime):
-                lit = f"TIMESTAMP '{v.strftime('%Y-%m-%d %H:%M:%S')}'"
+                lit = f"TIMESTAMP '{v.isoformat(sep=' ')}'"
             else:
                 lit = "'" + str(v).replace("'", "''") + "'"
             out = out.replace(f"${i}", lit)
@@ -825,7 +868,7 @@ class IndexerAPI:
         monitor scripts (scripts/monitor_indexer.js:24-230,
         scripts/test_connection.js:22-58) to Spark SQL. The CH shim
         already covers the shared constructs (``NOW()``, ``::`` casts,
-        ``generate_series`` → ``explode(sequence())``,
+        ``generate_series`` → a ``range`` or ``explode(sequence())``,
         ``EXTRACT(EPOCH FROM (a - b))`` → unix_timestamp difference);
         PG adds positional ``$N`` parameters (bound like node-pg) and
         the ``information_schema.tables`` catalog probe (served by the

@@ -46,7 +46,11 @@ def get_spark(app_name: str = "zigchain-indexer-spark", master: str | None = Non
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # Arrow for every pandas_udf / mapInPandas exchange.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Broadcast anything under 32 MB — all our dims qualify.
+        # Broadcast anything under 32 MB — all our dims qualify, and so
+        # does `blocks` (~1 MB of parquet heights at 1M blocks), which
+        # the monitor's gap probe then hashed and broadcast per call;
+        # pg_query's data-table views opt out with a merge hint
+        # (api.IndexerAPI._register_views).
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         # Runtime Bloom-filter injection on large shuffle joins — the
         # engine-side analog of the reference's bloom_filter skip
