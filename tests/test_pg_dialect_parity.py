@@ -13,11 +13,13 @@ from __future__ import annotations
 
 import re
 import uuid
+from contextlib import contextmanager
 from datetime import date, datetime, timedelta, timezone
 from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from perfbench.workloads import MONITOR_SQL
 from zigchain_indexer_clickhouse_spark.api import IndexerAPI
@@ -304,6 +306,54 @@ def test_gap_probe_runs_one_merge_job(api):
     assert [(h,) for h in got] == _monitor_expect(api, "gaps") != []
 
 
+@contextmanager
+def _hint_warnings(spark):
+    """Collect what Spark's HintErrorLogger logs inside the block (a
+    join hint on no join, an unknown or overridden hint), one message
+    a line, into the list it yields."""
+    jvm = spark._jvm
+    logger = jvm.org.apache.logging.log4j.LogManager.getContext(False) \
+        .getLogger("org.apache.spark.sql.catalyst.analysis.HintErrorLogger")
+    writer = jvm.java.io.StringWriter()
+    appender = jvm.org.apache.logging.log4j.core.appender.WriterAppender \
+        .createAppender(None, None, writer, f"hints-{uuid.uuid4().hex}",
+                        False, True)
+    appender.start()
+    logger.addAppender(appender)
+    lines: list[str] = []
+    try:
+        yield lines
+    finally:
+        logger.removeAppender(appender)
+        appender.stop()
+        lines.extend(writer.toString().splitlines())
+
+
+@pytest.mark.parametrize("sql", [
+    "SELECT COUNT(*) AS n FROM blocks",
+    "SELECT MAX(height) AS h FROM blocks WHERE height > 2",
+    "SELECT COUNT(*) AS n FROM transactions_raw",
+    "SELECT generate_series(1, 3) AS x",
+])
+def test_unjoined_statement_carries_no_join_hint(api, sql):
+    """Only a statement with a JOIN gets the merge-hinted, one-partition
+    ``blocks`` view. Any other statement over a data table plans a plain
+    scan, and Spark logs no WARN for a hint with no join to apply to."""
+    with _hint_warnings(api.spark) as warned:
+        df = api.pg_query(sql)
+        df.collect()
+    assert warned == []
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Coalesce" not in plan, plan
+
+
+def test_hint_capture_sees_an_unused_join_hint(spark):
+    """The capture above does see the WARN of a join hint on no join."""
+    with _hint_warnings(spark) as warned:
+        spark.range(3).hint("merge").collect()
+    assert any("not part of a join relation" in w for w in warned), warned
+
+
 def test_pg_query_sees_appends_between_calls(spark, tmp_path):
     """Views are built per statement: an append between two pg_query
     calls shows in the second."""
@@ -389,6 +439,8 @@ def test_literal_series_is_one_sorted_range_partition(api, a, b):
     assert "explode" not in IndexerAPI.pg_sql(sql)
     df = api.pg_query(sql)
     assert [r["x"] for r in df.collect()] == list(range(a, b + 1))
+    # range's id: BIGINT, where explode(sequence(int, int)) was INT
+    assert df.schema["x"].dataType == LongType()
     # an empty range has no slice at all
     assert df.rdd.getNumPartitions() == (1 if b >= a else 0)
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -398,11 +450,8 @@ def test_literal_series_is_one_sorted_range_partition(api, a, b):
 @pytest.mark.parametrize("sql,rows", [
     # the FROM-clause form
     ("SELECT h AS x FROM generate_series(2, 4) g(h)", [2, 3, 4]),
-    # a bound that is an expression, and one that is a scalar subquery
-    # (the seeded blocks top out at 11)
+    # a bound that is an expression
     ("SELECT generate_series(1, 2 + 1) AS x", [1, 2, 3]),
-    ("SELECT generate_series(9, (SELECT height FROM blocks "
-     "ORDER BY height DESC LIMIT 1)) AS x", [9, 10, 11]),
     # non-integer bounds
     ("SELECT generate_series(DATE '2026-01-01', DATE '2026-01-03') AS x",
      [date(2026, 1, 1), date(2026, 1, 2), date(2026, 1, 3)]),
@@ -410,8 +459,9 @@ def test_literal_series_is_one_sorted_range_partition(api, a, b):
      []),
 ])
 def test_other_series_shapes_still_explode(api, sql, rows):
-    """Every series that is not a FROM-less pair of integer literals
-    keeps the ``explode(IF(b >= a, sequence(a, b), NULL))`` form."""
+    """Every series with parenthesis-free arguments that is not a
+    FROM-less pair of integer literals keeps the ``explode(IF(b >= a,
+    sequence(a, b), NULL))`` form."""
     assert "explode(IF(" in IndexerAPI.pg_sql(sql)
     assert [r["x"] for r in api.pg_query(sql).collect()] == rows
 

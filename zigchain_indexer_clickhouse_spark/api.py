@@ -53,16 +53,16 @@ blocks) rows — so they live on the driver, in Arrow:
 The data tables (``blocks``, ``transactions_raw``, the decoded tables)
 stay on Spark, except that ``get_max_block_height`` reads the ``height``
 max from the parquet footers of ``blocks``, with no Spark job.
-``pg_query`` serves the raw data tables as views of one partition with
-a ``merge`` join hint. The monitor's gap probe, a left join of a
-one-slice ``range`` series against ``blocks`` that keeps the unmatched
-heights, then runs as one single-task sort-merge join with no Exchange,
-and its ORDER BY needs no sort. Without the hint Spark broadcasts every
-``blocks`` height on each call: a driver-side hash relation that grows
-with the chain (~50 MB per call at 1M heights) and stays on the heap
-until the context cleaner drops it. The version counter assumes a
-single writer per ``base_path`` (one process issues the versions) on a
-POSIX filesystem.
+In a statement with a JOIN, ``pg_query`` serves ``blocks`` as a view of
+one partition with a ``merge`` join hint. The monitor's gap probe, a
+left join of a one-slice ``range`` series against ``blocks`` that keeps
+the unmatched heights, then runs as one single-task sort-merge join
+with no Exchange, and its ORDER BY needs no sort. Without the hint
+Spark broadcasts every ``blocks`` height on each call: a driver-side
+hash relation that grows with the chain (~50 MB per call at 1M heights)
+and stays on the heap until the context cleaner drops it. The version
+counter assumes a single writer per ``base_path`` (one process issues
+the versions) on a POSIX filesystem.
 """
 
 from __future__ import annotations
@@ -548,12 +548,14 @@ class IndexerAPI:
         tables and the ``information_schema_tables`` catalog view, and
         serves ``failed_blocks`` as its monitor-compat projection. A
         view built on the driver from Arrow (a log's FINAL, the catalog
-        view) is coalesced to one partition. So is a raw data-table view
-        (``blocks``, ``transactions_raw``, read or empty), which also
-        carries a ``merge`` join hint: joined to the one-slice series
-        ``ch_sql`` makes of the gap probe's ``generate_series``, both
-        sides are SinglePartition, so the join is a sort-merge join
-        with no Exchange and no per-call broadcast of every height."""
+        view) is coalesced to one partition. So is ``blocks`` (read or
+        empty) in a statement with a JOIN, and it also carries a
+        ``merge`` join hint: joined to the one-slice series ``ch_sql``
+        makes of the gap probe's ``generate_series``, both sides are
+        SinglePartition, so the join is a sort-merge join with no
+        Exchange and no per-call broadcast of every height. A statement
+        that does not join, and every ``transactions_raw`` view, reads
+        the table as a plain scan."""
         names = [*_LOGS, *_RAW_TABLES, "information_schema_tables"] \
             if monitor else list(_LOGS)
         for name in names:
@@ -563,11 +565,15 @@ class IndexerAPI:
                 df = self._read(name)
                 if df is None:
                     df = self._empty(_RAW_TABLES[name])
-                # one merge-hinted partition: the gap probe's anti-join
-                # against the one-slice series then plans as one
-                # sort-merge join with no Exchange, where Spark would
-                # otherwise broadcast every height on each call
-                df = df.coalesce(1).hint("merge")
+                # joined, blocks is one merge-hinted partition: the gap
+                # probe's anti-join against the one-slice series then
+                # plans as one sort-merge join with no Exchange, where
+                # Spark would otherwise broadcast every height on each
+                # call. Unjoined it stays a plain scan: a join hint on
+                # no join only makes Spark log a WARN
+                if name == "blocks" and re.search(r"\bJOIN\b", sql,
+                                                  re.IGNORECASE):
+                    df = df.coalesce(1).hint("merge")
             else:
                 if name in _LOGS:
                     t = self._final_arrow(name)
@@ -631,11 +637,15 @@ class IndexerAPI:
           bounds and no FROM (followed by ``)`` or the end of the
           statement: the monitor's gap probe CTE) → ``SELECT id AS x
           FROM range(a, b + 1, 1, 1)``, one sorted partition that the
-          probe's anti-join merges against with no Exchange
-        - any other ``generate_series(a, b)`` (the ``FROM
-          generate_series(a, b) g(h)`` form, expression, subquery or
-          non-integer bounds) → ``explode(IF(b >= a, sequence(a, b),
-          NULL))``; both give no rows when b < a, as in PostgreSQL
+          probe's anti-join merges against with no Exchange. ``x`` is
+          BIGINT (``range``'s ``id``, the type of ``blocks.height``);
+          PostgreSQL and the ``explode`` form below type an int series
+          INT
+        - any other ``generate_series(a, b)`` with parenthesis-free
+          arguments (the ``FROM generate_series(a, b) g(h)`` form,
+          expression or non-integer bounds) → ``explode(IF(b >= a,
+          sequence(a, b), NULL))``; both give no rows when b < a, as in
+          PostgreSQL
         - ``EXTRACT(EPOCH FROM (a - b))`` → unix_timestamp difference
           (the monitor's stuck/stale age arithmetic)
         - ``countIf(cond)`` → ``count_if(cond)``
@@ -682,23 +692,18 @@ class IndexerAPI:
             lambda m: f"SELECT id AS {m.group(3)} FROM range("
                       f"{m.group(1)}, {int(m.group(2)) + 1}, 1, 1)",
             out, flags=re.IGNORECASE)
-        # every other generate_series (the FROM-clause form, bounds
-        # that are expressions or scalar subqueries, non-integer
-        # bounds), before the ::cast rewrite nests its args' parens
-        # deeper than the one level this pattern reads. sequence
-        # counts DOWN when b < a; PostgreSQL yields no rows there, and
-        # explode of a NULL array yields none either
+        # every other generate_series, before the ::cast rewrite so its
+        # args are still parenthesis-free when this pattern sees them.
+        # sequence counts DOWN when b < a; PostgreSQL yields no rows
+        # there, and explode of a NULL array yields none either
         def _series(m):
-            # split at the commas outside the nested parens
-            args = [a.strip() for a in re.split(r",(?![^()]*\))",
-                                                m.group(1))]
+            args = [a.strip() for a in m.group(1).split(",")]
             seq = f"sequence({', '.join(args)})"
             if len(args) == 2:
                 seq = f"IF(({args[1]}) >= ({args[0]}), {seq}, NULL)"
             return f"explode({seq})"
 
-        out = re.sub(r"\bgenerate_series\(((?:[^()]|\([^()]*\))*)\)",
-                     _series, out)
+        out = re.sub(r"\bgenerate_series\(([^()]+)\)", _series, out)
         out = re.sub(
             r"(\w+\(\*\)|\$?\w+)::(?:Int|UInt)?(?:int|bigint|8|16|32|64)\b",
             r"CAST(\1 AS BIGINT)", out, flags=re.IGNORECASE,

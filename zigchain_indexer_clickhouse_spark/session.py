@@ -49,8 +49,8 @@ def get_spark(app_name: str = "zigchain-indexer-spark", master: str | None = Non
         # Broadcast anything under 32 MB — all our dims qualify, and so
         # does `blocks` (~1 MB of parquet heights at 1M blocks), which
         # the monitor's gap probe then hashed and broadcast per call;
-        # pg_query's data-table views opt out with a merge hint
-        # (api.IndexerAPI._register_views).
+        # pg_query's view of `blocks` in a join opts out with a merge
+        # hint (api.IndexerAPI._register_views).
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         # Runtime Bloom-filter injection on large shuffle joins — the
         # engine-side analog of the reference's bloom_filter skip
