@@ -1,6 +1,6 @@
 """Round-6 analytics additions: conversion_attribution (#193) planted
 tie/lookback semantics, cumulative_unique_users (#194) brute-force
-recompute, prefix_filter_join (#195) completeness vs the LSH family."""
+recompute."""
 
 from __future__ import annotations
 
@@ -91,64 +91,6 @@ def test_cumulative_unique_users_matches_bruteforce(spark):
         for r in cumulative_unique_users(spark, SF).collect()
     ]
     assert sorted(got) == expect
-
-
-def test_prefix_filter_is_complete_superset_of_lsh(spark):
-    """The prefix-filtered exact join must contain EVERY pair the LSH
-    family verifies at >= its threshold (LSH recall <= 1, prefix
-    filtering is guaranteed-complete), and its scores must agree with
-    the LSH verify pass's rounded jaccard on shared pairs."""
-    from zigchain_indexer_clickhouse_spark.operators.dedup import (
-        PF_JACCARD_MIN_PPM,
-        dedup_minhash_lsh,
-        prefix_filter_join,
-    )
-
-    exact = {
-        (r["doc_a"], r["doc_b"]): r["jac_ppm"]
-        for r in prefix_filter_join(spark, SF).collect()
-    }
-    assert exact, "planted near-dups must qualify at 0.7"
-    lsh = {
-        (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in dedup_minhash_lsh(spark, SF).collect()
-        if r["jaccard"] * 1_000_000 >= PF_JACCARD_MIN_PPM
-    }
-    missing = set(lsh) - set(exact)
-    assert not missing, missing
-    for pair, jac in lsh.items():
-        # LSH reports round(j, 4); exact reports floor-ppm — consistent
-        # to one rounding ulp
-        assert abs(exact[pair] / 1_000_000 - jac) < 1.5e-4, (pair, jac)
-
-
-def test_pagerank_structure_and_bounds(spark):
-    """#196: node set == pair-endpoint set; every rank carries at
-    least the damped base plus one neighbor's minimum contribution;
-    total rank mass stays within the damped fixed-point envelope."""
-    from zigchain_indexer_clickhouse_spark.operators.dedup import (
-        PR_BASE_PPM,
-        dedup_minhash_lsh,
-        pagerank_dupgraph,
-    )
-
-    ranks = {
-        r["doc_id"]: r for r in pagerank_dupgraph(spark, SF).collect()
-    }
-    pairs = dedup_minhash_lsh(spark, SF).collect()
-    endpoints = {r["doc_a"] for r in pairs} | {r["doc_b"] for r in pairs}
-    assert set(ranks) == endpoints
-    for r in ranks.values():
-        assert r["rank_ppm"] >= PR_BASE_PPM
-        assert r["degree"] >= 1
-    # an ISOLATED pair (both endpoints degree 1) is the recurrence's
-    # exact integer fixed point: 150000 + 850000*1e6 div 1e6 = 1e6 at
-    # every iteration
-    for p in pairs:
-        a, b = p["doc_a"], p["doc_b"]
-        if ranks[a]["degree"] == 1 and ranks[b]["degree"] == 1:
-            assert ranks[a]["rank_ppm"] == 1_000_000
-            assert ranks[b]["rank_ppm"] == 1_000_000
 
 
 def test_max_intersections_matches_flat_sweep(spark):

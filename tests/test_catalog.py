@@ -94,3 +94,38 @@ def test_oracles_and_load_start_no_thread(spark, sf_dir, tmp_path,
     registry.oracles()
     load(spark, str(tmp_path), "region")
     assert started == []
+
+
+def test_shared_stage_memo_builds_once_and_evicts_other_sf_dir(spark, tmp_path):
+    """The persisted-stage memo: the same (sf_dir, tag) returns the same
+    persisted frame and calls ``build`` once; the first stage asked for
+    under a different sf_dir unpersists every entry of the old one."""
+    from zigchain_indexer_clickhouse_spark.catalog import (
+        _STAGE_CACHE,
+        _shared_stage,
+    )
+
+    def persisted(df) -> bool:
+        lvl = df.storageLevel
+        return lvl.useMemory or lvl.useDisk
+
+    calls = []
+
+    def build():
+        # a distinct plan per call: the cache manager matches persisted
+        # frames by plan, so equal plans would share one cache entry
+        calls.append(1)
+        return spark.range(len(calls))
+
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    first = _shared_stage("memo_probe", spark, a, build)
+    second = _shared_stage("memo_probe_2", spark, a, build)
+    assert persisted(first) and persisted(second) and len(calls) == 2
+    assert _shared_stage("memo_probe", spark, a, build) is first
+    assert len(calls) == 2
+
+    moved = _shared_stage("memo_probe", spark, b, build)
+    assert moved is not first and len(calls) == 3 and persisted(moved)
+    assert not persisted(first) and not persisted(second)
+    assert {k[1] for k in _STAGE_CACHE} == {b}
+    _STAGE_CACHE.pop((spark.sparkContext.applicationId, b, "memo_probe")).unpersist()

@@ -1,11 +1,12 @@
-"""CH aggregate analogs (ch_aggregates.py #162-163) + hybrid rank
-fusion (retrieval.py #164): the Misra-Gries superset guarantee, exact
-heavy-hitter output, sumMap reassembly, and RRF arithmetic."""
+"""CH aggregate analogs (ch_aggregates.py #162-163, #221): the
+Misra-Gries superset guarantee, exact heavy-hitter output, sumMap
+reassembly, and the uniqUpTo cap."""
 
 from __future__ import annotations
 
 import json
-from collections import Counter
+import math
+from collections import Counter, defaultdict
 
 import pyspark.sql.functions as F
 from hypothesis import given, settings
@@ -15,14 +16,11 @@ from zigchain_indexer_clickhouse_spark.catalog import load
 from zigchain_indexer_clickhouse_spark.operators.ch_aggregates import (
     HH_K,
     SKETCH_M,
+    _UNIQ_CAP,
     _mg_shrink,
     heavy_hitters_topk,
     sum_map_daily,
-)
-from zigchain_indexer_clickhouse_spark.operators.retrieval import (
-    FUSE_TOPK,
-    RRF_C,
-    hybrid_rank_fusion,
+    uniq_up_to_daily,
 )
 
 
@@ -97,24 +95,6 @@ def test_sum_map_daily_reassembles_per_key_totals(spark, sf_dir):
         assert keys == sorted(keys) and len(keys) == r.n_keys
         for x in entries:
             assert (x["cnt"], x["val_c"]) == per[(r.day, x["k"])]
-
-
-def test_hybrid_rank_fusion_rrf_arithmetic(spark, sf_dir):
-    rows = hybrid_rank_fusion(spark, sf_dir).collect()
-    assert 0 < len(rows) <= FUSE_TOPK
-    for r in rows:
-        expect = 0
-        if r.lex_rnk is not None:
-            assert r.lex_rnk >= 1
-            expect += 1_000_000 // (RRF_C + r.lex_rnk)
-        if r.sem_rnk is not None:
-            assert r.sem_rnk >= 1
-            expect += 1_000_000 // (RRF_C + r.sem_rnk)
-        assert r.rrf_ppm == expect and expect > 0
-    # output is ordered by fused score (ties by id) and a doc present
-    # in both legs outranks the same ranks split across two docs
-    scores = [(r.rrf_ppm, -r.id) for r in rows]
-    assert scores == sorted(scores, reverse=True)
 
 
 def test_group_array_limited_order_and_cap(spark, sf_dir):
@@ -267,3 +247,55 @@ def test_cramers_v_matches_python_recompute(spark, sf_dir):
     assert abs(row.chi2_micro - math.floor(chi2 * 1e6)) <= 1
     assert abs(row.cramers_v_ppm - math.floor(v * 1e6)) <= 1
     assert 0 < row.cramers_v_ppm < 1_000_000
+
+
+def test_uniq_up_to_matches_truth(spark, sf_dir):
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet").collect()
+    truth = defaultdict(set)
+    for r in ev:
+        truth[(r.event_type, r.ts.date())].add(r.user_id)
+    got = {
+        (r.event_type, r.day): r for r in uniq_up_to_daily(spark, sf_dir).collect()
+    }
+    assert set(got) == set(truth)
+    for k, users in truth.items():
+        row = got[k]
+        n = len(users)
+        if n <= _UNIQ_CAP:
+            assert (row.uniq_up_to, row.saturated) == (n, 0)
+        else:
+            assert (row.uniq_up_to, row.saturated) == (_UNIQ_CAP + 1, 1)
+
+
+def test_welch_t_matches_reference_formula(spark, sf_dir):
+    """Recompute Welch's t from the raw cents in pure Python for one
+    pair and compare at micro precision."""
+    from zigchain_indexer_clickhouse_spark.operators.ch_aggregates import (
+        welch_ttest_by_type,
+    )
+
+    rows = welch_ttest_by_type(spark, sf_dir).collect()
+    assert len(rows) == 10  # C(5 event types, 2)
+    got = {(r["type_a"], r["type_b"]): r for r in rows}
+    raw = load(spark, sf_dir, "events").select("event_type", "value").collect()
+    by_type: dict[str, list[int]] = {}
+    for r in raw:
+        by_type.setdefault(r["event_type"], []).append(
+            int(round(r["value"] * 100))
+        )
+    ta, tb = sorted(by_type)[:2]
+    xa, xb = by_type[ta], by_type[tb]
+
+    def stats(x):
+        n = len(x)
+        m = sum(x) / n
+        v = (sum(c * c for c in x) - sum(x) ** 2 / n) / (n - 1)
+        return n, m, v
+
+    na, ma, va = stats(xa)
+    nb, mb, vb = stats(xb)
+    t = (ma - mb) / math.sqrt(va / na + vb / nb)
+    r = got[(ta, tb)]
+    assert (r["n_a"], r["n_b"]) == (na, nb)
+    assert abs(r["t_micro"] / 1e6 - t) < 1e-4
+

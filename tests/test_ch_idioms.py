@@ -1,18 +1,22 @@
 """Property tests for the ClickHouse query-surface idioms
-(ch_idioms.py #131-135): WITH FILL densification, LIMIT BY plan shape,
-SAMPLE determinism, snapshot-diff classification, SCD2 interval
-integrity.
+(ch_idioms.py #131-135, #140): WITH FILL densification, LIMIT BY plan
+shape, SAMPLE determinism, snapshot-diff classification, SCD2 interval
+integrity, and the Bloom filter's no-false-negative guarantee.
 """
 
 from __future__ import annotations
 
+import math
 from collections import defaultdict
 from datetime import timedelta
 
 import pyspark.sql.functions as F
 
 from zigchain_indexer_clickhouse_spark.operators.ch_idioms import (
+    BLOOM_BITS,
+    BLOOM_HASHES,
     LIMIT_BY_N,
+    bloom_membership,
     limit_by,
     sample_consistent,
     scd2_user_state,
@@ -121,3 +125,15 @@ def test_mv_incremental_refresh_subset_of_full_mv(spark, sf_dir):
             f.total_txs,
             f.total_events,
         )
+
+
+def test_bloom_no_false_negatives_and_fp_near_design(spark, sf_dir):
+    row = bloom_membership(spark, sf_dir).collect()[0]
+    n_keys = row.n_probes // 2
+    # Bloom filters NEVER miss a present key
+    assert row.n_true_hits == n_keys
+    # realized FP rate within 5x of the (1 - e^{-kn/m})^k design point
+    # (generous: small-n variance)
+    p = (1 - math.exp(-BLOOM_HASHES * n_keys / BLOOM_BITS)) ** BLOOM_HASHES
+    assert row.n_false_positives <= max(20, 5 * p * n_keys)
+

@@ -1,17 +1,11 @@
-"""Checks for the chain-health ops (#217-218) and the LSH band-tuning
-sweep (#219): brute-force recomputes plus the cross-config nesting and
-cross-operator consistency the sweep must satisfy."""
+"""Checks for the chain-health ops (#217-218) and the star's FK
+integrity audit: brute-force recomputes."""
 
 from __future__ import annotations
 
 import hashlib
 from collections import defaultdict
 
-from zigchain_indexer_clickhouse_spark.operators.dedup import (
-    lsh_candidate_pairs,
-    minhash_band_tuning,
-    shared_hashed_shingles,
-)
 from zigchain_indexer_clickhouse_spark.operators.queue_analytics import (
     block_time_drift,
     reorg_candidates,
@@ -62,25 +56,24 @@ def test_reorg_candidates_brute_force(spark, sf_dir):
         assert row.canonical_hash == max(rows)[1]  # max version wins
 
 
-def test_band_tuning_nesting_and_consistency(spark, sf_dir):
-    got = {r.config: r for r in minhash_band_tuning(spark, sf_dir).collect()}
-    assert set(got) == {"b8r1", "b4r2", "b2r4", "b1r8"}
-    # embedded S-curve midpoints are the exact shared literals
-    assert got["b8r1"].threshold_ppm == 125_000
-    assert got["b4r2"].threshold_ppm == 500_000
-    assert got["b1r8"].threshold_ppm == 1_000_000
-    # nesting: a pair colliding on a coarser (more-rows) band collides
-    # on every finer split of it — so candidate volume is monotone in
-    # the number of bands (exact when no mega-bucket was dropped on
-    # either side of a comparison)
-    order = ["b1r8", "b2r4", "b4r2", "b8r1"]
-    for lo, hi in zip(order, order[1:]):
-        if got[lo].n_dropped_buckets == 0 and got[hi].n_dropped_buckets == 0:
-            assert got[lo].n_candidate_pairs <= got[hi].n_candidate_pairs
-    # the b4r2 config IS the production #34 banding: with no drops its
-    # candidate count must equal the shared lsh_candidate_pairs stage
-    if got["b4r2"].n_dropped_buckets == 0:
-        n34 = lsh_candidate_pairs(
-            shared_hashed_shingles(spark, sf_dir)
-        ).count()
-        assert got["b4r2"].n_candidate_pairs == n34
+def test_fk_orphan_check_clean_star(spark, sf_dir):
+    """The generated star is referentially intact — every edge must
+    report zero orphans with the right child cardinalities (a nonzero
+    here would mean the testdata generator broke, which IS the check
+    this operator exists to catch in a real indexer)."""
+    from zigchain_indexer_clickhouse_spark.catalog import load
+    from zigchain_indexer_clickhouse_spark.operators.queue_analytics import (
+        fk_orphan_check,
+    )
+
+    rows = {r.fk_edge: r for r in fk_orphan_check(spark, sf_dir).collect()}
+    n_li = load(spark, sf_dir, "lineitem").count()
+    n_o = load(spark, sf_dir, "orders").count()
+    assert set(rows) == {
+        "lineitem->orders", "orders->customer",
+        "lineitem->part", "lineitem->supplier",
+    }
+    assert rows["lineitem->orders"].n_child == n_li
+    assert rows["orders->customer"].n_child == n_o
+    assert all(r.n_orphans == 0 for r in rows.values())
+

@@ -24,7 +24,6 @@ _PROBED = [
     "q11_value_concentration",
     "q1_pricing_summary",
     "q9_product_profit",
-    "embedding_centroids",
     # window/ordering class: row_number & carry-forward must tie-break
     # deterministically regardless of layout
     "sessionize",
@@ -36,21 +35,16 @@ _PROBED = [
     # must erase that
     "heavy_hitters_topk",
     "heavy_hitters_weighted",
-    "bpe_pair_stats",
     # ordered-float-fold class: chi2 is a left fold over sorted cells,
     # so layout must not perturb the quantized ppm output
     "cramers_v_assoc",
     # integer-geometry argmax: the per-bucket row_number pick must not
     # depend on which executor saw the bucket
     "lttb_downsample",
-    # iterative integer-ppm recurrence: five chained aggregates whose
-    # summation order must not perturb any bit
-    "pagerank_dupgraph",
     # round-6 window/threshold class: interpolated-quantile boundaries
-    # feed a per-row bin compare; argmax-by-struct picks a canonical
-    # dup_of; a sorted window pass decides first/last touch under ties
+    # feed a per-row bin compare; a sorted window pass decides
+    # first/last touch under ties
     "histogram_equal_depth",
-    "dedup_incremental",
     "conversion_attribution",
     "max_intersections_daily",
     # doubled-rank statistics class: tie-averaged ranks and shared-IEEE
@@ -58,12 +52,10 @@ _PROBED = [
     "mann_whitney_u_pairs",
     "spearman_rank_corr",
     # round-6 late window/threshold class: exact-median cum windows,
-    # sweep-line islands, lag-window means, LSH bucket caps, and the
-    # ten-branch decode dispatch must all be layout-blind
+    # sweep-line islands and lag-window means must all be layout-blind
     "funnel_time_to_convert",
     "interval_length_sum",
     "block_time_drift",
-    "minhash_band_tuning",
     "cohort_transition_matrix",
 ]
 

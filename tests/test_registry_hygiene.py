@@ -75,9 +75,11 @@ def test_oracle_snapshot_is_current():
     )
 
 
-def test_impl_drift_is_detected():
-    """A changed defining-module source (impl hash) counts as drift even
-    when the oracle text is untouched — the r12 q21/ingest hole."""
+def test_impl_drift_is_detected(monkeypatch):
+    """A changed implementation source (impl hash) counts as drift even
+    when the oracle text is untouched — the r12 q21/ingest hole. That
+    includes an edit to a helper module that defines no operator: the
+    operators importing it drift, the ones that do not stay clean."""
     cur = snap_mod.current_hashes()
     snap = snap_mod.load_snapshot()
     impl = snap_mod.current_impl_hashes()
@@ -86,6 +88,24 @@ def test_impl_drift_is_detected():
     forged = dict(impl)
     forged[name] = "0" * 16
     assert name in snap_mod.drift(cur, snap, forged)
+
+    # helper-module case: msg_body_decode (rpc_json.py) imports the wire
+    # codec from functions/protobuf.py; q1_pricing_summary (olap.py) does
+    # not, directly or transitively
+    fresh = {n: {"hash": cur[n], "impl": impl[n], "reverify_after": 0}
+             for n in cur}
+    assert not snap_mod.drift(cur, fresh, impl)
+    helper = os.path.join(_REPO, "zigchain_indexer_clickhouse_spark",
+                          "functions", "protobuf.py")
+    real = snap_mod._source
+    monkeypatch.setattr(
+        snap_mod, "_source",
+        lambda p: real(p) + (b"\n# edited\n" if os.path.samefile(p, helper)
+                             else b""),
+    )
+    drifted = snap_mod.drift(cur, fresh, snap_mod.current_impl_hashes())
+    assert "msg_body_decode" in drifted
+    assert "q1_pricing_summary" not in drifted
 
 
 def test_oracle_snapshot_has_no_stale_names():

@@ -29,6 +29,7 @@ Usage:
 
 from __future__ import annotations
 
+import ast
 import hashlib
 import json
 import os
@@ -56,39 +57,83 @@ def current_hashes() -> dict[str, str]:
     return out
 
 
+_PKG = "zigchain_indexer_clickhouse_spark"
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _source(path: str) -> bytes:
+    with open(path, "rb") as f:
+        return f.read()
+
+
+def _module_path(name: str) -> str | None:
+    """File of an intra-package module (or package ``__init__``), or
+    None when ``name`` is not a module (an imported function/class)."""
+    base = os.path.join(_ROOT, *name.split("."))
+    for path in (base + ".py", os.path.join(base, "__init__.py")):
+        if os.path.isfile(path):
+            return path
+    return None
+
+
+def _imports(path: str) -> set[str]:
+    """Intra-package modules named by any import statement in ``path``,
+    function-local imports included. ``from pkg.a import b`` names
+    ``pkg.a`` and, when ``b`` is itself a module, ``pkg.a.b``. The
+    registry's ``import_module`` strings are not statements, so the
+    registry does not pull every operator module into every closure."""
+    names: set[str] = set()
+    for node in ast.walk(ast.parse(_source(path))):
+        if isinstance(node, ast.Import):
+            names.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom) and node.module and not node.level:
+            names.add(node.module)
+            names.update(f"{node.module}.{a.name}" for a in node.names)
+    return {n for n in names
+            if n.split(".")[0] == _PKG and _module_path(n) is not None}
+
+
+def _closure_hash(module: str, memo: dict[str, str]) -> str:
+    """sha256 (16 hex) over ``module`` and every intra-package module it
+    imports, transitively, in module-name order."""
+    h = memo.get(module)
+    if h is None:
+        seen, todo = set(), [module]
+        while todo:
+            m = todo.pop()
+            if m not in seen:
+                seen.add(m)
+                todo.extend(_imports(_module_path(m)))
+        digest = hashlib.sha256()
+        for m in sorted(seen):
+            digest.update(m.encode() + b"\0" + _source(_module_path(m)))
+        h = memo[module] = digest.hexdigest()[:16]
+    return h
+
+
 def current_impl_hashes() -> dict[str, str]:
-    """name → sha256 (16 hex) of the operator's DEFINING MODULE source.
+    """name → sha256 (16 hex) of the operator's DEFINING MODULE source
+    plus every intra-package module it imports, transitively.
 
     The implementation-dirtiness signal (VERDICT r12 next #2b): round 12
     rewrote q21_sole_failing_supplier and ingest_pipeline_full without
     touching their oracles, and the staleness rotation — keyed only on
     driver-verified rounds — sent both to the tail of the sample, so the
     rewrites shipped without a driver-level hash check. Hashing the
-    defining module closes that hole the same way the oracle hash does:
-    any edit to a module flags every operator it defines, the hygiene
-    test fails until ``--update`` re-gates them locally, and the stamped
+    implementation closes that hole the same way the oracle hash does:
+    any edit to a module flags every operator it defines or that
+    imports it (directly or through another module), the hygiene test
+    fails until ``--update`` re-gates them locally, and the stamped
     ``reverify_after`` drops them into the never-verified-first tier so
-    the next driver sample re-draws them. Module granularity is
-    deliberate (it is what the verdict asked for, and it catches
-    same-module helper edits); helpers in OTHER modules do not flag
-    their consumers — cross-module changes still rely on the local gate.
+    the next driver sample re-draws them. A shared helper's edit (a
+    decoder in functions/, ``catalog._shared_stage``) therefore
+    re-gates its callers, not only its own module's operators.
     """
-    import sys as _sys
-
     from zigchain_indexer_clickhouse_spark.plans import registry
 
-    fns = registry.queries()
-    file_hash: dict[str, str] = {}
-    out: dict[str, str] = {}
-    for name, fn in fns.items():
-        path = _sys.modules[fn.__module__].__file__
-        h = file_hash.get(path)
-        if h is None:
-            with open(path, "rb") as f:
-                h = hashlib.sha256(f.read()).hexdigest()[:16]
-            file_hash[path] = h
-        out[name] = h
-    return out
+    memo: dict[str, str] = {}
+    return {name: _closure_hash(fn.__module__, memo)
+            for name, fn in registry.queries().items()}
 
 
 def load_snapshot() -> dict[str, dict]:
@@ -107,8 +152,9 @@ def load_snapshot() -> dict[str, dict]:
 
 def drift(cur: dict[str, str], snap: dict[str, dict],
           impl: dict[str, str] | None = None) -> list[str]:
-    """Names whose oracle text OR defining-module source changed (or
-    that are new) since the snapshot. Entries written before the impl
+    """Names whose oracle text OR implementation source (defining
+    module plus its intra-package imports) changed (or that are new)
+    since the snapshot. Entries written before the impl
     field existed (pre-r13) carry no ``impl`` and are not impl-checked
     until the next ``--update`` stamps them."""
     out = []

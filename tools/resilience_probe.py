@@ -25,13 +25,7 @@ RESILIENCE.json at the repo root:
    the recompute must be deterministic (same rows after the retry).
 
 What this CANNOT simulate: killing an executor process (local mode has
-exactly one). The known consequence is documented in PLANS.md: the
-iterative ops (connected components, pagerank_dupgraph) use
-``localCheckpoint``, whose blocks die with their executor; a real
-cluster run that must survive executor loss switches those two call
-sites to reliable ``checkpoint()`` on the cluster checkpoint dir — a
-one-line storage-level change, traded here for not paying HDFS writes
-in the common case.
+exactly one).
 
 Usage: python tools/resilience_probe.py [sf_dir]
 """
@@ -60,19 +54,15 @@ os.environ["SPARK_GRAFT_EXTRA_CONF"] = ";".join(
 )
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
 
-# the 5 heaviest headline queries + the localCheckpoint iterative ops
+# the heaviest headline queries
 SQUEEZED = [
     "ingest_pipeline_full",
     "q21_sole_failing_supplier",
     "rpc_ingest_flatten",
-    "dedup_minhash_lsh",
     "q5_local_volume",
-    "near_dup_clusters",      # CC loop (localCheckpoint per round)
-    "pagerank_dupgraph",      # 5 power iterations (localCheckpoint)
-    "dedup_keep_best",        # composed clusters + argmax join
 ]
 
-EVICTION = ["msg_registry_decode", "dedup_minhash_lsh", "token_flow_graph"]
+EVICTION = ["msg_registry_decode", "tx_envelope_decode", "token_flow_graph"]
 
 
 def _canon(df):

@@ -2,14 +2,12 @@
 
 Re-expresses the query/data-processing capabilities of the reference
 blockchain indexer (cryptocomicsdevs/zigchain-indexer-clickhouse,
-surveyed in SURVEY.md) as idiomatic Spark DataFrame plans, plus the
-LLM-training-data operators (dedup, similarity, text analysis,
-multimodal plumbing) required for 100 TB-scale pipelines.
+surveyed in SURVEY.md) as idiomatic Spark DataFrame plans.
 
 Layout:
     session    — tuned SparkSession builder (AQE, Arrow, shuffle conf)
     catalog    — parquet table loaders for the test star schema
-    functions/ — pure column-expression helpers (hashing, encoding, text)
+    functions/ — pure column-expression helpers (hashing, protobuf codec)
     operators/ — the operator inventory from SURVEY.md §2
     plans/     — query registry consumed by __spark_entry__ and bench.py
     sources/   — batch readers (parquet, RPC-shaped JSON)

@@ -3,6 +3,15 @@
 Tables (driver-generated, see TESTDATA.md): region nation customer
 supplier part orders lineitem events documents embeddings.
 
+``documents`` is still read by three operators: ``maybe_b64_decode``
+(the reference's retry_failed.js decode), ``heavy_hitters_topk`` (CH
+``topK``) and ``roc_auc_doc_length`` (CH ``arrayAUC``). No operator
+reads ``embeddings``; it stays in the catalog because the test-data
+generator writes it.
+
+The module also holds the session's two memos: loaded table handles
+(``load``) and persisted shared stages (``_shared_stage``).
+
 At 100 TB these would be partitioned parquet/iceberg tables; the loader
 keeps the read declarative (``spark.read.parquet``) so Catalyst gets
 predicate pushdown, column pruning, and partition pruning for free.
@@ -105,6 +114,34 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+_STAGE_CACHE: dict[tuple, DataFrame] = {}
+
+
+def _shared_stage(key_tag: str, spark: SparkSession, sf_dir: str, build) -> DataFrame:
+    """Memoized persisted stage, keyed by (applicationId, sf_dir, tag).
+
+    Operators return LAZY DataFrames, so there is no post-action point
+    to unpersist from inside one; a stage that several operators (or
+    several branches of one operator) consume is persisted once here
+    instead of once per consumer, where the copies would leak for the
+    session. One cache entry per (app, sf_dir, tag); entries for a
+    different sf_dir or a dead app are unpersisted on the way in, so
+    peak footprint is one sf_dir's stages regardless of how many scale
+    factors a session sweeps."""
+    key = (spark.sparkContext.applicationId, sf_dir, key_tag)
+    df = _STAGE_CACHE.get(key)
+    if df is not None:
+        return df
+    for k in [k for k in _STAGE_CACHE if k[0] != key[0] or k[1] != sf_dir]:
+        try:
+            _STAGE_CACHE.pop(k).unpersist()
+        except Exception:  # noqa: BLE001 — dead SparkContext, nothing to free
+            _STAGE_CACHE.pop(k, None)
+    df = build().persist()
+    _STAGE_CACHE[key] = df
+    return df
+
+
 def _load_fresh(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """One uncached table resolution — the footer read + scoped confs."""
     if name == "events":
@@ -155,7 +192,6 @@ EXPECTED_COLUMNS: dict[str, tuple[str, ...]] = {
                  "l_returnflag", "l_linestatus", "l_shipdate"),
     "events": ("event_id", "ts", "user_id", "event_type", "value", "props"),
     "documents": ("doc_id", "text", "lang", "source", "n_chars"),
-    # label is load-bearing: semdedup/embedding_centroids cluster on it
     "embeddings": ("vec_id", "embedding", "label"),
 }
 

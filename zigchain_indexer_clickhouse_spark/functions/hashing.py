@@ -4,7 +4,8 @@ Parity targets (see SURVEY.md §2):
 - tx hashing: sha256 of the raw tx, uppercase hex
   (reference: src/core/worker.js:137).
 - portable 60-bit hash: identical results in Spark and DuckDB so the
-  driver's oracle can replay minhash/simhash/fingerprint pipelines.
+  driver's oracle can replay hash-sampled and hash-probed operators
+  (SAMPLE 1/k, the bloom filter) row for row.
   Built from md5 hex (first 15 nibbles → < 2^60, fits a signed long);
   md5 is bit-identical across engines, unlike xxhash64/murmur3.
 
@@ -15,23 +16,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-# 2^31 - 1 (Mersenne prime): modulus for rolling fingerprints and
-# minhash permutations. Keeps every intermediate product < 2^63.
-FINGERPRINT_MOD = 2_147_483_647
-
-# Affine minhash permutation constants h_j = (A_j*h + B_j) mod M31.
-# Fixed odd constants (deterministic, shared verbatim with the oracle
-# SQL) — one md5 per shingle + k cheap arithmetic perms instead of k
-# md5 evaluations, an ~8x saving in the minhash inner loop.
-MINHASH_A = (
-    0x5BD1E995, 0x2545F491, 0x27D4EB2F, 0x165667B1,
-    0x9E3779B1, 0x85EBCA6B, 0xC2B2AE35, 0x61C88647,
-)
-MINHASH_B = (
-    0x1B873593, 0x38495AB5, 0x7FEB352D, 0x846CA68B,
-    0x56F84C99, 0x3C6EF373, 0x13198A2F, 0x6A09E667,
-)
 
 
 def tx_hash(raw: Column) -> Column:
@@ -56,7 +40,8 @@ def portable_hash(col: Column, seed: Column | str | int | None = None) -> Column
     ``CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)``.
 
     ``seed`` (optional) is concatenated with a ``|`` separator so k
-    independent hash families can be derived for minhash permutations.
+    independent hash families can be derived (the bloom filter's k
+    probe positions).
     """
     s = col.cast("string")
     if seed is not None:
@@ -71,42 +56,3 @@ def portable_hash_sql(expr: str, seed_expr: str | None = None) -> str:
     if seed_expr is not None:
         s = f"({s} || '|' || CAST({seed_expr} AS VARCHAR))"
     return f"CAST('0x' || substr(md5({s}), 1, 15) AS BIGINT)"
-
-
-def minhash_perm(base: Column, j: int) -> Column:
-    """j-th universal-hash permutation of a base hash, in [0, M31):
-    ``(A_j * (base mod M31) + B_j) mod M31``. ``base`` is any
-    non-negative 60-bit hash (see portable_hash)."""
-    m = FINGERPRINT_MOD
-    return (F.lit(MINHASH_A[j]) * (base % m) + F.lit(MINHASH_B[j])) % m
-
-
-def minhash_perm_sql(base_expr: str, j: int) -> str:
-    m = FINGERPRINT_MOD
-    return f"({MINHASH_A[j]} * (({base_expr}) % {m}) + {MINHASH_B[j]}) % {m}"
-
-
-def rolling_fingerprint(tokens: Column) -> Column:
-    """Polynomial rolling hash over a token array:
-    ``h = (h * 31 + portable_hash(tok) % M) % M`` — the document
-    fingerprint operator (SURVEY.md §2 #43). Runs as a builtin
-    ``aggregate`` fold, no Python."""
-    return F.aggregate(
-        tokens,
-        F.lit(0).cast("long"),
-        lambda acc, x: (acc * 31 + portable_hash(x) % FINGERPRINT_MOD) % FINGERPRINT_MOD,
-    )
-
-
-def rolling_fingerprint_sql(tokens_expr: str) -> str:
-    """DuckDB rendering of :func:`rolling_fingerprint` via list_reduce.
-
-    list_reduce has no initial accumulator, so seed the list with 0L:
-    fold(list_prepend(0, hashes)).
-    """
-    h = portable_hash_sql("x")
-    return (
-        f"list_reduce(list_prepend(CAST(0 AS BIGINT), "
-        f"list_transform({tokens_expr}, x -> {h} % {FINGERPRINT_MOD})), "
-        f"(acc, v) -> (acc * 31 + v) % {FINGERPRINT_MOD})"
-    )

@@ -1,8 +1,8 @@
 """ClickHouse aggregate-function analogs that had no twin yet
-(SURVEY.md §2.2 #162-163, #168-169): ``topK()`` heavy hitters, the
-``sumMap()`` map-valued aggregate, ``groupArray(N)``/``groupUniqArray``
-ordered-collection aggregates, and ``minMap``/``maxMap`` +
-``avgWeighted``.
+(SURVEY.md §2.2 #162-163, #168-169, #221): ``topK()`` heavy hitters,
+the ``sumMap()`` map-valued aggregate, ``groupArray(N)``/
+``groupUniqArray`` ordered-collection aggregates, ``minMap``/``maxMap``
++ ``avgWeighted``, and the capped distinct ``uniqUpTo(N)``.
 
 - ``topK(k)`` in ClickHouse is a SpaceSaving sketch: approximate, but
   the items it exists to find — the ones above a frequency threshold —
@@ -33,7 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from zigchain_indexer_clickhouse_spark.catalog import load
+from zigchain_indexer_clickhouse_spark.catalog import _shared_stage, load
 from zigchain_indexer_clickhouse_spark.plans.registry import register
 
 # Heavy-hitter threshold: report tokens with count > N / HH_K.
@@ -97,10 +97,6 @@ def heavy_hitters_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     output is persisted for its two consumers. The sketch bounds
     memory, not correctness: the verify pass is exact counting, so
     partition layout cannot change the answer."""
-    from zigchain_indexer_clickhouse_spark.operators.dedup import (
-        _shared_stage,
-    )
-
     d = load(spark, sf_dir, "documents")
     tok = d.select(F.explode(F.split(F.trim("text"), " ")).alias("token"))
 
@@ -119,6 +115,10 @@ def heavy_hitters_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
+    # Persisted because both consumers (candidates, total) read it; a
+    # plain frame runs the sketch pass once per consumer. Build+collect
+    # on the sf1.0 replica (4 vCPU, median of 5): 1.25 s persisted vs
+    # 1.47 s plain; at sf0.01 the persist costs ~0.03 s.
     sketch = _shared_stage(
         "hh_topk_sketch", spark, sf_dir,
         lambda: tok.mapInPandas(mg_partition, schema="token string, part_n long"),
@@ -421,10 +421,6 @@ def heavy_hitters_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     sentinel row (user_id NULL), so the grand total shares the sketch
     scan instead of re-reading the stream. The sketch bounds memory;
     the verify pass makes the answer exact and layout-independent."""
-    from zigchain_indexer_clickhouse_spark.operators.dedup import (
-        _shared_stage,
-    )
-
     e = load(spark, sf_dir, "events").select(
         "user_id", F.round(F.col("value") * 100).cast("long").alias("w")
     )
@@ -446,6 +442,8 @@ def heavy_hitters_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
+    # persisted for the same reason as #162's sketch: 0.57 s vs 0.92 s
+    # plain on the sf1.0 replica (4 vCPU, median of 5)
     sketch = _shared_stage(
         "hh_weighted_sketch", spark, sf_dir,
         lambda: e.mapInPandas(
@@ -831,4 +829,49 @@ def cramers_v_assoc(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             * 1_000_000
         ).cast("long").alias("cramers_v_ppm"),
+    )
+
+
+# --------------------------------------------------------------------------
+# 221. uniq_up_to_daily — ClickHouse uniqUpTo(N) analog
+# --------------------------------------------------------------------------
+_UNIQ_CAP = 10
+
+
+@register(
+    "uniq_up_to_daily",
+    oracle=f"""
+    WITH d AS (
+      SELECT DISTINCT event_type, CAST(ts AS DATE) AS day, user_id
+      FROM events
+    )
+    SELECT event_type, day,
+           CAST(LEAST(COUNT(*), {_UNIQ_CAP + 1}) AS BIGINT) AS uniq_up_to,
+           CAST(COUNT(*) > {_UNIQ_CAP} AS BIGINT) AS saturated
+    FROM d GROUP BY event_type, day
+    """,
+)
+def uniq_up_to_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ClickHouse ``uniqUpTo({_UNIQ_CAP})``: exact distinct users per
+    (event_type, day), saturating at {_UNIQ_CAP}+1 — the "are there
+    more than N distinct actors" gate (CH keeps ≤N+1 keys of state and
+    answers exactly below the cap; the saturated flag is all a
+    threshold consumer reads).
+
+    Scale shape: the (type, day, user) DISTINCT collapse is the only
+    corpus-sized step and it is map-side combinable (each task dedups
+    locally before the exchange); the capped count and flag are
+    per-group trivia. CH's bounded-state trick trades exactness above
+    the cap for memory — here the distinct collapse already bounds
+    the exchange, and the saturating output preserves CH's exact
+    answer-envelope: equal below the cap, pinned to N+1 above."""
+    d = (
+        load(spark, sf_dir, "events")
+        .select("event_type", F.col("ts").cast("date").alias("day"), "user_id")
+        .distinct()
+    )
+    return d.groupBy("event_type", "day").agg(
+        F.least(F.count("*"), F.lit(_UNIQ_CAP + 1))
+        .cast("long").alias("uniq_up_to"),
+        (F.count("*") > _UNIQ_CAP).cast("long").alias("saturated"),
     )

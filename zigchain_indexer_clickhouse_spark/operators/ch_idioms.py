@@ -1,7 +1,8 @@
 """Remaining ClickHouse query-surface idioms + incremental-indexing
-primitives (SURVEY.md §2.2/#131-135): ORDER BY … WITH FILL/INTERPOLATE
-gap filling, LIMIT n BY group, the SAMPLE clause's consistent hash
-sampling, snapshot diffing, and SCD2 state-history construction.
+primitives (SURVEY.md §2.2/#131-135, #140): ORDER BY … WITH
+FILL/INTERPOLATE gap filling, LIMIT n BY group, the SAMPLE clause's
+consistent hash sampling, snapshot diffing, SCD2 state-history
+construction, and the bloom_filter skip index's membership test.
 
 These are the last query-language idioms a ClickHouse user of the
 reference would reach for that had no direct twin yet:
@@ -20,6 +21,10 @@ reference would reach for that had no direct twin yet:
 - snapshot diff / SCD2 are the incremental-indexing primitives around
   the reference's re-index flows (orchestrator re-enqueues ranges;
   diffing two logical snapshots bounds the rewrite set).
+- A ``bloom_filter`` skip index answers "can this granule hold key k"
+  with no false negatives. Its probe positions come from the portable
+  hash, so even the filter's false positives replay bit-exactly in
+  DuckDB.
 """
 
 from __future__ import annotations
@@ -147,8 +152,8 @@ def limit_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: Catalyst rewrites the rn<=n filter into WindowGroupLimit and
     pushes it BELOW the exchange — every map task trims its partition
     to n rows per group before shuffling, so the exchange carries
-    O(groups·n·tasks) rows, not the table. The same pushdown
-    tfidf_top_terms relies on (asserted there in tests)."""
+    O(groups·n·tasks) rows, not the table (asserted in
+    tests/test_ch_idioms.py)."""
     o = load(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderpriority").orderBy(
         F.desc("o_totalprice"), "o_orderkey"
@@ -456,3 +461,112 @@ def ip_subnet_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("subnet24")
     )
+
+
+# --------------------------------------------------------------------------
+# 140. bloom_membership — exactly-replayable Bloom filter build + probe
+# --------------------------------------------------------------------------
+BLOOM_BITS = 1 << 16
+BLOOM_HASHES = 3
+BLOOM_PROBE_SHIFT = 7_777_777  # offset used to synthesize known misses
+
+
+@register(
+    "bloom_membership",
+    oracle=f"""
+    WITH keys AS (SELECT DISTINCT o_orderkey AS k FROM orders),
+    bits AS (
+      SELECT DISTINCT ({portable_hash_sql("k", "'bloom' || CAST(g.j AS VARCHAR)")})
+               % {BLOOM_BITS} AS pos
+      FROM keys, generate_series(0, {BLOOM_HASHES - 1}) g(j)
+    ),
+    probes AS (
+      SELECT k AS probe, 1 AS is_real FROM keys
+      UNION ALL
+      SELECT k + {BLOOM_PROBE_SHIFT} AS probe, 0 AS is_real FROM keys
+    ),
+    probe_pos AS (
+      SELECT p.probe, p.is_real,
+             ({portable_hash_sql("p.probe", "'bloom' || CAST(g.j AS VARCHAR)")})
+               % {BLOOM_BITS} AS pos
+      FROM probes p, generate_series(0, {BLOOM_HASHES - 1}) g(j)
+    ),
+    verdicts AS (
+      SELECT pp.probe, pp.is_real,
+             CASE WHEN COUNT(b.pos) = {BLOOM_HASHES} THEN 1 ELSE 0 END AS member
+      FROM probe_pos pp LEFT JOIN bits b ON b.pos = pp.pos
+      GROUP BY pp.probe, pp.is_real
+    )
+    SELECT CAST(COUNT(*) AS BIGINT) AS n_probes,
+           CAST(SUM(CASE WHEN is_real = 1 THEN member ELSE 0 END) AS BIGINT)
+             AS n_true_hits,
+           CAST(SUM(CASE WHEN is_real = 0 THEN member ELSE 0 END) AS BIGINT)
+             AS n_false_positives,
+           CAST(SUM(CASE WHEN is_real = 0 THEN member ELSE 0 END) * 1000000
+                // SUM(CASE WHEN is_real = 0 THEN 1 ELSE 0 END) AS BIGINT)
+             AS fp_rate_ppm
+    FROM verdicts
+    """,
+)
+def bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bloom filter ({BLOOM_BITS} bits, k={BLOOM_HASHES}) over order
+    keys, probed with every real key plus a shifted copy (known
+    misses). Because the probe positions come from the portable hash,
+    the filter's exact false positives — not just their rate — replay
+    in the oracle: a SKETCH with a bit-exact cross-engine contract
+    (ClickHouse bloom_filter skip index / Spark runtime-filter
+    semantics, minus the opaque native bitmaps).
+
+    Every real key must hit (Bloom filters have no false negatives —
+    asserted in tests); the shifted keys measure the realized FP rate
+    against the (1-e^{{-kn/m}})^k design point.
+
+    Plan: the bit set is a distinct-agg on positions (≤{BLOOM_BITS}
+    rows — broadcastable at any corpus size, the point of the
+    structure); probing is one equi-join on the position int + a
+    count-all-k check. No row ever carries more than two longs."""
+    o = load(spark, sf_dir, "orders")
+    keys = o.select(F.col("o_orderkey").alias("k")).distinct()
+
+    def positions(col: F.Column) -> F.Column:
+        return F.array(
+            *[
+                portable_hash(col, f"bloom{j}") % BLOOM_BITS
+                for j in range(BLOOM_HASHES)
+            ]
+        )
+
+    bits = (
+        keys.select(F.explode(positions(F.col("k"))).alias("pos")).distinct()
+    )
+    probes = keys.select(F.col("k").alias("probe"), F.lit(1).alias("is_real")).unionAll(
+        keys.select(
+            (F.col("k") + BLOOM_PROBE_SHIFT).alias("probe"),
+            F.lit(0).alias("is_real"),
+        )
+    )
+    probe_pos = probes.select(
+        "probe", "is_real", F.explode(positions(F.col("probe"))).alias("pos")
+    )
+    verdicts = (
+        probe_pos.join(F.broadcast(bits.withColumn("hit", F.lit(1))), "pos", "left")
+        .groupBy("probe", "is_real")
+        .agg(
+            (F.count("hit") == BLOOM_HASHES).cast("int").alias("member")
+        )
+    )
+    return verdicts.agg(
+        F.count("*").cast("long").alias("n_probes"),
+        F.sum(F.when(F.col("is_real") == 1, F.col("member")).otherwise(0))
+        .cast("long")
+        .alias("n_true_hits"),
+        F.sum(F.when(F.col("is_real") == 0, F.col("member")).otherwise(0))
+        .cast("long")
+        .alias("n_false_positives"),
+        F.expr(
+            f"""CAST(SUM(CASE WHEN is_real = 0 THEN member ELSE 0 END)
+                 * 1000000 DIV SUM(CASE WHEN is_real = 0 THEN 1 ELSE 0 END)
+                 AS BIGINT)"""
+        ).alias("fp_rate_ppm"),
+    )
+

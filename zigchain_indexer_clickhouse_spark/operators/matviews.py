@@ -426,12 +426,7 @@ def mv_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_diff,
     )
 
-    from zigchain_indexer_clickhouse_spark.operators.dedup import _shared_stage
-
-    blocks = _shared_stage(
-        "mv_refresh_blocks", spark, sf_dir,
-        lambda: _blocks(spark, sf_dir),
-    )
+    blocks = _blocks(spark, sf_dir)
     changed = snapshot_diff(spark, sf_dir).select("height")
     days = (
         blocks.join(changed, "height", "leftsemi")

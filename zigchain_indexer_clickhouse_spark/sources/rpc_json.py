@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from zigchain_indexer_clickhouse_spark.catalog import load
+from zigchain_indexer_clickhouse_spark.catalog import _shared_stage, load
 from zigchain_indexer_clickhouse_spark.plans.registry import register
 
 # Tendermint block_results, reduced to the fields the reference stores
@@ -415,8 +415,6 @@ def msg_body_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_msg_send,
         msg_send_fields,
     )
-
-    from zigchain_indexer_clickhouse_spark.operators.dedup import _shared_stage
 
     def _build_blobs() -> DataFrame:
         e = load(spark, sf_dir, "events").filter(F.col("event_id") % 2 == 1)

@@ -33,7 +33,7 @@ import threading
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from zigchain_indexer_clickhouse_spark.catalog import load
+from zigchain_indexer_clickhouse_spark.catalog import _shared_stage, load
 from zigchain_indexer_clickhouse_spark.functions.protobuf import (
     any_type_url,
     any_value,
@@ -52,7 +52,6 @@ from zigchain_indexer_clickhouse_spark.functions.protobuf import (
     tx_body_messages,
     tx_raw_body,
 )
-from zigchain_indexer_clickhouse_spark.operators.dedup import _shared_stage
 from zigchain_indexer_clickhouse_spark.plans.registry import register
 from zigchain_indexer_clickhouse_spark.sources.partitioned_write import (
     write_height_buckets,
