@@ -23,8 +23,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from zigchain_indexer_clickhouse_spark.plans import registry
 from zigchain_indexer_clickhouse_spark.session import get_spark
 
-# Headline set: the reference-parity ETL core + the heavy OLAP
-# operators — the queries whose cost dominates a real run.
+# Headline set: the reference-parity ETL core + the heavy OLAP and
+# training-data operators — the queries whose cost dominates a real run.
 HEADLINE = (
     "ingest_blocks",
     "attrs_kv",
@@ -44,10 +44,15 @@ HEADLINE = (
     "rpc_ingest_flatten",
     "ingest_pipeline_full",
     "range_completeness",
+    "ann_cosine_topk",
+    "doc_fingerprint",
+    "tfidf_top_terms",
     "mv_daily_tx_stats",
     "bucketed_colocated_join",
     "asof_join",
     "distinct_users_skew_safe",
+    "contamination_check",
+    "gopher_quality_filter",
 )
 
 

@@ -1,12 +1,10 @@
-"""CH aggregate analogs (ch_aggregates.py #162-163, #221): the
-Misra-Gries superset guarantee, exact heavy-hitter output, sumMap
-reassembly, and the uniqUpTo cap."""
+"""CH aggregate analogs (ch_aggregates.py #162-163): the Misra-Gries
+superset guarantee, exact heavy-hitter output, and sumMap reassembly."""
 
 from __future__ import annotations
 
 import json
-import math
-from collections import Counter, defaultdict
+from collections import Counter
 
 import pyspark.sql.functions as F
 from hypothesis import given, settings
@@ -16,11 +14,9 @@ from zigchain_indexer_clickhouse_spark.catalog import load
 from zigchain_indexer_clickhouse_spark.operators.ch_aggregates import (
     HH_K,
     SKETCH_M,
-    _UNIQ_CAP,
     _mg_shrink,
     heavy_hitters_topk,
     sum_map_daily,
-    uniq_up_to_daily,
 )
 
 
@@ -247,55 +243,3 @@ def test_cramers_v_matches_python_recompute(spark, sf_dir):
     assert abs(row.chi2_micro - math.floor(chi2 * 1e6)) <= 1
     assert abs(row.cramers_v_ppm - math.floor(v * 1e6)) <= 1
     assert 0 < row.cramers_v_ppm < 1_000_000
-
-
-def test_uniq_up_to_matches_truth(spark, sf_dir):
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").collect()
-    truth = defaultdict(set)
-    for r in ev:
-        truth[(r.event_type, r.ts.date())].add(r.user_id)
-    got = {
-        (r.event_type, r.day): r for r in uniq_up_to_daily(spark, sf_dir).collect()
-    }
-    assert set(got) == set(truth)
-    for k, users in truth.items():
-        row = got[k]
-        n = len(users)
-        if n <= _UNIQ_CAP:
-            assert (row.uniq_up_to, row.saturated) == (n, 0)
-        else:
-            assert (row.uniq_up_to, row.saturated) == (_UNIQ_CAP + 1, 1)
-
-
-def test_welch_t_matches_reference_formula(spark, sf_dir):
-    """Recompute Welch's t from the raw cents in pure Python for one
-    pair and compare at micro precision."""
-    from zigchain_indexer_clickhouse_spark.operators.ch_aggregates import (
-        welch_ttest_by_type,
-    )
-
-    rows = welch_ttest_by_type(spark, sf_dir).collect()
-    assert len(rows) == 10  # C(5 event types, 2)
-    got = {(r["type_a"], r["type_b"]): r for r in rows}
-    raw = load(spark, sf_dir, "events").select("event_type", "value").collect()
-    by_type: dict[str, list[int]] = {}
-    for r in raw:
-        by_type.setdefault(r["event_type"], []).append(
-            int(round(r["value"] * 100))
-        )
-    ta, tb = sorted(by_type)[:2]
-    xa, xb = by_type[ta], by_type[tb]
-
-    def stats(x):
-        n = len(x)
-        m = sum(x) / n
-        v = (sum(c * c for c in x) - sum(x) ** 2 / n) / (n - 1)
-        return n, m, v
-
-    na, ma, va = stats(xa)
-    nb, mb, vb = stats(xb)
-    t = (ma - mb) / math.sqrt(va / na + vb / nb)
-    r = got[(ta, tb)]
-    assert (r["n_a"], r["n_b"]) == (na, nb)
-    assert abs(r["t_micro"] / 1e6 - t) < 1e-4
-

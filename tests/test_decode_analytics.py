@@ -1,10 +1,16 @@
-"""Checks for the decode-derived analytics ops (#214-215): each is
-cross-checked against an independent recompute from the raw tables."""
+"""Checks for the decode-derived analytics ops (#214-215) and the
+decontamination transform (#216): each is cross-checked against an
+independent recompute from the raw tables, and #216 against the #64
+audit it must agree with."""
 
 from __future__ import annotations
 
 from collections import defaultdict
 
+from zigchain_indexer_clickhouse_spark.operators.curation import (
+    contamination_check,
+    decontaminate_transform,
+)
 from zigchain_indexer_clickhouse_spark.sources.tx_decode import (
     contract_call_activity,
     token_flow_graph,
@@ -42,3 +48,29 @@ def test_contract_call_activity_conserves_mass(spark, sf_dir):
         per_c[f"zig1w{r.event_id % 7}"].add(r.user_id)
     for c, row in got.items():
         assert row.n_senders == len(per_c[c])
+
+
+def test_decontaminate_agrees_with_audit(spark, sf_dir):
+    flagged = {
+        r.doc_id
+        for r in contamination_check(spark, sf_dir).collect()
+        if r.doc_id % 50 != 0  # benchmark docs are exempt from removal
+    }
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").collect()
+    got = {r.source: r for r in decontaminate_transform(spark, sf_dir).collect()}
+    per_src = defaultdict(lambda: [0, 0, 0])  # total, removed, kept_chars
+    for d in docs:
+        per_src[d.source][0] += 1
+        if d.doc_id in flagged:
+            per_src[d.source][1] += 1
+        else:
+            per_src[d.source][2] += d.n_chars
+    assert set(got) == set(per_src)
+    for src, (tot, rem, chars) in per_src.items():
+        row = got[src]
+        assert (row.n_docs, row.n_removed, row.n_kept, row.kept_chars) == (
+            tot,
+            rem,
+            tot - rem,
+            chars,
+        )

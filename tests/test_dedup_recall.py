@@ -1,116 +1,12 @@
-"""Recall guarantees of the candidate-generation dedup operators.
+"""Recall guarantees of the candidate-generation similarity operators.
 
-Banded candidate generation trades work for recall; these tests pin the
-GUARANTEED part of that trade on real data:
-
-- simhash block-combination banding (Manku et al.): every pair within
-  hamming ≤ HAMMING_MAX must be found — verified against an ALL-PAIRS
-  DuckDB ground truth built from the same fingerprints (the op itself
-  never compares all pairs; the test does, which is exactly why it
-  only runs at sf0.001).
-- exact-substring: every synthetic near-copy (drop-first-token) shares
-  all windows of its tail, so each (doc, doc+10000) pair with enough
-  tokens must surface as a candidate pair.
+Bucketed candidate generation trades work for recall; these tests pin
+the GUARANTEED part of that trade on real data: planted exact clones
+and twins must surface, and the capped semantic-dedup pair join must
+stay sub-quadratic on a mega-cluster.
 """
 
 from __future__ import annotations
-
-import duckdb
-
-from zigchain_indexer_clickhouse_spark.operators.dedup import (
-    _CORPUS_NEAR,
-    EXSUB_K,
-    HAMMING_MAX,
-    SIMHASH_BITS,
-    dedup_exact_substring,
-    dedup_simhash,
-)
-from zigchain_indexer_clickhouse_spark.functions.hashing import portable_hash_sql
-
-
-def test_simhash_banding_guaranteed_recall(spark, sf_dir):
-    h = portable_hash_sql("tok")
-    powers = ", ".join(str(1 << i) for i in range(SIMHASH_BITS))
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/documents.parquet')"
-    )
-    truth = con.execute(
-        f"""
-        WITH corpus AS ({_CORPUS_NEAR}),
-        tokr AS (
-          SELECT doc_id, {h} AS th
-          FROM (SELECT doc_id, u.tok FROM
-                  (SELECT doc_id, string_split(trim(text), ' ') AS toks
-                   FROM corpus) t,
-                  UNNEST(t.toks) u(tok))
-        ),
-        votes AS (
-          SELECT doc_id, p.i AS bit,
-                 SUM(CASE WHEN (th // ([{powers}])[p.i + 1]) % 2 = 1
-                          THEN 1 ELSE -1 END) AS vote
-          FROM tokr, generate_series(0, {SIMHASH_BITS - 1}) p(i)
-          GROUP BY doc_id, p.i
-        ),
-        sh AS (
-          SELECT doc_id,
-                 CAST(SUM(CASE WHEN vote > 0 THEN ([{powers}])[bit + 1]
-                          ELSE 0 END) AS BIGINT) AS simhash
-          FROM votes GROUP BY doc_id
-        )
-        SELECT a.doc_id, b.doc_id
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE bit_count(xor(a.simhash, b.simhash)) <= {HAMMING_MAX}
-        """
-    ).fetchall()
-    found = {
-        (r.doc_a, r.doc_b)
-        for r in dedup_simhash(spark, sf_dir).collect()
-    }
-    missed = set(truth) - found
-    assert not missed, f"banding missed {len(missed)} qualifying pairs: {sorted(missed)[:5]}"
-    # and nothing extra: the verify filter bounds every emitted pair
-    assert found == set(truth)
-
-
-def test_exact_substring_finds_all_near_copies(spark, sf_dir):
-    rows = dedup_exact_substring(spark, sf_dir).collect()
-    found = {(r.doc_a, r.doc_b) for r in rows}
-    con = duckdb.connect()
-    eligible = con.execute(
-        f"""
-        SELECT doc_id FROM read_parquet('{sf_dir}/documents.parquet')
-        WHERE len(string_split(trim(text), ' ')) >= {EXSUB_K} + 1
-        """
-    ).fetchall()
-    missing = [
-        d for (d,) in eligible if (d, d + 10000) not in found
-    ]
-    assert not missing, f"near-copy pairs not detected for docs {missing[:5]}"
-
-
-def test_near_dup_clusters_invariants(spark, sf_dir):
-    """Composed pipeline (#145): every corpus doc labeled exactly once,
-    exactly one keeper per cluster (the min id), and every planted
-    near-copy (doc_id+10000) clusters WITH its original."""
-    from zigchain_indexer_clickhouse_spark.operators.dedup import (
-        near_dup_clusters,
-    )
-
-    rows = near_dup_clusters(spark, sf_dir).collect()
-    by_cluster = {}
-    label = {}
-    for r in rows:
-        label[r.doc_id] = r.cluster_id
-        by_cluster.setdefault(r.cluster_id, []).append(r)
-    for cid, members in by_cluster.items():
-        keepers = [m for m in members if m.is_keeper]
-        assert len(keepers) == 1 and keepers[0].doc_id == cid
-        assert cid == min(m.doc_id for m in members)
-    for did, cid in label.items():
-        if did >= 10000:
-            assert label[did - 10000] == cid, (did, cid)
 
 
 def test_semdedup_mega_cluster_stays_subquadratic(spark, sf_dir):
@@ -250,36 +146,6 @@ def test_ann_ivf_recall_on_planted_neighbors(spark, sf_dir):
     }
     recall = len(found) / 50
     assert recall >= 0.75, f"planted-twin IVF recall {recall} below gate"
-
-
-def test_dedup_incremental_flags_planted_near_dups_only(spark, sf_dir):
-    """#200: every batch doc planted as a near-dup (doc_id % 3 == 0,
-    first token dropped) must be flagged against its OWN source doc;
-    vowel-rewritten docs must not be flagged; and no index or batch
-    self-pairs can appear (one-directional join)."""
-    from zigchain_indexer_clickhouse_spark.catalog import load
-    from zigchain_indexer_clickhouse_spark.plans import registry
-
-    out = {
-        r["batch_doc_id"]: r
-        for r in registry.queries()["dedup_incremental"](spark, sf_dir)
-        .collect()
-    }
-    n_docs = load(spark, sf_dir, "documents").count()
-    planted = [i for i in range(n_docs) if i % 3 == 0]
-    # recall on planted near-dups: LSH at 4 bands of 2 has high but not
-    # perfect collision probability for J~0.9 pairs; require >= 90%
-    hit = [i for i in planted if i + 10000 in out]
-    assert len(hit) >= 0.9 * len(planted), (len(hit), len(planted))
-    # every flagged planted doc must point back to its own source
-    for i in hit:
-        assert out[i + 10000]["dup_of"] == i, (i, out[i + 10000])
-    # vowel-rewritten docs must (almost) never survive the J>=0.5
-    # verify; allow a tiny accident budget for short/vowel-free docs
-    false_pos = [b for b in out if (b - 10000) % 3 != 0]
-    assert len(false_pos) <= 0.02 * n_docs, false_pos[:10]
-    # one-directional: batch ids only on the left, index ids on the right
-    assert all(b >= 10000 and out[b]["dup_of"] < 10000 for b in out)
 
 
 def test_embedding_near_dup_clone_recall_is_exact(spark, sf_dir):

@@ -24,6 +24,7 @@ _PROBED = [
     "q11_value_concentration",
     "q1_pricing_summary",
     "q9_product_profit",
+    "embedding_centroids",
     # window/ordering class: row_number & carry-forward must tie-break
     # deterministically regardless of layout
     "sessionize",
@@ -35,6 +36,7 @@ _PROBED = [
     # must erase that
     "heavy_hitters_topk",
     "heavy_hitters_weighted",
+    "bpe_pair_stats",
     # ordered-float-fold class: chi2 is a left fold over sorted cells,
     # so layout must not perturb the quantized ppm output
     "cramers_v_assoc",
@@ -52,7 +54,8 @@ _PROBED = [
     "mann_whitney_u_pairs",
     "spearman_rank_corr",
     # round-6 late window/threshold class: exact-median cum windows,
-    # sweep-line islands and lag-window means must all be layout-blind
+    # sweep-line islands, lag-window means, LSH bucket caps, and the
+    # ten-branch decode dispatch must all be layout-blind
     "funnel_time_to_convert",
     "interval_length_sum",
     "block_time_drift",

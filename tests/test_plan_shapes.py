@@ -6,6 +6,8 @@ slow down prod.
 
 from __future__ import annotations
 
+import pytest
+
 from zigchain_indexer_clickhouse_spark.plans import registry
 
 _QUERIES = registry.queries()
@@ -120,6 +122,22 @@ def test_range_split_matches_reference_formula(spark, sf_dir):
             assert b["part_start"] == a["part_end"] + 1
 
 
+@pytest.mark.parametrize(
+    "name",
+    [
+        "embedding_near_dup",
+        "contamination_check",
+        "semdedup",
+    ],
+)
+def test_near_dup_candidates_via_equijoin(spark, sf_dir, name):
+    """Every near-dup/contamination operator must generate candidates
+    with an equi-join, never an all-pairs product."""
+    plan = _plan(spark, sf_dir, name)
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+
+
 def test_bucketed_join_has_no_prejoin_exchange(spark, sf_dir):
     """bucketed_colocated_join: both facts written bucketBy(orderkey),
     so the SMJ consumes bucket files directly — the ONLY exchange in
@@ -198,14 +216,17 @@ def test_skew_safe_distinct_avoids_hot_key_shuffle(spark, sf_dir):
 
 
 # BNLJ is allowed ONLY where the build side is a deliberate tiny
-# broadcast: the 1-row cutoff aggregates of the trailing-window checks
-# and the few-row pair-key fan-outs. Everything else: forbidden.
+# broadcast: the 5-query brute-force ANN baseline and the 1-row cutoff
+# aggregates of the trailing-window checks. Everything else: forbidden.
 # ops where the BNLJ build side is a single scalar row (broadcast
 # scalar — constant cost at any scale), audited individually
 _BNLJ_ALLOWED = {
+    "ann_cosine_topk",
+    "ann_pq_adc",  # 5-query broadcast probed against the PQ code table
     "recent_activity",
     "monitor_health_report",
     "gap_detection",  # 1-row (mh, n_present) broadcast into cand/result (r13)
+    "tfidf_top_terms",
     "q11_value_concentration",
     "gap_backfill_window",  # 1-row capacity + window gate scalars
     "queue_cleanup",  # 1-row bounds + caps scalars into the drop filter
@@ -214,6 +235,8 @@ _BNLJ_ALLOWED = {
     "heavy_hitters_topk",  # 1-row token-total broadcast for the HAVING
     "heavy_hitters_weighted",  # 1-row weight-total broadcast, same shape
     "fk_orphan_check",  # four 1-row count x 1-row orphan-count unions
+    "ngram_novelty_decay",  # 1-row doc-count bound broadcast
+    "token_pmi_pairs",  # 1-row token-total broadcast
     "welch_ttest_by_type",  # |types|-row summary inequality self-join
     "point_in_range_join",  # 1-row domain-bound broadcast
     "sequence_next_node",  # 1-row matched-user total for the share ppm
@@ -221,7 +244,10 @@ _BNLJ_ALLOWED = {
     "mann_whitney_u_pairs",  # |types|²-row pair-key broadcast fan-out
     "ks_test_pairs",  # same tiny pair-key broadcast as #208
     "roc_auc_doc_length",  # 1-row corpus-total broadcast
+    "domain_temperature_mix",  # 1-row total + 1-row Σ√n fold broadcasts
     "cohort_transition_matrix",  # 1-row transition-total broadcast
+    "lang_id_confusion",  # |langs|-row OR-fan over the contingency cells
+    "vocab_mass_spectrum",  # 1-row mass/vocab-total broadcast
 }
 
 
@@ -245,3 +271,12 @@ def test_global_plan_hygiene(spark, sf_dir):
         if flags:
             offenders[name] = flags
     assert not offenders, offenders
+
+
+def test_semdedup_pairwise_join_keys_on_capped_cluster(spark, sf_dir):
+    """ADVICE r3 (high): the semdedup pairwise join must key on the
+    capped cluster key (ckey), not the raw label — otherwise one
+    mega-cluster is O(cluster^2) and the engine diverges from the
+    oracle's split semantics. Lock the join key in the plan."""
+    plan = _plan(spark, sf_dir, "semdedup")
+    assert "ckey" in plan, "pairwise join must consume capped keys"

@@ -86,3 +86,37 @@ def test_interval_bucketing_covers_overlaps(s, e_off, width):
     assert b1 & b2
     first_shared = max(math.floor(s / width), math.floor(s2 / width))
     assert first_shared in (b1 & b2)
+
+@given(
+    n_tokens=st.integers(1, 80),
+)
+@settings(max_examples=30, deadline=None)
+def test_span_corruption_index_math(n_tokens):
+    """Pure-Python replay of span_corruption's position arithmetic
+    (segments.py #142): for any token count, kept + target tokens must
+    partition the document, sentinels are ordinal, and span placement
+    follows the (SPAN_LEN, SPAN_EVERY) schedule exactly."""
+    from zigchain_indexer_clickhouse_spark.operators.segments import (
+        SPAN_EVERY,
+        SPAN_LEN,
+    )
+
+    toks = [f"t{i}" for i in range(n_tokens)]
+    inp, tgt, sentinels = [], [], 0
+    for i in range(1, n_tokens + 1):
+        corrupted_span = ((i - 1) // SPAN_LEN) % SPAN_EVERY == 0
+        if corrupted_span and (i - 1) % SPAN_LEN == 0:
+            inp.append(f"<extra_id_{(i - 1) // (SPAN_LEN * SPAN_EVERY)}>")
+            sentinels += 1
+        if corrupted_span:
+            tgt.append(toks[i - 1])
+        else:
+            inp.append(toks[i - 1])
+    # partition: every original token is in exactly one stream
+    kept = [t for t in inp if not t.startswith("<extra_id_")]
+    assert sorted(kept + tgt) == sorted(toks)
+    # sentinel ids are 0..k-1 in order
+    ids = [int(t[10:-1]) for t in inp if t.startswith("<extra_id_")]
+    assert ids == list(range(sentinels))
+    # the first token is always in a corrupted span (schedule starts at 0)
+    assert tgt and tgt[0] == "t0"

@@ -1,5 +1,5 @@
-"""Segment-overlap operator (segments.py #141): bitmap-math
-consistency."""
+"""Segment-overlap and span-corruption operators (segments.py
+#141-142): bitmap-math consistency and round-trip reconstruction."""
 
 from __future__ import annotations
 
@@ -9,6 +9,7 @@ from zigchain_indexer_clickhouse_spark.catalog import load
 from zigchain_indexer_clickhouse_spark.operators.segments import (
     SEG_TYPES,
     segment_overlap_bitmap,
+    span_corruption,
 )
 
 
@@ -33,3 +34,23 @@ def test_segment_overlap_matches_direct_counts(spark, sf_dir):
         assert r.n_both == len(a & b)
         assert r.n_either == len(a | b)
         assert r.jaccard_bp == len(a & b) * 10000 // len(a | b)
+
+
+def test_span_corruption_reconstructs_and_counts(spark, sf_dir):
+    """Sentinels are ordinal, and |corrupted tokens| + |target tokens|
+    (minus sentinels) equals the original token count — nothing lost,
+    nothing duplicated."""
+    rows = span_corruption(spark, sf_dir).collect()
+    assert rows
+    for r in rows[:50]:
+        inp = r.corrupted.split(" ") if r.corrupted else []
+        tgt = r.targets.split(" ") if r.targets else []
+        sentinels = [t for t in inp if t.startswith("<extra_id_")]
+        assert sentinels, r.doc_id
+        # sentinel ids are 0,1,2,... in order
+        assert [
+            int(s.removeprefix("<extra_id_").removesuffix(">"))
+            for s in sentinels
+        ] == list(range(len(sentinels)))
+        kept = len(inp) - len(sentinels)
+        assert kept + len(tgt) == r.n_tokens

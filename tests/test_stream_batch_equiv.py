@@ -247,7 +247,7 @@ def test_stream_uniq_up_to_matches_batch_twin(spark, sf_dir):
     """#229 vs #221: the drained saturating distinct counts must equal
     the batch uniqUpTo rows exactly (day rendered as string on the
     stream side), and the caps must be the same constant."""
-    from zigchain_indexer_clickhouse_spark.operators.ch_aggregates import _UNIQ_CAP
+    from zigchain_indexer_clickhouse_spark.operators.data_mix import _UNIQ_CAP
     from zigchain_indexer_clickhouse_spark.streaming.event_stream import (
         UUT_CAP,
     )

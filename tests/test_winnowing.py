@@ -71,87 +71,12 @@ def test_winnowing_coverage_guarantee():
     assert _doc_fps(doc_a) & _doc_fps(doc_b)
 
 
-def test_source_overlap_matrix_matches_recompute(spark, sf_dir):
-    from zigchain_indexer_clickhouse_spark.operators.corpus_quality import (
-        source_overlap_matrix,
-    )
-
-    docs = load(spark, sf_dir, "documents").select("source", "text").collect()
-    vocab = defaultdict(set)
-    for r in docs:
-        toks = r.text.strip().split(" ")
-        for i in range(len(toks) - 2):
-            vocab[r.source].add(_phash(" ".join(toks[i:i + 3])))
-    expected = {}
-    srcs = sorted(vocab)
-    for i, sa in enumerate(srcs):
-        for sb in srcs[i + 1:]:
-            inter = len(vocab[sa] & vocab[sb])
-            if inter:
-                union = len(vocab[sa]) + len(vocab[sb]) - inter
-                expected[(sa, sb)] = (inter, inter * 1_000_000 // union)
-    rows = {(r.src_a, r.src_b): (r.n_shared, r.jaccard_ppm)
-            for r in source_overlap_matrix(spark, sf_dir).collect()}
-    assert rows == expected
-    assert all(0 < ppm <= 1_000_000 for _, ppm in rows.values())
-
-
-def test_length_gini_matches_recompute(spark, sf_dir):
-    from zigchain_indexer_clickhouse_spark.operators.corpus_quality import (
-        length_gini_by_source,
-    )
-
-    docs = load(spark, sf_dir, "documents").select(
-        "source", "doc_id", "text"
-    ).collect()
-    per = defaultdict(list)
-    for r in docs:
-        per[r.source].append((len(r.text.strip().split(" ")), r.doc_id))
-    rows = {r.source: r for r in length_gini_by_source(spark, sf_dir).collect()}
-    assert rows.keys() == per.keys()
-    for s, v in per.items():
-        v.sort()
-        n = len(v)
-        tot = sum(x for x, _ in v)
-        num = sum((2 * (i + 1) - n - 1) * x for i, (x, _) in enumerate(v))
-        r = rows[s]
-        assert (r.n_docs, r.total_words) == (n, tot)
-        assert r.gini_ppm == num * 1_000_000 // (n * tot)
-        assert 0 <= r.gini_ppm < 1_000_000
-
-
-def test_simpson_diversity_matches_recompute(spark, sf_dir):
-    from zigchain_indexer_clickhouse_spark.operators.corpus_quality import (
-        simpson_diversity_by_source,
-    )
-
-    docs = load(spark, sf_dir, "documents").select("source", "text").collect()
-    per: dict[str, Counter] = defaultdict(Counter)
-    for r in docs:
-        per[r.source].update(r.text.strip().split(" "))
-    rows = {
-        r.source: r
-        for r in simpson_diversity_by_source(spark, sf_dir).collect()
-    }
-    assert rows.keys() == per.keys()
-    for s, cnt in per.items():
-        n = sum(cnt.values())
-        sq = sum(c * c for c in cnt.values())
-        r = rows[s]
-        assert (r.n_tokens, r.n_distinct) == (n, len(cnt))
-        assert r.simpson_ppm == (n * n - sq) * 1_000_000 // (n * n)
-        # a natural-text source is type-diverse: well above a coin flip
-        assert 500_000 < r.simpson_ppm < 1_000_000
-
-
 def test_span_coverage_consistent_with_pairs(spark, sf_dir):
     """#231 must classify exactly the #174 pair set, with coverages
     recomputed from per-doc fingerprint counts."""
     from collections import Counter
 
-    from zigchain_indexer_clickhouse_spark.operators.dedup import (
-        _shared_stage,
-    )
+    from zigchain_indexer_clickhouse_spark.catalog import _shared_stage
     from zigchain_indexer_clickhouse_spark.operators.text_analysis import (
         COV_FULL_PPM,
         COV_PARTIAL_PPM,

@@ -41,6 +41,10 @@ QUERIES = [
     "q21_sole_failing_supplier",  # per-orderkey collapsed EXISTS agg
     "q1_pricing_summary",     # full-scan agg (the scan-bound floor)
     # round-4 additions: the semantics-changed / new operators
+    "semdedup",               # capped-cluster pairwise join — replicas
+                              # share labels, so 10x data = 10x cluster
+                              # sizes and the hyperplane cap must engage
+    "ann_lsh_bucketed",       # multi-probe bucket join
     "msg_body_decode",        # pure-expression protobuf decode (scan-bound)
     "rpc_fetch_ingest",       # distributed fetch + parse
     "stream_event_counts",    # streaming drain (batch machinery + state)
@@ -50,18 +54,30 @@ QUERIES = [
     "seed_subtract_overlaps", # interval subtraction, one window pass
     "gap_backfill_window",    # stripe-windowed islands + gate scalars
     # round-5 late additions (#156-171)
+    "bpe_pair_stats",         # adjacent-pair explosion + map-side agg
     "heavy_hitters_topk",     # MG sketch pass + candidate-pruned recount
+    "knn_graph_bucketed",     # all-nodes bucket join (see note: replicas
+                              # are EXACT vector copies, so bucket density
+                              # grows 10x and pair work ~100x — the
+                              # worst-case load, not linear growth)
     "lttb_downsample",        # time-bucket argmax + 1-row bounds
     "ema_time_decay",         # (key,day) rollup + tiny contribution join
     "group_array_limited",    # rn-bounded collection, shared partitioning
+    "curation_funnel",        # composed gopher/repetition/dedup funnel
+    "jl_random_projection",   # pure narrow expression (scan floor)
     # round-5 final additions (#172-179)
     "quantile_exact_weighted",  # (key,value) pre-agg + same-key windows
+    "winnowing_fingerprint",    # expression-land window-min + fp equi-join
     "asof_join_tolerance",      # one union, both carry directions
     "window_funnel_strict",     # one window with leads on the funnel stream
     "ttl_group_by_rollup",      # cutoff-split scan: agg branch + raw branch
     "heavy_hitters_weighted",   # weighted MG sketch + pruned recount
     # round-6 additions
     "msg_registry_decode",      # 4-type registry decode + persisted stages
+    "segment_dedup_reassemble", # min-struct first-occurrence + reassembly
+    "boilerplate_strip",        # per-source df pass + reassembly
+    "ngram_novelty_decay",      # gram min-doc groupBy + join back
+    "token_pmi_pairs",          # pair agg + two vocab equi-joins
     "conversion_attribution",   # one sorted window pass per user
     "max_intersections_daily",  # two-level striped sweep line
     "point_in_range_join",      # bucketed range join, left-join tail
@@ -79,6 +95,7 @@ QUERIES = [
     "interval_length_sum",      # per-(user,day) union sweep
     "roc_auc_doc_length",       # global distinct-length rank window
     "token_flow_graph",         # two-stage wire decode + (from,to) agg
+    "decontaminate_transform",  # broadcast bench join + source ledger
 ]
 
 
@@ -181,6 +198,16 @@ def main() -> None:
         if times["base_rows"]:
             entry["output_growth"] = round(
                 times["scaled_rows"] / times["base_rows"], 1
+            )
+        if name == "knn_graph_bucketed":
+            entry["note"] = (
+                "replica embeddings are EXACT copies — the worst-case "
+                "bucket-density load (10x denser buckets, ~100x naive pair "
+                "work). The round-5 exact-duplicate collapse computes the "
+                "graph once per DISTINCT vector and expands exactly, so "
+                "wall tracks distinct density (pre-fix this row measured "
+                "79.9x; the collapse is bit-exact, see "
+                "tests/test_ann_graph_pq.py)"
             )
         report["queries"][name] = entry
         print(f"# {name}: base {times['base']}s -> scaled {times['scaled']}s "

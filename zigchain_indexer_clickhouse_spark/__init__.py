@@ -2,12 +2,14 @@
 
 Re-expresses the query/data-processing capabilities of the reference
 blockchain indexer (cryptocomicsdevs/zigchain-indexer-clickhouse,
-surveyed in SURVEY.md) as idiomatic Spark DataFrame plans.
+surveyed in SURVEY.md) as idiomatic Spark DataFrame plans, plus the
+training-data operators (similarity, text analysis, multimodal
+plumbing) still registered from earlier rounds.
 
 Layout:
     session    — tuned SparkSession builder (AQE, Arrow, shuffle conf)
     catalog    — parquet table loaders for the test star schema
-    functions/ — pure column-expression helpers (hashing, protobuf codec)
+    functions/ — pure column-expression helpers (hashing, encoding, text)
     operators/ — the operator inventory from SURVEY.md §2
     plans/     — query registry consumed by __spark_entry__ and bench.py
     sources/   — batch readers (parquet, RPC-shaped JSON)

@@ -3,11 +3,13 @@
 Tables (driver-generated, see TESTDATA.md): region nation customer
 supplier part orders lineitem events documents embeddings.
 
-``documents`` is still read by three operators: ``maybe_b64_decode``
-(the reference's retry_failed.js decode), ``heavy_hitters_topk`` (CH
-``topK``) and ``roc_auc_doc_length`` (CH ``arrayAUC``). No operator
-reads ``embeddings``; it stays in the catalog because the test-data
-generator writes it.
+``documents`` and ``embeddings`` are read by the training-data modules
+still registered (corpus_prep, corpus_transform, curation, data_mix,
+multimodal, similarity, text_analysis, segments' span_corruption).
+Three indexer-side operators read ``documents`` too:
+``maybe_b64_decode`` (the reference's retry_failed.js decode),
+``heavy_hitters_topk`` (CH ``topK``) and ``roc_auc_doc_length`` (CH
+``arrayAUC``).
 
 The module also holds the session's two memos: loaded table handles
 (``load``) and persisted shared stages (``_shared_stage``).
@@ -192,6 +194,7 @@ EXPECTED_COLUMNS: dict[str, tuple[str, ...]] = {
                  "l_returnflag", "l_linestatus", "l_shipdate"),
     "events": ("event_id", "ts", "user_id", "event_type", "value", "props"),
     "documents": ("doc_id", "text", "lang", "source", "n_chars"),
+    # label is load-bearing: semdedup/embedding_centroids cluster on it
     "embeddings": ("vec_id", "embedding", "label"),
 }
 

@@ -4,8 +4,8 @@ Parity targets (see SURVEY.md §2):
 - tx hashing: sha256 of the raw tx, uppercase hex
   (reference: src/core/worker.js:137).
 - portable 60-bit hash: identical results in Spark and DuckDB so the
-  driver's oracle can replay hash-sampled and hash-probed operators
-  (SAMPLE 1/k, the bloom filter) row for row.
+  driver's oracle can replay hash-sampled and fingerprint pipelines
+  row for row.
   Built from md5 hex (first 15 nibbles → < 2^60, fits a signed long);
   md5 is bit-identical across engines, unlike xxhash64/murmur3.
 
@@ -16,6 +16,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+# 2^31 - 1 (Mersenne prime): modulus for rolling fingerprints. Keeps
+# every intermediate product < 2^63.
+FINGERPRINT_MOD = 2_147_483_647
 
 
 def tx_hash(raw: Column) -> Column:
@@ -56,3 +60,29 @@ def portable_hash_sql(expr: str, seed_expr: str | None = None) -> str:
     if seed_expr is not None:
         s = f"({s} || '|' || CAST({seed_expr} AS VARCHAR))"
     return f"CAST('0x' || substr(md5({s}), 1, 15) AS BIGINT)"
+
+
+def rolling_fingerprint(tokens: Column) -> Column:
+    """Polynomial rolling hash over a token array:
+    ``h = (h * 31 + portable_hash(tok) % M) % M`` — the document
+    fingerprint operator (SURVEY.md §2 #43). Runs as a builtin
+    ``aggregate`` fold, no Python."""
+    return F.aggregate(
+        tokens,
+        F.lit(0).cast("long"),
+        lambda acc, x: (acc * 31 + portable_hash(x) % FINGERPRINT_MOD) % FINGERPRINT_MOD,
+    )
+
+
+def rolling_fingerprint_sql(tokens_expr: str) -> str:
+    """DuckDB rendering of :func:`rolling_fingerprint` via list_reduce.
+
+    list_reduce has no initial accumulator, so seed the list with 0L:
+    fold(list_prepend(0, hashes)).
+    """
+    h = portable_hash_sql("x")
+    return (
+        f"list_reduce(list_prepend(CAST(0 AS BIGINT), "
+        f"list_transform({tokens_expr}, x -> {h} % {FINGERPRINT_MOD})), "
+        f"(acc, v) -> (acc * 31 + v) % {FINGERPRINT_MOD})"
+    )

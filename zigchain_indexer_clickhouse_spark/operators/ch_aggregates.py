@@ -1,8 +1,8 @@
 """ClickHouse aggregate-function analogs that had no twin yet
-(SURVEY.md §2.2 #162-163, #168-169, #221): ``topK()`` heavy hitters,
-the ``sumMap()`` map-valued aggregate, ``groupArray(N)``/
-``groupUniqArray`` ordered-collection aggregates, ``minMap``/``maxMap``
-+ ``avgWeighted``, and the capped distinct ``uniqUpTo(N)``.
+(SURVEY.md §2.2 #162-163, #168-169): ``topK()`` heavy hitters, the
+``sumMap()`` map-valued aggregate, ``groupArray(N)``/``groupUniqArray``
+ordered-collection aggregates, and ``minMap``/``maxMap`` +
+``avgWeighted``.
 
 - ``topK(k)`` in ClickHouse is a SpaceSaving sketch: approximate, but
   the items it exists to find — the ones above a frequency threshold —
@@ -831,47 +831,3 @@ def cramers_v_assoc(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("long").alias("cramers_v_ppm"),
     )
 
-
-# --------------------------------------------------------------------------
-# 221. uniq_up_to_daily — ClickHouse uniqUpTo(N) analog
-# --------------------------------------------------------------------------
-_UNIQ_CAP = 10
-
-
-@register(
-    "uniq_up_to_daily",
-    oracle=f"""
-    WITH d AS (
-      SELECT DISTINCT event_type, CAST(ts AS DATE) AS day, user_id
-      FROM events
-    )
-    SELECT event_type, day,
-           CAST(LEAST(COUNT(*), {_UNIQ_CAP + 1}) AS BIGINT) AS uniq_up_to,
-           CAST(COUNT(*) > {_UNIQ_CAP} AS BIGINT) AS saturated
-    FROM d GROUP BY event_type, day
-    """,
-)
-def uniq_up_to_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ClickHouse ``uniqUpTo({_UNIQ_CAP})``: exact distinct users per
-    (event_type, day), saturating at {_UNIQ_CAP}+1 — the "are there
-    more than N distinct actors" gate (CH keeps ≤N+1 keys of state and
-    answers exactly below the cap; the saturated flag is all a
-    threshold consumer reads).
-
-    Scale shape: the (type, day, user) DISTINCT collapse is the only
-    corpus-sized step and it is map-side combinable (each task dedups
-    locally before the exchange); the capped count and flag are
-    per-group trivia. CH's bounded-state trick trades exactness above
-    the cap for memory — here the distinct collapse already bounds
-    the exchange, and the saturating output preserves CH's exact
-    answer-envelope: equal below the cap, pinned to N+1 above."""
-    d = (
-        load(spark, sf_dir, "events")
-        .select("event_type", F.col("ts").cast("date").alias("day"), "user_id")
-        .distinct()
-    )
-    return d.groupBy("event_type", "day").agg(
-        F.least(F.count("*"), F.lit(_UNIQ_CAP + 1))
-        .cast("long").alias("uniq_up_to"),
-        (F.count("*") > _UNIQ_CAP).cast("long").alias("saturated"),
-    )

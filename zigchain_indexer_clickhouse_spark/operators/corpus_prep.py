@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from zigchain_indexer_clickhouse_spark.catalog import load
+from zigchain_indexer_clickhouse_spark.catalog import _shared_stage, load
 from zigchain_indexer_clickhouse_spark.functions.hashing import (
     portable_hash,
     portable_hash_sql,
@@ -91,9 +91,6 @@ def bpe_pair_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate set and the test's guarantee assertion)."""
     from zigchain_indexer_clickhouse_spark.operators.ch_aggregates import (
         _mg_shrink,
-    )
-    from zigchain_indexer_clickhouse_spark.operators.dedup import (
-        _shared_stage,
     )
 
     pairs = _bpe_pairs(spark, sf_dir)
@@ -389,8 +386,7 @@ def dedup_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: canonicalization is pure string expressions (codegen,
     scan bandwidth); the dedup is one map-side-combinable groupBy on
-    the canonical URL — the same single-shuffle shape as dedup_exact,
-    and at 100 TB the exchange carries (url, min_id, count) partials
+    the canonical URL — a single shuffle, and at 100 TB the exchange carries (url, min_id, count) partials
     only."""
     d = load(spark, sf_dir, "documents")
     raw = d.select("doc_id", F.expr(_RAW_URL_SQL).alias("url"))

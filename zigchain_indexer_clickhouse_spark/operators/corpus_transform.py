@@ -6,9 +6,8 @@ between raw crawl and tokenizer.
 - ``segment_dedup_reassemble`` (#188): corpus-wide first-occurrence
   segment dedup with document REASSEMBLY — the CCNet paragraph/line
   dedup transform (arXiv:1911.00359 §3.1: every paragraph hashed,
-  duplicates dropped, docs rebuilt from survivors). segment_dedup
-  (#129) only reports per-doc dup ratios; this one emits the cleaned
-  corpus.
+  duplicates dropped, docs rebuilt from survivors): it emits the
+  cleaned corpus, not only per-doc dup ratios.
 - ``boilerplate_strip`` (#189): per-SOURCE frequent-segment removal —
   the header/footer/nav-bar idiom (RefinedWeb/Gopher boilerplate
   stage): a short segment occurring in many distinct documents of one
@@ -34,7 +33,7 @@ from pyspark.sql import functions as F
 from zigchain_indexer_clickhouse_spark.catalog import load
 from zigchain_indexer_clickhouse_spark.plans.registry import register
 
-SEG_TOKENS = 16       # reassembly segment width (matches segment_dedup)
+SEG_TOKENS = 16       # reassembly segment width
 BOILER_TOKENS = 2     # boilerplate unit: short template-sized segments
                       # (real corpora would use whole lines; the
                       # synthetic docs are short single-line token
@@ -107,8 +106,7 @@ def segment_dedup_reassemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep only each hash's global FIRST occurrence (lexicographically
     smallest (doc_id, idx) — deterministic under any layout), and
     rebuild every document from its surviving segments in original
-    order. Emits the cleaned corpus plus per-doc kept/dropped counts —
-    the transform #129 (segment_dedup) only measures.
+    order. Emits the cleaned corpus plus per-doc kept/dropped counts.
 
     Scale shape: first-occurrence selection is a map-side-combinable
     ``min(struct(doc_id, idx))`` + count groupBy on the segment hash —

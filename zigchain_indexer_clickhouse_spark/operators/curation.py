@@ -15,7 +15,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from zigchain_indexer_clickhouse_spark.catalog import load
+from zigchain_indexer_clickhouse_spark.catalog import _shared_stage, load
 from zigchain_indexer_clickhouse_spark.plans.registry import register
 
 PII_EMAIL = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
@@ -711,10 +711,6 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONCE physically, not once per consuming stage row — without the
     persist the four union branches each re-derived the whole
     pipeline (r5 verdict #1: 6.29x at the 10x probe)."""
-    from zigchain_indexer_clickhouse_spark.operators.dedup import (
-        _shared_stage,
-    )
-
     base = _shared_stage(
         "curation_funnel_base", spark, sf_dir,
         lambda: _curation_base(spark, sf_dir),

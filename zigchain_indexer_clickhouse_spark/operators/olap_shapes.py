@@ -151,7 +151,8 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The per-row profit is quantized to 1e-4 integers BEFORE summing
     (per-row doubles are bit-identical across engines; only summation
-    ORDER differs — integer sums make order irrelevant)."""
+    ORDER differs — integer sums make order irrelevant), the same
+    drift-proof pattern as embedding_centroids."""
     p = load(spark, sf_dir, "part").filter(F.col("p_name").like("%ring%"))
     s = load(spark, sf_dir, "supplier")
     n = load(spark, sf_dir, "nation")

@@ -1,13 +1,18 @@
-"""Audience-segment operator (SURVEY.md §2.2/#141): bitmap-style
-segment overlap.
+"""Audience-segment and training-example-prep operators
+(SURVEY.md §2.2/#141, §2.3/#142): bitmap-style segment overlap and
+T5-style span corruption.
 
-ClickHouse ships roaring-bitmap segment algebra (bitmapAnd/bitmapOr
-over user-id bitmaps) for audience overlap questions. Spark-first, the
-same answer comes from a per-user TYPE BITMASK: one distinct pass
-folds each user's event types into an int, one tiny agg counts mask
-combinations, and every pairwise intersection/union falls out of the
-≤2^|types| mask rows in expression land — the corpus shuffles once,
-the pair math touches dozens of rows.
+- ClickHouse ships roaring-bitmap segment algebra (bitmapAnd/bitmapOr
+  over user-id bitmaps) for audience overlap questions. Spark-first,
+  the same answer comes from a per-user TYPE BITMASK: one distinct
+  pass folds each user's event types into an int, one tiny agg counts
+  mask combinations, and every pairwise intersection/union falls out
+  of the ≤2^|types| mask rows in expression land — the corpus shuffles
+  once, the pair math touches dozens of rows.
+- Span corruption is the T5/UL2 objective prep: deterministic token
+  spans swap for sentinels, targets carry the dropped spans. A pure
+  narrow projection (expression-land list surgery) — the kind of
+  map-side transform that runs at ingest bandwidth at 100 TB.
 """
 
 from __future__ import annotations
@@ -19,6 +24,8 @@ from zigchain_indexer_clickhouse_spark.catalog import load
 from zigchain_indexer_clickhouse_spark.plans.registry import register
 
 SEG_TYPES = ("click", "view", "purchase", "error", "signup")
+SPAN_LEN = 3      # tokens per corrupted span
+SPAN_EVERY = 5    # corrupt every 5th span-position
 
 
 # --------------------------------------------------------------------------
@@ -136,4 +143,81 @@ def segment_overlap_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(n_both * 10000 DIV n_either AS BIGINT)").alias(
             "jaccard_bp"
         ),
+    )
+
+
+# --------------------------------------------------------------------------
+# 142. span_corruption — T5-style denoising objective prep
+# --------------------------------------------------------------------------
+@register(
+    "span_corruption",
+    oracle=f"""
+    WITH tok AS (
+      SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents
+    ),
+    marked AS (
+      SELECT doc_id, len(toks) AS n_tokens,
+             list_transform(generate_series(1, len(toks)),
+               i -> CASE
+                 WHEN ((i - 1) // {SPAN_LEN}) % {SPAN_EVERY} = 0
+                  AND (i - 1) % {SPAN_LEN} = 0
+                 THEN '<extra_id_' || CAST((i - 1) // ({SPAN_LEN} * {SPAN_EVERY})
+                      AS VARCHAR) || '>'
+                 WHEN ((i - 1) // {SPAN_LEN}) % {SPAN_EVERY} = 0
+                 THEN ''
+                 ELSE toks[i] END) AS inp,
+             list_transform(generate_series(1, len(toks)),
+               i -> CASE WHEN ((i - 1) // {SPAN_LEN}) % {SPAN_EVERY} = 0
+                    THEN toks[i] ELSE '' END) AS tgt
+      FROM tok
+    )
+    SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
+           array_to_string(list_filter(inp, x -> x <> ''), ' ') AS corrupted,
+           array_to_string(list_filter(tgt, x -> x <> ''), ' ') AS targets
+    FROM marked
+    """,
+)
+def span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """T5-style span-corruption prep (arXiv:1910.10683 §3.1.4,
+    deterministic variant): every {SPAN_EVERY}th {SPAN_LEN}-token span
+    is replaced by a numbered sentinel in the input and moved to the
+    target sequence. Deterministic span placement (position math, not
+    RNG) so corpus rebuilds produce identical examples and the oracle
+    replays them.
+
+    Plan: pure narrow projection — the span surgery happens in
+    expression land (transform over token indices + filter + join),
+    zero shuffle, runs at scan bandwidth on any corpus size. The
+    sentinel ids are span-ordinal, matching the T5 convention."""
+    d = load(spark, sf_dir, "documents")
+    toks = d.select(
+        "doc_id", F.split(F.trim("text"), " ").alias("toks")
+    )
+    sl, se = SPAN_LEN, SPAN_EVERY
+    idx = F.sequence(F.lit(1), F.size("toks"))
+    inp = F.transform(
+        idx,
+        lambda i: F.when(
+            (((i - 1) / sl).cast("long") % se == 0) & ((i - 1) % sl == 0),
+            F.concat(
+                F.lit("<extra_id_"),
+                ((i - 1) / (sl * se)).cast("long").cast("string"),
+                F.lit(">"),
+            ),
+        )
+        .when(((i - 1) / sl).cast("long") % se == 0, F.lit(""))
+        .otherwise(F.element_at("toks", i.cast("int"))),
+    )
+    tgt = F.transform(
+        idx,
+        lambda i: F.when(
+            ((i - 1) / sl).cast("long") % se == 0,
+            F.element_at("toks", i.cast("int")),
+        ).otherwise(F.lit("")),
+    )
+    return toks.select(
+        "doc_id",
+        F.size("toks").cast("long").alias("n_tokens"),
+        F.array_join(F.filter(inp, lambda x: x != ""), " ").alias("corrupted"),
+        F.array_join(F.filter(tgt, lambda x: x != ""), " ").alias("targets"),
     )

@@ -667,7 +667,7 @@ def _pq_codebook() -> list[list[list[int]]]:
     """Deterministic integer codebook [PQ_M][PQ_K][PQ_SUBDIM] in
     [-{PQ_SCALE}, {PQ_SCALE}], derived from md5 exactly like
     :func:`_hyperplanes` — inlined as literals into BOTH engines (a
-    production pipeline would train it with kmeans_lloyd and inline
+    production pipeline would train it with k-means and inline
     the trained values the same way)."""
     cb = []
     for j in range(PQ_M):

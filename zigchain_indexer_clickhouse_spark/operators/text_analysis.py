@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from zigchain_indexer_clickhouse_spark.catalog import load
+from zigchain_indexer_clickhouse_spark.catalog import _shared_stage, load
 from zigchain_indexer_clickhouse_spark.functions.hashing import (
     rolling_fingerprint,
     rolling_fingerprint_sql,
@@ -206,8 +206,8 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: tf aggregate on (doc, token), persisted — it feeds BOTH the
     scoring join and the df aggregate, and without the persist Catalyst
     prunes the count out of the df branch and re-scans + re-tokenizes
-    the corpus (explode is the expensive step at 100 TB; same
-    one-materialization-many-consumers pattern as dedup_minhash_lsh).
+    the corpus (explode is the expensive step at 100 TB; the
+    one-materialization-many-consumers pattern).
     df is map-side-combined per token (agg + broadcast back, NOT a
     window over token — a window would put every row of a hot token
     like "the" on one reducer). The 1-row corpus count joins as an
@@ -218,8 +218,6 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     produce bit-identical scores — libm log differs in the last ulp
     across engines and would flake the hash compare at round
     boundaries."""
-    from zigchain_indexer_clickhouse_spark.operators.dedup import _shared_stage
-
     d = load(spark, sf_dir, "documents").select(
         "doc_id", F.explode(F.split(F.trim("text"), " ")).alias("token")
     )
@@ -323,15 +321,10 @@ def winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     ZERO shuffle before fingerprints explode, and only distinct
     (doc, fp) pairs ever leave the scan). Pairing is an equi-join on
     the fingerprint key with boilerplate fingerprints capped at
-    df <= {WIN_DF_CAP} first (the stop-shingle idiom of
-    dedup_exact_substring) — candidate work is O(sum df^2) over
-    surviving fingerprints, never all-pairs. Only FULL windows emit
+    df <= {WIN_DF_CAP} first (the stop-shingle idiom) — candidate work
+    is O(sum df^2) over surviving fingerprints, never all-pairs. Only FULL windows emit
     (docs with fewer than {WIN_K + WIN_W - 1} words have no
     fingerprint), identically on both engines."""
-    from zigchain_indexer_clickhouse_spark.operators.dedup import (
-        _shared_stage,
-    )
-
     # the (doc_id, fp) frame has two consumers (the df-cap agg and the
     # pair join) — persist it so the gram-hash + window-min expression
     # chain runs once, not once per consumer (r5 verdict #2: the
@@ -767,10 +760,6 @@ def dup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     — no new corpus scan this session); adds one doc-keyed count agg
     and two equi-joins of the pair frame to it; everything else is the
     #174 plan verbatim."""
-    from zigchain_indexer_clickhouse_spark.operators.dedup import (
-        _shared_stage,
-    )
-
     fps = _shared_stage(
         "winnow_fps", spark, sf_dir, lambda: _winnow_fps(spark, sf_dir)
     )

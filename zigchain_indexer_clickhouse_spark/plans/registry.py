@@ -32,12 +32,19 @@ _MODULES = (
     "zigchain_indexer_clickhouse_spark.operators.indexer_core",
     "zigchain_indexer_clickhouse_spark.operators.queue_analytics",
     "zigchain_indexer_clickhouse_spark.operators.olap",
+    "zigchain_indexer_clickhouse_spark.operators.similarity",
+    "zigchain_indexer_clickhouse_spark.operators.text_analysis",
+    "zigchain_indexer_clickhouse_spark.operators.multimodal",
+    "zigchain_indexer_clickhouse_spark.operators.curation",
+    "zigchain_indexer_clickhouse_spark.operators.data_mix",
     "zigchain_indexer_clickhouse_spark.operators.engine_modifiers",
     "zigchain_indexer_clickhouse_spark.operators.ch_idioms",
     "zigchain_indexer_clickhouse_spark.operators.ch_aggregates",
     "zigchain_indexer_clickhouse_spark.operators.statistics",
     "zigchain_indexer_clickhouse_spark.operators.timeseries",
     "zigchain_indexer_clickhouse_spark.operators.segments",
+    "zigchain_indexer_clickhouse_spark.operators.corpus_prep",
+    "zigchain_indexer_clickhouse_spark.operators.corpus_transform",
     "zigchain_indexer_clickhouse_spark.operators.matviews",
     "zigchain_indexer_clickhouse_spark.operators.funnel",
     "zigchain_indexer_clickhouse_spark.operators.olap_extra",
@@ -60,14 +67,17 @@ _loaded = False
 _EXPENSIVE = frozenset({
     "tx_hash_bucketed_lookup", "partitioned_write_readback",
     "ingest_pipeline_full", "bucketed_colocated_join",
+    "multimodal_pipeline", "ann_ivf_coarse",
     "stream_event_counts", "stream_dedup", "stream_type_route",
     "stream_mv_daily", "stream_user_state", "stream_sessionize",
     "stream_static_enrich", "stream_block_ingest", "landing_ingest",
     "stream_agg_states", "stream_heavy_hitters", "stream_attribution",
-    "ingest_blocks", "overlapping_ranges", "tx_hash",
-    "schema_evolution_read",
+    "ingest_blocks", "overlapping_ranges", "tfidf_top_terms",
+    "semdedup", "embedding_near_dup", "tx_hash", "schema_evolution_read",
     "tx_envelope_decode",  # two persisted stages + envelope assembly
     "mad_outlier_bounds",  # two exact-median passes + bounds re-scan
+    "winnowing_fingerprint",  # gram hashing + fp pair join
+    "curation_funnel",  # doc-keyed 2-gram agg dominates
     "msg_registry_decode",  # 40-branch synthesis + walker stages
     "stream_registry_decode",  # streaming drain + registry synthesis
     "registry_decode_at_rest",  # one-time partitioned dataset write

@@ -928,7 +928,7 @@ def stream_gap_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # 229. stream_uniq_up_to — bounded-state streaming uniqUpTo (twin of #221)
 # --------------------------------------------------------------------------
-UUT_CAP = 10  # must match ch_aggregates._UNIQ_CAP (equivalence test-asserted)
+UUT_CAP = 10  # must match data_mix._UNIQ_CAP (equivalence test-asserted)
 
 
 def _uut_fn(key, pdf_iter, state):
