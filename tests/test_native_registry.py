@@ -203,16 +203,14 @@ def test_malformed_hex_raises_clear_error(spark):
 
 @pytest.fixture(scope="module")
 def grid_hexes(spark):
-    from pyspark.sql import functions as F
-
     from zigchain_indexer_clickhouse_spark.sources.tx_decode import (
-        _registry_blob_hex,
+        registry_blob_hex_df,
     )
 
-    gen = spark.createDataFrame(
+    gen = registry_blob_hex_df(spark.createDataFrame(
         [(e, u, v / 7.0) for e in range(80)
          for u, v in [(e * 13 % 9999, e * 31 % 997), (3, 0.0),
                       (9998, 54321.0)]],
         "event_id long, user_id long, value double",
-    ).select(_registry_blob_hex().alias("blob_hex"))
+    )).select("blob_hex")
     return [r["blob_hex"] for r in gen.collect()]

@@ -1,5 +1,5 @@
 """Generic protobuf walker pair (functions/protobuf.py proto_scan_hex /
-proto_encode_hex) — the constant-size registry path. Round-trips the
+proto_encode_hex) — the constant-size Column codec. Round-trips the
 encoder through the scanner, checks the scanner against HAND-built wire
 bytes (independent of the encoder), and exercises every fail-closed
 branch: the reference falls back to ``{error: 'Unknown message type',

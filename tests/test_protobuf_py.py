@@ -181,7 +181,7 @@ def test_registry_python_path_equals_native_path(spark):
     )
     from zigchain_indexer_clickhouse_spark.sources.tx_decode import (
         _REGISTRY_MOD,
-        _registry_blob_hex,
+        registry_blob_hex_df,
         registry_decoded_df_native,
         registry_decoded_df_py,
     )
@@ -189,9 +189,11 @@ def test_registry_python_path_equals_native_path(spark):
     if not native_available():
         pytest.skip("no C toolchain in this environment")
     blobs = (
-        load(spark, SF, "events")
-        .limit(400)  # 5 full passes over the 72-kind grid
-        .select(F.col("event_id"), _registry_blob_hex().alias("blob_hex"))
+        registry_blob_hex_df(
+            load(spark, SF, "events")
+            .limit(400)  # 5 full passes over the 72-kind grid
+            .select("event_id", "user_id", "value"))
+        .select("event_id", "blob_hex")
         .persist()
     )
     blobs.count()

@@ -107,6 +107,19 @@ def test_impl_drift_is_detected(monkeypatch):
     assert "msg_body_decode" in drifted
     assert "q1_pricing_summary" not in drifted
 
+    # C-source case: native_registry.py compiles and loads the kernel
+    # it names, so an edit to native_walk.c drifts the registry decode
+    kernel = os.path.join(_REPO, "zigchain_indexer_clickhouse_spark",
+                          "functions", "native_walk.c")
+    monkeypatch.setattr(
+        snap_mod, "_source",
+        lambda p: real(p) + (b"\n/* edited */\n" if os.path.samefile(p, kernel)
+                             else b""),
+    )
+    drifted = snap_mod.drift(cur, fresh, snap_mod.current_impl_hashes())
+    assert "msg_registry_decode" in drifted
+    assert "q1_pricing_summary" not in drifted
+
 
 def test_oracle_snapshot_has_no_stale_names():
     cur = snap_mod.current_hashes()

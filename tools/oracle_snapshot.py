@@ -93,9 +93,23 @@ def _imports(path: str) -> set[str]:
             if n.split(".")[0] == _PKG and _module_path(n) is not None}
 
 
+def _data_files(path: str) -> list[str]:
+    """Non-Python files beside module ``path`` that its source names as
+    a string literal: the sources it loads at run time, such as the C
+    kernel ``functions/native_walk.c`` that ``native_registry`` compiles."""
+    here = os.path.dirname(path)
+    names = {node.value for node in ast.walk(ast.parse(_source(path)))
+             if isinstance(node, ast.Constant) and isinstance(node.value, str)
+             and not node.value.endswith(".py")}
+    return sorted(os.path.join(here, n) for n in names
+                  if os.path.basename(n) == n
+                  and os.path.isfile(os.path.join(here, n)))
+
+
 def _closure_hash(module: str, memo: dict[str, str]) -> str:
     """sha256 (16 hex) over ``module`` and every intra-package module it
-    imports, transitively, in module-name order."""
+    imports, transitively, in module-name order, each followed by the
+    data files it names (:func:`_data_files`)."""
     h = memo.get(module)
     if h is None:
         seen, todo = set(), [module]
@@ -106,7 +120,11 @@ def _closure_hash(module: str, memo: dict[str, str]) -> str:
                 todo.extend(_imports(_module_path(m)))
         digest = hashlib.sha256()
         for m in sorted(seen):
-            digest.update(m.encode() + b"\0" + _source(_module_path(m)))
+            path = _module_path(m)
+            digest.update(m.encode() + b"\0" + _source(path))
+            for f in _data_files(path):
+                digest.update(b"\0" + os.path.basename(f).encode() + b"\0"
+                              + _source(f))
         h = memo[module] = digest.hexdigest()[:16]
     return h
 

@@ -36,6 +36,48 @@ import re
 _INT64_MAX = (1 << 63) - 1
 
 
+# --- wire encoder -----------------------------------------------------------
+# The writer side of the walker: the byte-level twin of the Column
+# encoders in functions/protobuf.py (pf_str / pf_ld / pf_varint folded
+# by proto_encode_hex), with the same loud failures.
+
+def enc_varint(n: int) -> bytes:
+    """Protobuf varint of ``n``: little-endian 7-bit groups, the
+    continuation bit on every group but the last. A negative value
+    would need the 10-byte two's-complement form — raise, like the
+    Column writer, rather than emit bytes a decoder would misparse."""
+    if n < 0:
+        raise ValueError("protobuf varint writer: negative value")
+    out = bytearray()
+    while n >= 128:
+        out.append(n & 127 | 128)
+        n >>= 7
+    out.append(n)
+    return bytes(out)
+
+
+def _enc_tag(fno: int, wt: int) -> bytes:
+    tag = fno << 3 | wt
+    if tag >= 128:
+        raise ValueError("protobuf field number exceeds single-byte tag")
+    return bytes((tag,))
+
+
+def enc_varint_field(fno: int, v: int) -> bytes:
+    """Scalar varint field (wire type 0)."""
+    return _enc_tag(fno, 0) + enc_varint(v)
+
+
+def enc_ld_field(fno: int, payload: bytes) -> bytes:
+    """Length-delimited field (wire type 2): nested message or bytes."""
+    return _enc_tag(fno, 2) + enc_varint(len(payload)) + payload
+
+
+def enc_str_field(fno: int, s: str) -> bytes:
+    """Length-delimited UTF-8 string field."""
+    return enc_ld_field(fno, s.encode())
+
+
 def walk(data: bytes, max_fields: int = 8):
     """Walk every top-level protobuf field of ``data``. Returns
     ``(ok, ld, vi)`` where ``ld`` maps field_no → [payload bytes, ...]

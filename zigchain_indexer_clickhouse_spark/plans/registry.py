@@ -78,8 +78,6 @@ _EXPENSIVE = frozenset({
     "mad_outlier_bounds",  # two exact-median passes + bounds re-scan
     "winnowing_fingerprint",  # gram hashing + fp pair join
     "curation_funnel",  # doc-keyed 2-gram agg dominates
-    "msg_registry_decode",  # 40-branch synthesis + walker stages
-    "stream_registry_decode",  # streaming drain + registry synthesis
     "registry_decode_at_rest",  # one-time partitioned dataset write
     "compaction_binpack",  # two table writes + read-back audit
     "stream_gap_detection",  # streaming drain

@@ -24,10 +24,9 @@ def get_spark(app_name: str = "zigchain-indexer-spark", master: str | None = Non
     builder = (
         SparkSession.builder.appName(app_name)
         # The gate runs every operator in one JVM, and the persisted
-        # shared stages plus their analyzed plans (the 67-branch
-        # registry synthesis tree among them) accumulate on the driver
-        # heap over the run; the JVM default 1g leaves no headroom for
-        # that. Only effective when this builder creates the JVM — a
+        # shared stages plus their analyzed plans accumulate on the
+        # driver heap over the run; the JVM default 1g leaves no
+        # headroom for that. Only effective when this builder creates the JVM — a
         # foreign session keeps its own heap.
         # SPARK_GRAFT_DRIVER_MEM wins over the legacy SPARK_DRIVER_MEMORY
         # name; one config site (a duplicate 8g config below used to

@@ -27,11 +27,13 @@ positional reference (the msg_body_decode 10 MiB codegen lesson).
 
 from __future__ import annotations
 
+import math
 import os
 import threading
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from zigchain_indexer_clickhouse_spark.catalog import _shared_stage, load
 from zigchain_indexer_clickhouse_spark.functions.protobuf import (
@@ -40,7 +42,6 @@ from zigchain_indexer_clickhouse_spark.functions.protobuf import (
     encode_any_msg,
     pf_ld,
     pf_str,
-    pf_varint,
     ld1,
     proto_encode_hex,
     proto_scan_hex,
@@ -51,6 +52,11 @@ from zigchain_indexer_clickhouse_spark.functions.protobuf import (
     msg_send_fields,
     tx_body_messages,
     tx_raw_body,
+)
+from zigchain_indexer_clickhouse_spark.functions.protobuf_py import (
+    enc_ld_field as _ld,
+    enc_str_field as _str,
+    enc_varint_field as _vi,
 )
 from zigchain_indexer_clickhouse_spark.plans.registry import register
 from zigchain_indexer_clickhouse_spark.sources.partitioned_write import (
@@ -568,532 +574,313 @@ _REGISTRY_ORACLE_SQL = f"""
     """
 
 
-# Memoized synthesis Column (r12 gate-cost profile): building the
-# 67-branch tree costs ~35 s of SEQUENTIAL py4j round trips (tens of
-# thousands of Column constructor calls) — per CALL, before Catalyst
-# even sees it. The tree is deterministic (unresolved F.col refs, no
-# free state) and a Column is an immutable JVM expression handle that
-# any select() in the same JVM may reference, across sessions of one
-# process — so build it once, on first use. The three call sites
-# (batch, stream, at-rest) share one construction per process.
-# Analysis of the resulting plan is separate and still per-DataFrame
-# (the _shared_stage memos bound that for batch shapes).
-_BLOB_HEX_MEMO: Column | None = None
+class _Ev:
+    """The per-event quantities the registry bodies share, derived from
+    (event_id, user_id, value). Every dataset holds non-negative ids,
+    where Python's flooring ``%`` and Spark's truncating one (the
+    oracle's) agree; a negative id raises instead of taking a wire the
+    oracle does not describe."""
+
+    __slots__ = ("e", "u", "amt", "user", "recipient", "grantee",
+                 "val_a", "pid", "tout")
+
+    def __init__(self, event_id: int, user_id: int, value: float):
+        if event_id < 0 or user_id < 0:
+            raise ValueError(
+                f"registry synthesis: negative id ({event_id}, {user_id})")
+        self.e, self.u = event_id, user_id
+        self.amt = math.floor(value * 100)
+        self.user = f"zig1u{user_id}"
+        self.recipient = f"zig1c{user_id}"
+        self.grantee = f"zig1g{user_id % 31}"
+        self.val_a = f"zigvaloper{user_id % 50}"
+        self.pid = user_id % 10000
+        self.tout = event_id % 10000
 
 
-def _registry_blob_hex() -> Column:
-    global _BLOB_HEX_MEMO
-    if _BLOB_HEX_MEMO is None:
-        _BLOB_HEX_MEMO = _build_registry_blob_hex()
-    return _BLOB_HEX_MEMO
+# shared sub-messages: coins, Description, the 2-coin MsgSend body and
+# its Any, the 7-field IBC Packet (a 9-byte nanosecond timeout), Height,
+# the light-client state Anys, and the group / proposal / connection /
+# channel parts several bodies embed
+def _coin(r: _Ev) -> bytes:
+    return _str(1, "uzig") + _str(2, str(r.amt))
 
 
-def _build_registry_blob_hex() -> Column:
-    """The 67-type registry wire synthesis as ONE column expression
-    over (event_id, user_id, value) — shared verbatim by the batch
-    operator (#187), its streaming twin and the at-rest dataset, so
-    the three can never drift. kind = event_id % 72; kinds 67-71
-    carry the unregistered custom payload. Round 9 makes the wire
-    REAL-CHAIN SHAPED (VERDICT r8 missing #1/#2): repeated fields
-    (2-coin MsgSend, 2-output MsgMultiSend, gov v1 deposits and the
-    repeated-Any messages of gov v1 MsgSubmitProposal) and wide
+def _coin2(r: _Ev) -> bytes:
+    return _str(1, "uatom") + _str(2, str(r.amt + 1))
+
+
+def _send_body(r: _Ev) -> bytes:
+    # TWO coins: the repeated field 3 appears twice, the multi-coin
+    # MsgSend cosmjs produces
+    return (_str(1, r.user) + _str(2, r.recipient)
+            + _ld(3, _coin(r)) + _ld(3, _coin2(r)))
+
+
+def _send_any(r: _Ev) -> bytes:
+    return _str(1, _MSG_SEND_URL) + _ld(2, _send_body(r))
+
+
+def _packet(r: _Ev) -> bytes:
+    return (_vi(1, r.e % 1000) + _str(2, "transfer")
+            + _str(3, f"channel-{r.e % 11}") + _str(4, "transfer")
+            + _str(5, f"channel-{r.e % 7}") + _ld(6, f"pkt:{r.u}".encode())
+            + _vi(8, _PKT_TOUT_BASE + r.tout))
+
+
+def _height(r: _Ev) -> bytes:
+    return _vi(1, 1) + _vi(2, r.tout)
+
+
+def _cs_any(r: _Ev) -> bytes:
+    return (_str(1, _TM_CLIENT_STATE_URL)
+            + _ld(2, _str(1, f"zigchain-{r.u % 3}")))
+
+
+def _cons_any(r: _Ev) -> bytes:
+    return _str(1, _TM_CONSENSUS_STATE_URL) + _ld(2, _vi(1, r.tout))
+
+
+def _weighted_option(r: _Ev) -> bytes:
+    return _vi(1, r.u % 4 + 1) + _str(2, "1.000000000000000000")
+
+
+def _text_prop_any(r: _Ev) -> bytes:
+    return _str(1, _TEXT_PROPOSAL_URL) + _ld(
+        2, _str(1, f"prop-{r.e % 100}") + _str(2, "synthetic text proposal"))
+
+
+def _member_req(r: _Ev) -> bytes:
+    return _str(1, r.user) + _str(2, "1") + _str(3, "member-meta")
+
+
+_POLICY_ANY = _str(1, _THRESHOLD_POLICY_URL) + _ld(2, _str(1, "2"))
+
+
+def _client_id(r: _Ev) -> str:
+    return f"07-tendermint-{r.u % 5}"
+
+
+def _conn_id(r: _Ev) -> str:
+    return f"connection-{r.e % 13}"
+
+
+def _conn_cp(r: _Ev) -> bytes:
+    return _str(1, _client_id(r)) + _str(2, _conn_id(r))
+
+
+_CONN_VERSION = _str(1, "1")
+
+
+def _chan_id(r: _Ev) -> str:
+    return f"channel-{r.e % 11}"
+
+
+def _channel(r: _Ev) -> bytes:
+    # Channel.state is the yes-keyed enum (1 ⇔ user_id % 4 == 0, like
+    # the vote option); counterparty + version round out the 4 fields
+    return (_vi(1, r.u % 4 + 1) + _vi(2, 1)
+            + _ld(3, _str(1, "transfer") + _str(2, f"channel-{r.e % 7}"))
+            + _str(5, "ics20-1"))
+
+
+def _delegate(r: _Ev) -> bytes:
+    return _str(1, r.user) + _str(2, r.val_a) + _ld(3, _coin(r))
+
+
+def _group_upd_admin(r: _Ev) -> bytes:
+    return _str(1, r.user) + _vi(2, r.pid) + _str(3, r.recipient)
+
+
+def _group_policy_admin(r: _Ev) -> bytes:
+    return _str(1, r.user) + _str(2, f"zig1p{r.u}") + _str(3, r.recipient)
+
+
+def _group_withdraw(r: _Ev) -> bytes:
+    return _vi(1, r.pid) + _str(2, r.user)
+
+
+def _chan_confirm(r: _Ev) -> bytes:
+    return (_str(1, "transfer") + _str(2, _chan_id(r)) + _ld(3, b"proofA")
+            + _ld(4, _height(r)) + _str(5, r.user))
+
+
+def _custom(r: _Ev) -> bytes:
+    return f"custom:{r.e}".encode()
+
+
+# kind (event_id % 72) → Any body; entry i goes with _REGISTRY_URLS[i],
+# and kinds 67-71 carry the unregistered custom payload. Kinds that
+# share one wire shape under distinct urls share one body function.
+_REGISTRY_BODIES: list = [
+    _send_body,                                                    # 0
+    lambda r: (_str(1, r.user) + _str(2, f"zig1w{r.e % 7}")
+               + _str(3, f'{{"transfer":{{"amount":"{r.amt}"}}}}')),
+    _delegate,
+    lambda r: _vi(1, r.pid) + _str(2, r.user) + _vi(3, r.u % 4 + 1),
+    lambda r: (_str(1, "transfer") + _str(2, f"channel-{r.e % 11}")
+               + _ld(3, _coin(r)) + _str(4, r.user)
+               + _str(5, f"cosmos1r{r.u}")
+               + _vi(7, _XFER_TOUT_BASE + r.tout)),    # 5-byte varint
+    _delegate,                                                     # 5
+    lambda r: _str(1, r.user) + _str(2, r.val_a),
+    lambda r: (_str(1, r.user) + _str(2, r.val_a)
+               + _str(3, f"zigvaloper{(r.u + 1) % 50}") + _ld(4, _coin(r))),
+    lambda r: _str(1, r.user) + _str(2, f"zig1w{r.u % 97}"),
+    lambda r: _vi(1, r.pid) + _str(2, r.user) + _ld(3, _coin(r)),
+    # authz Grant{authorization: Any(StakeAuthorization)}          # 10
+    lambda r: (_str(1, r.user) + _str(2, r.grantee) + _ld(3, _ld(
+        1, _str(1, _STAKE_AUTH_URL) + _ld(2, _vi(4, 1))))),
+    # authz MsgExec carries a full MsgSend Any as its payload
+    lambda r: _str(1, r.grantee) + _ld(2, _send_any(r)),
+    lambda r: _str(1, r.user) + _str(2, r.grantee) + _str(3, _MSG_SEND_URL),
+    lambda r: (_str(1, r.user) + _str(2, r.grantee) + _ld(
+        3, _str(1, _BASIC_ALLOWANCE_URL) + _ld(2, _ld(1, _coin(r))))),
+    lambda r: _str(1, r.user) + _str(2, r.grantee),
+    lambda r: _str(1, r.val_a),                                    # 15
+    lambda r: (_ld(1, _str(1, f"val-{r.u % 50}")) + _str(3, "1")
+               + _str(4, r.user) + _str(5, r.val_a) + _ld(7, _coin(r))),
+    lambda r: (_ld(1, _str(1, f"val-{r.u % 50}")) + _str(2, r.val_a)
+               + _str(3, "0.100000000000000000") + _str(4, "1")),
+    lambda r: (_str(1, r.user) + _str(2, r.recipient) + _ld(3, _coin(r))
+               + _vi(4, r.tout)),
+    # MsgMultiSend: one 2-coin Input and TWO Outputs (sums agree)
+    lambda r: (_ld(1, _str(1, r.user) + _ld(2, _coin(r)) + _ld(2, _coin2(r)))
+               + _ld(2, _str(1, r.recipient) + _ld(2, _coin(r)))
+               + _ld(2, _str(1, f"zig1d{r.u}") + _ld(2, _coin2(r)))),
+    lambda r: (_str(1, r.user) + _str(2, r.val_a) + _ld(3, _coin(r))  # 20
+               + _vi(4, r.tout)),
+    lambda r: _ld(1, _coin(r)) + _str(2, r.user),
+    lambda r: _str(1, r.val_a),
+    lambda r: (_vi(1, r.pid) + _str(2, r.user)
+               + _ld(3, _weighted_option(r))),
+    lambda r: _ld(1, _text_prop_any(r)) + _ld(2, _coin(r)) + _str(3, r.user),
+    # IBC client update: the header rides as a nested Any           # 25
+    lambda r: (_str(1, _client_id(r)) + _ld(
+        2, _str(1, _TM_HEADER_URL) + _ld(2, _vi(1, r.tout)))),
+    lambda r: (_ld(1, _packet(r)) + _ld(2, b"proof") + _ld(3, _height(r))
+               + _str(4, r.user)),
+    lambda r: _str(1, r.user) + _str(2, r.recipient) + _ld(3, _coin(r)),
+    # periodic vesting: start_time varint + ONE Period
+    lambda r: (_str(1, r.user) + _str(2, r.recipient) + _vi(3, r.tout)
+               + _ld(4, _vi(1, 86) + _ld(2, _coin(r)))),
+    lambda r: (_str(1, r.user) + _str(2, f"zig1adm{r.u % 9}")
+               + _vi(3, r.e % 500) + _str(4, f"contract-{r.e % 7}")
+               + _str(5, f'{{"count":"{r.amt}"}}') + _ld(6, _coin(r))),
+    lambda r: (_str(1, r.user) + _str(2, "bank")                   # 30
+               + _str(3, "nonnegative-outstanding")),
+    # gov v1: the vote carries metadata, the deposit two coins, and
+    # submit_proposal REPEATED Any messages (two full MsgSends)
+    lambda r: (_vi(1, r.pid) + _str(2, r.user) + _vi(3, r.u % 4 + 1)
+               + _str(4, "v1-vote-metadata")),
+    lambda r: (_vi(1, r.pid) + _str(2, r.user) + _ld(3, _coin(r))
+               + _ld(3, _coin2(r))),
+    lambda r: (_ld(1, _send_any(r)) + _ld(1, _send_any(r))
+               + _ld(2, _coin2(r)) + _str(3, r.user)),
+    lambda r: (_ld(1, _packet(r)) + _ld(2, b"ack-ok") + _ld(3, b"proofA")
+               + _ld(4, _height(r)) + _str(5, r.user)),
+    lambda r: (_ld(1, _packet(r)) + _ld(2, b"proofU")               # 35
+               + _ld(3, _height(r))
+               + _vi(4, _XFER_TOUT_BASE + r.tout + 1)  # next_sequence_recv
+               + _str(5, r.user)),
+    # evidence: an Equivocation Any (height, power, consensus address)
+    lambda r: _str(1, r.user) + _ld(2, _str(1, _EQUIVOCATION_URL) + _ld(
+        2, _vi(1, r.tout) + _vi(3, r.amt) + _str(4, f"zigvalcons{r.u}"))),
+    lambda r: _ld(1, _text_prop_any(r)) + _str(2, "zig1govauthority"),
+    lambda r: (_str(1, r.user) + _ld(2, _member_req(r))
+               + _str(3, "grp-meta")),
+    lambda r: _str(1, r.user) + _vi(2, r.pid) + _ld(3, _member_req(r)),
+    _group_upd_admin,                                              # 40
+    _group_upd_admin,          # update_metadata: same wire shape
+    lambda r: (_str(1, r.user) + _vi(2, r.pid) + _str(3, "pol-meta")
+               + _ld(4, _POLICY_ANY)),
+    lambda r: (_str(1, r.user) + _ld(2, _member_req(r)) + _str(3, "gm")
+               + _str(4, "pm") + _vi(5, 1) + _ld(6, _POLICY_ANY)),
+    _group_policy_admin,
+    lambda r: (_str(1, r.user) + _str(2, f"zig1p{r.u}")            # 45
+               + _ld(3, _POLICY_ANY)),
+    _group_policy_admin,       # policy_metadata: same wire shape
+    lambda r: (_str(1, f"zig1p{r.u}") + _str(2, r.user)
+               + _str(3, "prop-meta") + _ld(4, _send_any(r)) + _vi(5, 1)),
+    _group_withdraw,
+    lambda r: (_vi(1, r.pid) + _str(2, r.user) + _vi(3, r.u % 4 + 1)
+               + _str(4, "grp-vote-meta") + _vi(5, 1)),
+    _group_withdraw,           # group exec: same wire shape         # 50
+    lambda r: _str(1, r.user) + _vi(2, r.pid),
+    lambda r: (_vi(1, r.pid) + _str(2, r.user)
+               + _ld(3, _weighted_option(r))
+               + _str(4, "v1-weighted-metadata")),
+    lambda r: _ld(1, _cs_any(r)) + _ld(2, _cons_any(r)) + _str(3, r.user),
+    lambda r: (_str(1, _client_id(r)) + _ld(2, _cs_any(r))
+               + _ld(3, _cons_any(r)) + _ld(4, b"proofC")
+               + _ld(5, b"proofS") + _str(6, r.user)),
+    lambda r: (_str(1, _client_id(r)) + _ld(                       # 55
+        2, _str(1, _TM_MISBEHAVIOUR_URL) + _ld(2, _str(1, _client_id(r))))
+        + _str(3, r.user)),
+    lambda r: (_str(1, _client_id(r)) + _ld(2, _conn_cp(r))
+               + _ld(3, _CONN_VERSION) + _vi(4, r.tout) + _str(5, r.user)),
+    # try: fields 1,3,4,5,7,8,12 of the 13-field proto (cosmjs omits
+    # the defaulted and deprecated ones)
+    lambda r: (_str(1, _client_id(r)) + _ld(3, _cs_any(r))
+               + _ld(4, _conn_cp(r)) + _vi(5, r.tout) + _ld(7, _height(r))
+               + _ld(8, b"proofI") + _str(12, r.user)),
+    lambda r: (_str(1, _conn_id(r)) + _str(2, f"connection-{r.e % 17}")
+               + _ld(3, _CONN_VERSION) + _ld(4, _cs_any(r))
+               + _ld(5, _height(r)) + _ld(6, b"proofT") + _str(10, r.user)),
+    lambda r: (_str(1, _conn_id(r)) + _ld(2, b"proofA")
+               + _ld(3, _height(r)) + _str(4, r.user)),
+    lambda r: (_str(1, "transfer") + _ld(2, _channel(r))           # 60
+               + _str(3, r.user)),
+    lambda r: (_str(1, "transfer") + _ld(3, _channel(r))
+               + _str(4, "ics20-1") + _ld(5, b"proofI")
+               + _ld(6, _height(r)) + _str(7, r.user)),
+    lambda r: (_str(1, "transfer") + _str(2, _chan_id(r))
+               + _str(3, f"channel-{r.e % 7}") + _str(4, "ics20-1")
+               + _ld(5, b"proofT") + _ld(6, _height(r)) + _str(7, r.user)),
+    _chan_confirm,
+    lambda r: _str(1, "transfer") + _str(2, _chan_id(r)) + _str(3, r.user),
+    _chan_confirm,             # close_confirm: same wire shape      # 65
+    lambda r: (_ld(1, _packet(r)) + _ld(2, b"proofU") + _ld(3, b"proofX")
+               + _ld(4, _height(r)) + _vi(5, _XFER_TOUT_BASE + r.tout + 2)
+               + _str(6, r.user)),
+    *[_custom] * (_REGISTRY_MOD - len(_REGISTRY_URLS)),
+]
+_BLOB_URLS = (*_REGISTRY_URLS,
+              *[_UNKNOWN_URL] * (_REGISTRY_MOD - len(_REGISTRY_URLS)))
+
+
+def registry_blob(event_id: int, user_id: int, value: float) -> bytes:
+    """The registry conformance wire of one event: an Any of the
+    kind's type url (kind = event_id % 72) around the kind's body.
+    Real-chain shaped: repeated fields (2-coin MsgSend, 2-output
+    MsgMultiSend, gov v1 deposits and repeated-Any submits) and wide
     varints (5-byte transfer timeouts, 9-byte nanosecond packet
-    timeouts, 5-byte next_sequence_recv).
+    timeouts)."""
+    kind = event_id % _REGISTRY_MOD
+    body = _REGISTRY_BODIES[kind](_Ev(event_id, user_id, value))
+    return _str(1, _BLOB_URLS[kind]) + _ld(2, body)
 
-    The shared sub-messages are LAMBDA-BOUND in two layers (coins /
-    Description, then MsgSend body / Packet / Height) before the
-    67-branch CASE references them: coin alone rides in ~20 bodies
-    and the 2-coin send body in three (authz MsgExec and twice in
-    gov v1 submit), so unbound they multiply the plan the same way
-    the walker step did — the r9 vanilla-session (1 GiB) stream run
-    died on exactly that headroom."""
-    kind = (F.col("event_id") % _REGISTRY_MOD).cast("int")
-    uid = F.col("user_id").cast("string")
-    user = F.concat(F.lit("zig1u"), uid)
-    recipient = F.concat(F.lit("zig1c"), uid)
-    grantee = F.concat(F.lit("zig1g"),
-                       (F.col("user_id") % 31).cast("string"))
-    val_a = F.concat(F.lit("zigvaloper"),
-                     (F.col("user_id") % 50).cast("string"))
-    val_b = F.concat(F.lit("zigvaloper"),
-                     ((F.col("user_id") + 1) % 50).cast("string"))
-    amt = F.floor(F.col("value") * 100).cast("long")
-    amt_s = amt.cast("string")
-    amt1_s = (amt + 1).cast("string")
-    pid = (F.col("user_id") % 10000).cast("bigint")
-    tout = (F.col("event_id") % 10000).cast("bigint")
-    xfer_tout = F.lit(_XFER_TOUT_BASE).cast("bigint") + tout
-    pkt_tout = F.lit(_PKT_TOUT_BASE).cast("bigint") + tout
 
-    shared1 = F.struct(
-        proto_encode_hex(pf_str(1, F.lit("uzig")),
-                         pf_str(2, amt_s)).alias("coin"),
-        proto_encode_hex(pf_str(1, F.lit("uatom")),
-                         pf_str(2, amt1_s)).alias("coin2"),
-        proto_encode_hex(pf_str(1, F.concat(
-            F.lit("val-"),
-            (F.col("user_id") % 50).cast("string")))).alias("desc"),
-    )
+def registry_blob_hex_df(df: DataFrame) -> DataFrame:
+    """``df`` plus ``blob_hex``, the uppercase-hex :func:`registry_blob`
+    of each row's (event_id, user_id, value), synthesized in one
+    ``mapInArrow`` over the Arrow batches. The batch operator, its
+    stream twin and the at-rest dataset all build their wire here."""
+    import pyarrow as pa
 
-    def with_shared1(c1: Column) -> Column:
-        coin, coin2, desc = c1["coin"], c1["coin2"], c1["desc"]
-        # TWO-coin amount: the repeated field number 3 appears twice —
-        # exactly the multi-coin MsgSend cosmjs produces and the r8
-        # walker failed closed on
-        shared2 = F.struct(
-            proto_encode_hex(
-                pf_str(1, user), pf_str(2, recipient),
-                pf_ld(3, coin), pf_ld(3, coin2)).alias("send_body"),
-            # IBC Packet: a 7-field nested message (sequence, route
-            # strings, opaque data, trailing nanosecond timeout — a
-            # 9-byte wire varint) shared by recv/ack/timeout
-            proto_encode_hex(
-                pf_varint(1, F.col("event_id") % 1000),
-                pf_str(2, F.lit("transfer")),
-                pf_str(3, F.concat(F.lit("channel-"),
-                                   (F.col("event_id") % 11)
-                                   .cast("string"))),
-                pf_str(4, F.lit("transfer")),
-                pf_str(5, F.concat(F.lit("channel-"),
-                                   (F.col("event_id") % 7)
-                                   .cast("string"))),
-                pf_ld(6, F.hex(F.concat(F.lit("pkt:"), uid)
-                               .cast("binary"))),
-                pf_varint(8, pkt_tout),
-            ).alias("packet"),
-            proto_encode_hex(pf_varint(1, F.lit(1)),
-                             pf_varint(2, tout)).alias("height"),
-            # r12 IBC handshake: the light-client state/consensus Anys
-            # ride in four bodies (create/upgrade client, connection
-            # try/ack) — bound here so the dispatch CASE references
-            # them as struct fields, not four copies of the tree
-            proto_encode_hex(
-                pf_str(1, F.lit(_TM_CLIENT_STATE_URL)),
-                pf_ld(2, proto_encode_hex(pf_str(1, F.concat(
-                    F.lit("zigchain-"),
-                    (F.col("user_id") % 3).cast("string")))))
-            ).alias("cs_any"),
-            proto_encode_hex(
-                pf_str(1, F.lit(_TM_CONSENSUS_STATE_URL)),
-                pf_ld(2, proto_encode_hex(pf_varint(1, tout)))
-            ).alias("cons_any"),
-        )
+    schema = StructType([*df.schema.fields,
+                         StructField("blob_hex", StringType())])
 
-        def with_shared2(c2: Column) -> Column:
-            send_body = c2["send_body"]
-            packet = c2["packet"]
-            height = c2["height"]
-            cs_any = c2["cs_any"]
-            cons_any = c2["cons_any"]
-            exec_body = proto_encode_hex(
-                pf_str(1, user),
-                pf_str(2, F.concat(F.lit("zig1w"),
-                                   (F.col("event_id") % 7).cast("string"))),
-                pf_str(3, F.concat(F.lit('{"transfer":{"amount":"'),
-                                   amt_s, F.lit('"}}'))),
-            )
-            delegate_body = proto_encode_hex(
-                pf_str(1, user), pf_str(2, val_a), pf_ld(3, coin))
-            vote_body = proto_encode_hex(
-                pf_varint(1, pid), pf_str(2, user),
-                pf_varint(3, F.col("user_id") % 4 + 1))
-            transfer_body = proto_encode_hex(
-                pf_str(1, F.lit("transfer")),
-                pf_str(2, F.concat(F.lit("channel-"),
-                                   (F.col("event_id") % 11).cast("string"))),
-                pf_ld(3, coin), pf_str(4, user),
-                pf_str(5, F.concat(F.lit("cosmos1r"), uid)),
-                pf_varint(7, xfer_tout),   # 5-byte wire varint
-            )
-            withdraw_body = proto_encode_hex(
-                pf_str(1, user), pf_str(2, val_a))
-            redelegate_body = proto_encode_hex(
-                pf_str(1, user), pf_str(2, val_a), pf_str(3, val_b),
-                pf_ld(4, coin))
-            setwithdraw_body = proto_encode_hex(
-                pf_str(1, user),
-                pf_str(2, F.concat(F.lit("zig1w"),
-                                   (F.col("user_id") % 97).cast("string"))))
-            deposit_body = proto_encode_hex(
-                pf_varint(1, pid), pf_str(2, user), pf_ld(3, coin))
-            # authz Grant{authorization: Any(StakeAuthorization)} —
-            # nested message inside an Any inside the MsgGrant body
-            auth_any = proto_encode_hex(
-                pf_str(1, F.lit(_STAKE_AUTH_URL)),
-                pf_ld(2, proto_encode_hex(pf_varint(4, F.lit(1)))))
-            grant_body = proto_encode_hex(
-                pf_str(1, user), pf_str(2, grantee),
-                pf_ld(3, proto_encode_hex(pf_ld(1, auth_any))))
-            # authz MsgExec carries a REGISTERED message as its payload
-            # — the inner Any is a full MsgSend the decode side must
-            # unwrap; gov v1 submit embeds it TWICE as repeated Any
-            send_any = proto_encode_hex(
-                pf_str(1, F.lit(_MSG_SEND_URL)), pf_ld(2, send_body))
-            authz_exec_body = proto_encode_hex(
-                pf_str(1, grantee), pf_ld(2, send_any))
-            revoke_body = proto_encode_hex(
-                pf_str(1, user), pf_str(2, grantee),
-                pf_str(3, F.lit(_MSG_SEND_URL)))
-            allow_any = proto_encode_hex(
-                pf_str(1, F.lit(_BASIC_ALLOWANCE_URL)),
-                pf_ld(2, proto_encode_hex(pf_ld(1, coin))))
-            grant_allow_body = proto_encode_hex(
-                pf_str(1, user), pf_str(2, grantee), pf_ld(3, allow_any))
-            revoke_allow_body = proto_encode_hex(
-                pf_str(1, user), pf_str(2, grantee))
-            unjail_body = proto_encode_hex(pf_str(1, val_a))
-            create_val_body = proto_encode_hex(
-                pf_ld(1, desc), pf_str(3, F.lit("1")), pf_str(4, user),
-                pf_str(5, val_a), pf_ld(7, coin))
-            edit_val_body = proto_encode_hex(
-                pf_ld(1, desc), pf_str(2, val_a),
-                pf_str(3, F.lit("0.100000000000000000")),
-                pf_str(4, F.lit("1")))
-            vesting_body = proto_encode_hex(
-                pf_str(1, user), pf_str(2, recipient), pf_ld(3, coin),
-                pf_varint(4, tout))
-            # MsgMultiSend with one 2-coin Input and TWO Outputs — the
-            # real repeated-field shape (inputs sum equals outputs sum,
-            # as the bank module requires: amt + (amt+1) each side)
-            multisend_body = proto_encode_hex(
-                pf_ld(1, proto_encode_hex(pf_str(1, user), pf_ld(2, coin),
-                                          pf_ld(2, coin2))),
-                pf_ld(2, proto_encode_hex(pf_str(1, recipient),
-                                          pf_ld(2, coin))),
-                pf_ld(2, proto_encode_hex(
-                    pf_str(1, F.concat(F.lit("zig1d"), uid)),
-                    pf_ld(2, coin2))),
-            )
-            cancel_unbond_body = proto_encode_hex(
-                pf_str(1, user), pf_str(2, val_a), pf_ld(3, coin),
-                pf_varint(4, tout))   # creation_height
-            fund_pool_body = proto_encode_hex(
-                pf_ld(1, coin), pf_str(2, user))
-            withdraw_comm_body = proto_encode_hex(pf_str(1, val_a))
-            vote_weighted_body = proto_encode_hex(
-                pf_varint(1, pid), pf_str(2, user),
-                pf_ld(3, proto_encode_hex(
-                    pf_varint(1, F.col("user_id") % 4 + 1),
-                    pf_str(2, F.lit("1.000000000000000000")))),
-            )
-            text_prop_any = proto_encode_hex(
-                pf_str(1, F.lit(_TEXT_PROPOSAL_URL)),
-                pf_ld(2, proto_encode_hex(
-                    pf_str(1, F.concat(F.lit("prop-"),
-                                       (F.col("event_id") % 100)
-                                       .cast("string"))),
-                    pf_str(2, F.lit("synthetic text proposal")))),
-            )
-            submit_prop_body = proto_encode_hex(
-                pf_ld(1, text_prop_any), pf_ld(2, coin), pf_str(3, user))
-            # IBC client update: header rides as a nested Any
-            update_client_body = proto_encode_hex(
-                pf_str(1, F.concat(F.lit("07-tendermint-"),
-                                   (F.col("user_id") % 5).cast("string"))),
-                pf_ld(2, proto_encode_hex(
-                    pf_str(1, F.lit(_TM_HEADER_URL)),
-                    pf_ld(2, proto_encode_hex(pf_varint(1, tout))))),
-            )
-            recv_packet_body = proto_encode_hex(
-                pf_ld(1, packet),
-                pf_ld(2, F.hex(F.lit("proof").cast("binary"))),
-                pf_ld(3, height),
-                pf_str(4, user),
-            )
-            perm_locked_body = proto_encode_hex(
-                pf_str(1, user), pf_str(2, recipient), pf_ld(3, coin))
-            # periodic vesting: start_time varint + ONE Period
-            periodic_vest_body = proto_encode_hex(
-                pf_str(1, user), pf_str(2, recipient), pf_varint(3, tout),
-                pf_ld(4, proto_encode_hex(pf_varint(1, F.lit(86)),
-                                          pf_ld(2, coin))),
-            )
-            instantiate_body = proto_encode_hex(
-                pf_str(1, user),
-                pf_str(2, F.concat(F.lit("zig1adm"),
-                                   (F.col("user_id") % 9).cast("string"))),
-                pf_varint(3, F.col("event_id") % 500),
-                pf_str(4, F.concat(F.lit("contract-"),
-                                   (F.col("event_id") % 7).cast("string"))),
-                pf_str(5, F.concat(F.lit('{"count":"'), amt_s,
-                                   F.lit('"}'))),
-                pf_ld(6, coin),
-            )
-            verify_invariant_body = proto_encode_hex(
-                pf_str(1, user), pf_str(2, F.lit("bank")),
-                pf_str(3, F.lit("nonnegative-outstanding")))
-            # gov v1 (vs v1beta1): vote carries metadata; deposit's
-            # amount is genuinely multi-coin; submit_proposal embeds
-            # REPEATED Any messages (two full 2-coin MsgSends) instead
-            # of a content Any
-            gov_v1_vote_body = proto_encode_hex(
-                pf_varint(1, pid), pf_str(2, user),
-                pf_varint(3, F.col("user_id") % 4 + 1),
-                pf_str(4, F.lit("v1-vote-metadata")))
-            gov_v1_deposit_body = proto_encode_hex(
-                pf_varint(1, pid), pf_str(2, user),
-                pf_ld(3, coin), pf_ld(3, coin2))
-            gov_v1_submit_body = proto_encode_hex(
-                pf_ld(1, send_any), pf_ld(1, send_any),
-                pf_ld(2, coin2), pf_str(3, user))
-            ack_body = proto_encode_hex(
-                pf_ld(1, packet),
-                pf_ld(2, F.hex(F.lit("ack-ok").cast("binary"))),
-                pf_ld(3, F.hex(F.lit("proofA").cast("binary"))),
-                pf_ld(4, height),
-                pf_str(5, user))
-            timeout_body = proto_encode_hex(
-                pf_ld(1, packet),
-                pf_ld(2, F.hex(F.lit("proofU").cast("binary"))),
-                pf_ld(3, height),
-                pf_varint(4, xfer_tout + 1),   # next_sequence_recv
-                pf_str(5, user))
-            # ---- r11 closure: evidence / legacy-content / group ------
-            equiv_any = proto_encode_hex(
-                pf_str(1, F.lit(_EQUIVOCATION_URL)),
-                pf_ld(2, proto_encode_hex(
-                    pf_varint(1, tout),          # infraction height
-                    pf_varint(3, amt),           # validator power
-                    pf_str(4, F.concat(F.lit("zigvalcons"), uid)))))
-            submit_evidence_body = proto_encode_hex(
-                pf_str(1, user), pf_ld(2, equiv_any))
-            exec_legacy_body = proto_encode_hex(
-                pf_ld(1, text_prop_any),
-                pf_str(2, F.lit("zig1govauthority")))
-            member_req = proto_encode_hex(
-                pf_str(1, user), pf_str(2, F.lit("1")),
-                pf_str(3, F.lit("member-meta")))
-            group_create_body = proto_encode_hex(
-                pf_str(1, user), pf_ld(2, member_req),
-                pf_str(3, F.lit("grp-meta")))
-            group_upd_members_body = proto_encode_hex(
-                pf_str(1, user), pf_varint(2, pid), pf_ld(3, member_req))
-            # update_admin and update_metadata share one wire shape
-            # (s, varint, s) under distinct urls — the delegate /
-            # undelegate pattern
-            group_upd_admin_body = proto_encode_hex(
-                pf_str(1, user), pf_varint(2, pid), pf_str(3, recipient))
-            policy_any = proto_encode_hex(
-                pf_str(1, F.lit(_THRESHOLD_POLICY_URL)),
-                pf_ld(2, proto_encode_hex(pf_str(1, F.lit("2")))))
-            group_create_policy_body = proto_encode_hex(
-                pf_str(1, user), pf_varint(2, pid),
-                pf_str(3, F.lit("pol-meta")), pf_ld(4, policy_any))
-            group_create_with_policy_body = proto_encode_hex(
-                pf_str(1, user), pf_ld(2, member_req),
-                pf_str(3, F.lit("gm")), pf_str(4, F.lit("pm")),
-                pf_varint(5, F.lit(1)), pf_ld(6, policy_any))
-            # policy_admin and policy_metadata share (s, s, s)
-            group_policy_admin_body = proto_encode_hex(
-                pf_str(1, user), pf_str(2, F.concat(F.lit("zig1p"), uid)),
-                pf_str(3, recipient))
-            group_policy_decision_body = proto_encode_hex(
-                pf_str(1, user), pf_str(2, F.concat(F.lit("zig1p"), uid)),
-                pf_ld(3, policy_any))
-            group_submit_body = proto_encode_hex(
-                pf_str(1, F.concat(F.lit("zig1p"), uid)),
-                pf_str(2, user), pf_str(3, F.lit("prop-meta")),
-                pf_ld(4, send_any), pf_varint(5, F.lit(1)))
-            # withdraw_proposal and group exec share (varint, s)
-            group_withdraw_body = proto_encode_hex(
-                pf_varint(1, pid), pf_str(2, user))
-            group_vote_body = proto_encode_hex(
-                pf_varint(1, pid), pf_str(2, user),
-                pf_varint(3, F.col("user_id") % 4 + 1),
-                pf_str(4, F.lit("grp-vote-meta")), pf_varint(5, F.lit(1)))
-            group_leave_body = proto_encode_hex(
-                pf_str(1, user), pf_varint(2, pid))
-            # ---- r12 closure: gov v1 vote-weighted + IBC handshakes --
-            gov_v1_vote_weighted_body = proto_encode_hex(
-                pf_varint(1, pid), pf_str(2, user),
-                pf_ld(3, proto_encode_hex(
-                    pf_varint(1, F.col("user_id") % 4 + 1),
-                    pf_str(2, F.lit("1.000000000000000000")))),
-                pf_str(4, F.lit("v1-weighted-metadata")))
-            client_id = F.concat(F.lit("07-tendermint-"),
-                                 (F.col("user_id") % 5).cast("string"))
-            create_client_body = proto_encode_hex(
-                pf_ld(1, cs_any), pf_ld(2, cons_any), pf_str(3, user))
-            upgrade_client_body = proto_encode_hex(
-                pf_str(1, client_id), pf_ld(2, cs_any),
-                pf_ld(3, cons_any),
-                pf_ld(4, F.hex(F.lit("proofC").cast("binary"))),
-                pf_ld(5, F.hex(F.lit("proofS").cast("binary"))),
-                pf_str(6, user))
-            submit_misbehaviour_body = proto_encode_hex(
-                pf_str(1, client_id),
-                pf_ld(2, proto_encode_hex(
-                    pf_str(1, F.lit(_TM_MISBEHAVIOUR_URL)),
-                    pf_ld(2, proto_encode_hex(pf_str(1, client_id))))),
-                pf_str(3, user))
-            conn_id = F.concat(F.lit("connection-"),
-                               (F.col("event_id") % 13).cast("string"))
-            conn_cp = proto_encode_hex(
-                pf_str(1, client_id), pf_str(2, conn_id))
-            conn_version = proto_encode_hex(pf_str(1, F.lit("1")))
-            conn_open_init_body = proto_encode_hex(
-                pf_str(1, client_id), pf_ld(2, conn_cp),
-                pf_ld(3, conn_version), pf_varint(4, tout),
-                pf_str(5, user))
-            # try: real cosmjs encodings omit the defaulted/deprecated
-            # fields (previous_connection_id, the extra proofs), so the
-            # wire carries fields 1,3,4,5,7,8,12 of the 13-field proto
-            conn_open_try_body = proto_encode_hex(
-                pf_str(1, client_id), pf_ld(3, cs_any),
-                pf_ld(4, conn_cp), pf_varint(5, tout),
-                pf_ld(7, height),
-                pf_ld(8, F.hex(F.lit("proofI").cast("binary"))),
-                pf_str(12, user))
-            conn_open_ack_body = proto_encode_hex(
-                pf_str(1, conn_id),
-                pf_str(2, F.concat(
-                    F.lit("connection-"),
-                    (F.col("event_id") % 17).cast("string"))),
-                pf_ld(3, conn_version), pf_ld(4, cs_any),
-                pf_ld(5, height),
-                pf_ld(6, F.hex(F.lit("proofT").cast("binary"))),
-                pf_str(10, user))
-            conn_open_confirm_body = proto_encode_hex(
-                pf_str(1, conn_id),
-                pf_ld(2, F.hex(F.lit("proofA").cast("binary"))),
-                pf_ld(3, height), pf_str(4, user))
-            chan_id = F.concat(F.lit("channel-"),
-                               (F.col("event_id") % 11).cast("string"))
-            # Channel.state is the yes-keyed enum (synthesis keys it
-            # exactly like the vote option: 1 ⇔ user_id % 4 == 0);
-            # counterparty + version round out the 4 encoded fields
-            channel_body = proto_encode_hex(
-                pf_varint(1, F.col("user_id") % 4 + 1),
-                pf_varint(2, F.lit(1)),
-                pf_ld(3, proto_encode_hex(
-                    pf_str(1, F.lit("transfer")),
-                    pf_str(2, F.concat(
-                        F.lit("channel-"),
-                        (F.col("event_id") % 7).cast("string"))))),
-                pf_str(5, F.lit("ics20-1")))
-            chan_open_init_body = proto_encode_hex(
-                pf_str(1, F.lit("transfer")), pf_ld(2, channel_body),
-                pf_str(3, user))
-            chan_open_try_body = proto_encode_hex(
-                pf_str(1, F.lit("transfer")), pf_ld(3, channel_body),
-                pf_str(4, F.lit("ics20-1")),
-                pf_ld(5, F.hex(F.lit("proofI").cast("binary"))),
-                pf_ld(6, height), pf_str(7, user))
-            chan_open_ack_body = proto_encode_hex(
-                pf_str(1, F.lit("transfer")), pf_str(2, chan_id),
-                pf_str(3, F.concat(
-                    F.lit("channel-"),
-                    (F.col("event_id") % 7).cast("string"))),
-                pf_str(4, F.lit("ics20-1")),
-                pf_ld(5, F.hex(F.lit("proofT").cast("binary"))),
-                pf_ld(6, height), pf_str(7, user))
-            # open-confirm and close-confirm share one wire shape
-            # (s, s, proof, Height, s) under distinct urls — the
-            # delegate/undelegate pattern
-            chan_confirm_body = proto_encode_hex(
-                pf_str(1, F.lit("transfer")), pf_str(2, chan_id),
-                pf_ld(3, F.hex(F.lit("proofA").cast("binary"))),
-                pf_ld(4, height), pf_str(5, user))
-            chan_close_init_body = proto_encode_hex(
-                pf_str(1, F.lit("transfer")), pf_str(2, chan_id),
-                pf_str(3, user))
-            timeout_on_close_body = proto_encode_hex(
-                pf_ld(1, packet),
-                pf_ld(2, F.hex(F.lit("proofU").cast("binary"))),
-                pf_ld(3, F.hex(F.lit("proofX").cast("binary"))),
-                pf_ld(4, height), pf_varint(5, xfer_tout + 2),
-                pf_str(6, user))
-            custom_body = F.hex(
-                F.concat(F.lit("custom:"), F.col("event_id").cast("string"))
-                .cast("binary"))
+    def _fn(batches):
+        for b in batches:
+            hexes = [registry_blob(*ev).hex().upper() for ev in zip(
+                *(b.column(c).to_pylist()
+                  for c in ("event_id", "user_id", "value")))]
+            yield pa.RecordBatch.from_arrays(
+                [*b.columns, pa.array(hexes, pa.string())],
+                names=[*b.schema.names, "blob_hex"])
 
-            body = (
-                F.when(kind == 0, send_body)
-                .when(kind == 1, exec_body)
-                .when(kind == 2, delegate_body)
-                .when(kind == 3, vote_body)
-                .when(kind == 4, transfer_body)
-                .when(kind == 5, delegate_body)   # undelegate: same
-                .when(kind == 6, withdraw_body)   # wire, distinct url
-                .when(kind == 7, redelegate_body)
-                .when(kind == 8, setwithdraw_body)
-                .when(kind == 9, deposit_body)
-                .when(kind == 10, grant_body)
-                .when(kind == 11, authz_exec_body)
-                .when(kind == 12, revoke_body)
-                .when(kind == 13, grant_allow_body)
-                .when(kind == 14, revoke_allow_body)
-                .when(kind == 15, unjail_body)
-                .when(kind == 16, create_val_body)
-                .when(kind == 17, edit_val_body)
-                .when(kind == 18, vesting_body)
-                .when(kind == 19, multisend_body)
-                .when(kind == 20, cancel_unbond_body)
-                .when(kind == 21, fund_pool_body)
-                .when(kind == 22, withdraw_comm_body)
-                .when(kind == 23, vote_weighted_body)
-                .when(kind == 24, submit_prop_body)
-                .when(kind == 25, update_client_body)
-                .when(kind == 26, recv_packet_body)
-                .when(kind == 27, perm_locked_body)
-                .when(kind == 28, periodic_vest_body)
-                .when(kind == 29, instantiate_body)
-                .when(kind == 30, verify_invariant_body)
-                .when(kind == 31, gov_v1_vote_body)
-                .when(kind == 32, gov_v1_deposit_body)
-                .when(kind == 33, gov_v1_submit_body)
-                .when(kind == 34, ack_body)
-                .when(kind == 35, timeout_body)
-                .when(kind == 36, submit_evidence_body)
-                .when(kind == 37, exec_legacy_body)
-                .when(kind == 38, group_create_body)
-                .when(kind == 39, group_upd_members_body)
-                .when(kind == 40, group_upd_admin_body)
-                .when(kind == 41, group_upd_admin_body)  # metadata: same
-                .when(kind == 42, group_create_policy_body)  # wire shape
-                .when(kind == 43, group_create_with_policy_body)
-                .when(kind == 44, group_policy_admin_body)
-                .when(kind == 45, group_policy_decision_body)
-                .when(kind == 46, group_policy_admin_body)  # same wire
-                .when(kind == 47, group_submit_body)
-                .when(kind == 48, group_withdraw_body)
-                .when(kind == 49, group_vote_body)
-                .when(kind == 50, group_withdraw_body)      # same wire
-                .when(kind == 51, group_leave_body)
-                # kinds 52-66 (r12): gov v1 vote-weighted + IBC core
-                .when(kind == 52, gov_v1_vote_weighted_body)
-                .when(kind == 53, create_client_body)
-                .when(kind == 54, upgrade_client_body)
-                .when(kind == 55, submit_misbehaviour_body)
-                .when(kind == 56, conn_open_init_body)
-                .when(kind == 57, conn_open_try_body)
-                .when(kind == 58, conn_open_ack_body)
-                .when(kind == 59, conn_open_confirm_body)
-                .when(kind == 60, chan_open_init_body)
-                .when(kind == 61, chan_open_try_body)
-                .when(kind == 62, chan_open_ack_body)
-                .when(kind == 63, chan_confirm_body)
-                .when(kind == 64, chan_close_init_body)
-                .when(kind == 65, chan_confirm_body)  # same wire shape
-                .when(kind == 66, timeout_on_close_body)
-                .otherwise(custom_body)
-            )
-            # the url array is padded with the unknown url up to the
-            # modulus so element_at never goes out of range (ANSI
-            # would throw)
-            url = F.element_at(
-                F.array(*[F.lit(x) for x in _REGISTRY_URLS],
-                        *[F.lit(_UNKNOWN_URL)
-                          for _ in range(_REGISTRY_MOD
-                                         - len(_REGISTRY_URLS))]),
-                kind + 1,
-            )
-            return proto_encode_hex(pf_str(1, url), pf_ld(2, body))
-
-        return F.element_at(
-            F.transform(F.array(shared2), with_shared2), 1)
-
-    return F.element_at(F.transform(F.array(shared1), with_shared1), 1)
+    return df.mapInArrow(_fn, schema)
 
 
 # keyword → type-url table handed to the Python mirror decoder
@@ -1175,10 +962,9 @@ def registry_decoded_df_py(df: DataFrame) -> DataFrame:
     """The Python-walker decode: ``df`` carries a ``blob_hex`` column;
     returns the decoded (type_url, status, amt, pid, yes, timeout) rows
     via ``mapInPandas``, one ``protobuf_py.registry_decode_py`` call per
-    message.  A plan node rather than a scalar UDF: the streaming
-    micro-batch planner failed to extract a scalar-UDF expression whose
-    input was the full synthesis tree (INTERNAL_ERROR "Cannot evaluate
-    expression"), and mapInPandas has no extraction step to fail."""
+    message.  A plan node rather than a scalar UDF, so the plan holds
+    no row-at-a-time Python evaluation (``BatchEvalPython``), in batch
+    and streaming plans alike."""
     import pandas as pd
 
     from zigchain_indexer_clickhouse_spark.functions.protobuf_py import (
@@ -1260,17 +1046,6 @@ def _registry_agg(decoded: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 # 187. msg_registry_decode — 67-type registry decode
 # --------------------------------------------------------------------------
-def _registry_blobs_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The persisted (blob_hex) synthesis frame of the batch registry
-    decode."""
-
-    def _build() -> DataFrame:
-        e = load(spark, sf_dir, "events")
-        return e.select(_registry_blob_hex().alias("blob_hex"))
-
-    return _shared_stage("registry20_blobs", spark, sf_dir, _build)
-
-
 @register(
     "msg_registry_decode",
     oracle=_REGISTRY_ORACLE_SQL,
@@ -1292,17 +1067,14 @@ def msg_registry_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     have.  The aggregates prove real fields come back: Coin amounts
     (through two-deep Any unwraps and repeated coins), the wasm JSON
     amount, varint proposal ids, VOTE_OPTION_YES enums, and the IBC
-    timeout / vesting time varints."""
-    from zigchain_indexer_clickhouse_spark.functions import native_registry
+    timeout / vesting time varints.
 
-    blobs = _registry_blobs_stage(spark, sf_dir)
-    # one stage per decode path, so a session that sees both (a test
-    # forcing the Python walker) never reads the other path's rows
-    tag = ("registry20_native_decoded" if native_registry.native_available()
-           else "registry20_arrow_decoded")
-    decoded = _shared_stage(tag, spark, sf_dir,
-                            lambda: registry_decoded_df(blobs))
-    return _registry_agg(decoded)
+    No persisted stage: synthesis and decode are two Arrow maps over
+    one scan, and persisting either frame measured slower for one
+    build + collect at sf0.01 and on the sf1.0 replica."""
+    e = load(spark, sf_dir, "events").select("event_id", "user_id", "value")
+    blobs = registry_blob_hex_df(e).select("blob_hex")
+    return _registry_agg(registry_decoded_df(blobs))
 
 
 # --------------------------------------------------------------------------
@@ -1663,10 +1435,11 @@ def registry_decode_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = scratch_dir(spark, "registry_at_rest", sf_dir)
     if not os.path.isfile(os.path.join(path, "_SUCCESS")):
-        e = load(spark, sf_dir, "events")
-        at_rest = e.select(
+        e = load(spark, sf_dir, "events").select(
+            "event_id", "user_id", "event_type", "value", "ts")
+        at_rest = registry_blob_hex_df(e).select(
             F.col("event_id").alias("height"),
-            _registry_blob_hex().alias("blob_hex"),
+            "blob_hex",
             # decoy columns: the read side must prune ALL of these
             "user_id", "event_type", "value", "ts",
         ).withColumn(

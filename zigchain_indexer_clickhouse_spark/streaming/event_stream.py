@@ -1049,17 +1049,18 @@ def stream_registry_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch twin is test-asserted."""
     from zigchain_indexer_clickhouse_spark.sources.tx_decode import (
         _registry_agg,
-        _registry_blob_hex,
+        registry_blob_hex_df,
         registry_decoded_df,
     )
 
     s = _read_event_stream(spark, sf_dir)
-    # the C kernel rides mapInArrow inside the micro-batch plan (a
-    # stateless narrow map, legal in a streaming plan), so the batch
-    # volume path and the live path are the same code; the Python
-    # walker's mapInPandas takes its place without a C toolchain
-    decoded = registry_decoded_df(
-        s.select(_registry_blob_hex().alias("blob_hex")))
+    # the wire synthesis and the C kernel each ride mapInArrow inside
+    # the micro-batch plan (stateless narrow maps, legal in a streaming
+    # plan), so the batch volume path and the live path are the same
+    # code; the Python walker's mapInPandas takes the kernel's place
+    # without a C toolchain
+    blobs = registry_blob_hex_df(s.select("event_id", "user_id", "value"))
+    decoded = registry_decoded_df(blobs.select("blob_hex"))
     return _run_append_to_memory(
         _registry_agg(decoded), "stream_registry_decode", mode="complete"
     )
